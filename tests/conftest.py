@@ -1,5 +1,6 @@
 import os
 import tempfile
+from pathlib import Path
 
 import pytest
 from pyspark.sql import SparkSession
@@ -116,6 +117,17 @@ SLOW_FULL_SUITE_ONLY = frozenset(
 )
 
 
+REPO_ROOT = Path(__file__).resolve().parent.parent
+
+
+def repo_nodeid(item) -> str:
+    """``item.nodeid`` as it reads from the repository root, whichever
+    rootdir pytest picked (run from inside tests/, its nodeids drop the
+    ``tests/`` prefix that SLOW_FULL_SUITE_ONLY spells out)."""
+    path = Path(item.path).resolve().relative_to(REPO_ROOT).as_posix()
+    return path + item.nodeid[item.nodeid.index("::"):]
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("WILLA_FULL_SUITE"):
         return
@@ -124,5 +136,5 @@ def pytest_collection_modifyitems(config, items):
         "coverage) — set WILLA_FULL_SUITE=1 or run tools/run_tests.sh"
     )
     for item in items:
-        if item.nodeid in SLOW_FULL_SUITE_ONLY:
+        if repo_nodeid(item) in SLOW_FULL_SUITE_ONLY:
             item.add_marker(skip)

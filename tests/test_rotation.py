@@ -154,14 +154,31 @@ def test_fast_gate_skip_list_names_real_tests():
     import subprocess
     import sys
 
-    from tests.conftest import SLOW_FULL_SUITE_ONLY
+    from tests.conftest import REPO_ROOT, SLOW_FULL_SUITE_ONLY
 
     out = subprocess.run(
         [sys.executable, "-m", "pytest", "tests/", "--collect-only", "-q",
          "--no-header", "-p", "no:cacheprovider"],
-        capture_output=True, text=True, timeout=300,
+        capture_output=True, text=True, timeout=300, cwd=REPO_ROOT,
         env={**__import__("os").environ, "WILLA_FULL_SUITE": "1"},
     )
+    # a collection error would otherwise read as "every entry missing"
+    assert out.returncode == 0, f"collection failed:\n{out.stderr}\n{out.stdout[-4000:]}"
     collected = set(out.stdout.splitlines())
     missing = {t for t in SLOW_FULL_SUITE_ONLY if t not in collected}
     assert not missing, missing
+
+
+def test_fast_gate_skip_matches_from_any_rootdir():
+    """The skip list spells ids from the repository root; run from inside
+    tests/, pytest's nodeids lack the ``tests/`` prefix, and the gate must
+    still match them."""
+    from types import SimpleNamespace
+
+    from tests.conftest import REPO_ROOT, SLOW_FULL_SUITE_ONLY, repo_nodeid
+
+    listed = sorted(SLOW_FULL_SUITE_ONLY)[0]
+    path, name = listed.split("::", 1)
+    for nodeid in (listed, f"{path.removeprefix('tests/')}::{name}"):
+        item = SimpleNamespace(path=REPO_ROOT / path, nodeid=nodeid)
+        assert repo_nodeid(item) == listed

@@ -81,28 +81,23 @@ def normalize_records(df: DataFrame, seq_offset: int = 0) -> DataFrame:
     empty), which is unacceptable at 100 TB. Distributed files have no
     meaningful arrival order anyway; list-seeded test inputs get exact
     arrival ordinals via ``seed_records`` instead."""
-    if isinstance(df.schema[TIMESTAMP].dataType, T.TimestampType):
-        df = df.withColumn(TIMESTAMP, F.unix_millis(F.col(TIMESTAMP)))
+    schema = df.schema
+    if isinstance(schema[TIMESTAMP].dataType, T.TimestampType):
+        ts = F.unix_millis(F.col(TIMESTAMP))
     else:
-        df = df.withColumn(TIMESTAMP, F.col(TIMESTAMP).cast("bigint"))
-    if SEQ not in df.columns:
-        # the entity offset is a HASH INPUT, not an addend: under
-        # Spark 4's default ANSI mode `xxhash64(...) + offset` throws
-        # on the (rare, but expected-at-100-TB) records whose
-        # full-range hash lands within offset of Long.MAX, and an
-        # addend could never keep uniform full-range hashes disjoint
-        # per entity anyway — seeding the hash gives each entity an
-        # independent deterministic ordinal space instead (r15 review)
-        df = df.withColumn(
-            SEQ,
-            F.xxhash64(
-                F.lit(seq_offset),
-                F.col(KEY).cast("string"),
-                F.col(VALUE).cast("string"),
-                F.col(TIMESTAMP),
-            ),
-        )
-    return df.select(KEY, VALUE, TIMESTAMP, SEQ)
+        ts = F.col(TIMESTAMP).cast("bigint")
+    if SEQ in schema.fieldNames():
+        return df.select(KEY, VALUE, ts.alias(TIMESTAMP), SEQ)
+    # the entity offset is a HASH INPUT, not an addend: under Spark 4's
+    # default ANSI mode `xxhash64(...) + offset` throws on the (rare, but
+    # expected-at-100-TB) records whose full-range hash lands within
+    # offset of Long.MAX, and an addend could never keep uniform
+    # full-range hashes disjoint per entity anyway — seeding the hash
+    # gives each entity an independent deterministic ordinal space
+    seq = F.xxhash64(
+        F.lit(seq_offset), F.col(KEY).cast("string"), F.col(VALUE).cast("string"), ts
+    )
+    return df.select(KEY, VALUE, ts.alias(TIMESTAMP), seq.alias(SEQ))
 
 
 class TopologyRunner:
@@ -385,8 +380,13 @@ class TopologyRunner:
                     if outputs.get(p) is not None
                 }
                 computed = ent["build"](self.spark, parent_dfs, ent)
+                shaped = False
             else:
                 combined = self._combine_parents(node, outputs)
+                # parent outputs, merges, joins and ktable folds all come
+                # out as (key, value, timestamp, __seq); only an xform
+                # can change the shape
+                shaped = etype != model.KSTREAM or ent.get("xform") is None
                 if etype == model.TOPIC:
                     computed = combined  # experiment.clj:196-202
                 elif etype == model.KSTREAM:
@@ -399,13 +399,13 @@ class TopologyRunner:
                     computed = combined  # passthrough; latest-state at join time (core.clj:109-118)
                 else:  # pragma: no cover
                     raise AssertionError(etype)
+            if computed is not None and not shaped:
+                computed = computed.select(KEY, VALUE, TIMESTAMP, SEQ)
             seed = seeds.get(node)
             if seed is not None and computed is not None:
-                out = seed.unionByName(computed.select(KEY, VALUE, TIMESTAMP, SEQ))
-            elif computed is not None:
-                out = computed.select(KEY, VALUE, TIMESTAMP, SEQ)
+                out = seed.unionByName(computed)
             else:
-                out = seed
+                out = computed if computed is not None else seed
             if out is not None and len(model.children_of(self.topology, node)) > 1 and ent.get(
                 "persist", True
             ):

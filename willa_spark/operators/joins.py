@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..model import KEY, TIMESTAMP, VALUE
 from .aggregates import SEQ
@@ -57,13 +58,10 @@ def _band_cond(
     )
 
 
-def _value_can_be_null(df: DataFrame) -> bool:
-    """True unless the schema PROVES the value column holds no NULLs
-    (field non-nullable, and for an already-tupled array side no NULL
+def _value_can_be_null(field: T.StructField) -> bool:
+    """True unless the value field PROVES the column holds no NULLs
+    (non-nullable, and for an already-tupled array side no NULL
     elements either)."""
-    from pyspark.sql import types as T
-
-    field = df.schema[VALUE]
     if field.nullable:
         return True
     dt = field.dataType
@@ -122,10 +120,11 @@ def windowed_stream_join(
     rule: group results by (timestamp, key) and, where a group has >1
     record, drop the ones containing NULL (experiment.clj:27-34).
     """
-    l = _records(left).select(
+    l_value, r_value = left.schema[VALUE], right.schema[VALUE]
+    l = left.select(
         F.col(KEY), F.col(VALUE).alias("__lv"), F.col(TIMESTAMP).alias("__lts"), F.col(SEQ).alias("__lseq")
     )
-    r = _records(right).select(
+    r = right.select(
         F.col(KEY).alias("__rkey"), F.col(VALUE).alias("__rv"), F.col(TIMESTAMP).alias("__rts"), F.col(SEQ).alias("__rseq")
     )
     cond = _band_cond(
@@ -138,8 +137,8 @@ def windowed_stream_join(
         F.greatest(F.col("__lseq"), F.col("__rseq")).alias(SEQ),
     )
     parts = [joined]
-    null_right = F.lit(None).cast(r.schema["__rv"].dataType)
-    null_left = F.lit(None).cast(l.schema["__lv"].dataType)
+    null_right = F.lit(None).cast(r_value.dataType)
+    null_left = F.lit(None).cast(l_value.dataType)
     if emit_unjoined_left:
         parts.append(
             l.select(
@@ -162,7 +161,7 @@ def windowed_stream_join(
     for p in parts[1:]:
         out = out.unionByName(p)
     if len(parts) == 1 and not (
-        _value_can_be_null(left) or _value_can_be_null(right)
+        _value_can_be_null(l_value) or _value_can_be_null(r_value)
     ):
         # inner join over PROVABLY non-null values: the dedup pass
         # below is a no-op (no tuple can contain NULL), so skip its
@@ -205,7 +204,7 @@ def windowed_stream_semi_join(
     native LeftSemi/LeftAnti never materializes the match — no
     fan-out, no dedup pass needed."""
     l = _records(left)
-    r = _records(right).select(
+    r = right.select(
         F.col(KEY).alias("__rkey"), F.col(TIMESTAMP).alias("__rts")
     )
     cond = _band_cond(
@@ -236,12 +235,17 @@ def _as_of_lookup(driving: DataFrame, other: DataFrame) -> DataFrame:
     linear, skew-tolerant; never a range join.
 
     Returns the driving records plus ``__other`` (struct value/ts/seq,
-    NULL when no match yet).
+    NULL when no match yet), with the helper columns ``__other_in`` and
+    ``__side`` still in place: every caller projects its own columns.
     """
-    d = _records(driving).withColumn("__other_in", F.lit(None).cast(
-        f"struct<{VALUE}:{other.schema[VALUE].dataType.simpleString()},{TIMESTAMP}:bigint,{SEQ}:bigint>"
-    )).withColumn("__side", F.lit(1))
-    o = _records(other).select(
+    d = driving.select(
+        *RECORD_COLS,
+        F.lit(None).cast(
+            f"struct<{VALUE}:{other.schema[VALUE].dataType.simpleString()},{TIMESTAMP}:bigint,{SEQ}:bigint>"
+        ).alias("__other_in"),
+        F.lit(1).alias("__side"),
+    )
+    o = other.select(
         F.col(KEY),
         F.lit(None).cast(driving.schema[VALUE].dataType).alias(VALUE),
         F.col(TIMESTAMP),
@@ -257,11 +261,9 @@ def _as_of_lookup(driving: DataFrame, other: DataFrame) -> DataFrame:
         .orderBy(F.col(TIMESTAMP).asc(), F.col("__side").asc(), F.col(SEQ).asc())
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    return (
-        u.withColumn("__other", F.last(F.col("__other_in"), ignorenulls=True).over(w))
-        .filter(F.col("__side") == 1)
-        .drop("__other_in", "__side")
-    )
+    return u.withColumn(
+        "__other", F.last(F.col("__other_in"), ignorenulls=True).over(w)
+    ).filter(F.col("__side") == 1)
 
 
 def table_table_join(
@@ -298,10 +300,10 @@ def table_table_join(
         F.lit(True).alias("__r_present"),
     )
     out = left_driven.unionByName(right_driven)
-    if require_left:
-        out = out.filter(F.col("__l_present"))
-    if require_right:
-        out = out.filter(F.col("__r_present"))
+    if require_left and require_right:
+        out = out.filter(F.col("__l_present") & F.col("__r_present"))
+    elif require_left or require_right:
+        out = out.filter(F.col("__l_present" if require_left else "__r_present"))
     return out.drop("__l_present", "__r_present")
 
 

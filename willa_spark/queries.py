@@ -17,6 +17,8 @@ Float-determinism rules used throughout (so hashes match DuckDB):
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -4725,8 +4727,10 @@ FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 2000
 # key from a DIFFERENT applicationId (r12 advice: a stopped app's
 # entries referenced dead-SparkContext checkpoints for the process
 # lifetime) — live size stays bounded by the handful of (sf_dir, k)
-# pairs the CURRENT session touches.
+# pairs the CURRENT session touches. The band rows build the arm on
+# pool threads, so every lookup, eviction and insert holds the lock.
 _EXACT_ARM_CACHE: dict[tuple[str, str, int], DataFrame] = {}
+_EXACT_ARM_LOCK = threading.Lock()
 
 
 def _ann_band_inputs(spark: SparkSession, sf_dir: str):
@@ -4747,15 +4751,15 @@ def _exact_arm(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
 
     app_id = spark.sparkContext.applicationId
     key = (app_id, sf_dir, k)
-    hit = _EXACT_ARM_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # evict other sessions' entries on insert (r12 advice): a stopped
-    # application's keys would otherwise reference localCheckpointed
-    # frames of a dead SparkContext for the process lifetime — dead
-    # weight pinning driver-side references (tests cycle sessions)
-    for stale in [k_ for k_ in _EXACT_ARM_CACHE if k_[0] != app_id]:
-        del _EXACT_ARM_CACHE[stale]
+    with _EXACT_ARM_LOCK:
+        hit = _EXACT_ARM_CACHE.get(key)
+        if hit is not None:
+            return hit
+        # evict other sessions' entries: a stopped application's keys
+        # would otherwise reference localCheckpointed frames of a dead
+        # SparkContext for the process lifetime (tests cycle sessions)
+        for stale in [k_ for k_ in _EXACT_ARM_CACHE if k_[0] != app_id]:
+            del _EXACT_ARM_CACHE[stale]
     emb, q = _ann_band_inputs(spark, sf_dir)
     # brute force is pure per-row scoring (round-then-rank) — spread
     # the corpus side so the |corpus|×|queries| cosine pass
@@ -4772,8 +4776,10 @@ def _exact_arm(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    _EXACT_ARM_CACHE[key] = exact
-    return exact
+    # a concurrent caller with the same key may have finished first:
+    # keep its arm, so every caller verifies against one frame
+    with _EXACT_ARM_LOCK:
+        return _EXACT_ARM_CACHE.setdefault(key, exact)
 
 
 def _ann_recall_bands(

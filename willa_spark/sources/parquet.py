@@ -7,17 +7,31 @@ vectorized reader rejects unless ``spark.sql.legacy.parquet.nanosAsLong``
 is set — we set it at runtime and convert the nanos-longs back to proper
 TimestampType (micros) columns so downstream code sees real timestamps.
 
-Scale notes: this is a plain ``spark.read.parquet`` — predicate pushdown,
-column pruning and partition pruning all apply; the nanos conversion is
-a per-column projection, fused into the scan by codegen.
+Schema cache: ``spark.read.parquet(path)`` infers the schema with a Spark
+job that reads the footers, on every call. ``read_table`` instead infers
+once per SparkSession and path, keeps the ``StructType`` and the list of
+nanos columns, and reads with ``spark.read.schema(cached).parquet(path)``,
+which starts no job. Each entry carries the path's file signature — inode,
+size and mtime of the file, or of every file under a directory — and a
+call whose signature differs infers again, so a table rewritten in place
+is read with its new schema. Paths that ``os.stat`` cannot see (remote
+file systems) are never cached.
+
+Scale notes: the read is still a plain parquet scan — predicate pushdown,
+column pruning and partition pruning all apply; the timestamp conversions
+are one projection, fused into the scan by codegen.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLE_NAMES = (
     "region",
@@ -32,18 +46,27 @@ TABLE_NAMES = (
     "embeddings",
 )
 
+# SparkSession -> {path: (signature, schema, nanos columns)}
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SCHEMAS_LOCK = threading.Lock()
+
 
 def table_names() -> tuple[str, ...]:
     return TABLE_NAMES
 
 
 def _nanos_ts_columns(path: str) -> list[str]:
-    """Columns stored as TIMESTAMP(NANOS) in the parquet footer."""
+    """Columns stored as TIMESTAMP(NANOS) in the parquet footer (of the
+    first data file, for a directory — the file Spark infers from)."""
     try:
-        import pyarrow.parquet as pq
         import pyarrow as pa
+        import pyarrow.dataset as ds
+        import pyarrow.parquet as pq
 
-        schema = pq.read_schema(path)
+        if os.path.isdir(path):
+            schema = ds.dataset(path, format="parquet").schema
+        else:
+            schema = pq.read_schema(path)
         return [
             f.name
             for f in schema
@@ -53,25 +76,58 @@ def _nanos_ts_columns(path: str) -> list[str]:
         return []
 
 
+def _signature(path: str) -> tuple | None:
+    """(path, inode, size, mtime) of the file, or of every file under the
+    directory; None when the path is not on a local file system."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return ((path, st.st_ino, st.st_size, st.st_mtime_ns),)
+        sig = []
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for f in sorted(files):
+                p = os.path.join(root, f)
+                s = os.stat(p)
+                sig.append((p, s.st_ino, s.st_size, s.st_mtime_ns))
+        return tuple(sig)
+    except OSError:
+        return None
+
+
+def _schema(spark: SparkSession, path: str) -> tuple[T.StructType, list[str]]:
+    """The path's inferred schema and nanos columns, from the cache when
+    the path's signature still matches."""
+    sig = _signature(path)
+    with _SCHEMAS_LOCK:
+        hit = _SCHEMAS.get(spark, {}).get(path)
+    if sig is not None and hit is not None and hit[0] == sig:
+        return hit[1], hit[2]
+    schema = spark.read.parquet(path).schema
+    nanos = _nanos_ts_columns(path)
+    if sig is not None:
+        with _SCHEMAS_LOCK:
+            _SCHEMAS.setdefault(spark, {})[path] = (sig, schema, nanos)
+    return schema, nanos
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver table; nanos-timestamp columns come back as true
     TimestampType (truncated to micros, Spark's native precision)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in _nanos_ts_columns(path):
-        # integer DIV, not float division: ns values (~1.7e18) exceed
-        # double precision, and a 1-ulp error here shifts epoch-ms
-        # values — the DuckDB oracle would hash-mismatch
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
+    schema, nanos = _schema(spark, path)
+    # integer DIV, not float division: ns values (~1.7e18) exceed
+    # double precision, and a 1-ulp error here shifts epoch-ms
+    # values — the DuckDB oracle would hash-mismatch
+    conv = {c: F.timestamp_micros(F.expr(f"`{c}` DIV 1000")) for c in nanos}
     # micros-precision columns come back TIMESTAMP_NTZ; normalize to
     # TimestampType (session tz is UTC, matching DuckDB's naive-as-UTC)
-    from pyspark.sql import types as T
-
-    for f in df.schema.fields:
+    for f in schema.fields:
         if isinstance(f.dataType, T.TimestampNTZType):
-            df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
-    return df
+            conv[f.name] = F.col(f.name).cast("timestamp")
+    df = spark.read.schema(schema).parquet(path)
+    return df.withColumns(conv) if conv else df
 
 
 def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:
