@@ -1,6 +1,6 @@
 """CSV/JSON/parquet file sources for topic entities — the same entity
 abstraction as the Kafka config, resolved by BOTH compilers (batch via
-``_seed``, streaming via ``_build``'s topic sourcing)."""
+``_seed``, streaming via ``_node``'s topic sourcing)."""
 
 from collections import Counter
 
@@ -200,3 +200,53 @@ def test_start_queries_rejects_unknown_sink_format(spark, tmp_path):
     built = runner.build({})
     with pytest.raises(ValueError, match="unknown sink format"):
         runner.start_queries(built, str(tmp_path / "chk3"))
+
+
+@pytest.mark.parametrize("nanos_as_long", ["false", "true"])
+def test_nanos_timestamp_parquet_sources(spark, tmp_path, nanos_as_long):
+    """pandas writes ``datetime64[ns]`` as TIMESTAMP(NANOS). A topic's
+    ``source`` path and its ``file`` config, batch and streaming, read
+    the records at their true epoch-ms timestamps whatever the session's
+    ``nanosAsLong`` setting was before the read."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from willa_spark.streaming.compiler import StreamingTopologyRunner
+
+    path = str(tmp_path / "ns")  # a directory: file streams read directories
+    (tmp_path / "ns").mkdir()
+    pd.DataFrame({
+        "key": ["a", "b"],
+        "value": [1, 2],
+        "timestamp": pd.to_datetime([1000, 2000], unit="ms").astype("datetime64[ns]"),
+    }).to_parquet(f"{path}/part-0.parquet")
+    assert pq.read_schema(f"{path}/part-0.parquet").field("timestamp").type.unit == "ns"
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(conf, None)
+    spark.conf.set(conf, nanos_as_long)
+    try:
+        def topo(source):
+            return {
+                "entities": {"in": {"type": "topic", **source}, "out": {"type": "topic"}},
+                "workflow": [("in", "out")],
+            }
+
+        file_cfg = {"file": {"format": "parquet", "path": path}}
+        for source in ({"source": path}, file_cfg):
+            out = collect_records(run_topology(spark, topo(source))["out"], with_timestamp=True)
+            assert out == [("a", 1, 1000), ("b", 2, 2000)], source
+        name = f"nanos_src_{nanos_as_long}"
+        q = (
+            StreamingTopologyRunner(spark, topo(file_cfg)).build({})["out"]
+            .writeStream.format("memory").queryName(name)
+            .option("checkpointLocation", str(tmp_path / "chk"))
+            .trigger(availableNow=True).start()
+        )
+        assert q.awaitTermination(120)
+        rows = spark.sql(f"SELECT key, unix_millis(timestamp) FROM {name} ORDER BY key").collect()
+        assert [tuple(r) for r in rows] == [("a", 1000), ("b", 2000)]
+    finally:
+        if before is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, before)

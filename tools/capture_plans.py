@@ -1,34 +1,34 @@
-"""Dump .explain("formatted") for registry queries into plans/<tag>/.
+"""Dump .explain("formatted") for registry queries, for plan-identity checks.
 
-Usage: python tools/capture_plans.py <tag> <suffix> [query ...]
+Usage: python tools/capture_plans.py <sf_dir> <out_dir> [query ...]
 
-Writes plans/<tag>/<query>_<suffix>.txt for each named query (default:
-every registered query). The optimization-round deliverable: the judge
-cannot run Spark, so plan claims in OPTIMIZATION_r*.md are checked
-against these files. Uses the SAME session configuration as bench.py
-(tools/bench_session.py) so the captured plans are the benched plans.
+Writes <out_dir>/<query>.txt for each named query (default: every
+registered query) over the tables in <sf_dir>. Expression ids (``#123``)
+are stripped, so two captures of the same plan are byte-identical and
+``diff -r <out_a> <out_b>`` is the plan check between two checkouts.
+Uses the same session configuration as bench.py (tools/bench_session.py)
+so the captured plans are the benched plans.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+_EXPR_ID = re.compile(r"#\d+")
 
 
 def main() -> int:
     if len(sys.argv) < 3:
         print(__doc__, file=sys.stderr)
         return 2
-    tag, suffix = sys.argv[1], sys.argv[2]
+    sf_dir, out_dir = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag
-    )
     os.makedirs(out_dir, exist_ok=True)
     from tools.bench_session import make_bench_session
 
@@ -44,11 +44,11 @@ def main() -> int:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            text = buf.getvalue()
+            text = _EXPR_ID.sub("", buf.getvalue())
         except Exception as e:  # keep going; record the failure
             text = f"ERROR capturing plan: {e}\n"
             rc = 1
-        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
             f.write(text)
         print(f"captured {name} ({len(text)} bytes)", flush=True)
     return rc

@@ -1,22 +1,22 @@
 """Batch compiler — executes a topology dict over batch DataFrames.
 
-This is the engine's analogue of the reference's pure in-memory
-interpreter ``run-experiment`` (experiment.clj:241-255): seed topics
-with input records, topsort the workflow, fold over nodes computing
-each entity's full output changelog from its parents. It doubles as
-(a) the REPL/debug engine and (b) the correctness oracle for the
-streaming compiler — mirroring the reference's experiment-vs-
-TopologyTestDriver strategy (SURVEY §5).
+The engine's analogue of willa's in-memory interpreter ``run-experiment``
+(experiment.clj:241-255): seed topics with input records, then walk the
+topology (``walk.TopologyWalk``, shared with the streaming compiler),
+computing each entity's full output changelog from its parents. It is
+the REPL/debug engine and the correctness oracle for the streaming
+compiler (SURVEY §5). This module holds only the batch operators:
+seeding, typed empty join legs, the ``operators.joins`` joins, the ktable
+fold and the fan-out persist.
 
 Differences from the reference's interpreter, by design:
 - Everything is a lazy Spark DataFrame — nothing is materialized until
-  a sink/collect; Catalyst optimizes across entity boundaries (filter
-  pushdown through upstream transforms, join reordering, broadcast
-  selection). The reference interprets eagerly, record-by-record.
+  a sink/collect; Catalyst optimizes across entity boundaries. The
+  reference interprets eagerly, record-by-record.
 - Arrival order is explicit: every record carries a ``__seq`` ordinal
-  (per-entity offset + input index) because distributed DataFrames have
-  no implicit input order; (timestamp, __seq) is the canonical record
-  order everywhere the reference sorts by timestamp with a stable sort.
+  because distributed DataFrames have no implicit input order;
+  (timestamp, __seq) is the canonical record order everywhere the
+  reference sorts by timestamp with a stable sort.
 
 Record contract: every entity output is a DataFrame with columns
 (key, value, timestamp:bigint epoch-millis, __seq:bigint).
@@ -44,10 +44,13 @@ from .operators.windows import (
     assign_time_windows,
 )
 from .transforms import apply_xform
+from .sources.parquet import read_parquet
 from .validate import validate
+from .walk import TopologyWalk
 
 GKEY = "__gkey"
 _ENTITY_SEQ_STRIDE = 1 << 33  # seq-space per entity: keeps arrival ordinals disjoint
+_SEMI_ANTI = ("left_semi", "left_anti")
 
 
 def seed_records(
@@ -100,7 +103,7 @@ def normalize_records(df: DataFrame, seq_offset: int = 0) -> DataFrame:
     return df.select(KEY, VALUE, ts.alias(TIMESTAMP), seq.alias(SEQ))
 
 
-class TopologyRunner:
+class TopologyRunner(TopologyWalk):
     """Compile + run a topology over batch inputs.
 
     ``inputs``: {entity_id: DataFrame | list-of-records}; alternatively
@@ -114,16 +117,17 @@ class TopologyRunner:
         self.order = validate(topology)
         self.entities = topology["entities"]
         self._persisted: list[DataFrame] = []
+        self._seeds: dict[str, DataFrame] = {}
 
     def unpersist(self, blocking: bool = False) -> None:
         """Release the fan-out caches from previous ``run()`` calls.
         ``run()`` persists every multi-consumer node and those cached
         partitions otherwise live until the SparkSession dies — a
         REPL loop calling ``run()`` repeatedly would grow executor
-        storage unboundedly (r15 review). Call this when the returned
-        DataFrames are no longer needed; ``run()`` itself never
-        auto-releases, because the caller's previous results remain
-        live views over the caches."""
+        storage unboundedly. Call this when the returned DataFrames are
+        no longer needed; ``run()`` itself never auto-releases, because
+        the caller's previous results remain live views over the
+        caches."""
         for df in self._persisted:
             df.unpersist(blocking)
         self._persisted.clear()
@@ -142,136 +146,86 @@ class TopologyRunner:
         if isinstance(src, DataFrame):
             return normalize_records(src, seq_offset)
         if isinstance(src, str):
-            return normalize_records(self.spark.read.parquet(src), seq_offset)
+            return normalize_records(read_parquet(self.spark, src), seq_offset)
         key_type = ent.get("key_type", "string")
         value_type = ent.get("value_type", "bigint")
         return seed_records(self.spark, src, key_type, value_type, seq_offset)
 
-    # -- join / merge of parents ----------------------------------------
-    def _joinable_type(self, eid: str) -> str:
-        return model.joinable_type(self.entities, eid)
-
-    def _empty_records(self, eid: str, like: DataFrame | None = None) -> DataFrame:
-        """Typed empty record frame for an output-less entity (no seed,
+    # -- merge and join legs ---------------------------------------------
+    def _empty_records(self, eid: str, like: DataFrame) -> DataFrame:
+        """Typed empty record frame for an output-less join leg (no seed,
         no source, no producing parents): the reference gives such an
-        entity a nil ::output, and its JOINS still run — a left join
+        entity a nil ::output, and its joins still run — a left join
         against a nil leg emits [v, nil] tuples (experiment.clj
         join-*-results with nil right-results), it does not change the
         join's shape. Types come from the entity config when set, else
-        MIRROR the live sibling leg ``like``: intermediate entities
+        mirror the live sibling leg ``like``: intermediate entities
         rarely carry key_type/value_type, and a bigint default against
         a string-valued live leg would make the array tuple's concat
-        heterogeneous — an ANSI analysis error (r15 review). The empty
-        leg's value slot is always NULL, so mirroring is sound for any
-        value type."""
+        heterogeneous — an ANSI analysis error. The empty leg's value
+        slot is always NULL, so mirroring is sound for any value type."""
         ent = self.entities[eid]
-        if like is not None:
-            kt = ent.get("key_type") or like.schema[KEY].dataType.simpleString()
-            vt = ent.get("value_type") or like.schema[VALUE].dataType.simpleString()
-        else:
-            kt = ent.get("key_type", "string")
-            vt = ent.get("value_type", "bigint")
+        kt = ent.get("key_type") or like.schema[KEY].dataType.simpleString()
+        vt = ent.get("value_type") or like.schema[VALUE].dataType.simpleString()
         schema = f"{KEY} {kt}, {VALUE} {vt}, {TIMESTAMP} bigint, {SEQ} bigint"
         return self.spark.createDataFrame([], schema=schema)
 
-    def _combine_parents(self, node: str, outputs: dict) -> DataFrame | None:
-        parents = model.parents_of(self.topology, node)
-        live = [p for p in parents if outputs.get(p) is not None]
+    def _merge(self, node: str, frames: list[DataFrame]) -> DataFrame:
+        return frames[0] if len(frames) == 1 else J.merge(frames)
+
+    def _legs(self, node: str, ordered: list[str], outputs: dict) -> list[DataFrame] | None:
+        # an output-less leg joins as a typed empty frame; dropping it
+        # would untuple the values and swap left/right roles
+        live = [outputs[p] for p in ordered if outputs.get(p) is not None]
         if not live:
             return None
-        order, cfg = model.get_join(self.topology, parents)
-        if order is None or cfg is None or cfg.get("type", "merge") == "merge":
-            if len(live) == 1:
-                return outputs[live[0]]
-            return J.merge([outputs[p] for p in live])
-        # fold pairwise in join-config order (streams.clj:115-123);
-        # within one fold the tuple widens ([v1 v2] conj v3 ...); across
-        # nodes every entity's value is opaque again (arity 1).
-        # An output-less leg participates as a typed EMPTY frame — the
-        # reference joins against a nil leg, it never silently drops
-        # the leg (which would untuple the values and swap left/right
-        # roles; r15 review).
-        like = outputs[live[0]]
+        return [
+            outputs[p] if outputs.get(p) is not None else self._empty_records(p, like=live[0])
+            for p in ordered
+        ]
 
-        def leg(p: str) -> DataFrame:
-            out = outputs.get(p)
-            return out if out is not None else self._empty_records(p, like=like)
+    # -- join operators, one per walk.JOIN_SHAPES operator ----------------
+    def _join_global_table(self, node, cfg, step, left, right) -> DataFrame:
+        # broadcast lookup join; reference has inner/left (streams.clj:104-112)
+        return J.global_table_join(
+            left, right, cfg["type"], cfg.get("kv_mapper"), step.left_arity,
+            tuple_mode=cfg.get("tuple_mode", "array"),
+        )
 
-        acc_df = leg(order[0])
-        acc_type = self._joinable_type(order[0])
-        acc_arity = 1
-        for other_id in order[1:]:
-            acc_df = self._join_pair(
-                cfg, acc_df, acc_type, acc_arity, leg(other_id), other_id
-            )
-            acc_arity += 1
-            # accumulated entity keeps the first leg's type (experiment.clj:141-149)
-        return acc_df
+    def _join_stream_stream(self, node, cfg, step, left, right) -> DataFrame:
+        jt = cfg["type"]
+        before, after = cfg.get("window", (0, 0))
+        if jt in _SEMI_ANTI:
+            # the left record, un-tupled, iff a match exists (semi) / does not (anti)
+            return J.windowed_stream_semi_join(left, right, before, after, anti=jt == "left_anti")
+        flags = {"inner": (False, False), "left": (True, False), "outer": (True, True)}[jt]
+        return J.windowed_stream_join(
+            left, right, before, after, *flags,
+            left_arity=step.left_arity, tuple_mode=cfg.get("tuple_mode", "array"),
+        )
 
-    def _join_pair(
-        self, cfg: dict, left_df: DataFrame, left_type: str, left_arity: int,
-        right_df: DataFrame, right_id: str,
-    ) -> DataFrame:
-        jt = cfg.get("type", "merge")
-        right_type = self._joinable_type(right_id)
-        right_arity = 1
-        mode = cfg.get("tuple_mode", "array")
-        if right_type == model.GLOBAL_KTABLE:
-            # J7: broadcast lookup join; reference has inner/left
-            # (streams.clj:104-112), semi/anti are the Spark extras
-            return J.global_table_join(
-                left_df, right_df, jt, cfg.get("kv_mapper"), left_arity, tuple_mode=mode
-            )
-        if jt in ("left_semi", "left_anti"):
-            # Spark-extra types (model.JOIN_TYPES; SURVEY §2.5 free
-            # wins): emit the LEFT record un-tupled iff a match exists
-            # (semi) / does not (anti). Previously these passed
-            # validate then died in a bare KeyError here (r15 review).
-            anti = jt == "left_anti"
-            if left_type == model.KSTREAM and right_type == model.KSTREAM:
-                before, after = cfg.get("window", (0, 0))
-                return J.windowed_stream_semi_join(
-                    left_df, right_df, before, after, anti=anti
-                )
-            return J.as_of_semi_join(left_df, right_df, anti=anti)
-        if left_type == model.KSTREAM and right_type == model.KSTREAM:
-            before, after = cfg.get("window", (0, 0))
-            flags = {"inner": (False, False), "left": (True, False), "outer": (True, True)}[jt]
-            return J.windowed_stream_join(
-                left_df, right_df, before, after, *flags,
-                left_arity=left_arity, right_arity=right_arity, tuple_mode=mode,
-            )
-        if left_type == model.KTABLE and right_type == model.KTABLE:
-            # inverted flag semantics for tables (experiment.clj:108-121)
-            req = {"inner": (True, True), "left": (True, False), "outer": (False, False)}[jt]
-            return J.table_table_join(
-                left_df, right_df, *req,
-                left_arity=left_arity, right_arity=right_arity, tuple_mode=mode,
-            )
-        if left_type == model.KSTREAM and right_type == model.KTABLE:
-            if jt not in ("inner", "left"):
-                # the reference defines no [:outer :kstream :ktable]
-                # method — fail naming the rule, never a KeyError
-                # (validate also rejects this at compile time)
-                raise ValueError(
-                    f"stream⋈table join type {jt!r} unsupported: the "
-                    "reference defines only inner/left "
-                    "(experiment.clj:123-135); semi/anti are handled "
-                    "above"
-                )
-            require_table = {"inner": True, "left": False}[jt]
-            return J.stream_table_join(
-                left_df, right_df, require_table,
-                left_arity=left_arity, right_arity=right_arity, tuple_mode=mode,
-            )
-        raise ValueError(
-            f"unsupported join shape: {jt} {left_type}⋈{right_type} (right={right_id!r})"
+    def _join_table_table(self, node, cfg, step, left, right) -> DataFrame:
+        jt = cfg["type"]
+        if jt in _SEMI_ANTI:
+            return J.as_of_semi_join(left, right, anti=jt == "left_anti")
+        # inverted flag semantics for tables (experiment.clj:108-121)
+        req = {"inner": (True, True), "left": (True, False), "outer": (False, False)}[jt]
+        return J.table_table_join(
+            left, right, *req, left_arity=step.left_arity, tuple_mode=cfg.get("tuple_mode", "array")
+        )
+
+    def _join_stream_table(self, node, cfg, step, left, right) -> DataFrame:
+        jt = cfg["type"]
+        if jt in _SEMI_ANTI:
+            return J.as_of_semi_join(left, right, anti=jt == "left_anti")
+        return J.stream_table_join(
+            left, right, jt == "inner",
+            left_arity=step.left_arity, tuple_mode=cfg.get("tuple_mode", "array"),
         )
 
     # -- per-entity-type node builders ----------------------------------
     def _ktable_output(self, ent: dict, df: DataFrame) -> DataFrame:
-        has_agg = "aggregate" in ent
-        if not has_agg:
+        if "aggregate" not in ent:
             return df  # changelog passthrough (F5); latest-state derived at join time
         group_by = ent.get("group_by")
         if group_by is not None:
@@ -359,63 +313,45 @@ class TopologyRunner:
         )
         return adds.unionByName(subs)
 
-    # -- run -------------------------------------------------------------
+    # -- per-node output ---------------------------------------------------
+    def _node(self, node: str, ent: dict, combined: DataFrame | None) -> DataFrame | None:
+        etype = ent["type"]
+        if combined is not None and etype == model.KSTREAM and ent.get("xform") is not None:
+            # only an xform can change the record shape
+            combined = apply_xform(combined, ent["xform"]).select(KEY, VALUE, TIMESTAMP, SEQ)
+        elif combined is not None and etype == model.KTABLE:
+            combined = self._ktable_output(ent, combined)
+        # a topic (experiment.clj:196-202) and a global table pass their
+        # input through; latest state is derived at join time
+        return self._emit(node, ent, combined)
+
+    def _built(self, node: str, ent: dict, df: DataFrame | None) -> DataFrame | None:
+        return self._emit(node, ent, None if df is None else df.select(KEY, VALUE, TIMESTAMP, SEQ))
+
+    def _emit(self, node: str, ent: dict, computed: DataFrame | None) -> DataFrame | None:
+        seed = self._seeds.get(node)
+        if seed is not None and computed is not None:
+            out = seed.unionByName(computed)
+        else:
+            out = computed if computed is not None else seed
+        if out is not None and len(model.children_of(self.topology, node)) > 1 and ent.get(
+            "persist", True
+        ):
+            # re-materialization avoidance (reference streams.clj:28-32
+            # store reuse; SURVEY §4): a fan-out node would otherwise be
+            # recomputed once per consumer in the lazy DAG
+            out = out.persist()
+            self._persisted.append(out)
+        return out
+
     def run(self, inputs: dict[str, Any] | None = None) -> dict[str, DataFrame]:
         inputs = inputs or {}
-        outputs: dict[str, DataFrame | None] = {}
-        seeds: dict[str, DataFrame] = {}
+        self._seeds = {}
         for i, (eid, ent) in enumerate(self.entities.items()):
             seeded = self._seed(eid, ent, inputs, seq_offset=i * _ENTITY_SEQ_STRIDE)
             if seeded is not None:
-                seeds[eid] = seeded
-        for node in self.order:
-            ent = self.entities[node]
-            etype = ent["type"]
-            if "build" in ent:
-                # build-override hook (reference build-topology-unsafe!,
-                # core.clj:122-136): replace this node's construction
-                parent_dfs = {
-                    p: outputs[p]
-                    for p in model.parents_of(self.topology, node)
-                    if outputs.get(p) is not None
-                }
-                computed = ent["build"](self.spark, parent_dfs, ent)
-                shaped = False
-            else:
-                combined = self._combine_parents(node, outputs)
-                # parent outputs, merges, joins and ktable folds all come
-                # out as (key, value, timestamp, __seq); only an xform
-                # can change the shape
-                shaped = etype != model.KSTREAM or ent.get("xform") is None
-                if etype == model.TOPIC:
-                    computed = combined  # experiment.clj:196-202
-                elif etype == model.KSTREAM:
-                    computed = (
-                        apply_xform(combined, ent.get("xform")) if combined is not None else None
-                    )
-                elif etype == model.KTABLE:
-                    computed = self._ktable_output(ent, combined) if combined is not None else None
-                elif etype == model.GLOBAL_KTABLE:
-                    computed = combined  # passthrough; latest-state at join time (core.clj:109-118)
-                else:  # pragma: no cover
-                    raise AssertionError(etype)
-            if computed is not None and not shaped:
-                computed = computed.select(KEY, VALUE, TIMESTAMP, SEQ)
-            seed = seeds.get(node)
-            if seed is not None and computed is not None:
-                out = seed.unionByName(computed)
-            else:
-                out = computed if computed is not None else seed
-            if out is not None and len(model.children_of(self.topology, node)) > 1 and ent.get(
-                "persist", True
-            ):
-                # re-materialization avoidance (reference streams.clj:28-32
-                # store reuse; SURVEY §4): a fan-out node would otherwise be
-                # recomputed once per consumer in the lazy DAG
-                out = out.persist()
-                self._persisted.append(out)
-            outputs[node] = out
-        return {k: v for k, v in outputs.items() if v is not None}
+                self._seeds[eid] = seeded
+        return {k: v for k, v in self._walk().items() if v is not None}
 
 
 def run_topology(

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model import KEY, TIMESTAMP, VALUE
+from .parquet import read_parquet
 
 _FORMATS = ("parquet", "orc", "csv", "json", "text")
 
@@ -71,6 +72,9 @@ def read_records(
     path = cfg["path"]
     options = {k: str(v) for k, v in cfg.get("options", {}).items()}
     schema = cfg.get("schema")
+    if fmt == "parquet" and schema is None:
+        # footer schema, TIMESTAMP(NANOS) columns converted
+        return _record_projection(read_parquet(spark, path, streaming, options), cfg)
     if streaming:
         reader = spark.readStream
         if schema is None:

@@ -4,8 +4,13 @@ The reference engine is Kafka-only (SURVEY §2.1); this engine adds file
 sources via the same entity abstraction. One wrinkle handled here: the
 driver's parquet files carry TIMESTAMP(NANOS) columns, which Spark's
 vectorized reader rejects unless ``spark.sql.legacy.parquet.nanosAsLong``
-is set — we set it at runtime and convert the nanos-longs back to proper
-TimestampType (micros) columns so downstream code sees real timestamps.
+is set — ``read_parquet`` sets it at runtime and converts the nanos-longs
+back to proper TimestampType (micros) columns so downstream code sees
+real timestamps. Every parquet read in the engines goes through it: the
+driver tables (``read_table``), a topic's ``source`` path and a
+``{"file": {"format": "parquet"}}`` topic, batch and streaming. A plain
+``spark.read.parquet`` would fail on such a column, or, once the flag is
+set for the session, return its nanoseconds as a bare long.
 
 Schema cache: ``spark.read.parquet(path)`` infers the schema with a Spark
 job that reads the footers, on every call. ``read_table`` instead infers
@@ -95,15 +100,18 @@ def _signature(path: str) -> tuple | None:
         return None
 
 
-def _schema(spark: SparkSession, path: str) -> tuple[T.StructType, list[str]]:
+def _schema(
+    spark: SparkSession, path: str, options: dict[str, str]
+) -> tuple[T.StructType, list[str]]:
     """The path's inferred schema and nanos columns, from the cache when
-    the path's signature still matches."""
-    sig = _signature(path)
+    the path's signature still matches. Reads with reader options are
+    inferred every call: the options can change the inferred schema."""
+    sig = None if options else _signature(path)
     with _SCHEMAS_LOCK:
         hit = _SCHEMAS.get(spark, {}).get(path)
     if sig is not None and hit is not None and hit[0] == sig:
         return hit[1], hit[2]
-    schema = spark.read.parquet(path).schema
+    schema = spark.read.options(**options).parquet(path).schema
     nanos = _nanos_ts_columns(path)
     if sig is not None:
         with _SCHEMAS_LOCK:
@@ -111,12 +119,16 @@ def _schema(spark: SparkSession, path: str) -> tuple[T.StructType, list[str]]:
     return schema, nanos
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver table; nanos-timestamp columns come back as true
-    TimestampType (truncated to micros, Spark's native precision)."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
+def read_parquet(
+    spark: SparkSession, path: str, streaming: bool = False, options: dict | None = None
+) -> DataFrame:
+    """Read a parquet file or directory, as a batch frame or a file
+    stream; nanos-timestamp columns come back as true TimestampType
+    (truncated to micros, Spark's native precision) whatever the
+    session's ``nanosAsLong`` setting was before the call."""
+    options = options or {}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema, nanos = _schema(spark, path)
+    schema, nanos = _schema(spark, path, options)
     # integer DIV, not float division: ns values (~1.7e18) exceed
     # double precision, and a 1-ulp error here shifts epoch-ms
     # values — the DuckDB oracle would hash-mismatch
@@ -126,8 +138,14 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for f in schema.fields:
         if isinstance(f.dataType, T.TimestampNTZType):
             conv[f.name] = F.col(f.name).cast("timestamp")
-    df = spark.read.schema(schema).parquet(path)
+    reader = spark.readStream if streaming else spark.read
+    df = reader.options(**options).schema(schema).parquet(path)
     return df.withColumns(conv) if conv else df
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one driver table (``read_parquet`` of ``<sf_dir>/<name>.parquet``)."""
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:

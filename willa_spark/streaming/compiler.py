@@ -1,11 +1,13 @@
 """Streaming compiler — executes a topology dict on Structured Streaming.
 
-The engine's analogue of the reference's ``build-topology!``
-(core.clj:122-140): validate → topsort → fold building one streaming
-DataFrame per entity → one streaming query per leaf topic. Where the
-reference mutates a Kafka StreamsBuilder, this compiler is pure — the
-lazy streaming DataFrame DAG plays the role the reference's README
-wishes its builder had (README.md:12-18).
+The engine's analogue of willa's ``build-topology!`` (core.clj:122-140):
+validate, then walk the topology (``walk.TopologyWalk``, shared with the
+batch compiler) building one streaming DataFrame per entity, then one
+streaming query per leaf topic. Where the reference mutates a Kafka
+StreamsBuilder, this compiler is pure. This module holds only the
+streaming operators: ingest and watermarks, ``DeferredStream``, the
+stateful joins and folds (n-ary table joins fused into one operator),
+output-mode propagation and the global-table snapshot.
 
 Record contract (streaming): key, value, timestamp:TimestampType
 (event time — Spark watermarks require a real timestamp column; the
@@ -14,32 +16,22 @@ unix_millis).
 
 Semantics mapping (SURVEY §2.7):
 - KTable aggregate → groupBy().agg() in UPDATE mode (Kafka's
-  emit-on-every-update with cache.max.bytes.buffering=0); micro-batch
-  boundaries coalesce same-key updates within a batch — congruity with
-  the batch changelog therefore compares FINAL state per key (or runs
-  one-record-per-trigger inputs).
-- Suppression → withWatermark + APPEND mode (emit-on-window-close) —
-  the one place Spark is more natural than Kafka Streams.
-- Windows → F.window / F.session_window (same epoch alignment as the
-  batch operators).
-- Stream-stream joins → watermarked equi-join with a time-band
-  condition. NOTE divergence: Spark's outer joins emit ONE unmatched
-  row per input without a partner; the reference's oracle emits an
-  unjoined placeholder for EVERY record then dedups at equal
-  (ts, key) (experiment.clj:23-34). Inner joins are congruent;
-  outer-join congruity holds exactly on inputs where matched records
-  satisfy ts_left >= ts_right (placeholder suppressed in batch too).
-- KStream⋈GlobalKTable → stream-static broadcast join. A DataFrame
-  ``static_source`` is a frozen query-start snapshot; a zero-arg
-  callable is re-evaluated at EVERY micro-batch (deferred foreachBatch
-  join — Kafka's continuously-updated GlobalKTable, "current state at
-  lookup time", core.clj:109-118).
+  emit-on-every-update); micro-batches coalesce same-key updates, so
+  congruity with the batch changelog compares FINAL state per key.
+- Suppression → withWatermark + APPEND mode (emit-on-window-close).
+- Windows → F.window / F.session_window (the batch operators' epoch
+  alignment).
+- Stream-stream joins → watermarked equi-join with a time band; left/
+  outer joins add the reference's null-padded placeholders and its
+  equal-(ts, key) dedup (experiment.clj:23-34) in ``_nil_dedup``.
+- KStream⋈GlobalKTable → stream-static broadcast join against a frozen
+  ``static_source`` DataFrame, or a zero-arg callable re-read at every
+  micro-batch (Kafka's continuously-updated GlobalKTable,
+  core.clj:109-118).
 - KStream⋈KTable and KTable⋈KTable → a custom stateful operator
   (``applyInPandasWithState``) holding each table side's current value
-  per key and emitting on stream records (J6) or on both sides'
-  updates (J5) — Kafka Streams' current-state lookup semantics; the
-  batch engine implements the oracle's timestamp-as-of idealization,
-  and the two agree when arrival order is timestamp order.
+  per key — Kafka Streams' current-state lookup; the batch engine's
+  timestamp-as-of oracle agrees when arrival order is timestamp order.
 
 Scale notes: state lives in the Spark state store (RocksDB provider
 configurable); every stateful op keys its shuffle by the group/join
@@ -60,6 +52,7 @@ from ..model import KEY, TIMESTAMP, VALUE
 from ..operators.windows import HoppingWindow, SessionWindow, TumblingWindow
 from ..transforms import apply_xform
 from ..validate import validate
+from ..walk import TopologyWalk
 
 
 def _ms_duration(ms: int) -> str:
@@ -299,7 +292,7 @@ class DeferredStream:
         return batch_df
 
 
-class StreamingTopologyRunner:
+class StreamingTopologyRunner(TopologyWalk):
     """Compile a topology over streaming inputs.
 
     ``inputs``: {entity_id: streaming DataFrame} with columns
@@ -316,6 +309,9 @@ class StreamingTopologyRunner:
         #: entity id -> output mode required downstream of it
         self.output_modes: dict[str, str] = {}
         self.source_watermark = self._source_watermark()
+        self._inputs: dict[str, DataFrame] = {}
+        #: global table id -> its static snapshot (DataFrame or zero-arg callable)
+        self._static: dict[str, Any] = {}
 
     def _source_watermark(self) -> str | None:
         """Watermark delay to attach AT TOPIC INGEST: the minimum delay
@@ -364,9 +360,6 @@ class StreamingTopologyRunner:
         if self.source_watermark:
             df = df.withWatermark(TIMESTAMP, self.source_watermark)
         return df
-
-    def _joinable_type(self, eid: str) -> str:
-        return model.joinable_type(self.entities, eid)
 
     @staticmethod
     def _has_event_time(df: DataFrame) -> bool:
@@ -450,240 +443,226 @@ class StreamingTopologyRunner:
             return col.alias(name, metadata=meta)
         return col.alias(name)
 
-    # -- joins -----------------------------------------------------------
-    def _combine_parents(self, node: str, built: dict) -> DataFrame | None:
-        def usable(p: str) -> bool:
-            # global tables join via their static snapshot, not a stream
-            return built.get(p) is not None or self._joinable_type(p) == model.GLOBAL_KTABLE
+    # -- merge and join legs ---------------------------------------------
+    def _merge(self, node: str, frames: list) -> DataFrame:
+        if len(frames) > 1 and any(isinstance(f, DeferredStream) for f in frames):
+            raise NotImplementedError(
+                f"merge into {node!r}: merging a stream downstream of a "
+                "refreshed global table with other streams is unsupported"
+            )
+        out = frames[0]
+        for f in frames[1:]:
+            out = out.unionByName(f)
+        return out
 
-        parents = [p for p in model.parents_of(self.topology, node) if built.get(p) is not None]
-        if not any(usable(p) for p in model.parents_of(self.topology, node)):
+    def _legs(self, node: str, ordered: list[str], outputs: dict) -> list | None:
+        # a global table joins via its static snapshot, not a stream
+        legs = [
+            outputs[p] if outputs.get(p) is not None else self._static.get(p)
+            for p in ordered
+        ]
+        dead = [p for p, leg in zip(ordered, legs) if leg is None]
+        if len(dead) == len(legs):
             return None
-        order, cfg = model.get_join(self.topology, model.parents_of(self.topology, node))
-        if order is None or cfg is None or cfg.get("type", "merge") == "merge":
-            if not parents:
-                return None
-            if len(parents) > 1 and any(
-                isinstance(built[p], DeferredStream) for p in parents
-            ):
-                raise NotImplementedError(
-                    f"merge into {node!r}: merging a stream downstream of a "
-                    "refreshed global table with other streams is unsupported"
-                )
-            out = built[parents[0]]
-            for p in parents[1:]:
-                out = out.unionByName(built[p])
-            return out
-        dead = [p for p in order if not usable(p)]
         if dead:
-            # a join leg that compiled to NO stream is a topology
-            # mistake in streaming (the batch engine joins the
-            # reference's nil leg as a typed empty frame; a streaming
-            # source cannot be conjured empty) — silently dropping the
-            # leg would untuple the values and swap left/right roles
-            # (r15 review)
+            # the batch engine joins the reference's nil leg as a typed
+            # empty frame; a streaming source cannot be conjured empty,
+            # and dropping the leg would untuple the values and swap
+            # left/right roles
             raise NotImplementedError(
                 f"join into {node!r}: legs {dead} produced no stream "
                 "(no source/input compiled for them); give every join "
                 "leg a source, or run the batch engine, where an "
                 "empty leg joins with reference nil-leg semantics"
             )
-        ordered = list(order)
-        types = [self._joinable_type(p) for p in ordered]
-        if (
-            len(ordered) > 2
-            and all(t == model.KTABLE for t in types[1:])
-            and types[0] in (model.KSTREAM, model.KTABLE)
-            and not any(isinstance(built[p], DeferredStream) for p in ordered)
-        ):
-            # n-ary stream+tables / all-tables chain: fuse the pairwise
-            # fold into ONE stateful operator (chaining stateful Pandas
-            # ops is rejected by Spark, and the fusion is cheaper anyway)
-            out = self._stateful_table_join_n(
-                [built[p] for p in ordered],
-                cfg.get("type", "inner"),
-                cfg.get("tuple_mode", "array"),
-                first_is_stream=(types[0] == model.KSTREAM),
-            )
-            self.output_modes[node] = "update"
-            return out
-        acc = built[ordered[0]]
-        acc_type = self._joinable_type(ordered[0])
-        acc_arity = 1
-        for rid in ordered[1:]:
-            acc = self._join_pair(cfg, acc, acc_type, acc_arity, built[rid], rid, node)
-            acc_arity += 1
-        return acc
+        return legs
 
-    def _join_pair(
-        self, cfg: dict, left: DataFrame, left_type: str, left_arity: int,
-        right: DataFrame, right_id: str, node: str | None = None,
-    ) -> DataFrame:
+    def _fused_join(self, node: str, cfg: dict, legs: list, steps: list) -> DataFrame | None:
+        """An n-ary stream+tables / all-tables chain fuses the pairwise
+        fold into ONE stateful operator (chaining stateful Pandas ops is
+        rejected by Spark, and the fusion is cheaper anyway)."""
+        if (
+            len(legs) > 2
+            and all(s.right_type == model.KTABLE for s in steps)
+            and not any(isinstance(leg, DeferredStream) for leg in legs)
+        ):
+            self.output_modes[node] = "update"
+            return self._stateful_table_join_n(
+                legs,
+                cfg["type"],
+                cfg.get("tuple_mode", "array"),
+                first_is_stream=(steps[0].left_type == model.KSTREAM),
+            )
+        return None
+
+    # -- join operators, one per walk.JOIN_SHAPES operator ----------------
+    def _join_global_table(self, node, cfg, step, left, right):
+        """Broadcast lookup against the dim snapshot ``right``: a frozen
+        DataFrame compiles into the plan; a zero-arg callable is re-read
+        at every micro-batch (deferred foreachBatch join)."""
         from ..operators.joins import _tuple_value
 
-        jt = cfg.get("type", "merge")
+        jt = cfg["type"]
         mode = cfg.get("tuple_mode", "array")
-        right_type = self._joinable_type(right_id)
-        right_ent = self.entities[right_id]
-        if right_type == model.GLOBAL_KTABLE:
-            kv_mapper = cfg.get("kv_mapper")
+        kv_mapper = cfg.get("kv_mapper")
 
-            def join_with(df: DataFrame, dim_src: DataFrame) -> DataFrame:
-                # broadcast lookup join against the dim snapshot
-                jk = kv_mapper(F.col(KEY), F.col(VALUE)) if kv_mapper else F.col(KEY)
-                dim = dim_src.select(F.col(KEY).alias("__tkey"), F.col(VALUE).alias("__tv"))
-                joined = df.withColumn("__jk", jk).join(
-                    F.broadcast(dim), F.col("__jk") == F.col("__tkey"), jt
-                )
-                if jt in ("left_semi", "left_anti"):
-                    # Spark-extra types: record passes through
-                    # un-tupled iff the lookup hits / misses (the
-                    # batch engine's global_table_join contract; the
-                    # dim columns don't survive a semi/anti join, so
-                    # the tuple projection below would fail loudly on
-                    # a missing __tv — r15 review)
-                    return joined.select(F.col(KEY), F.col(VALUE), F.col(TIMESTAMP))
-                return joined.select(
-                    F.col(KEY),
-                    _tuple_value(F.col(VALUE), F.col("__tv"), left_arity, 1, mode).alias(VALUE),
-                    F.col(TIMESTAMP),
-                )
+        def join_with(df: DataFrame, dim_src: DataFrame) -> DataFrame:
+            jk = kv_mapper(F.col(KEY), F.col(VALUE)) if kv_mapper else F.col(KEY)
+            dim = dim_src.select(F.col(KEY).alias("__tkey"), F.col(VALUE).alias("__tv"))
+            joined = df.withColumn("__jk", jk).join(
+                F.broadcast(dim), F.col("__jk") == F.col("__tkey"), jt
+            )
+            if jt in ("left_semi", "left_anti"):
+                # the record passes through un-tupled iff the lookup
+                # hits / misses (the batch global_table_join contract);
+                # the dim columns don't survive a semi/anti join
+                return joined.select(F.col(KEY), F.col(VALUE), F.col(TIMESTAMP))
+            return joined.select(
+                F.col(KEY),
+                _tuple_value(F.col(VALUE), F.col("__tv"), step.left_arity, 1, mode).alias(VALUE),
+                F.col(TIMESTAMP),
+            )
 
-            refresh = right_ent.get("__static_fn")
-            if refresh is not None:
-                # continuously-updated dim: re-evaluate the snapshot at
-                # every micro-batch (deferred foreachBatch join)
-                base = left if isinstance(left, DeferredStream) else DeferredStream(left)
-                return base.then(lambda bdf, _bid: join_with(bdf, refresh()))
-            # frozen snapshot: stream-static join compiles into the plan
-            static = right_ent["__static_df"]
-            if isinstance(left, DeferredStream):
-                return left.then(lambda bdf, _bid: join_with(bdf, static))
-            return join_with(left, static)
+        if callable(right):
+            base = left if isinstance(left, DeferredStream) else DeferredStream(left)
+            return base.then(lambda bdf, _bid: join_with(bdf, right()))
+        if isinstance(left, DeferredStream):
+            return left.then(lambda bdf, _bid: join_with(bdf, right))
+        return join_with(left, right)
+
+    @staticmethod
+    def _reject_deferred(step, left) -> None:
         if isinstance(left, DeferredStream):
             raise NotImplementedError(
-                f"join {left_type}⋈{right_type} downstream of a refreshed "
+                f"join {step.left_type}⋈{step.right_type} downstream of a refreshed "
                 "global table: only stateless ops and further global-table "
                 "joins may follow a refreshing (callable) static_source"
             )
-        if left_type == model.KSTREAM and right_type == model.KSTREAM:
-            before, after = cfg.get("window", (0, 0))
-            exact = jt != "inner" and cfg.get("exact_dedup", True)
-            # exact reference parity builds inner join + synthetic
-            # placeholders (the batch construction); Spark-native outer
-            # joins only when parity is opted out.
-            # KNOWN inner-join divergence for NULL-VALUED records: the
-            # reference's in-memory oracle applies its (timestamp, key)
-            # nil-cull to inner joins too (experiment.clj:30-34,
-            # unconditional), and the batch engine follows it; real
-            # Kafka Streams drops null-valued records from joins
-            # entirely, and this streaming path emits the matched
-            # tuples as Spark joins them. Congruity holds for non-null
-            # values (the tested surface).
-            hows = {"inner": "inner", "left": "leftOuter", "outer": "fullOuter"}
-            if jt not in hows:
-                # valid in the batch engine (model.JOIN_TYPES) but not
-                # compiled for streaming — name the restriction instead
-                # of a bare KeyError (r14 review)
-                raise NotImplementedError(
-                    f"stream-stream join type {jt!r} is not implemented "
-                    f"in streaming (supported: {sorted(hows)}); run the "
-                    "batch engine, or express semi/anti as an inner "
-                    "join + filter"
-                )
-            how = hows[jt]
-            if exact:
-                how = "inner"
-            wm_cfg = cfg.get("watermark")
-            wm = wm_cfg or _ms_duration(before + after + 1000)
-            # +1ms epoch-edge shift on both sides equally (band matches
-            # unchanged), unshift on output; _shift_event_time keeps
-            # the branch to a single EventTimeWatermark node and
-            # rejects an explicit join watermark that conflicts with
-            # an ingest-attached one (it could not be honored).
-            shift = F.expr("INTERVAL 1 MILLISECONDS")
-            lw = self._shift_event_time(left, wm, explicit=wm_cfg is not None)
-            rw = self._shift_event_time(right, wm, explicit=wm_cfg is not None)
-            l = lw.select(
-                F.col(KEY).alias("__lk"), F.col(VALUE).alias("__lv"), F.col(TIMESTAMP).alias("__lts")
+
+    def _join_stream_stream(self, node, cfg, step, left, right):
+        from ..operators.joins import _tuple_value
+
+        self._reject_deferred(step, left)
+        jt = cfg["type"]
+        mode = cfg.get("tuple_mode", "array")
+        left_arity = step.left_arity
+        before, after = cfg.get("window", (0, 0))
+        exact = jt != "inner" and cfg.get("exact_dedup", True)
+        # exact reference parity builds inner join + synthetic
+        # placeholders (the batch construction); Spark-native outer
+        # joins only when parity is opted out.
+        # KNOWN inner-join divergence for NULL-VALUED records: the
+        # reference's in-memory oracle applies its (timestamp, key)
+        # nil-cull to inner joins too (experiment.clj:30-34,
+        # unconditional), and the batch engine follows it; real
+        # Kafka Streams drops null-valued records from joins
+        # entirely, and this streaming path emits the matched
+        # tuples as Spark joins them. Congruity holds for non-null
+        # values (the tested surface).
+        hows = {"inner": "inner", "left": "leftOuter", "outer": "fullOuter"}
+        if jt not in hows:
+            # implemented in the batch engine (walk.JOIN_SHAPES) but
+            # not compiled for streaming — name the restriction
+            raise NotImplementedError(
+                f"stream-stream join type {jt!r} is not implemented "
+                f"in streaming (supported: {sorted(hows)}); run the "
+                "batch engine, or express semi/anti as an inner "
+                "join + filter"
             )
-            r = rw.select(
-                F.col(KEY).alias("__rk"), F.col(VALUE).alias("__rv"), F.col(TIMESTAMP).alias("__rts")
-            )
-            cond = (
-                (F.col("__lk") == F.col("__rk"))
-                & (F.col("__rts") >= F.col("__lts") - F.expr(f"INTERVAL {int(before)} MILLISECONDS"))
-                & (F.col("__rts") <= F.col("__lts") + F.expr(f"INTERVAL {int(after)} MILLISECONDS"))
-            )
-            joined = l.join(r, cond, how)
-            out = joined.select(
-                F.coalesce(F.col("__lk"), F.col("__rk")).alias(KEY),
-                _tuple_value(F.col("__lv"), F.col("__rv"), left_arity, 1, mode).alias(VALUE),
-                self._tag_event_time(
-                    F.greatest(
-                        F.coalesce(F.col("__lts"), F.col("__rts")),
-                        F.coalesce(F.col("__rts"), F.col("__lts")),
-                    ),
-                    lw,
+        how = "inner" if exact else hows[jt]
+        wm_cfg = cfg.get("watermark")
+        wm = wm_cfg or _ms_duration(before + after + 1000)
+        # +1ms epoch-edge shift on both sides equally (band matches
+        # unchanged), unshift on output; _shift_event_time keeps
+        # the branch to a single EventTimeWatermark node and
+        # rejects an explicit join watermark that conflicts with
+        # an ingest-attached one (it could not be honored).
+        shift = F.expr("INTERVAL 1 MILLISECONDS")
+        lw = self._shift_event_time(left, wm, explicit=wm_cfg is not None)
+        rw = self._shift_event_time(right, wm, explicit=wm_cfg is not None)
+        l = lw.select(
+            F.col(KEY).alias("__lk"), F.col(VALUE).alias("__lv"), F.col(TIMESTAMP).alias("__lts")
+        )
+        r = rw.select(
+            F.col(KEY).alias("__rk"), F.col(VALUE).alias("__rv"), F.col(TIMESTAMP).alias("__rts")
+        )
+        cond = (
+            (F.col("__lk") == F.col("__rk"))
+            & (F.col("__rts") >= F.col("__lts") - F.expr(f"INTERVAL {int(before)} MILLISECONDS"))
+            & (F.col("__rts") <= F.col("__lts") + F.expr(f"INTERVAL {int(after)} MILLISECONDS"))
+        )
+        joined = l.join(r, cond, how)
+        out = joined.select(
+            F.coalesce(F.col("__lk"), F.col("__rk")).alias(KEY),
+            _tuple_value(F.col("__lv"), F.col("__rv"), left_arity, 1, mode).alias(VALUE),
+            self._tag_event_time(
+                F.greatest(
+                    F.coalesce(F.col("__lts"), F.col("__rts")),
+                    F.coalesce(F.col("__rts"), F.col("__lts")),
                 ),
-            )
-            if exact:
-                lvt = left.schema[VALUE].dataType
-                rvt = right.schema[VALUE].dataType
-                # placeholder branches FIRST: their timestamp column is
-                # an identity projection of a watermarked source column,
-                # and the union adopts the first branch's event-time
-                # metadata — which is what entitles the downstream
-                # stateful dedup to use event-time timeouts without a
-                # second (illegal, "redefining") withWatermark node
-                parts = [
-                    l.select(
-                        F.col("__lk").alias(KEY),
+                lw,
+            ),
+        )
+        if exact:
+            lvt = left.schema[VALUE].dataType
+            rvt = right.schema[VALUE].dataType
+            # placeholder branches FIRST: their timestamp column is
+            # an identity projection of a watermarked source column,
+            # and the union adopts the first branch's event-time
+            # metadata — which is what entitles the downstream
+            # stateful dedup to use event-time timeouts without a
+            # second (illegal, "redefining") withWatermark node
+            parts = [
+                l.select(
+                    F.col("__lk").alias(KEY),
+                    _tuple_value(
+                        F.col("__lv"), F.lit(None).cast(rvt), left_arity, 1, mode
+                    ).alias(VALUE),
+                    F.col("__lts").alias(TIMESTAMP),
+                )
+            ]
+            if jt == "outer":
+                parts.append(
+                    r.select(
+                        F.col("__rk").alias(KEY),
                         _tuple_value(
-                            F.col("__lv"), F.lit(None).cast(rvt), left_arity, 1, mode
+                            F.lit(None).cast(lvt), F.col("__rv"), left_arity, 1, mode
                         ).alias(VALUE),
-                        F.col("__lts").alias(TIMESTAMP),
+                        F.col("__rts").alias(TIMESTAMP),
                     )
-                ]
-                if jt == "outer":
-                    parts.append(
-                        r.select(
-                            F.col("__rk").alias(KEY),
-                            _tuple_value(
-                                F.lit(None).cast(lvt), F.col("__rv"), left_arity, 1, mode
-                            ).alias(VALUE),
-                            F.col("__rts").alias(TIMESTAMP),
-                        )
-                    )
-                unioned = parts[0]
-                for p in parts[1:]:
-                    unioned = unioned.unionByName(p)
-                unioned = unioned.unionByName(out)
-                out = self._nil_dedup(
-                    unioned, wm, int(before), int(after), mode, left_arity + 1
                 )
-            # undo the epoch-edge shift (after the dedup operator, whose
-            # event-time timeouts need the shifted watermarked column);
-            # keep the event-time tag so a downstream stateful operator
-            # (windowed agg, session fold) never re-attaches a watermark
-            return out.select(
-                *[F.col(c) for c in out.columns if c != TIMESTAMP],
-                self._tag_event_time(F.col(TIMESTAMP) - shift, out),
+            unioned = parts[0]
+            for p in parts[1:]:
+                unioned = unioned.unionByName(p)
+            unioned = unioned.unionByName(out)
+            out = self._nil_dedup(
+                unioned, wm, int(before), int(after), mode, left_arity + 1
             )
-        if right_type == model.KTABLE:
-            if left_arity != 1:
-                raise NotImplementedError(
-                    "n-ary table joins mixing other join kinds are not "
-                    "supported in streaming (pure stream+tables / all-tables "
-                    "chains fuse into one stateful operator upstream)"
-                )
-            if node is not None:
-                # stateful operator in update mode; sinks must follow
-                self.output_modes[node] = "update"
-            return self._stateful_table_join(
-                left, right, jt, mode, table_table=(left_type == model.KTABLE)
+        # undo the epoch-edge shift (after the dedup operator, whose
+        # event-time timeouts need the shifted watermarked column);
+        # keep the event-time tag so a downstream stateful operator
+        # (windowed agg, session fold) never re-attaches a watermark
+        return out.select(
+            *[F.col(c) for c in out.columns if c != TIMESTAMP],
+            self._tag_event_time(F.col(TIMESTAMP) - shift, out),
+        )
+
+    def _join_stream_table(self, node, cfg, step, left, right):
+        self._reject_deferred(step, left)
+        if step.left_arity != 1:
+            raise NotImplementedError(
+                "n-ary table joins mixing other join kinds are not "
+                "supported in streaming (pure stream+tables / all-tables "
+                "chains fuse into one stateful operator upstream)"
             )
-        raise ValueError(f"unsupported streaming join: {jt} {left_type}⋈{right_type}")
+        # stateful operator in update mode; sinks must follow
+        self.output_modes[node] = "update"
+        return self._stateful_table_join(
+            left, right, cfg["type"], cfg.get("tuple_mode", "array"),
+            table_table=(step.left_type == model.KTABLE),
+        )
+
+    _join_table_table = _join_stream_table
 
     def _nil_dedup(
         self, df: DataFrame, wm: str, before_ms: int, after_ms: int, mode: str, arity: int
@@ -1845,8 +1824,9 @@ class StreamingTopologyRunner:
         selective filter stalls downstream suppressed windows."""
         from ..transforms import pin_filters_to_event_time
 
+        self._inputs = inputs
         with pin_filters_to_event_time():
-            return self._build(inputs)
+            return {k: v for k, v in self._walk().items() if v is not None}
 
     def start_queries(
         self,
@@ -1975,90 +1955,71 @@ class StreamingTopologyRunner:
             )
         return queries
 
-    def _build(self, inputs: dict[str, DataFrame]) -> dict[str, DataFrame]:
-        built: dict[str, DataFrame | None] = {}
-        for node in self.order:
-            ent = self.entities[node]
-            etype = ent["type"]
-            mode_up = [
-                self.output_modes.get(p)
-                for p in model.parents_of(self.topology, node)
-                if self.output_modes.get(p)
-            ]
-            if "build" in ent:
-                # build-override hook (core.clj:122-136 unsafe overrides)
-                parent_dfs = {
-                    p: built[p]
-                    for p in model.parents_of(self.topology, node)
-                    if built.get(p) is not None
-                }
-                built[node] = ent["build"](self.spark, parent_dfs, ent)
-                if mode_up:
-                    self.output_modes[node] = mode_up[0]
-                continue
-            combined = self._combine_parents(node, built)
-            deferred = isinstance(combined, DeferredStream)
-            if etype == model.TOPIC:
-                source_df = inputs.get(node)
-                if source_df is None and ent.get("file"):
-                    from ..sources.files import read_records
+    def _parent_mode(self, node: str) -> str | None:
+        """The output mode a stateful ancestor imposes on ``node``."""
+        modes = [self.output_modes.get(p) for p in model.parents_of(self.topology, node)]
+        return next(filter(None, modes), None)
 
-                    source_df = read_records(self.spark, ent["file"], streaming=True)
-                if source_df is not None:
-                    if deferred:
-                        raise NotImplementedError(
-                            f"topic {node!r}: merging a source with a stream "
-                            "downstream of a refreshed global table is unsupported"
-                        )
-                    src = self._ingest(source_df)
-                    built[node] = src if combined is None else combined.unionByName(src)
-                else:
-                    built[node] = combined
-            elif etype == model.KSTREAM:
-                if deferred:
-                    # stateless: re-runs per micro-batch inside foreachBatch
-                    xform = ent.get("xform")
-                    built[node] = combined.then(lambda df, _bid, x=xform: apply_xform(df, x))
-                else:
-                    built[node] = (
-                        apply_xform(combined, ent.get("xform")) if combined is not None else None
-                    )
-            elif etype == model.KTABLE:
+    def _built(self, node: str, ent: dict, df):
+        mode = self._parent_mode(node)
+        if mode:
+            self.output_modes[node] = mode
+        return df
+
+    def _node(self, node: str, ent: dict, combined):
+        etype = ent["type"]
+        deferred = isinstance(combined, DeferredStream)
+        out = combined
+        if etype == model.TOPIC:
+            source_df = self._inputs.get(node)
+            if source_df is None and ent.get("file"):
+                from ..sources.files import read_records
+
+                source_df = read_records(self.spark, ent["file"], streaming=True)
+            if source_df is not None:
                 if deferred:
                     raise NotImplementedError(
-                        f"ktable {node!r}: stateful aggregation downstream of a "
-                        "refreshed global table join is unsupported (per-batch "
-                        "re-aggregation would lose cross-trigger state); use a "
-                        "frozen static_source DataFrame instead"
+                        f"topic {node!r}: merging a source with a stream "
+                        "downstream of a refreshed global table is unsupported"
                     )
-                built[node] = self._ktable(ent, combined, node) if combined is not None else None
-            elif etype == model.GLOBAL_KTABLE:
-                # static snapshot: materialize the parent topic's latest
-                # state as a batch DF (must be provided — streaming
-                # sources can't be collected).  A zero-arg CALLABLE
-                # static_source is re-evaluated at every micro-batch
-                # (continuously-updated dim, core.clj:109-118) via a
-                # deferred foreachBatch join; a plain DataFrame is a
-                # frozen query-start snapshot.
-                parents = model.parents_of(self.topology, node)
-                static = ent.get("static_source")
-                if static is None:
-                    raise ValueError(
-                        f"global_ktable {node!r} needs 'static_source' (batch "
-                        f"DataFrame of records, or a zero-arg callable returning "
-                        f"one, re-read per micro-batch) in streaming mode; "
-                        f"parent={parents}"
-                    )
-                if callable(static):
-                    ent["__static_fn"] = static
-                    ent.pop("__static_df", None)
-                else:
-                    ent["__static_df"] = static
-                    ent.pop("__static_fn", None)
-                built[node] = None  # joined via the snapshot, not as a stream
-            if mode_up and node in built and built[node] is not None:
-                self.output_modes[node] = mode_up[0]
-        return {k: v for k, v in built.items() if v is not None}
+                src = self._ingest(source_df)
+                out = src if combined is None else combined.unionByName(src)
+        elif etype == model.KSTREAM:
+            if deferred:
+                # stateless: re-runs per micro-batch inside foreachBatch
+                xform = ent.get("xform")
+                out = combined.then(lambda df, _bid, x=xform: apply_xform(df, x))
+            elif combined is not None:
+                out = apply_xform(combined, ent.get("xform"))
+        elif etype == model.KTABLE:
+            if deferred:
+                raise NotImplementedError(
+                    f"ktable {node!r}: stateful aggregation downstream of a "
+                    "refreshed global table join is unsupported (per-batch "
+                    "re-aggregation would lose cross-trigger state); use a "
+                    "frozen static_source DataFrame instead"
+                )
+            if combined is not None:
+                out = self._ktable(ent, combined, node)
+        elif etype == model.GLOBAL_KTABLE:
+            # joined via a static snapshot, not as a stream: the parent
+            # topic's latest state as a batch DataFrame (streaming sources
+            # can't be collected), or a zero-arg callable re-evaluated at
+            # every micro-batch (continuously-updated dim, core.clj:109-118)
+            static = ent.get("static_source")
+            if static is None:
+                raise ValueError(
+                    f"global_ktable {node!r} needs 'static_source' (batch "
+                    f"DataFrame of records, or a zero-arg callable returning "
+                    f"one, re-read per micro-batch) in streaming mode; "
+                    f"parent={model.parents_of(self.topology, node)}"
+                )
+            self._static[node] = static
+            out = None
+        mode = self._parent_mode(node)
+        if mode and out is not None:
+            self.output_modes[node] = mode
+        return out
 
     def output_mode_for(self, node: str) -> str:
         return self.output_modes.get(node, "append")

@@ -9,13 +9,16 @@ Rules enforced (citations into /root/reference/src/willa/specs.clj):
 - aggregation conditional-keys rule: any aggregation key present =>
   group_by + aggregate(init, adder) all required (75-86, README.md:215-219)
 - global_ktable: exactly one parent and it must be a topic (core.clj:109-118)
-- join configs reference known entities and a known join type
+- join configs reference known entities and a known join type, and every
+  step of each join's fold has a shape that implements that type
+  (walk.JOIN_SHAPES)
 """
 
 from __future__ import annotations
 
 from . import model
 from .graph import CycleError, leaves, roots, topological_sort
+from .walk import unsupported_step
 
 
 class TopologyError(ValueError):
@@ -124,57 +127,26 @@ def validate(topology: dict) -> list[str]:
             )
         if jt == "merge":
             continue
-        # Join-type ⋈ shape compatibility at COMPILE time: several
-        # (type, shape) pairs pass the membership check above but have
-        # no implementation (reference defines no [:outer :kstream
-        # :ktable], no ktable-driving-kstream, no global-table-as-left
-        # leg) — previously these died at runtime in a bare KeyError /
-        # assert (r15 review). Fold pairwise exactly like the engines:
-        # acc keeps the FIRST leg's joinable type.
+        # Join-type ⋈ shape compatibility at compile time, from the shape
+        # table both engines dispatch on. Every consumer's own fold order
+        # is checked: a frozenset-keyed join falls back to each consumer's
+        # workflow-parent order, so two consumers of one join can fold in
+        # different orders and only one of them be a supported shape.
         consumers = [
-            n
-            for n in entities
-            if frozenset(src for (src, dst) in workflow if dst == n)
-            == frozenset(ids)
+            n for n in entities if frozenset(model.parents_of(topology, n)) == frozenset(ids)
         ]
-        shapes = {
-            (model.KSTREAM, model.KSTREAM): (
-                "inner", "left", "outer", "left_semi", "left_anti"
-            ),
-            (model.KTABLE, model.KTABLE): (
-                "inner", "left", "outer", "left_semi", "left_anti"
-            ),
-            (model.KSTREAM, model.KTABLE): (
-                "inner", "left", "left_semi", "left_anti"
-            ),
-        }
-        # check EVERY consumer's own fold order: a frozenset-keyed
-        # join falls back to each consumer's workflow-parent order,
-        # so two consumers of the same join can fold in different
-        # orders and only one of them be a supported shape (r15
-        # review — consumers[0] alone would re-open the runtime-crash
-        # hole this check exists to close)
         for consumer in consumers:
-            ordered, _ = model.get_join(
-                topology, [s for (s, d) in workflow if d == consumer]
-            )
-            acc_t = model.joinable_type(entities, ordered[0])
-            for rid in ordered[1:]:
-                r_t = model.joinable_type(entities, rid)
-                if r_t == model.GLOBAL_KTABLE:
-                    allowed = ("inner", "left", "left_semi", "left_anti")
-                else:
-                    allowed = shapes.get((acc_t, r_t), ())
-                if jt not in allowed:
-                    supported = (
-                        ", ".join(sorted(allowed))
-                        if allowed
-                        else "none — reorder the join so a stream or table drives"
-                    )
-                    raise TopologyError(
-                        f"join {tuple(ids)!r} (into {consumer!r}): type "
-                        f"{jt!r} is unsupported for the {acc_t}⋈{r_t} "
-                        f"shape (supported there: {supported})"
-                    )
-                # acc keeps the first leg's type (experiment.clj:141-149)
+            ordered, _ = model.get_join(topology, model.parents_of(topology, consumer))
+            bad = unsupported_step(entities, ordered, jt)
+            if bad is not None:
+                supported = (
+                    ", ".join(sorted(bad.join_types))
+                    if bad.join_types
+                    else "none — reorder the join so a stream or table drives"
+                )
+                raise TopologyError(
+                    f"join {tuple(ids)!r} (into {consumer!r}): type "
+                    f"{jt!r} is unsupported for the {bad.left_type}⋈{bad.right_type} "
+                    f"shape (supported there: {supported})"
+                )
     return order
