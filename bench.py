@@ -167,19 +167,10 @@ HEADLINE = [
 ]
 
 
-# Optimization rounds bench the complete registry (see the call site
-# in main() for the rationale); flip to False only if a future round
-# explicitly reinstates the exhibition cadence for the bench record.
-BENCH_FULL_REGISTRY = True
-
-
-def derive_bench_list(headline, queries, exhibition, exhibition_round, env_flag):
-    """The ONE bench-list derivation, pure so the r18 exhibition-round
-    mechanics are testable BEFORE that round runs them for real
-    (r14 verdict #4): curated order + auto-append of forgotten
-    registrations + loud drop of stale names + the exhibition skip
-    (rows run only when the tree-state flag or the ad-hoc env var
-    says so). Returns (list, stale) — the caller prints stale."""
+def derive_bench_list(headline, queries):
+    """The ONE bench-list derivation: curated order + auto-append of
+    forgotten registrations + loud drop of stale names. Returns
+    (list, stale) — the caller prints stale."""
     out = list(headline)
     missing = [n for n in queries if n not in out]
     if missing:
@@ -187,8 +178,6 @@ def derive_bench_list(headline, queries, exhibition, exhibition_round, env_flag)
     stale = [n for n in out if n not in queries]
     if stale:
         out = [n for n in out if n in queries]
-    if not (exhibition_round or env_flag):
-        out = [n for n in out if n not in exhibition]
     return out, stale
 
 
@@ -212,32 +201,9 @@ def main() -> int:
     # ...and the reverse direction: a renamed/retired registry name
     # left in the curated list would KeyError outside the per-query
     # try and kill the whole record — drop it loudly instead (the
-    # one-error degradation contract). The EXHIBITION rows (capacity
-    # policy (a), executed r14): with BENCH_FULL_REGISTRY permanently
-    # True for optimization rounds (r15+), they are benched EVERY
-    # round like the rest of the registry — the every-4th-round skip
-    # cadence described in queries.py applies only if a future round
-    # flips BENCH_FULL_REGISTRY back to False (then
-    # queries.EXHIBITION_ROUND / SPARK_GRAFT_EXHIBITION gate them
-    # again). Their DuckDB oracles stay pinned every round by the
-    # omitted-parity pytest either way.
-    from willa_spark.queries import EXHIBITION, EXHIBITION_ROUND
-
-    derived, stale = derive_bench_list(
-        HEADLINE,
-        QUERIES,
-        EXHIBITION,
-        # OPTIMIZATION ROUNDS (r15+): the bench times EVERY registered
-        # query path — the optimization mandate covers all operators,
-        # and a bench entry present in the r14 record must never
-        # disappear from later records (the exhibition skip predates
-        # this rule; tranche-2 had removed 4 rows that were still in
-        # BENCH_r14). Exhibition skipping is suspended; the rotation
-        # mechanics and their tests stay intact for any future
-        # non-optimization cadence.
-        EXHIBITION_ROUND or BENCH_FULL_REGISTRY,
-        os.environ.get("SPARK_GRAFT_EXHIBITION"),
-    )
+    # one-error degradation contract). Every registered query benches,
+    # the EXHIBITION rows included.
+    derived, stale = derive_bench_list(HEADLINE, QUERIES)
     if stale:
         print(f"bench: dropping stale HEADLINE names {stale}", file=sys.stderr)
     HEADLINE[:] = derived

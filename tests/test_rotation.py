@@ -67,83 +67,28 @@ def test_rows_only_gate_names_carry_their_twin_in_gate():
 
 
 def test_exhibition_rows_keep_their_proof():
-    """The exhibition retirement (capacity policy (a), r14) trades
-    bench seconds, never correctness coverage: every exhibition name
-    is a registered query WITH a DuckDB oracle (so the automatic
+    """The exhibition retirement (capacity policy (a)) trades driver
+    gate rows, never correctness coverage: every exhibition name is a
+    registered query WITH a DuckDB oracle (so the automatic
     omitted-parity pytest pins it every round) and rests in
-    DRIVER_OMIT outside exhibition rounds (an exhibition round moves
-    them into the gate and sets SPARK_GRAFT_EXHIBITION for bench)."""
+    DRIVER_OMIT."""
     assert EXHIBITION <= set(QUERIES), EXHIBITION - set(QUERIES)
     assert EXHIBITION <= set(ORACLE_SQL), EXHIBITION - set(ORACLE_SQL)
-    assert EXHIBITION <= DRIVER_OMIT or any(
-        n in driver_queries() for n in EXHIBITION
-    ), "exhibition rows must rest OR be deliberately gate-visible"
+    assert EXHIBITION <= DRIVER_OMIT, EXHIBITION - DRIVER_OMIT
     # no rows-only name may ever be exhibited: its twin proof cadence
     # is the rotation's, not the exhibition's
     assert not (EXHIBITION & set(ROWS_ONLY_TWINS))
 
 
-def test_exhibition_round_flag_consistency():
-    """On a non-exhibition round the flag is off and the rows rest;
-    an exhibition round must flip BOTH (flag on for bench, rows into
-    the gate for the driver's oracle record) — a one-sided edit
-    either benches rows with no same-round green proof, or gates
-    them while the bench record silently omits their prices."""
-    from willa_spark.queries import EXHIBITION_ROUND
-
-    if EXHIBITION_ROUND:
-        assert EXHIBITION <= set(driver_queries()), (
-            "EXHIBITION_ROUND is on but the rows are not gate-visible"
-        )
-    else:
-        assert EXHIBITION <= DRIVER_OMIT, (
-            "exhibition rows gate-visible with the flag off — bench "
-            "would omit rows the driver records this round"
-        )
-
-
-def test_exhibition_round_dry_run_both_directions():
-    """The r18 exhibition-round mechanics, exercised BEFORE that round
-    runs them for real (r14 verdict #4): the round is two edits — flip
-    queries.EXHIBITION_ROUND and move the 10 retirees from DRIVER_OMIT
-    into the gate — and this derives BOTH states end-to-end through
-    the real bench-list function so the first real exhibition round is
-    a config edit, not an adventure."""
+def test_bench_list_covers_registry_once():
+    """bench.py's list is the curated HEADLINE order with every
+    forgotten registration appended: each registered query exactly
+    once, exhibition rows included, and no stale name."""
     from bench import HEADLINE, derive_bench_list
 
-    # --- today's state (flag off): the retirees are skipped ---------
-    off, stale = derive_bench_list(
-        HEADLINE, QUERIES, EXHIBITION, False, None
-    )
+    derived, stale = derive_bench_list(HEADLINE, QUERIES)
     assert not stale
-    assert not (set(off) & EXHIBITION)
-    assert set(off) == set(QUERIES) - EXHIBITION
-    # the ad-hoc env override alone restores them (any round)
-    env, _ = derive_bench_list(HEADLINE, QUERIES, EXHIBITION, False, "1")
-    assert set(env) == set(QUERIES)
-
-    # --- the r18 state (flag on): every retiree benches -------------
-    on, stale = derive_bench_list(HEADLINE, QUERIES, EXHIBITION, True, None)
-    assert not stale
-    assert EXHIBITION <= set(on)
-    assert set(on) == set(QUERIES)
-    # curated-prefix order is preserved in both states (cross-round
-    # per-query comparability): the off-list is the on-list filtered
-    assert off == [n for n in on if n not in EXHIBITION]
-
-    # --- the r18 GATE edit, simulated: retirees leave DRIVER_OMIT ---
-    omit_r18 = DRIVER_OMIT - EXHIBITION
-    gate_r18 = set(QUERIES) - omit_r18
-    assert EXHIBITION <= gate_r18
-    # moving 10 rows in pushes today's full gate past the driver cap,
-    # so the REAL r18 edit must also rest (gate_r18 - 50) names — the
-    # arithmetic the policy block's forward schedule budgets for
-    assert len(gate_r18) == len(driver_queries()) + len(EXHIBITION)
-    # every retiree re-enters the gate WITH its oracle (hash-grade
-    # rows, not rows-only), and none ever needs a twin keep
-    for n in EXHIBITION:
-        assert n in ORACLE_SQL, n
-        assert n not in ROWS_ONLY_TWINS, n
+    assert sorted(derived) == sorted(QUERIES)
 
 
 def test_fast_gate_skip_list_names_real_tests():

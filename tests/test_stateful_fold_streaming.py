@@ -4,6 +4,8 @@ congruity with the batch engine's Python-fold tier."""
 
 from collections import Counter
 
+import pytest
+
 from willa_spark import Aggregate, collect_records, run_topology
 from willa_spark.streaming import run_streaming_topology
 
@@ -148,6 +150,60 @@ def test_python_fold_retraction_congruity(spark, tmp_path):
     for k, v in rows:
         final[k] = v
     assert Counter(final.items()) == b == Counter([("odd", "3,7"), ("even", "")])
+
+
+def test_python_fold_retraction_restart_needs_state_dir(spark, tmp_path):
+    """A Python-subtractor retraction restarted from its checkpoint in a
+    NEW runner: the checkpoint restores the stage-1 re-key state, so the
+    stage-2 fold must resume from the snapshots of the first run. With
+    the entity's ``state_dir`` it does and equals an uninterrupted run;
+    without one each build folds into a fresh temporary directory, and
+    the restart fails naming ``state_dir`` instead of folding from
+    ``initial`` (which yields even=-2, odd=7)."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql import functions as F
+
+    def topo(state_dir=None):
+        ent = {
+            "type": "ktable",
+            "group_by": lambda k, v: F.when(v % 2 == 1, F.lit("odd")).otherwise(F.lit("even")),
+            "aggregate": Aggregate.fold(
+                0, lambda a, gk, v: a + v, "bigint", subtractor=lambda a, gk, v: a - v
+            ),
+            "retract": True,
+            "watermark": "0 seconds",
+        }
+        if state_dir:
+            ent["state_dir"] = state_dir
+        return {
+            "entities": {"in": topic(), "t": ent, "out": topic()},
+            "workflow": [("in", "t"), ("t", "out")],
+        }
+
+    first = [("k", 1, 100), ("k2", 3, 150), ("k", 2, 200)]
+    late = [("k", 7, 400)]  # k flips even→odd after the restart
+
+    def final(*runs):
+        out = {}
+        for rows in runs:
+            out.update(rows)
+        return out
+
+    whole = run_streaming_topology(
+        spark, topo(), {"in": first}, str(tmp_path / "whole"), extra_files={"in": late}
+    )["out"]
+    assert final(whole) == {"even": 0, "odd": 10}
+
+    state_dir = str(tmp_path / "state")
+    run = str(tmp_path / "restart")
+    before = run_streaming_topology(spark, topo(state_dir), {"in": first}, run)["out"]
+    after = run_streaming_topology(spark, topo(state_dir), {"in": late}, run)["out"]
+    assert final(before, after) == final(whole)
+
+    run = str(tmp_path / "no_state_dir")
+    run_streaming_topology(spark, topo(), {"in": first}, run)
+    with pytest.raises(StreamingQueryException, match="no fold state snapshot.*'state_dir'"):
+        run_streaming_topology(spark, topo(), {"in": late}, run)
 
 
 def test_python_fold_windowed_retraction_congruity(spark, tmp_path):
@@ -481,39 +537,104 @@ def test_state_ttl_rejects_available_now_trigger(spark, tmp_path):
         runner.start_queries(built, os.path.join(str(tmp_path), "chk"))
 
 
-def test_python_fold_order_across_arrow_chunks(spark, tmp_path):
+# 14 records, one key, timestamps shuffled so a chunk-local sort
+# differs from the whole-group order
+SHUFFLED = [9, 2, 13, 5, 0, 11, 7, 3, 12, 1, 8, 6, 10, 4]
+
+
+def _prefixes_of_the_sorted_sequence(values):
+    # the LONGEST emission is the complete fold and must be the
+    # timestamp-sorted sequence; every changelog emission is a prefix
+    # of it (order never regresses mid-fold)
+    assert max(values, key=len) == tuple(range(len(SHUFFLED)))
+    for v in values:
+        assert v == tuple(range(len(v)))
+
+
+def _chunk_case(operator):
+    """(topology, inputs, check) for one keyed-state operator, with an
+    order-SENSITIVE input whose single key spans several Arrow chunks."""
+    from pyspark.sql import functions as F
+
+    from willa_spark import SessionWindow
+
+    wf = [("in", "t"), ("t", "out")]
+    inputs = {"in": [("k", i, i * 100) for i in SHUFFLED]}
+    if operator == "fold":
+        order_fold = lambda acc, gk, v: acc + [v]  # noqa: E731
+        t = {"type": "ktable", "aggregate": Aggregate.fold([], order_fold, "array<bigint>")}
+        check = lambda rows: _prefixes_of_the_sorted_sequence(  # noqa: E731
+            [tuple(v) for _, v in rows]
+        )
+    elif operator == "session_fold":
+        # one session (every gap < 1000 ms): a record folded out of
+        # timestamp order lands in the concatenation out of order
+        t = {
+            "type": "ktable",
+            "window": SessionWindow(1000),
+            "aggregate": Aggregate.fold("", concat_add, "string", merger=concat_merge),
+        }
+        check = lambda rows: _prefixes_of_the_sorted_sequence(  # noqa: E731
+            [tuple(int(x) for x in v.split("|")) for _, v in rows]
+        )
+    elif operator == "retract_rekey":
+        # each update of k retracts its previous value, so the group's
+        # sum is the value of the LAST record the re-key stage applied
+        t = {
+            "type": "ktable",
+            "group_by": lambda k, v: F.lit("g"),
+            "aggregate": Aggregate.sum(),
+            "retract": True,
+            "watermark": "0 seconds",
+        }
+
+        def check(rows):
+            assert rows[-1] == ("g", max(SHUFFLED))
+    else:  # stream_table_join
+        # the stream record at t*100+50 must see the table value set at t*100
+        topo = {
+            "entities": {
+                "in-s": topic(),
+                "in-t": topic(),
+                "s": {"type": "kstream"},
+                "t": {"type": "ktable"},
+                "joined": {"type": "kstream"},
+                "out": topic(),
+            },
+            "workflow": [
+                ("in-s", "s"), ("in-t", "t"), ("s", "joined"), ("t", "joined"), ("joined", "out"),
+            ],
+            "joins": {("s", "t"): {"type": "left"}},
+        }
+        inputs = {
+            "in-s": [("k", i, i * 100 + 50) for i in SHUFFLED],
+            "in-t": [("k", i, i * 100) for i in SHUFFLED],
+        }
+
+        def check(rows):
+            assert Counter(rows) == Counter(("k", (i, i)) for i in SHUFFLED)
+
+        return topo, inputs, check
+    topo = {"entities": {"in": topic(), "t": t, "out": topic()}, "workflow": wf}
+    return topo, inputs, check
+
+
+@pytest.mark.parametrize(
+    "operator", ["fold", "stream_table_join", "session_fold", "retract_rekey"]
+)
+def test_python_fold_order_across_arrow_chunks(spark, tmp_path, operator):
     """A group LARGER than arrow.maxRecordsPerBatch arrives as several
-    Arrow chunks; the fold must process the whole group in timestamp
-    order ACROSS chunk boundaries (r14 review: per-chunk sorting let a
-    later record fold before an earlier one whenever a group spanned
-    chunks — invisible below 10k rows/group at the default setting).
-    Forced here with maxRecordsPerBatch=4 and an order-SENSITIVE fold
-    (append), records deliberately shuffled in the input file."""
+    Arrow chunks; every keyed-state operator must process the whole
+    group in timestamp order ACROSS chunk boundaries (per-chunk sorting
+    lets a later record apply before an earlier one whenever a group
+    spans chunks — invisible below 10k rows/group at the default
+    setting). Forced here with maxRecordsPerBatch=4 and order-SENSITIVE
+    inputs, records deliberately shuffled in the input file."""
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
     try:
-        order_fold = lambda acc, gk, v: acc + [v]  # noqa: E731
-        t = {
-            "type": "ktable",
-            "aggregate": Aggregate.fold([], order_fold, "array<bigint>"),
-        }
-        topo = {
-            "entities": {"in": topic(), "t": t, "out": topic()},
-            "workflow": [("in", "t"), ("t", "out")],
-        }
-        # 14 records, one key, timestamps shuffled so chunk-local sort
-        # differs from the whole-group order
-        seq = [9, 2, 13, 5, 0, 11, 7, 3, 12, 1, 8, 6, 10, 4]
-        inputs = {"in": [("k", i, i * 100) for i in seq]}
-        res = run_streaming_topology(spark, topo, inputs, str(tmp_path))
-        finals = [tuple(v) for _, v in res["out"]]
-        # the LONGEST emission is the complete fold; it must be the
-        # timestamp-sorted sequence
-        assert max(finals, key=len) == tuple(range(14))
-        # and every changelog emission is a prefix of it (order never
-        # regresses mid-fold)
-        for f in finals:
-            assert f == tuple(range(len(f)))
+        topo, inputs, check = _chunk_case(operator)
+        check(run_streaming_topology(spark, topo, inputs, str(tmp_path))["out"])
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
 

@@ -4,6 +4,8 @@ congruent with the batch oracle when arrival order == timestamp order
 
 from collections import Counter
 
+import pytest
+
 from willa_spark import collect_records, run_topology
 from willa_spark.streaming import run_streaming_topology
 
@@ -90,6 +92,23 @@ def test_table_table_outer_join_streaming(spark, tmp_path):
     inputs = {"in-a": [("k", 1, 100)], "in-b": [("k", 2, 50)]}
     res = run_streaming_topology(spark, table_table_topo("outer"), inputs, str(tmp_path))
     assert Counter(res["out"]) == Counter([("k", (None, 2)), ("k", (1, 2))])
+
+
+@pytest.mark.parametrize(
+    "jt,expected",
+    [
+        ("inner", [(1, 2), (3, 2), (3, 4)]),
+        ("left", [(1, None), (1, 2), (3, 2), (3, 4)]),
+        ("outer", [(1, None), (1, 2), (3, 2), (3, 4)]),
+    ],
+)
+def test_table_table_equal_timestamps_apply_in_leg_order(spark, tmp_path, jt, expected):
+    """Updates of both tables at the SAME timestamp apply in join-leg
+    order, the first leg's before the second's, as in every n-ary
+    table chain: a@100 then b@100, a@200 then b@200."""
+    inputs = {"in-a": [("k", 1, 100), ("k", 3, 200)], "in-b": [("k", 2, 100), ("k", 4, 200)]}
+    res = run_streaming_topology(spark, table_table_topo(jt), inputs, str(tmp_path))
+    assert Counter(res["out"]) == Counter(("k", v) for v in expected)
 
 
 def nary_topo(jt, first="ktable"):

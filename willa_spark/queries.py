@@ -6729,10 +6729,7 @@ def q_classifier_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   r17 gate = the 30 r14-green rests (audio_fingerprint_dups with
 #   recall_audio_fp in-cohort) + up to 20 keeps/new.
 #   r18 = the first EXHIBITION round: the 14 retirees (both tranches)
-#   AND the 16 r15-keeps are due (30 names, within cap);
-#   EXHIBITION_ROUND flips True in that round's gate-edit commit
-#   (bench reads it) and back False at its close; next exhibition
-#   round r22.
+#   AND the 16 r15-keeps are due (30 names, within cap).
 #
 # CAPACITY POLICY (the r12 verdict's #6, decided BEFORE the wall;
 # option (a) EXECUTED r14 — see EXHIBITION below): period-3 at gate
@@ -6830,32 +6827,15 @@ ROWS_ONLY_TWINS: dict[str, tuple[str, ...]] = {
     "ann_ivf_topk": ("recall_ann_ivf",),
 }
 
-# THE EXHIBITION SET (capacity policy (a), EXECUTED r14): ten
-# redundant sub-second single-operator relational rows retired from
-# the period-3 rotation AND from bench.py's default list onto an
-# every-4th-round cadence — first exhibition round r18, then r22, …
-# (that round's gate includes them and bench runs with
-# SPARK_GRAFT_EXHIBITION=1 so they re-earn green driver rows). The
-# trigger: both r14 close-window bench runs read >150 s (159.9 /
-# 159.4 under loadavg spikes to 12) with the 121-row registry, and
-# the r15 projection sat AT the ceiling — the r13 verdict's #3 says
-# pull this lever rather than serial-re-run. ZERO oracle loss: every
-# name keeps its DuckDB oracle and stays in DRIVER_OMIT, so
+# THE EXHIBITION SET: redundant sub-second single-operator relational
+# rows retired from the driver-gate rotation (capacity policy (a)
+# above). ZERO oracle loss: every name keeps its DuckDB oracle and
+# stays in DRIVER_OMIT, so
 # tests/test_curation.py::test_omitted_relational_parity pins it
-# EVERY round regardless; operator coverage stays: all ten are §2.6
-# superset rows whose operators the composed rows also exercise
+# every round; operator coverage stays: all are §2.6 superset rows
+# whose operators the composed rows also exercise
 # (anti_join_customers, the set-op sibling, remains in the normal
-# rotation). Saved from every non-exhibition bench: ≈3.97 s (the
-# r13-close sum of the ten), and 30 period-3 slots freed against the
-# 150-name wall. All ten were last green r12 (hash-grade).
-# Flipped to True by the EXHIBITION round's gate-edit commit (r18,
-# r22, …) and back to False at that round's close: the driver runs
-# bench.py with no env vars, so the exhibition rows' once-in-four
-# bench appearance must be tree-state, not invocation-state
-# (SPARK_GRAFT_EXHIBITION=1 remains as a manual override for ad-hoc
-# runs in any round).
-EXHIBITION_ROUND = False
-
+# rotation). bench.py benches them with the rest of the registry.
 EXHIBITION = frozenset(
     {
         "above_avg_orders",  # 0.50 s — correlated-subquery decorrelation

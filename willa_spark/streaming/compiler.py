@@ -28,8 +28,8 @@ Semantics mapping (SURVEY §2.7):
   ``static_source`` DataFrame, or a zero-arg callable re-read at every
   micro-batch (Kafka's continuously-updated GlobalKTable,
   core.clj:109-118).
-- KStream⋈KTable and KTable⋈KTable → a custom stateful operator
-  (``applyInPandasWithState``) holding each table side's current value
+- KStream⋈KTable and KTable⋈KTable → one custom stateful operator
+  (``keyed_state``) holding each table side's current value
   per key — Kafka Streams' current-state lookup; the batch engine's
   timestamp-as-of oracle agrees when arrival order is timestamp order.
 
@@ -49,10 +49,17 @@ from pyspark.sql import functions as F
 
 from .. import model
 from ..model import KEY, TIMESTAMP, VALUE
-from ..operators.windows import HoppingWindow, SessionWindow, TumblingWindow
+from ..operators.windows import (
+    WINDOW_START,
+    HoppingWindow,
+    SessionWindow,
+    TumblingWindow,
+    assign_time_windows,
+)
 from ..transforms import apply_xform
 from ..validate import validate
 from ..walk import TopologyWalk
+from .keyed_state import elems_to_tuple, keyed_state
 
 
 def _ms_duration(ms: int) -> str:
@@ -119,38 +126,6 @@ def _session_wallclock(ms: int, tz):
         .tz_convert(tz)
         .tz_localize(None)
     )
-
-
-def _whole_group(pdf_iter, sort_cols):
-    """applyInPandasWithState delivers one GROUP as an iterator of
-    Arrow chunks. Sorting each chunk independently orders records
-    only WITHIN a chunk — a group larger than
-    spark.sql.execution.arrow.maxRecordsPerBatch (default 10k) spans
-    several chunks, and a stateful fold/join would then apply a later
-    record before an earlier one across the boundary (r14 review).
-    Concatenate the group's chunks and sort ONCE, stably.
-
-    MEMORY BOUND (r15 ADVICE): this buffers the group's ENTIRE
-    micro-batch volume in one worker — for operators whose state is
-    already O(group) (stream-stream joins, session buffers) that
-    changes nothing, but for an O(1)-accumulator fold on a hot key
-    the per-group peak rises from O(arrow chunk) to O(group rows per
-    micro-batch). That is the price of cross-chunk ordering
-    correctness; at 100 TB the real control is micro-batch sizing
-    (maxOffsetsPerTrigger / file batching), which bounds the hot
-    key's per-trigger row count regardless. A chunk-at-a-time
-    heapq.merge would keep O(chunk) peaks but every consumer folds or
-    joins over the whole ordered group anyway. Returns None for an
-    empty delivery (timeout invocations)."""
-    import pandas as pd
-
-    chunks = list(pdf_iter)
-    if not chunks:
-        return None
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(
-        chunks, ignore_index=True
-    )
-    return pdf.sort_values(sort_cols, kind="stable")
 
 
 def _scalar_caster(type_str: str):
@@ -478,16 +453,14 @@ class StreamingTopologyRunner(TopologyWalk):
         return legs
 
     def _fused_join(self, node: str, cfg: dict, legs: list, steps: list) -> DataFrame | None:
-        """An n-ary stream+tables / all-tables chain fuses the pairwise
-        fold into ONE stateful operator (chaining stateful Pandas ops is
-        rejected by Spark, and the fusion is cheaper anyway)."""
-        if (
-            len(legs) > 2
-            and all(s.right_type == model.KTABLE for s in steps)
-            and not any(isinstance(leg, DeferredStream) for leg in legs)
+        """Every stream+tables / all-tables chain of two or more legs runs
+        as ONE stateful operator (chaining stateful Pandas ops is rejected
+        by Spark, and the fusion is cheaper anyway)."""
+        if all(s.right_type == model.KTABLE for s in steps) and not any(
+            isinstance(leg, DeferredStream) for leg in legs
         ):
             self.output_modes[node] = "update"
-            return self._stateful_table_join_n(
+            return self._table_join(
                 legs,
                 cfg["type"],
                 cfg.get("tuple_mode", "array"),
@@ -648,18 +621,13 @@ class StreamingTopologyRunner(TopologyWalk):
         )
 
     def _join_stream_table(self, node, cfg, step, left, right):
+        # _fused_join takes every pure chain; what reaches here follows a
+        # refreshed global table or mixes in a stream-stream join
         self._reject_deferred(step, left)
-        if step.left_arity != 1:
-            raise NotImplementedError(
-                "n-ary table joins mixing other join kinds are not "
-                "supported in streaming (pure stream+tables / all-tables "
-                "chains fuse into one stateful operator upstream)"
-            )
-        # stateful operator in update mode; sinks must follow
-        self.output_modes[node] = "update"
-        return self._stateful_table_join(
-            left, right, cfg["type"], cfg.get("tuple_mode", "array"),
-            table_table=(step.left_type == model.KTABLE),
+        raise NotImplementedError(
+            "n-ary table joins mixing other join kinds are not "
+            "supported in streaming (pure stream+tables / all-tables "
+            "chains fuse into one stateful operator upstream)"
         )
 
     _join_table_table = _join_stream_table
@@ -703,16 +671,8 @@ class StreamingTopologyRunner(TopologyWalk):
         shuffle key (key, ts) is finer than the join key, so hot join
         keys actually spread here.
         """
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         vt = df.schema[VALUE].dataType
         kt = df.schema[KEY].dataType.simpleString()
-        # NULL elements inside arrays/structs crossing the Arrow/pickle
-        # boundary fail Spark's row decoder (same workaround as the
-        # stateful table join): the Python op speaks per-element
-        # nullable SCALAR columns __e0..__e{n-1}; the tuple is
-        # (re)assembled JVM-side afterwards
         if mode == "struct":
             field_names = [f.name for f in vt.fields]
             elem_types = [f.dataType.simpleString() for f in vt.fields]
@@ -721,15 +681,12 @@ class StreamingTopologyRunner(TopologyWalk):
             elem_types = [vt.elementType.simpleString()] * arity
         elem_cols = [f"__e{i}" for i in range(arity)]
         elems_ddl = ", ".join(f"{c} {t}" for c, t in zip(elem_cols, elem_types))
-        out_schema = f"{KEY} {kt}, {elems_ddl}, {TIMESTAMP} timestamp"
-        state_schema = f"n_seen int, n_null int, {elems_ddl}"
         # natural settle point: a joined row for group ts T needs both
         # inputs on time, and inputs older than wm - join_watermark are
         # late — so after T + band + join_watermark (+slack) the group
         # cannot grow
         settle_ms = before_ms + after_ms + _duration_ms(wm, default=before_ms + after_ms + 1000) + 1000
         session_tz = _resolve_session_tz(self.spark)
-
         casters = [_scalar_caster(t) for t in elem_types]
 
         def to_elems(v) -> list:
@@ -738,41 +695,23 @@ class StreamingTopologyRunner(TopologyWalk):
                 return [c(d.get(f)) for c, f in zip(casters, field_names)]
             return [c(x) for c, x in zip(casters, list(v))]
 
-        def rows_frame(key, elem_rows):
-            data = {KEY: [key[0]] * len(elem_rows)}
-            for i, c in enumerate(elem_cols):
-                data[c] = [r[i] for r in elem_rows]
-            data[TIMESTAMP] = [key[1]] * len(elem_rows)
-            return pd.DataFrame(data)
-
-        def dedup(key, pdf_iter, state):
-            if state.exists:
-                n_seen, n_null, *first_null = state.get
-            else:
-                n_seen, n_null, first_null = 0, 0, [None] * arity
-            if state.hasTimedOut:
+        def dedup(key, state, rows, timed_out, _wm):
+            n_seen, n_null, *first_null = state
+            if timed_out:
                 emit = n_seen == 1 and n_null == 1
-                payload = list(first_null)
-                state.remove()
-                if emit:
-                    yield rows_frame(key, [payload])
-                return
+                return None, [(key[0], *first_null, key[1])] if emit else [], None
             passthrough = []
-            for pdf in pdf_iter:
-                for v in pdf[VALUE].tolist():
-                    elems = to_elems(v)
-                    n_seen += 1
-                    if any(x is None for x in elems):
-                        if n_null == 0:
-                            first_null = elems
-                        n_null += 1
-                    else:
-                        passthrough.append(elems)
-            state.update((n_seen, n_null, *first_null))
-            natural = _epoch_ms(key[1], session_tz) + settle_ms
-            state.setTimeoutTimestamp(max(natural, state.getCurrentWatermarkMs() + 1))
-            if passthrough:
-                yield rows_frame(key, passthrough)
+            for v in rows[VALUE].tolist():
+                elems = to_elems(v)
+                n_seen += 1
+                if any(x is None for x in elems):
+                    if n_null == 0:
+                        first_null = elems
+                    n_null += 1
+                else:
+                    passthrough.append((key[0], *elems, key[1]))
+            settle = _epoch_ms(key[1], session_tz) + settle_ms
+            return (n_seen, n_null, *first_null), passthrough, settle
 
         # NO new withWatermark here: a second watermark node downstream
         # of the sources' is "redefining" under multi-stateful-operator
@@ -780,25 +719,33 @@ class StreamingTopologyRunner(TopologyWalk):
         # satisfied by the join inputs' watermarks (the union's first
         # branch carries the event-time column metadata through; the
         # timeout clock is the query's global watermark either way)
-        folded = df.groupBy(KEY, TIMESTAMP).applyInPandasWithState(
-            dedup, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
+        folded = keyed_state(
+            df,
+            [KEY, TIMESTAMP],
+            dedup,
+            f"{KEY} {kt}, {elems_ddl}, {TIMESTAMP} timestamp",
+            f"n_seen int, n_null int, {elems_ddl}",
+            order_by=TIMESTAMP,
+            default=(0, 0, *[None] * arity),
+            output_mode="append",
+            timeout="event",
         )
-        if mode == "struct":
-            value = F.struct(
-                *[F.col(c).alias(f"_{i + 1}") for i, c in enumerate(elem_cols)]
-            )
-        else:
-            value = F.array(*[F.col(c) for c in elem_cols])
-        return folded.select(F.col(KEY), value.alias(VALUE), F.col(TIMESTAMP))
+        return elems_to_tuple(folded, elem_cols, mode)
 
-    def _stateful_table_join(
-        self, left: DataFrame, right: DataFrame, jt: str, mode: str, table_table: bool
+    def _table_join(
+        self, dfs: list[DataFrame], jt: str, mode: str, first_is_stream: bool
     ) -> DataFrame:
-        """KStream⋈KTable (J6) and KTable⋈KTable (J5) in streaming, as a
-        custom stateful operator (applyInPandasWithState): per-key state
-        holds each table side's CURRENT value; every record processes in
-        (ts, table-side-first) order, updates its side's state if it is
-        a table, and emits the joined tuple.
+        """KStream⋈KTable (J6), KTable⋈KTable (J5) and their n-ary chains
+        (J8, streams.clj:115-123 — the reference folds ANY arity
+        pairwise) as ONE stateful operator: per-key state holds every
+        table side's CURRENT value; each record, in (ts, leg) order with
+        tables before the stream at equal ts, updates its side and emits
+        the full widened tuple. The chained fold's presence rules compose
+        to: inner → every table present; left → the first leg present
+        (a stream always is); outer (table-table only) → always. A
+        stream-first chain emits only on stream records (table updates
+        just refresh state), exactly what chained stream⋈table joins
+        yield; an all-tables chain emits on every update.
 
         Semantics note: this is Kafka Streams' actual runtime behavior —
         a lookup against the table's current state at processing time.
@@ -807,143 +754,20 @@ class StreamingTopologyRunner(TopologyWalk):
         arrival order is timestamp order (the congruity tests feed
         exactly that), and diverge on late data exactly as Kafka does.
 
-        Scale: state is ~2 values per key in the state store, shuffle is
-        keyed by the join key — the same layout Kafka Streams uses via
-        repartition topics + RocksDB.
-        """
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        lvt = left.schema[VALUE].dataType.simpleString()
-        rvt = right.schema[VALUE].dataType.simpleString()
-        kt = left.schema[KEY].dataType.simpleString()
-        if mode == "array" and lvt != rvt:
-            raise ValueError(
-                "array tuple_mode needs matching value types; use "
-                "tuple_mode='struct' in the join config"
-            )
-        # the fold emits the two sides as SEPARATE nullable columns; the
-        # tuple is assembled JVM-side afterwards — NULL elements inside
-        # arrays crossing the Arrow boundary fail Spark's row decoder
-        out_schema = f"{KEY} {kt}, __l {lvt}, __r {rvt}, {TIMESTAMP} timestamp"
-        # presence flags distinguish "no state yet" from a NULL value
-        state_schema = f"lv {lvt}, has_l boolean, rv {rvt}, has_r boolean"
-        req_flags = {
-            # stream-table (streams.clj:100-102): inner requires table hit
-            False: {"inner": (False, True), "left": (False, False)},
-            # table-table inverted flags (experiment.clj:108-121)
-            True: {"inner": (True, True), "left": (True, False), "outer": (False, False)},
-        }[table_table]
-        if jt not in req_flags:
-            kind = "table-table" if table_table else "stream-table"
+        Scale: ONE shuffle by join key and one value per table per key
+        in the state store, versus N-1 shuffles + N-1 state stores for
+        a chained plan — the layout Kafka Streams uses via repartition
+        topics + RocksDB."""
+        supported = ("inner", "left") if first_is_stream else ("inner", "left", "outer")
+        if jt not in supported:
+            # left_semi/left_anti pass validate for these shapes (the
+            # batch engine runs them) but the presence rules don't
+            # compose for them
+            kind = "stream-table" if first_is_stream else "table-table"
             raise NotImplementedError(
                 f"{kind} join type {jt!r} is not implemented in "
-                f"streaming (supported: {sorted(req_flags)}); run the "
+                f"streaming (supported: {sorted(supported)}); run the "
                 "batch engine for the full join-type surface"
-            )
-        req_l, req_r = req_flags[jt]
-        is_array = mode == "array"
-        tt = table_table
-
-        cast_l, cast_r = _scalar_caster(lvt), _scalar_caster(rvt)
-
-        def join_fold(key, pdf_iter, state):
-            if state.exists:
-                lv, has_l, rv, has_r = state.get
-            else:
-                lv, has_l, rv, has_r = None, False, None, False
-            out_k, out_l, out_r, out_ts = [], [], [], []
-
-            def emit(l, lp, r, rp, ts):
-                if req_l and not lp:
-                    return
-                if req_r and not rp:
-                    return
-                out_k.append(key[0])
-                out_l.append(l)
-                out_r.append(r)
-                out_ts.append(ts)
-
-            pdf = _whole_group(pdf_iter, [TIMESTAMP, "side"])
-            if pdf is not None:
-                for row in pdf.itertuples(index=False):
-                    side = row.side
-                    ts = getattr(row, TIMESTAMP)
-                    if side == 0:  # table (right) update
-                        rv, has_r = cast_r(row.rv), True
-                        if tt:
-                            emit(lv, has_l, rv, True, ts)
-                    else:  # left side: stream record, or left-table update
-                        if tt:
-                            lv, has_l = cast_l(row.lv), True
-                            emit(lv, True, rv, has_r, ts)
-                        else:
-                            emit(cast_l(row.lv), True, rv, has_r, ts)
-            state.update((lv, bool(has_l), rv, bool(has_r)))
-            if out_k:
-                yield pd.DataFrame(
-                    {KEY: out_k, "__l": out_l, "__r": out_r, TIMESTAMP: out_ts}
-                )
-
-        l = left.select(
-            F.col(KEY),
-            F.col(VALUE).alias("lv"),
-            F.lit(None).cast(rvt).alias("rv"),
-            F.col(TIMESTAMP),
-            F.lit(1).alias("side"),
-        )
-        r = right.select(
-            F.col(KEY),
-            F.lit(None).cast(lvt).alias("lv"),
-            F.col(VALUE).alias("rv"),
-            F.col(TIMESTAMP),
-            F.lit(0).alias("side"),
-        )
-        from ..operators.joins import _tuple_value
-
-        folded = (
-            l.unionByName(r)
-            .groupBy(KEY)
-            .applyInPandasWithState(
-                join_fold, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-            )
-        )
-        return folded.select(
-            F.col(KEY),
-            _tuple_value(F.col("__l"), F.col("__r"), 1, 1, mode).alias(VALUE),
-            F.col(TIMESTAMP),
-        )
-
-    def _stateful_table_join_n(
-        self, dfs: list[DataFrame], jt: str, mode: str, first_is_stream: bool
-    ) -> DataFrame:
-        """N-ary table join (J8 × J5/J6, streams.clj:115-123 — the
-        reference folds ANY arity pairwise). Spark disallows chaining
-        stateful Pandas operators, so the pairwise fold FUSES into one
-        ``applyInPandasWithState``: per-key state holds every table
-        side's current value; each arriving record updates its side and
-        emits the full widened tuple. The chained fold's presence rules
-        compose to: inner → all sides present; left → first side
-        present (stream-first: always); outer → always. Stream-first
-        chains emit only on stream records (table updates just refresh
-        state) — exactly what chaining stream⋈table joins yields.
-
-        Scale: ONE shuffle by join key and N values of state per key,
-        versus N-1 shuffles + N-1 state stores for the chained plan —
-        the fused operator is strictly cheaper."""
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        if jt not in ("inner", "left", "outer"):
-            # left_semi/left_anti pass validate for these shapes (the
-            # batch engine runs them) but the fused n-ary fold's emit
-            # rules don't compose for them — without this guard the
-            # else-branch would silently treat them as OUTER (r15
-            # review)
-            raise NotImplementedError(
-                f"n-ary table join type {jt!r} is not implemented in "
-                "streaming (supported: inner/left/outer); run the "
-                "batch engine"
             )
         n = len(dfs)
         kt = dfs[0].schema[KEY].dataType.simpleString()
@@ -954,96 +778,60 @@ class StreamingTopologyRunner(TopologyWalk):
                 "tuple_mode='struct' in the join config"
             )
         elem_cols = [f"e{i}" for i in range(n)]
-        out_schema = (
-            f"{KEY} {kt}, "
-            + ", ".join(f"{c} {t}" for c, t in zip(elem_cols, vts))
-            + f", {TIMESTAMP} timestamp"
-        )
         table_idx = list(range(1, n)) if first_is_stream else list(range(n))
-        state_schema = ", ".join(f"v{i} {vts[i]}, h{i} boolean" for i in table_idx)
+        # the legs that must be present to emit (stream-table:
+        # streams.clj:100-102; table-table: experiment.clj:108-121)
+        required = {"inner": table_idx, "left": [] if first_is_stream else [0]}.get(jt, [])
         casters = [_scalar_caster(t) for t in vts]
-        stream_first = first_is_stream
 
-        def join_fold(key, pdf_iter, state):
-            if state.exists:
-                flat = list(state.get)
-            else:
-                flat = [None, False] * len(table_idx)
-            vals = {i: flat[2 * j] for j, i in enumerate(table_idx)}
-            has = {i: bool(flat[2 * j + 1]) for j, i in enumerate(table_idx)}
-            out_rows: list[tuple] = []
-
-            def emit(ts, stream_val=None):
-                if jt == "inner":
-                    ok = all(has[i] for i in table_idx)
-                elif jt == "left":
-                    ok = True if stream_first else has[0]
-                else:  # outer (table-table only)
-                    ok = True
-                if not ok:
-                    return
-                row = []
-                for i in range(n):
-                    if stream_first and i == 0:
-                        row.append(stream_val)
-                    else:
-                        row.append(vals[i] if has[i] else None)
-                out_rows.append((key[0], *row, ts))
-
-            # tables settle before stream records at equal ts (same
-            # rule as the pairwise operator); among tables, join order
-            pdf = _whole_group(pdf_iter, [TIMESTAMP, "ord"])
-            if pdf is not None:
-                sides = pdf["side"].tolist()
-                tss = pdf[TIMESTAMP].tolist()
-                vcols = [pdf[f"v{i}"].tolist() for i in range(n)]
-                for r, (side, ts) in enumerate(zip(sides, tss)):
-                    if stream_first and side == 0:
-                        emit(ts, stream_val=casters[0](vcols[0][r]))
-                    else:
-                        vals[side] = casters[side](vcols[side][r])
-                        has[side] = True
-                        if not stream_first:
-                            emit(ts)
-            flat = []
-            for i in table_idx:
-                flat += [vals[i], bool(has[i])]
-            state.update(tuple(flat))
-            if out_rows:
-                yield pd.DataFrame(
-                    dict(
-                        zip(
-                            [KEY, *elem_cols, TIMESTAMP],
-                            map(list, zip(*out_rows)),
-                        )
-                    )
-                )
+        def join_step(key, state, rows, _timed_out, _wm):
+            # position 0 of vals/has stays unused for a stream-first chain
+            vals, has = [None] * n, [False] * n
+            for j, i in enumerate(table_idx):
+                vals[i], has[i] = state[2 * j], bool(state[2 * j + 1])
+            out = []
+            vcols = [rows[f"v{i}"].tolist() for i in range(n)]
+            for side, ts, *vs in zip(rows["side"].tolist(), rows[TIMESTAMP].tolist(), *vcols):
+                side %= n
+                val = casters[side](vs[side])
+                if first_is_stream and side == 0:
+                    elems = (val, *vals[1:])
+                else:
+                    vals[side], has[side] = val, True
+                    if first_is_stream:
+                        continue
+                    elems = tuple(vals)
+                if all(has[i] for i in required):
+                    out.append((key[0], *elems, ts))
+            return [x for i in table_idx for x in (vals[i], has[i])], out, None
 
         unioned = None
         for i, df in enumerate(dfs):
-            # tables first at equal ts: stream ord sorts after all tables
-            ord_val = (n + 1) if (stream_first and i == 0) else i
-            side = df.select(
-                F.col(KEY),
+            # a stream leg's side is n, so it sorts after every table at
+            # equal ts; side % n is its position in the tuple
+            leg = df.select(
+                KEY,
                 *[
                     (F.col(VALUE) if j == i else F.lit(None).cast(vts[j])).alias(f"v{j}")
                     for j in range(n)
                 ],
-                F.col(TIMESTAMP),
-                F.lit(i).alias("side"),
-                F.lit(ord_val).alias("ord"),
+                TIMESTAMP,
+                F.lit(n if first_is_stream and i == 0 else i).alias("side"),
             )
-            unioned = side if unioned is None else unioned.unionByName(side)
-        folded = unioned.groupBy(KEY).applyInPandasWithState(
-            join_fold, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+            unioned = leg if unioned is None else unioned.unionByName(leg)
+        folded = keyed_state(
+            unioned,
+            [KEY],
+            join_step,
+            f"{KEY} {kt}, "
+            + ", ".join(f"{c} {t}" for c, t in zip(elem_cols, vts))
+            + f", {TIMESTAMP} timestamp",
+            # h<i> tells "no update yet" from a NULL table value
+            ", ".join(f"v{i} {vts[i]}, h{i} boolean" for i in table_idx),
+            order_by=[TIMESTAMP, "side"],
+            default=(None, False) * len(table_idx),
         )
-        if mode == "struct":
-            value = F.struct(
-                *[F.col(c).alias(f"_{i + 1}") for i, c in enumerate(elem_cols)]
-            )
-        else:
-            value = F.array(*[F.col(c) for c in elem_cols])
-        return folded.select(F.col(KEY), value.alias(VALUE), F.col(TIMESTAMP))
+        return elems_to_tuple(folded, elem_cols, mode)
 
     # -- ktable ----------------------------------------------------------
     def _ktable(self, ent: dict, df: DataFrame, node: str) -> DataFrame:
@@ -1166,7 +954,7 @@ class StreamingTopologyRunner(TopologyWalk):
         (streams.clj:44-50). Spark has no native retraction, so this is
         a two-stage plan:
 
-        1. a custom stateful re-key operator (``applyInPandasWithState``
+        1. a custom stateful re-key operator (``keyed_state``
            keyed by the ORIGINAL record key, append mode) holding each
            key's previous (contribution, group); every update emits
            (+1, new contribution → new group) and, if a previous value
@@ -1178,15 +966,15 @@ class StreamingTopologyRunner(TopologyWalk):
 
         Append mode on stage 1 is what makes the downstream stateful
         aggregation legal (update-mode flatMapGroupsWithState cannot be
-        followed by stateful ops). Python-fold subtractors remain
-        batch-only; the congruity suite compares final state per group.
+        followed by stateful ops). A Python-fold subtractor runs stage 2
+        per micro-batch instead (``_deferred_fold_retraction``); the
+        congruity suite compares final state per group.
 
         Scale: stage-1 state is one (contribution, group) pair per key;
         the two shuffles (record key, then group key) mirror Kafka's
         repartition topic before a re-grouped aggregate.
         """
         import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
 
         is_fold = agg.kind == "fold"
         if is_fold and agg.subtractor is None:
@@ -1225,63 +1013,42 @@ class StreamingTopologyRunner(TopologyWalk):
         )
         ct = src.schema["__contrib"].dataType.simpleString()
         gt = src.schema["__gkey"].dataType.simpleString()
-        # __win_ts targets the window: the add lands in the new record's
-        # windows, the retraction in the OLD record's windows (batch
-        # _with_retractions mirrors this; both carry the new record's ts)
-        out_schema = (
-            f"__gkey {gt}, __contrib {ct}, __sign int, {TIMESTAMP} timestamp, "
-            f"__win_ts timestamp"
-        )
-        state_schema = f"c {ct}, g {gt}, t long"
         # pandas widens a nullable numeric __contrib/__gkey column to
         # float64; a float pickled into the bigint state field `c`
         # decodes as NULL JVM-side, silently zeroing the NEXT update's
-        # retraction (r14 review) — cast through the shared caster
-        # before values enter state or the typed output columns
+        # retraction — cast through the shared caster before values
+        # enter state or the typed output columns
         cast_c = _scalar_caster(ct)
         cast_g = _scalar_caster(gt)
 
-        def rekey(key, pdf_iter, state):
-            if state.exists:
-                pv, pg, pt = state.get
-                has_prev = True
-            else:
-                pv, pg, pt, has_prev = None, None, None, False
-            out_g, out_c, out_s, out_ts, out_wts = [], [], [], [], []
-            pdf = _whole_group(pdf_iter, TIMESTAMP)
-            if pdf is not None:
-                # positional lists: pandas itertuples mangles
-                # underscore-prefixed names like __gkey/__contrib
-                gks = [cast_g(x) for x in pdf["__gkey"].tolist()]
-                cs = [cast_c(x) for x in pdf["__contrib"].tolist()]
-                tss = pdf[TIMESTAMP].tolist()
-                for g, c, ts in zip(gks, cs, tss):
-                    out_g.append(g)
-                    out_c.append(c)
-                    out_s.append(1)
-                    out_ts.append(ts)
-                    out_wts.append(ts)
-                    if has_prev:
-                        out_g.append(pg)
-                        out_c.append(pv)
-                        out_s.append(-1)
-                        out_ts.append(ts)
-                        out_wts.append(pd.Timestamp(pt, unit="ms"))
-                    pv, pg, pt, has_prev = c, g, int(ts.value // 1_000_000), True
-            state.update((pv, pg, pt))
-            if out_g:
-                yield pd.DataFrame(
-                    {
-                        "__gkey": out_g,
-                        "__contrib": out_c,
-                        "__sign": out_s,
-                        TIMESTAMP: out_ts,
-                        "__win_ts": out_wts,
-                    }
-                )
+        def rekey(key, prev, rows, _timed_out, _wm):
+            out = []
+            # positional lists: pandas itertuples mangles
+            # underscore-prefixed names like __gkey/__contrib
+            for g, c, ts in zip(
+                rows["__gkey"].tolist(), rows["__contrib"].tolist(), rows[TIMESTAMP].tolist()
+            ):
+                g, c = cast_g(g), cast_c(c)
+                # __win_ts targets the window: the add lands in the new
+                # record's windows, the retraction in the OLD record's
+                # (batch _with_retractions mirrors this; both carry the
+                # new record's ts)
+                out.append((g, c, 1, ts, ts))
+                if prev is not None:
+                    pc, pg, pt = prev
+                    out.append((pg, pc, -1, ts, pd.Timestamp(pt, unit="ms")))
+                prev = (c, g, int(ts.value // 1_000_000))
+            return prev, out, None
 
-        signed = src.groupBy(KEY).applyInPandasWithState(
-            rekey, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        signed = keyed_state(
+            src,
+            [KEY],
+            rekey,
+            f"__gkey {gt}, __contrib {ct}, __sign int, {TIMESTAMP} timestamp, "
+            "__win_ts timestamp",
+            f"c {ct}, g {gt}, t long",
+            order_by=TIMESTAMP,
+            output_mode="append",
         )
         if is_fold:
             return self._deferred_fold_retraction(agg, signed, ent, node, win)
@@ -1323,7 +1090,12 @@ class StreamingTopologyRunner(TopologyWalk):
         parquet state table. Snapshot ``snap=<batch_id>`` is written per
         trigger; each batch folds on top of the newest snapshot with
         id < batch_id, so replaying a failed batch re-reads the same
-        base — idempotent state, at-least-once emission.
+        base — idempotent state, at-least-once emission. The snapshots
+        live in the entity's ``state_dir``, or in a fresh temporary
+        directory per build without one: a query restarted from its
+        checkpoint restores the stage-1 state, so its stage 2 must find
+        its snapshots again, and a batch with no snapshot before it
+        fails instead of folding from ``initial``.
 
         Scale: state I/O is a full-snapshot rewrite per trigger — fine
         while group cardinality is dim-sized (the fold tier is already
@@ -1347,8 +1119,6 @@ class StreamingTopologyRunner(TopologyWalk):
 
             import pandas as pd
 
-            from ..operators.windows import WINDOW_START, assign_time_windows
-
             spark = bdf.sparkSession
             group_cols = ["__gkey"] + ([WINDOW_START] if windowed else [])
             ev = bdf.select(
@@ -1368,6 +1138,14 @@ class StreamingTopologyRunner(TopologyWalk):
                 for p in glob.glob(os.path.join(state_dir, "snap=*"))
             ]
             prev = [s for s in snaps if s < batch_id]
+            if batch_id > 0 and not prev:
+                raise ValueError(
+                    f"entity {node!r}: micro-batch {batch_id} finds no fold "
+                    f"state snapshot before it in {state_dir!r}; a query "
+                    "restarted from its checkpoint needs the 'state_dir' it "
+                    "ran with (without 'state_dir' each build folds into a "
+                    "fresh temporary directory)"
+                )
             if prev:
                 state = spark.read.parquet(
                     os.path.join(state_dir, f"snap={max(prev)}")
@@ -1409,10 +1187,10 @@ class StreamingTopologyRunner(TopologyWalk):
             folded.write.mode("overwrite").parquet(snap_path)
             # prune superseded snapshots AFTER the new one lands: only
             # the newest snapshot with id < batch_id is ever read, so
-            # older generations are dead weight that previously grew
-            # one full state copy per trigger until the volume filled
-            # (r14 review). Keep the two newest (the new snapshot and
-            # the replay base a retried batch would re-read).
+            # older generations are dead weight that would grow one
+            # full state copy per trigger until the volume filled. Keep
+            # the two newest (the new snapshot and the replay base a
+            # retried batch would re-read).
             import shutil
 
             stale = sorted(s for s in snaps if s < batch_id)[:-1]
@@ -1453,7 +1231,7 @@ class StreamingTopologyRunner(TopologyWalk):
     ) -> DataFrame:
         """A4 full parity in streaming: an arbitrary Python
         (initial, adder) fold as a custom stateful operator via
-        ``applyInPandasWithState`` — Arrow-batched, per-group state in
+        ``keyed_state`` — Arrow-batched, per-group state in
         the Spark state store, one output record per input record (the
         changelog), state carried across micro-batches.
 
@@ -1475,16 +1253,11 @@ class StreamingTopologyRunner(TopologyWalk):
         (group, window) state arms a timeout at the window END and
         emits ONE row when the watermark passes it, Kafka's
         suppress-until-window-close, congruent with the column tier's
-        append-mode windowed path (r14 review: suppressed Python folds
-        previously compiled to the full update-mode changelog with no
-        error). Window assignment uses the TRUE event ms (the +1ms
-        epoch-edge shift applies to the watermark column only —
-        epoch-aligned windows, unlike sessions, are not
+        append-mode windowed path. Window assignment uses the TRUE event
+        ms (the +1ms epoch-edge shift applies to the watermark column
+        only — epoch-aligned windows, unlike sessions, are not
         shift-invariant, so shifting the assignment ms would move a
         boundary record into the next window)."""
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         initial, adder = agg.initial, agg.adder
         acc_type = agg.acc_type if isinstance(agg.acc_type, str) else agg.acc_type.simpleString()
         windowed = win is not None
@@ -1497,69 +1270,25 @@ class StreamingTopologyRunner(TopologyWalk):
             wm_spec = (ent or {}).get("watermark", self.source_watermark)
             df = self._shift_event_time(df, wm_spec)
         gk_type = df.schema["__gkey"].dataType.simpleString()
-        out_schema = f"{KEY} {gk_type}, {VALUE} {acc_type}, {TIMESTAMP} timestamp, __win long"
-        state_schema = f"acc {acc_type}"
 
-        def fold(key, pdf_iter, state):
-            acc = state.get[0] if state.exists else initial
-            keys, vals, tss = [], [], []
-            pdf = _whole_group(pdf_iter, TIMESTAMP)
-            if pdf is not None:
-                for row in pdf.itertuples(index=False):
-                    acc = adder(acc, key[0], getattr(row, VALUE))
-                    keys.append(key[0])
-                    vals.append(acc)
-                    tss.append(getattr(row, TIMESTAMP))
-            state.update((acc,))
-            if keys:
-                win_start = int(key[1]) if len(key) > 1 else 0
-                yield pd.DataFrame(
-                    {KEY: keys, VALUE: vals, TIMESTAMP: tss, "__win": [win_start] * len(keys)}
-                )
-
-        def fold_suppressed(key, pdf_iter, state):
-            # one (group, window) per state; emit ONCE at window close
-            win_start = int(key[1])
-            win_end = win_start + size_ms
-            if state.hasTimedOut:
-                if state.exists:
-                    acc = state.get[0]
-                    state.remove()
-                    yield pd.DataFrame(
-                        {
-                            KEY: [key[0]],
-                            VALUE: [acc],
-                            TIMESTAMP: [
-                                _session_wallclock(win_end, session_tz)
-                            ],
-                            "__win": [win_start],
-                        }
-                    )
-                return
-            acc = state.get[0] if state.exists else initial
-            pdf = _whole_group(pdf_iter, TIMESTAMP)
-            if pdf is not None:
-                for row in pdf.itertuples(index=False):
-                    acc = adder(acc, key[0], getattr(row, VALUE))
-            state.update((acc,))
+        def fold(key, state, rows, timed_out, _wm):
+            win_start = int(key[1]) if windowed else 0
+            if timed_out:
+                # suppress: the (group, window) closed; emit it ONCE
+                wall_end = _session_wallclock(win_start + size_ms, session_tz)
+                return None, [(key[0], state[0], wall_end, win_start)], None
+            acc, out = state[0], []
+            for v, ts in zip(rows[VALUE].tolist(), rows[TIMESTAMP].tolist()):
+                acc = adder(acc, key[0], v)
+                if not suppress:
+                    out.append((key[0], acc, ts, win_start))
             # the branch watermark runs in the +1ms-shifted domain, so
             # the true window end e closes when the shifted watermark
-            # passes e + 1. Clamp to the current watermark like the
-            # nil-dedup settle path: Spark's stateful late-row filter
-            # SHOULD drop every row whose shifted event time is below
-            # the watermark before we see it, but if that boundary
-            # ever admits one, an unclamped timeout at-or-below the
-            # watermark crashes the query on legitimate data (r15
-            # ADVICE — the crash class the r14 batch-5 review fixed
-            # on the settle path).
-            state.setTimeoutTimestamp(
-                max(win_end + 1, state.getCurrentWatermarkMs() + 1)
-            )
+            # passes e + 1
+            return (acc,), out, (win_start + size_ms + 1) if suppress else None
 
         src = df.select(F.col("__gkey"), F.col(VALUE), F.col(TIMESTAMP))
         if windowed:
-            from ..operators.windows import WINDOW_START, assign_time_windows
-
             # TRUE event ms for assignment: under suppress the
             # timestamp column is shifted +1ms for the watermark, and
             # epoch-aligned windows must not inherit that shift
@@ -1572,17 +1301,16 @@ class StreamingTopologyRunner(TopologyWalk):
                 win.size_ms,
                 win.advance_ms,
             ).select(F.col("__gkey"), F.col(WINDOW_START), F.col(VALUE), F.col(TIMESTAMP))
-            grouped = src.groupBy("__gkey", WINDOW_START)
-        else:
-            grouped = src.groupBy("__gkey")
-        folded = grouped.applyInPandasWithState(
-            fold_suppressed if suppress else fold,
-            out_schema,
-            state_schema,
-            "append" if suppress else "update",
-            GroupStateTimeout.EventTimeTimeout
-            if suppress
-            else GroupStateTimeout.NoTimeout,
+        folded = keyed_state(
+            src,
+            ["__gkey", WINDOW_START] if windowed else ["__gkey"],
+            fold,
+            f"{KEY} {gk_type}, {VALUE} {acc_type}, {TIMESTAMP} timestamp, __win long",
+            f"acc {acc_type}",
+            order_by=TIMESTAMP,
+            default=(initial,),
+            output_mode="append" if suppress else "update",
+            timeout="event" if suppress else None,
         )
         if windowed and emit_window:
             value = F.struct(F.col("__win").alias("win"), F.col(VALUE).alias("v"))
@@ -1594,7 +1322,7 @@ class StreamingTopologyRunner(TopologyWalk):
         self, agg, df: DataFrame, ent: dict, node: str, win
     ) -> DataFrame:
         """A3×A4 fused: session-windowed Python folds in streaming as ONE
-        custom stateful operator — ``applyInPandasWithState`` keyed by
+        custom stateful operator — ``keyed_state`` keyed by
         the group key, whose state is the set of OPEN sessions
         ``(start, end, acc)`` for that key. This is the session-store
         role Kafka Streams' window-by-session + aggregate plays
@@ -1638,9 +1366,6 @@ class StreamingTopologyRunner(TopologyWalk):
         partitioning Kafka Streams' repartition topic would give the
         session store.
         """
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         if agg.merger is None:
             raise ValueError(
                 "session-window Python folds in streaming need a 'merger' "
@@ -1681,7 +1406,6 @@ class StreamingTopologyRunner(TopologyWalk):
         wm_spec = ent.get("watermark", self.source_watermark)
         shift = F.expr("INTERVAL 1 MILLISECONDS")
         df = self._shift_event_time(df, wm_spec)
-        has_wm = self._has_event_time(df)
         session_tz = _resolve_session_tz(self.spark)
         initial, adder, merger = agg.initial, agg.adder, agg.merger
         gap = int(win.gap_ms)
@@ -1690,101 +1414,69 @@ class StreamingTopologyRunner(TopologyWalk):
         )
         gk_type = df.schema["__gkey"].dataType.simpleString()
         emit_window = bool(ent.get("emit_window"))
-        out_schema = (
-            f"{KEY} {gk_type}, {VALUE} {acc_type}, {TIMESTAMP} timestamp, __win long"
-        )
-        state_schema = f"starts array<long>, ends array<long>, accs array<{acc_type}>"
 
-        def fold(key, pdf_iter, state):
+        def fold(key, state, rows, timed_out, wm):
             gk = key[0]
-            if ttl_ms is not None and state.hasTimedOut:
+            if timed_out and ttl_ms is not None:
                 # key idle >= state_ttl: evict every open session.
                 # Silent — update mode already emitted their changelog
                 # rows per-record.
-                if state.exists:
-                    state.remove()
-                return
-            starts, ends, accs = (
-                (list(c) for c in state.get) if state.exists else ([], [], [])
-            )
-            starts, ends, accs = list(starts), list(ends), list(accs)
-            wm = state.getCurrentWatermarkMs() if has_wm else -(1 << 62)
-            out = {KEY: [], VALUE: [], TIMESTAMP: [], "__win": []}
-
-            def sweep():
-                # close sessions the watermark has passed: emit once in
-                # suppress mode (their final fold), silently evict in
-                # update mode (already emitted per-record)
-                keep_s, keep_e, keep_a = [], [], []
-                for s, e, a in zip(starts, ends, accs):
-                    if e + gap <= wm:
-                        if suppress:
-                            out[KEY].append(gk)
-                            out[VALUE].append(a)
-                            out[TIMESTAMP].append(
-                                _session_wallclock(e, session_tz)
-                            )
-                            out["__win"].append(s)
+                return None, [], None
+            starts, ends, accs = (list(c) for c in state)
+            wm = -(1 << 62) if wm is None else wm
+            out = []
+            if not timed_out:
+                for ms, v, ts in zip(
+                    rows["__ms"].tolist(), rows[VALUE].tolist(), rows[TIMESTAMP].tolist()
+                ):
+                    ms = int(ms)
+                    hit = [
+                        i
+                        for i, (s, e) in enumerate(zip(starts, ends))
+                        if s - gap <= ms <= e + gap
+                    ]
+                    if not hit:
+                        starts.append(ms)
+                        ends.append(ms)
+                        accs.append(adder(initial, gk, v))
+                        idx = len(starts) - 1
                     else:
-                        keep_s.append(s)
-                        keep_e.append(e)
-                        keep_a.append(a)
-                return keep_s, keep_e, keep_a
-
-            if not state.hasTimedOut:
-                pdf = _whole_group(pdf_iter, "__ms")
-                if pdf is not None:
-                    for ms, v, ts in zip(
-                        pdf["__ms"].tolist(), pdf[VALUE].tolist(), pdf[TIMESTAMP].tolist()
-                    ):
-                        ms = int(ms)
-                        hit = [
-                            i
-                            for i, (s, e) in enumerate(zip(starts, ends))
-                            if s - gap <= ms <= e + gap
-                        ]
-                        if not hit:
-                            starts.append(ms)
-                            ends.append(ms)
-                            accs.append(adder(initial, gk, v))
-                            idx = len(starts) - 1
-                        else:
-                            # merge in SESSION-TIME order (not state-list
-                            # arrival order): merger always combines the
-                            # temporally earlier accumulator on the left,
-                            # matching Kafka Streams' session Merger
-                            # contract for non-commutative accumulators
-                            hit.sort(key=lambda i: starts[i])
-                            idx, dels = hit[0], hit[1:]
-                            for j in dels:
-                                starts[idx] = min(starts[idx], starts[j])
-                                ends[idx] = max(ends[idx], ends[j])
-                                accs[idx] = merger(gk, accs[idx], accs[j])
-                            for j in sorted(dels, reverse=True):
-                                del starts[j], ends[j], accs[j]
-                            idx -= sum(1 for j in dels if j < idx)
-                            starts[idx] = min(starts[idx], ms)
-                            ends[idx] = max(ends[idx], ms)
-                            accs[idx] = adder(accs[idx], gk, v)
-                        if not suppress:
-                            out[KEY].append(gk)
-                            out[VALUE].append(accs[idx])
-                            out[TIMESTAMP].append(ts)
-                            out["__win"].append(starts[idx])
-            starts, ends, accs = sweep()
-
-            if starts:
-                state.update((starts, ends, accs))
-                if suppress:
-                    # fires when the watermark passes the earliest close
-                    state.setTimeoutTimestamp(min(e + gap for e in ends))
-                elif ttl_ms is not None:
-                    # re-arm the idle clock on every batch with records
-                    state.setTimeoutDuration(ttl_ms)
-            elif state.exists:
-                state.remove()
-            if out[KEY]:
-                yield pd.DataFrame(out)
+                        # merge in SESSION-TIME order (not state-list
+                        # arrival order): merger always combines the
+                        # temporally earlier accumulator on the left,
+                        # matching Kafka Streams' session Merger
+                        # contract for non-commutative accumulators
+                        hit.sort(key=lambda i: starts[i])
+                        idx, dels = hit[0], hit[1:]
+                        for j in dels:
+                            starts[idx] = min(starts[idx], starts[j])
+                            ends[idx] = max(ends[idx], ends[j])
+                            accs[idx] = merger(gk, accs[idx], accs[j])
+                        for j in sorted(dels, reverse=True):
+                            del starts[j], ends[j], accs[j]
+                        idx -= sum(1 for j in dels if j < idx)
+                        starts[idx] = min(starts[idx], ms)
+                        ends[idx] = max(ends[idx], ms)
+                        accs[idx] = adder(accs[idx], gk, v)
+                    if not suppress:
+                        out.append((gk, accs[idx], ts, starts[idx]))
+            # close sessions the watermark has passed: emit once in
+            # suppress mode (their final fold), silently evict in update
+            # mode (already emitted per-record)
+            kept = []
+            for s, e, a in zip(starts, ends, accs):
+                if e + gap > wm:
+                    kept.append((s, e, a))
+                elif suppress:
+                    out.append((gk, a, _session_wallclock(e, session_tz), s))
+            if not kept:
+                return None, out, None
+            starts, ends, accs = (list(c) for c in zip(*kept))
+            # suppress fires when the watermark passes the earliest
+            # close; state_ttl re-arms the idle clock on every batch
+            # with records
+            at = min(e + gap for e in ends) if suppress else ttl_ms
+            return (starts, ends, accs), out, at
 
         src = df.select(
             F.col("__gkey"),
@@ -1792,14 +1484,16 @@ class StreamingTopologyRunner(TopologyWalk):
             F.col(TIMESTAMP),
             F.unix_millis(F.col(TIMESTAMP)).alias("__ms"),
         )
-        if suppress:
-            timeout = GroupStateTimeout.EventTimeTimeout
-        elif ttl_ms is not None:
-            timeout = GroupStateTimeout.ProcessingTimeTimeout
-        else:
-            timeout = GroupStateTimeout.NoTimeout
-        folded = src.groupBy("__gkey").applyInPandasWithState(
-            fold, out_schema, state_schema, "append" if suppress else "update", timeout
+        folded = keyed_state(
+            src,
+            ["__gkey"],
+            fold,
+            f"{KEY} {gk_type}, {VALUE} {acc_type}, {TIMESTAMP} timestamp, __win long",
+            f"starts array<long>, ends array<long>, accs array<{acc_type}>",
+            order_by="__ms",
+            default=([], [], []),
+            output_mode="append" if suppress else "update",
+            timeout="event" if suppress else "processing" if ttl_ms is not None else None,
         )
         if emit_window:
             # -1: undo the epoch shift on the carried window start
