@@ -1,10 +1,10 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE COMPACT JSON line: {"metric", "value", "unit", "queries" (top-10
-only — the full per-query map exceeded the driver's tail window two
-rounds running), "n_queries", "errors", "loadavg", "sf"}. The COMPLETE
-record (all per-query timings, both raw passes, pass spread, host
-loadavg before/after) is written to BENCH_LAST.json beside this file.
+"""Benchmark harness: runs every registered query, in registration
+order, at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints ONE COMPACT JSON line: {"metric",
+"value", "unit", "queries" (top-10 only, so the line stays short),
+"n_queries", "errors", "loadavg", "sf"}. The COMPLETE record (all
+per-query timings, both raw passes, pass spread, host loadavg
+before/after) is written to BENCH_LAST.json beside this file.
 
 Execution is forced with the noop sink (full computation, no driver
 collect). Each query timed individually; "value" is the total.
@@ -20,193 +20,19 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Representative of every operator family (SURVEY §2 + extensions):
-# transforms, table state, changelog aggs, windows, all join shapes,
-# analytics vocabulary, text/dedup/similarity pipeline ops.
-HEADLINE = [
-    "filter_map",
-    "merge_streams",
-    "latest_per_key",
-    "running_sum_changelog",
-    "tumbling_window_sum",
-    "hopping_window_count",
-    "session_windows",
-    "interval_join",
-    "asof_enrich",
-    "table_table_asof",
-    "broadcast_enrich",
-    "pricing_summary",
-    "forecast_revenue",
-    "top_parts_per_supplier",
-    "late_shipment_priorities",
-    "top_customers",
-    "rollup_revenue",
-    "shipping_priority",
-    "regional_supplier_volume",
-    "monthly_revenue_growth",
-    "skew_salted_agg",
-    "skew_salted_join",
-    "doc_fingerprints",
-    "token_stats",
-    "top_bigrams",
-    "doc_length_histogram",
-    "lang_id",
-    "quality_score",
-    "minhash_near_dups",
-    "simhash_near_dups",
-    "gopher_quality_filter",
-    "repetition_ngram_filter",
-    "corpus_keep_by_source",
-    "embedding_topk",
-    "ann_lsh_topk",
-    # round 3 additions: the remaining LLM-pipeline + join-fold ops so
-    # the bench covers every first-class family end-to-end
-    "dup_line_filter",
-    "near_dup_clusters",
-    "training_data_prep",
-    "embedding_near_dups",
-    "ann_ivf_topk",
-    "multimodal_decode",
-    "nary_join_fold",
-    "windowed_left_join",
-    "winnow_overlap_pairs",
-    # corpus-curation ops (PII, decontamination, corpus-wide line
-    # dedup, deterministic mixing)
-    "pii_redaction",
-    "decontaminate",
-    "decontaminate_fuzzy",
-    "line_dedup",
-    "stratified_sample",
-    "token_budget_cap",
-    "pack_sequences",
-    "sequence_manifest",
-    "above_avg_orders",
-    "corpus_profile",
-    # round 7: the composite hash_family_recall (r4) split into one
-    # oracle-checked planted-recall row per family, so each family
-    # prices its own end-to-end cost instead of hiding inside a ~10 s
-    # aggregate timing (VERDICT r06 #3); plus the new audio member of
-    # the hamming dedup trio
-    "recall_minhash",
-    "recall_simhash",
-    "recall_ann_lsh",
-    "recall_ann_ivf",
-    "recall_winnow",
-    "recall_image_phash",
-    "recall_audio_fp",
-    "audio_fingerprint_dups",
-    "recall_video_fp",
-    "video_fingerprint_dups",
-    # round 6: the on-disk packed-shard proof (write + read-back +
-    # aggregate) and the image perceptual-hash near-dup family
-    "packed_shard_roundtrip",
-    "image_phash_dups",
-    "packed_sequences_loaded",
-    # round 6 completion: the remaining registered queries, so bench
-    # covers the COMPLETE registry (topology transforms/coercions,
-    # set ops, pivot, retraction, dedup splice, outer windowed join).
-    # Mostly sub-second; cross-round totals stay comparable per-query
-    # (the verdicts' practice), not by grand total.
-    # round 8: the precision duals of the recall family, the audio
-    # segment-containment pair, and the mixing rows — bench covers the
-    # complete 93-query registry
-    "precision_simhash",
-    "precision_image_phash",
-    "precision_audio_fp",
-    "precision_video_fp",
-    "precision_winnow",
-    "precision_audio_seg",
-    "precision_ann_lsh",
-    "audio_segment_dups",
-    "recall_audio_seg",
-    "mixing_repeat_epochs",
-    "mixing_train_val_test",
-    "dup_ngram_spans",
-    "bm25_topk",
-    "fanout_flatmap",
-    "rekey_fanout",
-    "value_only_rekey",
-    "rekey_transform",
-    "changelog_filter",
-    "group_by_fn_agg",
-    "suppressed_window_final",
-    "regrouped_retraction",
-    "with_dedupe_first",
-    "windowed_outer_join",
-    "semi_join_customers",
-    "anti_join_customers",
-    "except_customers",
-    "intersect_customers",
-    "distinct_parts_per_supplier",
-    "pivot_order_status",
-    "exact_dup_groups",
-    "ngram_jaccard_pairs",
-    "near_dup_keep_best",
-    # round 10: the 100th registration
-    "dsir_weights",
-    # round 11: the full r10 registration queue (period-3 activation),
-    # in the r10 note's priority order — first driver rows for the
-    # hybrid-RRF / sketch / chunking / perplexity / PQ / IVF-PQ / CMS /
-    # epoch-shuffle / normalization / BPE / domain-relevance /
-    # semantic-decontamination / KL-profile families
-    "hybrid_rrf_topk",
-    "sketch_profile_bands",
-    "chunk_documents",
-    "perplexity_bands",
-    "pq_recall_bands",
-    "ivfpq_recall_bands",
-    "cms_heavy_hitters",
-    "epoch_shuffle_bands",
-    "normalize_docs",
-    "bpe_consistency_bands",
-    "domain_relevance",
-    "decontaminate_semantic",
-    "kl_profile",
-    # round 11 build: the trainable quality-classifier family
-    "quality_classifier_bands",
-]
-
-
-def derive_bench_list(headline, queries):
-    """The ONE bench-list derivation: curated order + auto-append of
-    forgotten registrations + loud drop of stale names. Returns
-    (list, stale) — the caller prints stale."""
-    out = list(headline)
-    missing = [n for n in queries if n not in out]
-    if missing:
-        out.extend(sorted(missing))
-    stale = [n for n in out if n not in queries]
-    if stale:
-        out = [n for n in out if n in queries]
-    return out, stale
-
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
-    # the ONE shared benchmark session config (tools/bench_session.py):
-    # rebench/bench_composed numbers stay comparable to this record
+    # the one shared benchmark session config (tools/bench_session.py)
     from tools.bench_session import make_bench_session
 
     spark, cpus = make_bench_session("willa_spark-bench")
+    from pyspark.sql import functions as F
+
     from willa_spark.queries import QUERIES
     from willa_spark.sources import read_table, table_names
-
-    # the curated order above must cover the COMPLETE registry — a new
-    # registration someone forgets to add here would silently vanish
-    # from the record (r10: the list sat at 99 when the 100th name
-    # registered); auto-append keeps the record complete, the curated
-    # prefix keeps cross-round per-query comparability
-    # ...and the reverse direction: a renamed/retired registry name
-    # left in the curated list would KeyError outside the per-query
-    # try and kill the whole record — drop it loudly instead (the
-    # one-error degradation contract). Every registered query benches,
-    # the EXHIBITION rows included.
-    derived, stale = derive_bench_list(HEADLINE, QUERIES)
-    if stale:
-        print(f"bench: dropping stale HEADLINE names {stale}", file=sys.stderr)
-    HEADLINE[:] = derived
 
     # untimed warmup: touch every table once so the timed loop measures
     # query execution, not first-scan JVM/codegen/file-listing warmup
@@ -215,38 +41,24 @@ def main() -> int:
             read_table(spark, sf_dir, t).count()
         except Exception:
             pass
-    # ...and warm the Python/Arrow worker pool: the FIRST pandas_udf
+    # ...and warm the Python/Arrow worker pool: the first pandas_udf
     # call in a session pays interpreter spawn + pandas/numpy import on
-    # every worker (~5-7s across 32 workers) — session startup, not
-    # query cost, by the same rationale as the table warmup above.
-    # Without this the first Pandas-UDF query in HEADLINE absorbs it.
-    from pyspark.sql import functions as F
-
+    # every worker, which is session startup, not query cost.
     warm = F.pandas_udf(lambda s: s, "long")
     spark.range(0, 10_000, 1, int(cpus)).select(warm("id").alias("x")).write.format(
         "noop"
     ).mode("overwrite").save()
 
-    # Two full passes, report the per-query MIN. This container shares
-    # a host with other tenants (observed host load >17 while the
-    # container was idle; identical back-to-back runs vary up to ~4×),
-    # so a single sample conflates query cost with neighbor noise.
-    # Min-of-2 with the passes separated in time keeps a transient
-    # spike from hitting both samples of the same query. BOTH samples
-    # are recorded (BENCH_LAST.json "passes"), so a per-query spread
-    # >>1 flags neighbor noise from the record alone — the r7 verdict's
-    # measurement-hygiene ask; tools/rebench.py re-measures suspects
-    # isolated min-of-N.
+    # Two full passes, report the per-query min. The host is shared, so
+    # a single sample conflates query cost with neighbour noise; both
+    # samples are recorded, so a per-query spread >>1 flags the noise.
     load_before = _loadavg()
-    passes: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    errors = 0
+    passes: dict[str, list[float]] = {name: [] for name in QUERIES}
     for _pass in range(2):
-        for name in HEADLINE:
-            fn = QUERIES[name]
+        for name, fn in QUERIES.items():
             t0 = time.perf_counter()
             try:
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 passes[name].append(round(time.perf_counter() - t0, 3))
             except Exception as e:  # keep the bench line parseable no matter what
                 print(f"bench error in {name}: {e}", file=sys.stderr)
@@ -254,9 +66,7 @@ def main() -> int:
             # one query's cache doesn't squeeze memory for the next
             spark.catalog.clearCache()
     load_after = _loadavg()
-    timings = {
-        name: (min(ts) if ts else -1.0) for name, ts in passes.items()
-    }
+    timings = {name: (min(ts) if ts else -1.0) for name, ts in passes.items()}
     errors = sum(1 for t in timings.values() if t < 0)
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     # spread = slower/faster pass; >~2 on many queries = noisy window
@@ -265,27 +75,14 @@ def main() -> int:
         for name, ts in passes.items()
         if len(ts) == 2
     }
-    noisy = sorted(spread.items(), key=lambda kv: -kv[1])[:5]
-    detail = json.dumps(
-        {
-            "metric": "headline_queries_total_wall",
-            "value": total,
-            "unit": "sec",
-            "queries": timings,
-            "passes": passes,
-            "pass_spread": spread,
-            "loadavg_before": load_before,
-            "loadavg_after": load_after,
-            "n_queries": len(HEADLINE),
-            "errors": errors,
-            "sf": sf,
-        }
-    )
-    # Two detail files: BENCH_LAST.json (the stable pointer the one-line
-    # JSON has always named) AND a per-configuration file keyed by core
-    # count + sf, so a subsequent scaling run at different cpus cannot
-    # clobber the main record (r15 verdict #7: the 32-core close detail
-    # survived only as a top-10 truncation after the 8-core run).
+    common = {"metric": "headline_queries_total_wall", "value": total, "unit": "sec"}
+    detail = json.dumps({
+        **common, "queries": timings, "passes": passes, "pass_spread": spread,
+        "loadavg_before": load_before, "loadavg_after": load_after,
+        "n_queries": len(QUERIES), "errors": errors, "sf": sf,
+    })
+    # BENCH_LAST.json is the stable pointer; the file keyed by core
+    # count + sf keeps a run at other settings from clobbering it
     here = os.path.dirname(os.path.abspath(__file__))
     keyed = f"BENCH_DETAIL_{cpus}c_sf{sf}.json"
     for fname in ("BENCH_LAST.json", keyed):
@@ -295,39 +92,21 @@ def main() -> int:
                 f.write(detail + "\n")
         except OSError as e:
             print(f"bench: could not write {out_path}: {e}", file=sys.stderr)
-    # stdout gets a COMPACT line, guaranteed to fit the driver's tail
-    # window (the full 85-query line exceeded it in r6 AND r7, progress
-    # spam or not — VERDICT r07 #2): totals + host-load telemetry + the
-    # 10 most expensive queries only; full per-query detail lives in
-    # BENCH_LAST.json.
-    top = dict(
-        sorted(
-            ((k, v) for k, v in timings.items() if v >= 0),
-            key=lambda kv: -kv[1],
-        )[:10]
-    )
-    line = json.dumps(
-        {
-            "metric": "headline_queries_total_wall",
-            "value": total,
-            "unit": "sec",
-            "queries": top,
-            "n_queries": len(HEADLINE),
-            "errors": errors,
-            "loadavg": [load_before, load_after],
-            "max_pass_spread": noisy,
-            "detail": "BENCH_LAST.json",
-            "detail_keyed": keyed,
-            "sf": sf,
-        }
-    )
-    print(line, flush=True)
+    # stdout gets a compact line: totals, host load and the 10 most
+    # expensive queries; full per-query detail lives in BENCH_LAST.json
+    top = dict(sorted(((k, v) for k, v in timings.items() if v >= 0),
+                      key=lambda kv: -kv[1])[:10])
+    print(json.dumps({
+        **common, "queries": top, "n_queries": len(QUERIES), "errors": errors,
+        "loadavg": [load_before, load_after],
+        "max_pass_spread": sorted(spread.items(), key=lambda kv: -kv[1])[:5],
+        "detail": "BENCH_LAST.json", "detail_keyed": keyed, "sf": sf,
+    }), flush=True)
     return 0
 
 
 def _loadavg() -> list[float]:
-    """1/5/15-minute host load — records whether a bench window was
-    noisy (this host is shared; idle-container load >17 observed)."""
+    """1/5/15-minute host load: records whether a bench window was noisy."""
     try:
         return [round(x, 2) for x in os.getloadavg()]
     except OSError:  # pragma: no cover

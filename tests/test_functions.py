@@ -795,6 +795,27 @@ def test_embedding_near_dups_spill_path(spark, tmp_path):
     assert mem == spill == {(1, 2)}
 
 
+def test_winnow_overlap_pairs_failure_releases_cache(spark):
+    """A failing ``winnow_overlap_pairs(df_cap=...)`` call must not
+    leave its persisted fingerprint pass in the CacheManager: a
+    session that retries the call would otherwise accumulate one
+    cached frame per failure."""
+    rows = [(i, f"tok{i} alpha bravo charlie delta echo {i}") for i in range(40)]
+    df = spark.createDataFrame(rows, "doc_id long, text string").withColumn(
+        "text",
+        F.when(
+            F.col("doc_id") == 17, F.raise_error(F.lit("poisoned row"))
+        ).otherwise(F.col("text")),
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert cache.isEmpty()
+    for _ in range(3):
+        with pytest.raises(Exception, match="poisoned row"):
+            D.winnow_overlap_pairs(df, df_cap=10).collect()
+    assert cache.isEmpty(), "a failed call leaked its cached frame"
+
+
 def test_winnow_fingerprints_guarantee(spark):
     """Winnowing guarantee (Schleimer et al. §2): documents sharing a
     token run of >= k + window - 1 tokens share at least one

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from willa_spark.functions import lm as LM
+from willa_spark.pin import pin
 
 
 def _py_model(texts):
@@ -540,7 +541,7 @@ def test_lm_above_gate_hash_join_path(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(TRAIN)], "doc_id long, text string"
     )
-    model = LM.bigram_lm_train(df).localCheckpoint(eager=True)
+    model = pin(LM.bigram_lm_train(df))
     probe = spark.createDataFrame(
         [(0, "the cat sat quietly"), (1, "zebra jumps over fences"), (2, "")],
         "doc_id long, text string",
@@ -549,8 +550,8 @@ def test_lm_above_gate_hash_join_path(spark):
         ("jm", LM.bigram_perplexity),
         ("kn", LM.kn_bigram_perplexity),
     ):
-        wide = fn(probe, model, broadcast_max_rows=0, model_pinned=True)
-        narrow = fn(probe, model, model_pinned=True)
+        wide = fn(probe, model, broadcast_max_rows=0)
+        narrow = fn(probe, model)
         # plan pin: with the gate at 0 every model-table join must be
         # a shuffle join. AQE can still plan BroadcastHashJoin for the
         # tiny fixture at RUNTIME, so pin the pre-AQE static plan and

@@ -564,61 +564,3 @@ def test_pq_recall_bands_oracle_parity(spark):
         want = sorted(tuple(r) for r in con.execute(oracle).fetchall())
         assert len(got) == len(want) > 0
         assert got == want
-
-
-def test_exact_arm_cache_evicts_dead_sessions(spark):
-    """_EXACT_ARM_CACHE eviction (r12 advice): inserting under the
-    live applicationId drops every entry keyed by a DIFFERENT appId —
-    a stopped session's keys otherwise reference localCheckpointed
-    frames of a dead SparkContext for the process lifetime."""
-    from willa_spark import queries as Q
-
-    sf_dir = "/root/testdata/sf0.001"
-    app = spark.sparkContext.applicationId
-    Q._EXACT_ARM_CACHE.clear()
-    Q._EXACT_ARM_CACHE[("dead-app-123", sf_dir, 10)] = "stale-sentinel"
-    arm = Q._exact_arm(spark, sf_dir, 10)
-    assert ("dead-app-123", sf_dir, 10) not in Q._EXACT_ARM_CACHE
-    assert Q._EXACT_ARM_CACHE[(app, sf_dir, 10)] is arm
-    # a same-session re-ask is a cache hit, not a recompute
-    assert Q._exact_arm(spark, sf_dir, 10) is arm
-    # and a same-session insert under another k evicts nothing live
-    Q._exact_arm(spark, sf_dir, 5)
-    assert (app, sf_dir, 10) in Q._EXACT_ARM_CACHE
-    Q._EXACT_ARM_CACHE.clear()
-
-
-def test_exact_arm_cache_concurrent_callers_share_one_arm(spark, tmp_path):
-    """The band rows build the exact arm on pool threads: concurrent
-    callers with one key all get the same frame, and eviction of
-    other sessions' entries runs under the cache's lock."""
-    import sys
-    from concurrent.futures import ThreadPoolExecutor
-
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from willa_spark import queries as Q
-
-    rng = np.random.default_rng(0)
-    pq.write_table(pa.table({
-        "vec_id": np.arange(300, dtype=np.int64),
-        "embedding": pa.array(list(rng.normal(size=(300, 4)).astype(np.float32)), type=pa.list_(pa.float32())),
-        "label": np.zeros(300, dtype=np.int32),
-    }), str(tmp_path / "embeddings.parquet"))
-    sf_dir = str(tmp_path)
-    app = spark.sparkContext.applicationId
-    Q._EXACT_ARM_CACHE.clear()
-    for i in range(50):
-        Q._EXACT_ARM_CACHE[(f"dead-app-{i}", sf_dir, 10)] = "stale-sentinel"
-    interval = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        with ThreadPoolExecutor(8) as pool:
-            arms = list(pool.map(lambda _: Q._exact_arm(spark, sf_dir, 7), range(8), timeout=300))
-    finally:
-        sys.setswitchinterval(interval)
-    assert all(a is arms[0] for a in arms)
-    assert list(Q._EXACT_ARM_CACHE) == [(app, sf_dir, 7)]
-    Q._EXACT_ARM_CACHE.clear()

@@ -80,17 +80,6 @@ def test_exhibition_rows_keep_their_proof():
     assert not (EXHIBITION & set(ROWS_ONLY_TWINS))
 
 
-def test_bench_list_covers_registry_once():
-    """bench.py's list is the curated HEADLINE order with every
-    forgotten registration appended: each registered query exactly
-    once, exhibition rows included, and no stale name."""
-    from bench import HEADLINE, derive_bench_list
-
-    derived, stale = derive_bench_list(HEADLINE, QUERIES)
-    assert not stale
-    assert sorted(derived) == sorted(QUERIES)
-
-
 def test_fast_gate_skip_list_names_real_tests():
     """Every fast-gate skip entry (conftest.SLOW_FULL_SUITE_ONLY) must
     name a test that still collects — a renamed/removed test would

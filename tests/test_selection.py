@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from willa_spark.functions import selection as SEL
+from willa_spark.pin import pin
 
 
 def _mk(spark, rows):
@@ -887,51 +888,6 @@ def test_dsir_calibration_oracle_parity(spark, sf_dir):
     assert got[-1][3] > got[0][3]
 
 
-def test_kl_profile_pin_hatch(spark):
-    """The ``pin`` escape hatch (r12 advice): the default eager
-    localCheckpoint is a CALL-TIME corpus-scale job + session-long
-    executor residency, so batch-twin/100 TB callers can re-point the
-    (group, gram) materialization — a custom pin callable is invoked
-    exactly once with that frame, and an identity (lazy) pin produces
-    identical results to the default."""
-    rows = [
-        (0, "a", "x y x y"),
-        (1, "a", "x y y z"),
-        (2, "b", "p q p q"),
-        (3, "b", "p q z z"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    bases = {}
-    for knobs in ({}, {"top_v": 3, "min_count": 1}):
-        base = bases[bool(knobs)] = sorted(
-            tuple(r)
-            for r in SEL.kl_divergence_profile(
-                df, group_col="lang", ns=(1,), **knobs
-            ).collect()
-        )
-        lazy = sorted(
-            tuple(r)
-            for r in SEL.kl_divergence_profile(
-                df, group_col="lang", ns=(1,), pin=lambda d: d, **knobs
-            ).collect()
-        )
-        assert lazy == base, knobs
-    calls = []
-
-    def counting_pin(d):
-        calls.append(d.columns)
-        return d.localCheckpoint(eager=True)
-
-    got = sorted(
-        tuple(r)
-        for r in SEL.kl_divergence_profile(
-            df, group_col="lang", ns=(1,), pin=counting_pin
-        ).collect()
-    )
-    assert got == bases[False]  # the un-knobbed profile, exactly
-    assert calls == [["__grp", "feature", "__cg"]]  # once, THE frame
-
-
 # ---------------------------------------------------------------- DoReMi
 DOREMI_DOCS = [
     (0, "en", "the cat sat on the mat"),
@@ -1197,9 +1153,9 @@ def test_domain_mixture_step_congruity_and_replay(spark, tmp_path):
         (7, "xx", "qqq zzz www kkk"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    ref = LM.bigram_lm_train(
+    ref = pin(LM.bigram_lm_train(
         df.filter(F.col("lang") != "xx").select("doc_id", "text")
-    ).localCheckpoint(eager=True)
+    ))
     batches = [
         [0, 3, 5],  # all three domains
         [1, 4],     # en + de only
@@ -1222,7 +1178,6 @@ def test_domain_mixture_step_congruity_and_replay(spark, tmp_path):
             for r in SEL.domain_mixture_weights(
                 df.filter(F.col("doc_id").isin(seen)),
                 model=ref,
-                model_pinned=True,
             ).collect()
         )
         assert [g[:3] for g in got] == [w[:3] for w in want], bid
@@ -1240,7 +1195,7 @@ def test_domain_mixture_step_congruity_and_replay(spark, tmp_path):
     want2 = sorted(
         key(r)
         for r in SEL.domain_mixture_weights(
-            df.filter(F.col("doc_id").isin(after2)), model=ref, model_pinned=True
+            df.filter(F.col("doc_id").isin(after2)), model=ref
         ).collect()
     )
     assert [g[:3] for g in replay] == [w[:3] for w in want2]
@@ -1250,7 +1205,7 @@ def test_domain_mixture_step_congruity_and_replay(spark, tmp_path):
     )
     want4 = sorted(
         key(r)
-        for r in SEL.domain_mixture_weights(df, model=ref, model_pinned=True).collect()
+        for r in SEL.domain_mixture_weights(df, model=ref).collect()
     )
     assert [g[:3] for g in got4] == [w[:3] for w in want4]
     # duplicate ids fail loud before persisting
@@ -1274,19 +1229,17 @@ def test_domain_mixture_kn_scorer(spark):
     df = spark.createDataFrame(
         DOREMI_DOCS, "doc_id long, lang string, text string"
     )
-    model = LM.bigram_lm_train(df.select("doc_id", "text")).localCheckpoint(
-        eager=True
-    )
+    model = pin(LM.bigram_lm_train(df.select("doc_id", "text")))
     got = {
         r["lang"]: (r["n_transitions"], r["ce"], r["weight"])
         for r in SEL.domain_mixture_weights(
-            df, model=model, model_pinned=True, scorer="kn"
+            df, model=model, scorer="kn"
         ).collect()
     }
     docs = {
         r["doc_id"]: (r["n_transitions"], r["ppl"])
         for r in LM.kn_bigram_perplexity(
-            df.select("doc_id", "text"), model, model_pinned=True
+            df.select("doc_id", "text"), model
         ).collect()
     }
     by_lang = {}
@@ -1300,7 +1253,7 @@ def test_domain_mixture_kn_scorer(spark):
     assert sum(v[2] for v in got.values()) == pytest.approx(1.0, abs=5e-6)
     with pytest.raises(ValueError, match="Jelinek-Mercer knob"):
         SEL.domain_mixture_weights(
-            df, model=model, model_pinned=True, scorer="kn", lam=0.5
+            df, model=model, scorer="kn", lam=0.5
         )
     with pytest.raises(ValueError, match="Kneser-Ney knob"):
         SEL.domain_mixture_weights(df, discount=0.7)
@@ -1316,9 +1269,7 @@ def test_domain_mixture_step_kn_congruity(spark, tmp_path):
     df = spark.createDataFrame(
         DOREMI_DOCS, "doc_id long, lang string, text string"
     )
-    ref = LM.bigram_lm_train(df.select("doc_id", "text")).localCheckpoint(
-        eager=True
-    )
+    ref = pin(LM.bigram_lm_train(df.select("doc_id", "text")))
     step = domain_mixture_step(
         ref, str(tmp_path / "dmkn"), eta=1.0, scorer="kn"
     )
@@ -1335,7 +1286,6 @@ def test_domain_mixture_step_kn_congruity(spark, tmp_path):
             for r in SEL.domain_mixture_weights(
                 df.filter(F.col("doc_id").isin(seen)),
                 model=ref,
-                model_pinned=True,
                 scorer="kn",
             ).collect()
         )
@@ -1461,11 +1411,11 @@ def test_domain_mixture_trajectory_converges_to_hardest(spark):
     df = spark.createDataFrame(
         DOREMI_DOCS, "doc_id long, lang string, text string"
     )
-    model = LM.bigram_lm_train(
+    model = pin(LM.bigram_lm_train(
         df.filter(F.col("lang") != "xx").select("doc_id", "text")
-    ).localCheckpoint(eager=True)
+    ))
     rows = SEL.domain_mixture_trajectory(
-        df, model=model, model_pinned=True, eta=0.05, steps=6
+        df, model=model, eta=0.05, steps=6
     ).collect()
     xx = [r["weight"] for r in sorted(rows, key=lambda r: r["step"]) if r["lang"] == "xx"]
     en = [r["weight"] for r in sorted(rows, key=lambda r: r["step"]) if r["lang"] == "en"]
@@ -1551,9 +1501,7 @@ def test_domain_mixture_trajectory_step_congruity_and_replay(spark, tmp_path):
 
     rows = DOREMI_DOCS + [(6, "de", "der hund sitzt auf der matte")]
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    ref = LM.bigram_lm_train(df.select("doc_id", "text")).localCheckpoint(
-        eager=True
-    )
+    ref = pin(LM.bigram_lm_train(df.select("doc_id", "text")))
     with pytest.raises(ValueError, match="at least one step"):
         domain_mixture_trajectory_step(ref, str(tmp_path / "z"), steps=0)
     step = domain_mixture_trajectory_step(
@@ -1578,7 +1526,6 @@ def test_domain_mixture_trajectory_step_congruity_and_replay(spark, tmp_path):
             for r in SEL.domain_mixture_trajectory(
                 df.filter(F.col("doc_id").isin(seen)),
                 model=ref,
-                model_pinned=True,
                 eta=1.0,
                 steps=4,
             ).collect()
@@ -1598,7 +1545,6 @@ def test_domain_mixture_trajectory_step_congruity_and_replay(spark, tmp_path):
         for r in SEL.domain_mixture_trajectory(
             df.filter(F.col("doc_id").isin(after2)),
             model=ref,
-            model_pinned=True,
             eta=1.0,
             steps=4,
         ).collect()

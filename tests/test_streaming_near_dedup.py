@@ -5,6 +5,7 @@ idempotency of the partitioned store."""
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from willa_spark.functions import dedup as D
@@ -793,24 +794,76 @@ def test_winnow_store_geometry_guard(spark, tmp_path):
         winnow_dedup_step(store, k=5, window=3)(_mkdocs(spark, BATCH2), 1)
 
 
-def test_step_failure_releases_cached_frames(spark, tmp_path):
-    """An exception mid-step (here: the verify-mode flip guard) must
-    not leak persisted frames — a long-running stream retries failed
-    batches in the same session and cache entries would accumulate
-    unboundedly (r15 review)."""
-    import pytest
+def _poison_score():
+    """A survivor score that raises in-plan for doc 8, which only the
+    within-batch drop election reads: the step fails after its first
+    scoped pin has been taken."""
+    return F.when(
+        F.col("doc_id") == 8, F.raise_error(F.lit("poisoned row"))
+    ).otherwise(F.lit(1.0))
 
-    store = os.path.join(str(tmp_path), "st")
-    minhash_dedup_step(store)(_mkdocs(spark, BATCH1), 0)
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    flipped = minhash_dedup_step(store, exact_verify=True)
+
+def _poison_text(df):
+    return df.withColumn(
+        "text",
+        F.when(
+            F.col("doc_id") == 8, F.raise_error(F.lit("poisoned row"))
+        ).otherwise(F.col("text")),
+    )
+
+
+def _vec_docs(spark, rows):
+    vecs = {1: [1.0, 0.0, 0.0, 0.0], 2: [0.0, 1.0, 0.0, 0.0],
+            7: [0.0, 0.0, 1.0, 0.0], 8: [0.0, 0.0, 1.0, 0.0]}
+    return spark.createDataFrame(
+        [(i, vecs[i]) for i in rows], "doc_id bigint, embedding array<double>"
+    )
+
+
+def _release_case(name, store):
+    """(step, first batch, failing batch) for one streaming step."""
+    from willa_spark.streaming.ann import embedding_dedup_step
+    from willa_spark.streaming.near_dedup import (
+        dup_ngram_mask_step,
+        winnow_dedup_step,
+    )
+
+    if name == "minhash":
+        return minhash_dedup_step(store, score=_poison_score()), BATCH1, BATCH2
+    if name == "simhash":
+        return simhash_dedup_step(store, score=_poison_score()), BATCH1, BATCH2
+    if name == "winnow":
+        step = winnow_dedup_step(store, k=2, window=2, score=_poison_score())
+        return step, BATCH1, BATCH2
+    if name == "vector_dedup":
+        step = embedding_dedup_step(
+            store, n_planes=2, dim=4, id_col="doc_id", score=_poison_score()
+        )
+        return step, (1, 2), (7, 8)
+    assert name == "dup_ngram_mask"
+    step = dup_ngram_mask_step(store, n=2)
+    return (lambda df, b: step(_poison_text(df), b)), BATCH1, BATCH2
+
+
+@pytest.mark.parametrize(
+    "name", ["minhash", "simhash", "winnow", "vector_dedup", "dup_ngram_mask"]
+)
+def test_step_failure_releases_cached_frames(spark, tmp_path, name):
+    """A row that raises in-plan mid-step must not leak the step's
+    persisted frames: a long-running stream retries failed batches in
+    the same session and cache entries would accumulate unboundedly.
+    The failure fires after the step's first scoped pin (for
+    dup_ngram_mask, whose only scoped frame is built from the text,
+    while that pin is counted)."""
+    step, first, failing = _release_case(
+        name, os.path.join(str(tmp_path), "st")
+    )
+    make = _vec_docs if name == "vector_dedup" else _mkdocs
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    step(make(spark, first), 0).collect()
+    assert cache.isEmpty()
     for _ in range(3):
-        with pytest.raises(RuntimeError, match="exact_verify"):
-            flipped(_mkdocs(spark, BATCH2), 1)
-    # no-increase, not equality: the ContextCleaner may CONCURRENTLY
-    # unpersist GC'd localCheckpoint RDDs from the successful batch,
-    # shrinking the count — the leak signal is monotone growth (the
-    # pre-fix behavior registered >= 1 new cache entry per retry, so
-    # three retries would read >= before + 3)
-    after = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert after <= before, f"leaked {after - before} cached frames"
+        with pytest.raises(Exception, match="poisoned row"):
+            step(make(spark, failing), 1).collect()
+    assert cache.isEmpty(), "a failed step leaked a cached frame"

@@ -3,9 +3,13 @@
 Usage: python tools/capture_plans.py <sf_dir> <out_dir> [query ...]
 
 Writes <out_dir>/<query>.txt for each named query (default: every
-registered query) over the tables in <sf_dir>. Expression ids (``#123``)
-are stripped, so two captures of the same plan are byte-identical and
-``diff -r <out_a> <out_b>`` is the plan check between two checkouts.
+registered query) over the tables in <sf_dir>. Everything a session
+numbers afresh is stripped: expression ids (``#123``), RDD ids
+(``RDD[45]``), ``plan_id=6``, lambda-variable suffixes (``x_123``), JVM
+object hashes (``@7a50b5f7``) and the ``localCheckpoint at <call site>``
+text of a pinned frame. Two captures of the same plan are then
+byte-identical and ``diff -r <out_a> <out_b>`` is the plan check between
+two checkouts.
 Uses the same session configuration as bench.py (tools/bench_session.py)
 so the captured plans are the benched plans.
 """
@@ -20,7 +24,21 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-_EXPR_ID = re.compile(r"#\d+")
+_VOLATILE = [  # the lambda rule runs first: it needs the ``#`` after the suffix
+    (re.compile(r"\b(lambda \w+?)_\d+\b"), r"\1"),
+    (re.compile(r"#\d+"), ""),
+    (re.compile(r"RDD\[\d+\]"), "RDD"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"@[0-9a-f]{4,16}\b"), ""),
+    (re.compile(r"localCheckpoint at [^\s,]+"), "localCheckpoint"),
+]
+
+
+def normalize(text: str) -> str:
+    """The plan text with every per-session number stripped."""
+    for pattern, repl in _VOLATILE:
+        text = pattern.sub(repl, text)
+    return text
 
 
 def main() -> int:
@@ -44,7 +62,7 @@ def main() -> int:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            text = _EXPR_ID.sub("", buf.getvalue())
+            text = normalize(buf.getvalue())
         except Exception as e:  # keep going; record the failure
             text = f"ERROR capturing plan: {e}\n"
             rc = 1

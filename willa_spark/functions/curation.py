@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pin import pin
 from ._guards import check_cols_tuple
 from .corpus import _pseudo_lines, _tokens
 from .dedup import shingles
@@ -987,11 +988,7 @@ def _two_phase_prefix_sum(
     written to storage once and re-read — the same one-scan plan with
     recomputable blocks, the right choice for a long multi-hour
     cluster run (the ``embedding_near_dups`` spill discipline)."""
-    if spill_dir is not None:
-        counted.write.mode("overwrite").parquet(spill_dir)
-        counted = counted.sparkSession.read.parquet(spill_dir)
-    else:
-        counted = counted.localCheckpoint(eager=True)
+    counted = pin(counted, spill_dir=spill_dir)
     return _two_phase_from_pinned(
         counted, strata_col, piece_cols, piece_order, row_order, value_col
     )

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
+from ..pin import pin, pinned
 from .text import fingerprint
 
 
@@ -259,7 +260,7 @@ def minhash_candidate_pairs(
     # as hamming_block_pairs / winnow_overlap_pairs). The banded frame
     # is (id, 2 ints) × bands per doc — tiny relative to the corpus, so
     # materializing it is safe at any scale (unlike the shingle frames).
-    banded = banded.localCheckpoint(eager=True)
+    banded = pin(banded)
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -344,7 +345,7 @@ def verified_near_dups(
     # The frame is candidate-involved docs only (ids semi-join), so
     # materializing it is bounded by the candidate count, not the
     # corpus; localCheckpoint blocks release on GC of the result.
-    sh = sh.localCheckpoint(eager=True)
+    sh = pin(sh)
     a = sh.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"))
     b = sh.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b"))
     return (
@@ -469,7 +470,7 @@ def hamming_block_pairs(
     per alias side, and unlike a ``persist`` the blocks release on GC
     of the result instead of leaking one cache entry per call."""
     check_pigeonhole(max_hamming, num_blocks)
-    blocks = simhash_block_frame(sig, num_blocks).localCheckpoint(eager=True)
+    blocks = pin(simhash_block_frame(sig, num_blocks))
     l, r = blocks.alias("l"), blocks.alias("r")
     cand = (
         l.join(
@@ -563,30 +564,35 @@ def winnow_overlap_pairs(
     fp = winnow_fingerprint_frame(
         df, k=k, window=window, id_col=id_col, text_col=text_col
     )
-    if df_cap is not None:
-        raw = fp.persist()
-        # eager: raw feeds the df-cap aggregate AND the semi-join's
-        # probe side within the ONE checkpoint action below — lazily
-        # persisted, those two stages race-compute the winnowing pass
-        # before the cache fills (the minhash banded-frame race)
-        raw.count()
-        rare = (
-            raw.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= df_cap)
-        )
-        fp = raw.join(rare.select("fp"), "fp", "left_semi")
-    # pin the (capped) fingerprint frame eagerly so (a) the self-join's
-    # two scans don't each recompute the winnowing pass and (b) no
-    # CacheManager entry outlives this call — checkpoint blocks are
-    # released by the ContextCleaner once the caller drops the result,
-    # unlike a .persist() the caller has no handle to release
-    fp = fp.localCheckpoint(eager=True)
-    if df_cap is not None:
-        raw.unpersist()  # capped frame materialized; release the raw pass
-    return winnow_pair_counts(fp).withColumnRenamed(
+    return winnow_pair_counts(capped_fingerprints(fp, df_cap)).withColumnRenamed(
         "n_shared", "n_shared_fingerprints"
     )
+
+
+def capped_fingerprints(fp: DataFrame, df_cap: int | None) -> DataFrame:
+    """The (id, fp) frame without fingerprints that appear in more
+    than ``df_cap`` docs (MOSS's rule; None keeps all), pinned with an
+    eager checkpoint: the self-join downstream scans it twice and must
+    not recompute the fingerprint pass (a decode, for media). Shared by
+    the text, audio and video fingerprint-pair operators."""
+    # the raw pass is released when the scope exits, on any exit
+    with pinned() as keep:
+        if df_cap is not None:
+            # eager: raw feeds the df-cap aggregate AND the semi-join's
+            # probe side within the ONE checkpoint action below — lazily
+            # persisted, those two stages race-compute the fingerprint
+            # pass before the cache fills (the minhash banded-frame race)
+            raw = keep(fp)
+            rare = (
+                raw.groupBy("fp")
+                .agg(F.count(F.lit(1)).alias("df"))
+                .filter(F.col("df") <= df_cap)
+            )
+            fp = raw.join(rare.select("fp"), "fp", "left_semi")
+        # a checkpoint, not a persist: no CacheManager entry outlives
+        # this call — its blocks are released by the ContextCleaner once
+        # the caller drops the result
+        return pin(fp)
 
 
 def winnow_pair_counts(fp: DataFrame) -> DataFrame:
@@ -938,9 +944,9 @@ def _cc_round(edges: DataFrame, labels: DataFrame, target: int):
         )
     )
     obs = Observation()
-    new_labels = jumped.observe(
+    new_labels = pin(jumped.observe(
         obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    ).localCheckpoint(eager=True)
+    ))
     labels.unpersist()
     return new_labels, obs
 
@@ -980,14 +986,13 @@ def keep_best(
     reuse subtrees, so it is pinned with an eager localCheckpoint
     (pairs-sized: 3 narrow columns per clustered doc) — without it
     the corpus join + score expression would run three times."""
-    member = (
+    member = pin(
         df.join(clusters, df[id_col] == clusters["id"], "inner")
         .select(
             F.col("cluster_id"),
             clusters["id"].alias("__m_id"),
             score.alias("__s"),
         )
-        .localCheckpoint(eager=True)
     )
     drop = best_member_drops(member)
     return df.join(drop, df[id_col] == F.col("__drop_id"), "left_anti")

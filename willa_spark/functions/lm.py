@@ -48,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pin import pin
 from ._guards import check_cols_tuple
 
 BOS = "<s>"
@@ -390,7 +391,6 @@ def bigram_perplexity(
     id_col: str = "doc_id",
     text_col: str = "text",
     broadcast_max_rows: int = BROADCAST_MODEL_MAX_ROWS,
-    model_pinned: bool = False,
 ) -> DataFrame:
     """(id, n_transitions, ppl) — per-document conditional perplexity
     under a FROZEN ``bigram_lm_train`` model: ppl = exp(−Σ ln P(w2|w1)
@@ -403,7 +403,7 @@ def bigram_perplexity(
 
     Plan: the final log-probability is PRECOMPUTED on the
     vocabulary-sized model frame (where the pre-joined margins are
-    consumed — no corpus-side margin joins, r12 review): scoring is
+    consumed — no corpus-side margin joins): scoring is
     one transition explode + TWO joins against the logp tables
     (broadcast under ``broadcast_max_rows`` — the count is one
     vocabulary-sized job — hash-join above) + one coalesce + a
@@ -413,15 +413,11 @@ def bigram_perplexity(
     precomputes, the totals agg, the broadcast-gate count), so it is
     PINNED first — unpinned, each consumer re-runs the model's whole
     lineage, which for a ``bigram_lm_train`` frame is the
-    corpus-scale training shuffle per consumer (caught by the r12
-    plan audit). ``model_pinned=True`` skips the pin when the CALLER
-    already materialized THIS SAME frame (reusing a pin of the same
-    frame is sound; the classifier ``already_pinned`` bug was reusing
-    a DIFFERENT frame's pin that sat below more lineage). Scoring
-    many batches under one frozen model? Use ``make_bigram_scorer``
-    — it builds and PINS these tables once instead of per call."""
-    if not model_pinned:
-        model = model.localCheckpoint(eager=True)
+    corpus-scale training shuffle per consumer. A model the caller
+    already pinned with ``pin`` is reused as is. Scoring many batches
+    under one frozen model? Use ``make_bigram_scorer`` — it builds
+    and PINS these tables once instead of per call."""
+    model = pin(model)
     plan = _jm_plan(model, lam, alpha)
     return _apply_plan(
         docs, plan, id_col, text_col, model.count() <= broadcast_max_rows
@@ -436,7 +432,6 @@ def kn_bigram_perplexity(
     id_col: str = "doc_id",
     text_col: str = "text",
     broadcast_max_rows: int = BROADCAST_MODEL_MAX_ROWS,
-    model_pinned: bool = False,
 ) -> DataFrame:
     """(id, n_transitions, ppl) — per-document perplexity under
     interpolated Kneser-Ney smoothing (Chen & Goodman 1999 — the
@@ -472,8 +467,7 @@ def kn_bigram_perplexity(
     split the corpus-scale frame into a multi-consumer fork and cost
     a pin — worse below ~50% miss rates). Scoring many batches under
     one frozen model? Use ``make_bigram_scorer``."""
-    if not model_pinned:
-        model = model.localCheckpoint(eager=True)
+    model = pin(model)
     plan = _kn_plan(model, alpha, discount)
     return _apply_plan(
         docs, plan, id_col, text_col, model.count() <= broadcast_max_rows
@@ -489,7 +483,6 @@ def bigram_group_cross_entropy(
     id_col: str = "doc_id",
     text_col: str = "text",
     broadcast_max_rows: int = BROADCAST_MODEL_MAX_ROWS,
-    model_pinned: bool = False,
     scorer: str = "jm",
     discount: float | None = None,
 ) -> DataFrame:
@@ -523,8 +516,7 @@ def bigram_group_cross_entropy(
     kl_divergence_profile convention: a NULL group would pool every
     unlabeled doc into one phantom domain row)."""
     _check_scorer_knobs(scorer, lam, discount)
-    if not model_pinned:
-        model = model.localCheckpoint(eager=True)
+    model = pin(model)
     plan = (
         _jm_plan(model, lam, alpha)
         if scorer == "jm"
@@ -624,18 +616,16 @@ def _frozen_plan(
     discount: float | None,
     broadcast_max_rows: int = BROADCAST_MODEL_MAX_ROWS,
 ):
-    """The ONE frozen-model construction (r13 review: the eager-pin
-    block had drifted into a verbatim copy between
-    ``make_bigram_scorer`` and the streaming mixture step — the same
-    class of twin drift ``_scored_lp`` exists to prevent on the
-    corpus side): validate the cross-scorer knobs, pin the model,
+    """The ONE frozen-model construction, shared by
+    ``make_bigram_scorer`` and the streaming mixture step so the two
+    cannot drift: validate the cross-scorer knobs, pin the model,
     derive and eagerly PIN the vocabulary-sized logp/λ/P_cont tables
     and the scalar frame (a degenerate model fails HERE, at
     construction), and run the broadcast-gate count — returning
     ``(plan, do_broadcast)`` ready for per-batch ``_apply_plan`` /
     ``_group_lp_stats`` calls that pay only corpus-side work."""
     _check_scorer_knobs(scorer, lam, discount)
-    model = model.localCheckpoint(eager=True)
+    model = pin(model)
     do_broadcast = model.count() <= broadcast_max_rows
     plan = (
         _jm_plan(model, lam, alpha)
@@ -643,8 +633,8 @@ def _frozen_plan(
         else _kn_plan(model, alpha, discount)
     )
     # The derived tables are independent per-row derivations of the
-    # ALREADY-PINNED model, so their pins can run as concurrent jobs
-    # instead of 3-4 sequential ones — and inside the broadcast gate
+    # ALREADY-PINNED model, so they are pinned together (concurrent
+    # jobs instead of 3-4 sequential ones) — and inside the broadcast gate
     # each is vocabulary-sized and about to be broadcast anyway, so
     # coalesce(1) turns each pin from a model-shuffle-width tasklet
     # swarm into one task (measured: the sequential 32-task pins cost
@@ -653,24 +643,13 @@ def _frozen_plan(
     # from exact counts before it applies — and the empty/degenerate
     # model guards still evaluate here, at construction, surfacing
     # from whichever concurrent pin hits them first.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _pin(tab: DataFrame) -> DataFrame:
-        return (tab.coalesce(1) if do_broadcast else tab).localCheckpoint(
-            eager=True
-        )
-
-    with ThreadPoolExecutor(max_workers=4) as ex:
-        join_futs = [ex.submit(_pin, tab) for tab, _ in plan["joins"]]
-        scalars_fut = ex.submit(_pin, plan["scalars"])
-        plan = {
-            "joins": [
-                (fut.result(), keys)
-                for fut, (_, keys) in zip(join_futs, plan["joins"])
-            ],
-            "scalars": scalars_fut.result(),
-            "lp": plan["lp"],
-        }
+    tabs = [tab for tab, _ in plan["joins"]] + [plan["scalars"]]
+    *joins, scalars = pin(*(t.coalesce(1) if do_broadcast else t for t in tabs))
+    plan = {
+        "joins": [(t, keys) for t, (_, keys) in zip(joins, plan["joins"])],
+        "scalars": scalars,
+        "lp": plan["lp"],
+    }
     return plan, do_broadcast
 
 

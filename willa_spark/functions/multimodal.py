@@ -731,7 +731,7 @@ def audio_segment_pairs(
     the decode+segment-hash is one map-only pass; only (id, 8-byte fp)
     rows reach the shuffle. Streaming twin:
     ``streaming.near_dedup.audio_segment_dedup_step``."""
-    from .dedup import _spread, winnow_pair_counts
+    from .dedup import _spread, capped_fingerprints, winnow_pair_counts
 
     fp = decode_audio_segment_fp_frame(
         _spread(df.select(id_col, binary_col), id_col),
@@ -741,29 +741,8 @@ def audio_segment_pairs(
         id_col=id_col,
         decoder=decoder,
     )
-    raw = None
-    try:
-        if seg_df_cap is not None:
-            raw = fp.persist()
-            # eager: raw feeds the df-cap aggregate AND the semi-join
-            # probe side in one action — a lazy cache lets both stages
-            # race-compute the decode (the minhash banded-frame race)
-            raw.count()
-            rare = (
-                raw.groupBy("fp")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") <= seg_df_cap)
-            )
-            fp = raw.join(rare.select("fp"), "fp", "left_semi")
-        # eager pin: the self-join scans the fp frame twice, and the
-        # Python decode behind it must not run twice (same discipline
-        # as video_fingerprint_pairs)
-        fp = fp.localCheckpoint(eager=True)
-    finally:
-        if raw is not None:
-            raw.unpersist()
     return (
-        winnow_pair_counts(fp)
+        winnow_pair_counts(capped_fingerprints(fp, seg_df_cap))
         .filter(F.col("n_shared") >= min_shared_segments)
         .withColumnRenamed("n_shared", "n_shared_segments")
     )
@@ -881,7 +860,7 @@ def video_fingerprint_pairs(
     not evidence of duplication. At 100 TB the decode+hash is one
     map-only pass; only (id, 8-byte hash) rows reach the shuffle.
     Streaming twin: ``streaming.near_dedup.video_fp_dedup_step``."""
-    from .dedup import _spread, winnow_pair_counts
+    from .dedup import _spread, capped_fingerprints, winnow_pair_counts
 
     fp = decode_video_fp_frame(
         _spread(df.select(id_col, binary_col), id_col),
@@ -890,31 +869,8 @@ def video_fingerprint_pairs(
         id_col=id_col,
         decoder=decoder,
     )
-    raw = None
-    try:
-        if frame_df_cap is not None:
-            raw = fp.persist()
-            # eager: raw feeds the df-cap aggregate AND the semi-join
-            # probe side in one action — a lazy cache lets both stages
-            # race-compute the decode (the minhash banded-frame race)
-            raw.count()
-            rare = (
-                raw.groupBy("fp")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") <= frame_df_cap)
-            )
-            fp = raw.join(rare.select("fp"), "fp", "left_semi")
-        # eager pin: the self-join scans the frame frame twice, and the
-        # Python decode behind it must not run twice (same discipline
-        # as winnow_overlap_pairs)
-        fp = fp.localCheckpoint(eager=True)
-    finally:
-        # unpersist on the error path too — a raising semi-join or
-        # checkpoint must not leak a cache entry per failed call
-        if raw is not None:
-            raw.unpersist()
     return (
-        winnow_pair_counts(fp)
+        winnow_pair_counts(capped_fingerprints(fp, frame_df_cap))
         .filter(F.col("n_shared") >= min_shared_frames)
         .withColumnRenamed("n_shared", "n_shared_frames")
     )

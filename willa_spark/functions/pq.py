@@ -50,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pin import pin
 from ._fastlit import lit_double_cube, lit_double_rows
 from .multimodal import _bound
 from .similarity import _as_double, cosine, norm
@@ -166,13 +167,12 @@ def pq_train(
     # assignment/means passes — unpinned, every action would re-run
     # the normalization fold and the caller's upstream lineage (the
     # dsir_score_step frozen-frame discipline)
-    c = (
+    c = pin(
         corpus.select(
             F.col(id_col).alias("id"),
             (_unit(v0) if normalize else v0).alias("v"),
         )
         .filter(F.col("v").isNotNull())
-        .localCheckpoint(eager=True)
     )
     init_rows = c.orderBy("id").limit(k).collect()
     if not init_rows:

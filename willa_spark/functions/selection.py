@@ -36,11 +36,10 @@ Two feature spaces:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pin import pin
 from .dedup import shingles
 from .lm import DEFAULT_ALPHA as LM_DEFAULT_ALPHA
 from .lm import DEFAULT_LAMBDA as LM_DEFAULT_LAMBDA
@@ -276,9 +275,7 @@ def dsir_select(
             "use a small positive value (1e-9) for deterministic "
             "top-k-by-weight selection"
         )
-    feats = _gram_features(docs, num_buckets, ns, id_col, text_col).localCheckpoint(
-        eager=True
-    )
+    feats = pin(_gram_features(docs, num_buckets, ns, id_col, text_col))
     raw_model = _model_from_features(feats, num_buckets, DEFAULT_SMOOTH)
     target_model = feature_log_probs(
         target_docs, num_buckets, ns, id_col=id_col, text_col=text_col
@@ -516,7 +513,6 @@ def kl_divergence_profile(
     text_col: str = "text",
     top_v: int | None = None,
     min_count: int = 1,
-    pin: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """(group, n_grams, kl_to_corpus) — each stratum's smoothed
     KL divergence from the whole-corpus gram distribution, the
@@ -540,7 +536,7 @@ def kl_divergence_profile(
     entirely gram-less documents have no distribution to profile and
     contribute nothing (the family's feature-less contract).
 
-    VOCABULARY BOUND (the r10 verdict's knob): the generate-join is
+    VOCABULARY BOUND: the generate-join is
     groups × |V| — fine for unigrams (Zipf-bounded), but ``ns``
     containing n>1 at web scale makes |V| explode. ``top_v`` keeps
     only the top_v most frequent CORPUS grams (count desc, gram asc —
@@ -553,13 +549,9 @@ def kl_divergence_profile(
     Truncation filters the vocabulary-sized frame, never re-touches
     the corpus; with both at their defaults the plan is unchanged.
 
-    ``pin`` (default None → eager localCheckpoint) is the
-    multi-consumer materialization hook for the (group, gram) frame
-    — the default runs a corpus-scale job at CALL time and holds
-    executor-storage residency for the session; a 100 TB / batch-twin
-    caller passes a parquet-spill pin (the ``corpus_pipeline``
-    ``spill_dir`` pattern) or ``lambda df: df`` to stay lazy and
-    accept the per-consumer re-derivation (r12 advice)."""
+    The (group, gram) frame is pinned with an eager checkpoint: a
+    corpus-scale job at CALL time, held in executor storage until the
+    result is garbage-collected."""
     checked_group = F.when(
         F.col(group_col).isNull(),
         F.raise_error(
@@ -588,20 +580,12 @@ def kl_divergence_profile(
     # PIN the (group, gram) frame: everything downstream — corpus
     # counts, the group list, totals, the generate-join — derives
     # from it, and Spark does not reuse subtrees, so unpinned each
-    # consumer re-ran the corpus explode + agg (the r12 plan audit
-    # measured 8 corpus scans / 27 exchanges on the truncated path;
-    # 2 scans / 10 exchanges after the pin). The frame is
-    # groups × vocabulary-sized — the docstring's "the corpus enters
-    # once" claim is this pin. ``pin`` (the corpus_pipeline pin=
-    # pattern, r12 advice) lets a 100 TB/batch-twin caller re-point
-    # the materialization at a parquet stage spill, or pass an
-    # identity callable to stay fully lazy (accepting the
-    # re-derivation) — the default eager localCheckpoint executes a
-    # corpus-scale job AT CALL TIME and holds executor-storage
-    # residency for the session.
-    per_group = (
-        per_group.localCheckpoint(eager=True) if pin is None else pin(per_group)
-    )
+    # consumer re-ran the corpus explode + agg (a plan audit measured
+    # 8 corpus scans / 27 exchanges on the truncated path; 2 scans /
+    # 10 exchanges after the pin). The frame is groups ×
+    # vocabulary-sized — the docstring's "the corpus enters once"
+    # claim is this pin.
+    per_group = pin(per_group)
     # corpus counts DERIVE from the per-group frame — this second agg
     # works the (groups x vocab) table, not the corpus
     corpus = per_group.groupBy("feature").agg(F.sum("__cg").alias("__c"))
@@ -696,7 +680,6 @@ def domain_mixture_weights(
     alpha: float = LM_DEFAULT_ALPHA,
     id_col: str = "doc_id",
     text_col: str = "text",
-    model_pinned: bool = False,
     scorer: str = "jm",
     discount: float | None = None,
 ) -> DataFrame:
@@ -722,12 +705,9 @@ def domain_mixture_weights(
 
     ``model`` defaults to the corpus's own ``bigram_lm_train`` frame
     (the self-scored convention of lm_perplexity / dsir_weights);
-    pass a target-trained frame for the production shape, with
-    ``model_pinned=True`` when the caller already materialized THAT
-    SAME frame (the lm.py rule: the passthrough skips a second
-    full materialization + duplicate executor residency; reusing a
-    pin of a DIFFERENT frame is the classifier ``already_pinned``
-    bug, don't). ``scorer="kn"`` switches the reference model's
+    pass a target-trained frame for the production shape (one the
+    caller already pinned with ``pin`` is reused, not re-pinned).
+    ``scorer="kn"`` switches the reference model's
     smoothing to interpolated Kneser-Ney (the KenLM form —
     ``discount`` applies there; cross-scorer knobs fail loud, the
     lm.py rule), so the excess-loss signal matches the production
@@ -745,7 +725,6 @@ def domain_mixture_weights(
     eta_ = float(eta)
     if model is None:
         model = bigram_lm_train(docs.select(id_col, text_col))
-        model_pinned = False  # freshly-built lineage, never pre-pinned
     per = bigram_group_cross_entropy(
         docs,
         model,
@@ -754,7 +733,6 @@ def domain_mixture_weights(
         alpha=alpha,
         id_col=id_col,
         text_col=text_col,
-        model_pinned=model_pinned,
         scorer=scorer,
         discount=discount,
     )
@@ -775,7 +753,7 @@ def mixture_weights_from_stats(
     (the multi-consumer rule; same class as the kl_profile per_group
     pin)."""
     eta_ = float(eta)
-    per = per.localCheckpoint(eager=True)
+    per = pin(per)
     tot = per.agg(
         F.sum("n_transitions").cast("double").alias("__N"),
         # corpus ce = token-weighted mean of the domain ces — derived
@@ -818,7 +796,6 @@ def domain_mixture_trajectory(
     alpha: float = LM_DEFAULT_ALPHA,
     id_col: str = "doc_id",
     text_col: str = "text",
-    model_pinned: bool = False,
     scorer: str = "jm",
     discount: float | None = None,
     max_groups: int = 100_000,
@@ -866,7 +843,6 @@ def domain_mixture_trajectory(
         )
     if model is None:
         model = bigram_lm_train(docs.select(id_col, text_col))
-        model_pinned = False  # freshly-built lineage, never pre-pinned
     per = bigram_group_cross_entropy(
         docs,
         model,
@@ -875,7 +851,6 @@ def domain_mixture_trajectory(
         alpha=alpha,
         id_col=id_col,
         text_col=text_col,
-        model_pinned=model_pinned,
         scorer=scorer,
         discount=discount,
     )

@@ -23,6 +23,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pin import pin
 from ._fastlit import lit_double_rows, lit_doubles
 
 
@@ -389,9 +390,9 @@ def train_centroids(
     # collect plus n_iters assignment/means passes — unpinned, every
     # action re-ran the caller's upstream lineage (scan + any spread
     # repartition + the cast) once per Lloyd round
-    c = corpus.select(
+    c = pin(corpus.select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).localCheckpoint(eager=True)
+    ))
     init_rows = c.orderBy("id").limit(n_centroids).collect()
     centroids = [list(r["v"]) for r in init_rows]
     dim = len(centroids[0])
@@ -568,17 +569,14 @@ def _vector_near_dup_pairs(
     v = df.select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
     ).withColumn("__key", key_builder(F.col("v")))
-    if spill_dir:
-        v.write.mode("overwrite").parquet(spill_dir)
-        v = df.sparkSession.read.parquet(spill_dir)
-    else:
-        # EAGER: the self-join's two shuffle-map stages are submitted
-        # concurrently within one action, so a lazy persist lets both
-        # race-compute the key-builder projection before the cache
-        # fills (the same duplication profiled on the minhash banded
-        # frame). localCheckpoint computes it once and releases on GC
-        # of the result — no CacheManager entry outlives the call.
-        v = v.localCheckpoint(eager=True)
+    # EAGER: the self-join's two shuffle-map stages are submitted
+    # concurrently within one action, so a lazy persist lets both
+    # race-compute the key-builder projection before the cache fills
+    # (the same duplication profiled on the minhash banded frame). The
+    # checkpoint computes it once and releases on GC of the result — no
+    # CacheManager entry outlives the call; ``spill_dir`` writes it to
+    # storage instead.
+    v = pin(v, spill_dir=spill_dir)
     l, r = v.alias("l"), v.alias("r")
     return (
         l.join(

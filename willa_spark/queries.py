@@ -17,7 +17,6 @@ Float-determinism rules used throughout (so hashes match DuckDB):
 
 from __future__ import annotations
 
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +27,7 @@ from .operators import Aggregate, HoppingWindow, SessionWindow, TumblingWindow
 from .operators.aggregates import SEQ
 from .operators.tables import latest_per_key
 from .operators.windows import WINDOW_START, assign_session_windows, assign_time_windows
+from .pin import pin
 from .functions import corpus as CORPUS
 from .functions import curation as CURATION
 from .functions import dedup as D
@@ -3253,7 +3253,7 @@ def q_packed_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("doc_id").cast("bigint").alias("last_doc"),
             F.sum("start_in_seq").cast("bigint").alias("start_sum"),
         )
-        return agg.localCheckpoint(eager=True)
+        return pin(agg)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -3326,7 +3326,7 @@ def q_packed_sequences_loaded(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_tokens",
             "n_slices",
         )
-        return seqs.localCheckpoint(eager=True)
+        return pin(seqs)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -3619,7 +3619,7 @@ def _precision_sig_rows(
     the output — the verify itself is a stronger precision proof than
     any planted dual, and ``recall_minhash``'s oracle already pins
     that verify's arithmetic (jaccard = 1.0 on exact copies)."""
-    sig = sig.localCheckpoint(eager=True)
+    sig = pin(sig)
     mask = (1 << (max_hamming + 1)) - 1
     planted = sig.filter(F.col("id") % modulus == 0)
     exact = planted.select((F.col("id") + _P_OFF1).alias("id"), "simhash")
@@ -3737,9 +3737,9 @@ def q_precision_video_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.encode(F.substring(F.col("text"), 1, 200), "utf-8").alias("data"),
     )
-    fpf = decode_video_fp_frame(
+    fpf = pin(decode_video_fp_frame(
         clips, id_col="doc_id", decoder=fake_video_decoder
-    ).localCheckpoint(eager=True)
+    ))
     planted_fp = fpf.filter(F.col("id") % 30 == 0)
     exact = planted_fp.select((F.col("id") + _P_OFF1).alias("id"), "fp")
     miss = (
@@ -3807,7 +3807,7 @@ def q_precision_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _recall_docs(spark, sf_dir)
     n_tok = F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
     eligible = docs.filter((F.col("doc_id") % 20 == 0) & (n_tok >= 5))
-    fpf = D.winnow_fingerprint_frame(eligible).localCheckpoint(eager=True)
+    fpf = pin(D.winnow_fingerprint_frame(eligible))
     exact = fpf.select((F.col("id") + _P_OFF1).alias("id"), "fp")
     miss = (
         fpf.groupBy("id")
@@ -3865,9 +3865,9 @@ def q_precision_audio_seg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.encode(F.substring(F.col("text"), 1, 200), "utf-8").alias("data"),
     )
-    fpf = decode_audio_segment_fp_frame(
+    fpf = pin(decode_audio_segment_fp_frame(
         clips, id_col="doc_id", decoder=fake_audio_decoder_pcm
-    ).localCheckpoint(eager=True)
+    ))
     planted_fp = fpf.filter(F.col("id") % 35 == 0)
     exact = planted_fp.select((F.col("id") + _P_OFF1).alias("id"), "fp")
     miss = (
@@ -3943,9 +3943,9 @@ def q_precision_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``_rank_topk``-shaped window in ``ivf_probe_topk``), so arms 1-2
     pin it transitively; its own recall row stays ``recall_ann_ivf``."""
     emb, ann_q, _planted = _ann_recall_parts(spark, sf_dir, spread=True)
-    lsh = SIM.lsh_topk(
+    lsh = pin(SIM.lsh_topk(
         emb, ann_q, k=10, n_planes=4, n_tables=8, n_probes=2
-    ).localCheckpoint(eager=True)
+    ))
     n_q = ann_q.agg(F.count(F.lit(1)).cast("bigint").alias("n_queries"))
     n_rank1 = lsh.filter(
         (F.col("rank") == 1) & (F.col("vec_id") == F.col("query_id"))
@@ -4294,36 +4294,25 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TARGET model (the seed is a subset of the corpus, so its feature
     # rows are already here — no second tokenize pass), and the
     # scoring join (dsir_select's own discipline)
-    feats = SELECTION._gram_features(
+    feats = pin(SELECTION._gram_features(
         docs, None, (1, 2), "doc_id", "text"
-    ).localCheckpoint(eager=True)
-    # pin BOTH model frames too (r15): each model feeds TWO broadcast
+    ))
+    # pin BOTH model frames too: each model feeds TWO broadcast
     # subqueries downstream (the scoring join + its _floor_guarded
     # scalar), and Spark does not reuse subtrees across broadcast
     # exchanges — unpinned, the vocab-keyed model aggregation over the
     # pinned gram frame ran up to 4x concurrently per action (profiled:
     # 6 heavy 32-task broadcast-build jobs, ~19 s of task time on the
     # calibration row). Models are vocab-sized — the streaming twin
-    # (streaming/selection.py) has always pinned them.
-    # The two models are independent aggregations of the SAME pinned
-    # feature frame, so their pins run as concurrent jobs (the
-    # lm._frozen_plan discipline) instead of back-to-back ones.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        tgt_fut = ex.submit(
-            lambda: SELECTION._model_from_features(
-                feats.filter(F.col("id") % 13 == 0),
-                None,
-                SELECTION.DEFAULT_SMOOTH,
-            ).localCheckpoint(eager=True)
-        )
-        raw_fut = ex.submit(
-            lambda: SELECTION._model_from_features(
-                feats, None, SELECTION.DEFAULT_SMOOTH
-            ).localCheckpoint(eager=True)
-        )
-        tgt_model, raw_model = tgt_fut.result(), raw_fut.result()
+    # (streaming/selection.py) pins them too. The two models are
+    # independent aggregations of the SAME pinned feature frame, so
+    # they are pinned together (concurrent jobs, not back-to-back).
+    tgt_model, raw_model = pin(
+        SELECTION._model_from_features(
+            feats.filter(F.col("id") % 13 == 0), None, SELECTION.DEFAULT_SMOOTH
+        ),
+        SELECTION._model_from_features(feats, None, SELECTION.DEFAULT_SMOOTH),
+    )
     w = SELECTION.importance_log_weights(
         docs,
         tgt_model,
@@ -4670,14 +4659,14 @@ def q_perplexity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions import selection as SELECTION
 
     docs = read_docs_spread(spark, sf_dir).select("doc_id", "text")
-    # pinned (r15): the model feeds TWO broadcast subqueries in
+    # pinned: the model feeds TWO broadcast subqueries in
     # cross_entropy_score (the scoring join + the floor scalar), and
     # broadcast exchanges never share subtrees — unpinned, the seed
     # tokenize+explode+model agg ran twice per action (the
     # q_dsir_weights model-pin rationale; vocab-sized frame)
-    model = SELECTION.feature_log_probs(
+    model = pin(SELECTION.feature_log_probs(
         docs.filter(F.col("doc_id") % 13 == 0), num_buckets=None
-    ).localCheckpoint(eager=True)
+    ))
     scored = SELECTION.cross_entropy_score(docs, model, num_buckets=None)
     rounded = scored.select(
         "doc_id",
@@ -4711,32 +4700,9 @@ FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 2000
 """
 
 
-# One brute-force exact arm per (session, sf_dir, k): the PQ and
-# IVF-PQ band rows verify against an IDENTICAL ≤20-query baseline
-# (same corpus, same query filter, same k), so the second row reuses
-# the first's materialized ~k·20-row result instead of re-paying the
-# corpus-scale scoring pass (r11 verdict #3 — proof-overhead dedup,
-# not a semantics change: the arm is deterministic). The corpus
-# projection and the bounded query set are built INSIDE the helper
-# (r12 review: accepting them as parameters while keying only on
-# (appId, sf_dir, k) would hand a future caller with a DIFFERENT
-# query set the wrong ground truth on a silent cache hit — the key
-# must provably cover every input). Keyed by applicationId so a
-# fresh session (driver gate, tests) never reads another session's
-# pinned lineage; entries are ≤200 tiny rows, and inserts evict any
-# key from a DIFFERENT applicationId (r12 advice: a stopped app's
-# entries referenced dead-SparkContext checkpoints for the process
-# lifetime) — live size stays bounded by the handful of (sf_dir, k)
-# pairs the CURRENT session touches. The band rows build the arm on
-# pool threads, so every lookup, eviction and insert holds the lock.
-_EXACT_ARM_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-_EXACT_ARM_LOCK = threading.Lock()
-
-
 def _ann_band_inputs(spark: SparkSession, sf_dir: str):
     """THE corpus projection + bounded query set the band rows and
-    their shared exact arm all derive from — one definition, so the
-    cache key (sf_dir, k) covers the arm's full input."""
+    their exact arm both derive from — one definition."""
     emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     q = emb.filter(
         (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < 2000)
@@ -4744,42 +4710,6 @@ def _ann_band_inputs(spark: SparkSession, sf_dir: str):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     return emb, q
-
-
-def _exact_arm(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
-    from .functions.similarity import brute_force_topk
-
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, k)
-    with _EXACT_ARM_LOCK:
-        hit = _EXACT_ARM_CACHE.get(key)
-        if hit is not None:
-            return hit
-        # evict other sessions' entries: a stopped application's keys
-        # would otherwise reference localCheckpointed frames of a dead
-        # SparkContext for the process lifetime (tests cycle sessions)
-        for stale in [k_ for k_ in _EXACT_ARM_CACHE if k_[0] != app_id]:
-            del _EXACT_ARM_CACHE[stale]
-    emb, q = _ann_band_inputs(spark, sf_dir)
-    # brute force is pure per-row scoring (round-then-rank) — spread
-    # the corpus side so the |corpus|×|queries| cosine pass
-    # parallelizes (read_emb_spread's scoring rationale); q stays on
-    # the band-inputs definition the cache key covers
-    from .functions.dedup import _spread
-
-    exact = (
-        brute_force_topk(_spread(emb, "vec_id"), q, k=k)
-        .select(
-            F.col("query_id").alias("qid"),
-            F.col("vec_id").alias("__xid"),
-            F.lit(1).alias("__hit"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    # a concurrent caller with the same key may have finished first:
-    # keep its arm, so every caller verifies against one frame
-    with _EXACT_ARM_LOCK:
-        return _EXACT_ARM_CACHE.setdefault(key, exact)
 
 
 def _ann_recall_bands(
@@ -4796,22 +4726,26 @@ def _ann_recall_bands(
     precision_ann_lsh rule), emit exact n_results, rank-1-is-self,
     per-query recall@10 ≥ ``min_recall`` vs in-plan brute force, and
     the corpus-mean recall ≥ ``min_mean`` riding every row."""
+    from .functions.dedup import _spread
+    from .functions.similarity import brute_force_topk
+
     emb, q = _ann_band_inputs(spark, sf_dir)
     # pinned: the approx frame feeds the top-1 check AND the recall
-    # join (multi-consumer rule); the exact arm is the bounded-query
-    # brute-force baseline, shared across the PQ rows via the cache —
-    # and INDEPENDENT of the approx build, so on a cache miss its
-    # scoring job runs concurrently under the quantizer-training
-    # chain's sequential collects instead of after them (the
-    # lm._frozen_plan discipline)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as ex:
-        exact_fut = ex.submit(_exact_arm, spark, sf_dir, k)
-        approx = approx_fn(emb, q, k).select(
+    # join (multi-consumer rule). The exact arm is the bounded-query
+    # brute-force baseline; brute force is pure per-row scoring
+    # (round-then-rank), so the corpus side is spread to parallelize
+    # the |corpus|×|queries| cosine pass. The two arms are independent
+    # and pinned together.
+    approx, exact = pin(
+        approx_fn(emb, q, k).select(
             F.col("query_id").alias("qid"), "vec_id", "rank"
-        ).localCheckpoint(eager=True)
-        exact = exact_fut.result()
+        ),
+        brute_force_topk(_spread(emb, "vec_id"), q, k=k).select(
+            F.col("query_id").alias("qid"),
+            F.col("vec_id").alias("__xid"),
+            F.lit(1).alias("__hit"),
+        ),
+    )
     j = approx.join(
         F.broadcast(exact),
         (approx["qid"] == exact["qid"]) & (approx["vec_id"] == exact["__xid"]),
@@ -4824,7 +4758,7 @@ def _ann_recall_bands(
     )
     # the recall denominator is the SAME k the shortlists used — a
     # hardcoded 10 here would silently un-normalize the band if a
-    # future round tunes k (r10 review)
+    # later change tunes k
     mean = per.agg(
         F.avg(F.col("__n_hits") / F.lit(float(k))).alias("__mean_recall")
     )
@@ -4961,12 +4895,11 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.text import tokens as TOKENS
 
     docs = read_docs_spread(spark, sf_dir).select("doc_id", "text")
-    exact = (
+    exact = pin(  # feeds total, top-k, and probe
         docs.select(F.explode(TOKENS(F.col("text"))).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("bigint").alias("exact_count"))
-        .localCheckpoint(eager=True)  # feeds total, top-k, and probe
     )
     n_total = exact.agg(F.sum("exact_count").alias("__n"))
     top = exact.orderBy(F.col("exact_count").desc(), F.col("term")).limit(20)
@@ -5482,9 +5415,9 @@ def q_quality_classifier_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    fv = CLS.doc_feature_vectors(
+    fv = pin(CLS.doc_feature_vectors(
         labeled, num_buckets=1024, ns=(1,), label_col="label", binary=True
-    ).localCheckpoint(eager=True)
+    ))
     w = CLS.train_logreg(fv, num_buckets=1024, epochs=6, lr=0.5)
     if not all(_math.isfinite(x) for x in w):
         raise ValueError(
@@ -6620,20 +6553,20 @@ def q_classifier_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the whole screen+dedup chain on both arms — cost-neutral at
     # proof scale, a full second corpus scan at 100 TB (the
     # multi-consumer pin rule)
-    labeled = labeled.localCheckpoint(eager=True)
+    labeled = pin(labeled)
     # num_buckets=256 / epochs=4 (the bands row trains 1024/6): the
     # tuned proof price — the per-epoch cost here is plan-compile of
     # the weight-literal array, so 256 buckets roughly halves the
     # train stage; measured held-out margins stay comfortable at all
     # three SFs (min positive 0.82, max negative 0.12)
-    fv = CLS.doc_feature_vectors(
+    fv = pin(CLS.doc_feature_vectors(
         labeled,
         num_buckets=256,
         ns=(1,),
         label_col="label",
         binary=True,
         carry_cols=("lang", "n_chars"),
-    ).localCheckpoint(eager=True)
+    ))
     wts = CLS.train_logreg(
         fv.filter(F.col("id") % 3 == 0), num_buckets=256, epochs=4, lr=0.5
     )

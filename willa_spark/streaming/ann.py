@@ -63,6 +63,7 @@ from ..functions.similarity import (
     _as_double,
     _centroid_sims,
 )
+from ..pin import pin, pinned
 from .store import store_append, store_compact_every, store_read
 
 
@@ -790,13 +791,14 @@ def _vector_dedup_step(
                 .distinct()
             )
             pruned = v.join(cross_drop, v["id"] == F.col("__drop"), "left_anti")
-        pruned = pruned.persist()
-        try:
+        # released on EVERY exit — an exception path must not leak a
+        # cache entry per retry
+        with pinned() as keep:
             # eager: feeds both sides of the self-join (and the
             # admitted anti-join below) — a lazy cache would let the
             # self-join's concurrent map stages race-compute the
             # bucket projection (same rule as the near_dedup steps)
-            pruned.count()
+            pruned = keep(pruned)
             l, r = pruned.alias("l"), pruned.alias("r")
             within_pairs = (
                 l.join(
@@ -822,16 +824,11 @@ def _vector_dedup_step(
             # pin the ids-only drop set so the cached bucket frame can
             # be released before returning (no per-micro-batch cache
             # buildup)
-            drops = drops.localCheckpoint(eager=True)
+            drops = pin(drops)
             admitted = pruned.join(
                 drops, pruned["id"] == F.col("__drop"), "left_anti"
             )
             store_append(admitted, store_dir, batch_id, sort_by=key_name)
-        finally:
-            # release on EVERY exit — an exception path must not leak
-            # a cache entry per retry (r15 fix-review, same class as
-            # the near_dedup steps)
-            pruned.unpersist()
         return batch_df.join(
             drops, batch_df[id_col] == F.col("__drop"), "left_anti"
         )

@@ -46,6 +46,7 @@ from ..functions.curation import (
 )
 from ..functions.dedup import dup_clusters, keep_canonical
 from ..functions.dedup import minhash_candidate_pairs, verified_near_dups
+from ..pin import pin
 from .near_dedup import minhash_dedup_step
 from .store import store_append, store_compact_every, store_read, store_read_batch
 
@@ -148,15 +149,6 @@ def _decontaminate_fuzzy(
     )
 
 
-def _pin_local(df: DataFrame) -> DataFrame:
-    """Default multi-consumer pin: eager localCheckpoint — right for
-    batch-sized streaming micro-batches. The batch twin at corpus
-    scale passes a parquet-spill pin instead (r11 advice: an eager
-    localCheckpoint of the whole cleaned corpus is a second
-    corpus-scale executor-storage residency on the 100 TB path)."""
-    return df.localCheckpoint(eager=True)
-
-
 def _decontaminate_semantic(
     docs: DataFrame,
     raw: DataFrame,
@@ -164,7 +156,6 @@ def _decontaminate_semantic(
     min_sim: float,
     id_col: str,
     vec_col: str,
-    pin=_pin_local,
 ) -> DataFrame:
     """The SEMANTIC screen — embedding-cosine against the static eval
     embeddings (``curation.semantic_contamination_report``), catching
@@ -190,16 +181,16 @@ def _decontaminate_semantic(
     # score only the SURVIVORS: docs already dropped by the quality /
     # PII / lexical-decontamination screens can't re-enter, so paying
     # |raw|×|eval| cosine volume for them is waste — semi-joining raw
-    # to the cleaned frame's ids makes it |surviving|×|eval| (r10
-    # advice). Embeddings still ride the raw frame (the cleaned one
+    # to the cleaned frame's ids makes it |surviving|×|eval|.
+    # Embeddings still ride the raw frame (the cleaned one
     # projected down to (id, text) upstream). PIN the cleaned frame
     # first: it has TWO consumers here (the semi-join's id side and
     # the anti-join's left side) and its lineage is the whole unpinned
     # screen/decontamination chain — without the pin each consumer
-    # re-executes the screens and the saving is repaid (r11 review;
-    # the multi-consumer rule). The RESULT stays lazy: the next
+    # re-executes the screens and the saving is repaid (the
+    # multi-consumer rule). The RESULT stays lazy: the next
     # multi-consumer boundary (classifier admission, dedup, the batch
-    # twin's persist/spill) pins for itself, so a single-consumer
+    # twin's pin/spill) pins for itself, so a single-consumer
     # continuation never pays a second materialization here.
     docs = pin(docs)
     flagged = semantic_contamination_report(
@@ -225,20 +216,18 @@ def _classifier_admit(
     binary: bool,
     id_col: str,
     text_col: str,
-    pin=_pin_local,
 ) -> DataFrame:
     """The learned-quality admission screen — score the cleaned frame
     under a FROZEN trained classifier (functions/classifier.py; train
     batch-side on labeled examples, deploy the weight list) and keep
     docs at ``quality_prob ≥ min_prob``. Runs AFTER the deterministic
     screens and BEFORE dedup (junk should not pay signature costs).
-    The input frame is ALWAYS pinned — it feeds both the feature
-    build and the semi-join left side (the multi-consumer rule), and
-    when the semantic screen ran upstream its pin sat BELOW its
-    anti-join, so reusing it here would re-execute the
-    |surviving|×|eval| cosine subplan and the anti-join once per
-    consumer (r11 advice — the ``already_pinned`` short-circuit this
-    replaces was exactly that bug). Stateless per batch under static
+    The input frame is pinned — it feeds both the feature build and
+    the semi-join left side (the multi-consumer rule). When the
+    semantic screen ran upstream its pin sat BELOW its anti-join, so
+    the frame arriving here is a new, unpinned one: reusing that pin
+    would re-execute the |surviving|×|eval| cosine subplan and the
+    anti-join once per consumer. Stateless per batch under static
     weights, so batch ≡ streaming congruity holds structurally like
     the other screens."""
     if weights is None:
@@ -317,7 +306,6 @@ def _lm_admit(
     score_fn,
     max_ppl: float | None,
     id_col: str,
-    pin=_pin_local,
 ) -> DataFrame:
     """The LM-perplexity admission screen — score the cleaned frame
     under the FROZEN scorer built by ``_lm_scorer_or_none`` (train
@@ -829,13 +817,12 @@ def curation_to_shards_step(
         # twin), not vanish in the strata re-join.
         a = admitted.alias("a")
         b = batch_df.select(F.col(id_col), F.col(strata_col)).alias("b")
-        with_strata = (
+        with_strata = pin(
             a.join(
                 b,
                 F.col(f"a.{id_col}").eqNullSafe(F.col(f"b.{id_col}")),
             )
             .select("a.*", F.col(f"b.{strata_col}"))
-            .localCheckpoint(eager=True)
         )
         return pack(with_strata, batch_id)
 
@@ -881,18 +868,18 @@ def corpus_curation_batch(
     The curated frame feeds THREE consumers (candidate generation,
     verification, survivor join) and Spark does not reuse subtrees —
     without materialization the screen/redact projection would run
-    three times. Default: executor-memory persist (bench-sized
-    corpora). Pass ``spill_dir`` for the 100 TB path: the curated
-    corpus is written to storage once and every consumer scans the
-    parquet (the same discipline as ``embedding_near_dups``).
-    ``spill_dir`` also re-points the semantic/classifier screens'
+    three times. Default: an eager checkpoint (bench-sized corpora).
+    Pass ``spill_dir`` for the 100 TB path: the curated corpus is
+    written to storage once and every consumer scans the parquet (the
+    same discipline as ``embedding_near_dups``). ``spill_dir`` also
+    re-points the enabled semantic/classifier/LM screens'
     multi-consumer pins at parquet stage spills (``_stage_*``
-    subdirectories) instead of eager localCheckpoints — on the 100 TB
-    path an executor-storage checkpoint of the whole cleaned corpus
-    is a second corpus-scale memory/disk-block residency the r11
-    advice flagged; a stage parquet is written once, scanned by each
-    consumer, and lives where the curated output already lives (the
-    batch twin's pins follow the batch twin's storage discipline).
+    subdirectories): the input of each such screen is spilled here,
+    so the screen's own ``pin`` finds it pinned. On the 100 TB path an
+    executor-storage checkpoint of the whole cleaned corpus would be
+    a second corpus-scale memory/disk-block residency; a stage parquet
+    is written once, scanned by each consumer, and lives where the
+    curated output already lives.
     Layout under ``spill_dir``: the curated pre-dedup corpus lands in
     ``curated/`` (its own subdirectory, NOT the root: an overwrite of
     the root would delete the stage spills the still-lazy curated
@@ -900,23 +887,13 @@ def corpus_curation_batch(
     ``_stage_classifier_in/`` / ``_stage_lm_in/`` when the matching
     screens are enabled — the caller owns cleanup of the directory
     as a whole."""
-    if spill_dir is not None:
+    def stage(df: DataFrame, tag: str, enabled: bool) -> DataFrame:
+        if spill_dir is None or not enabled:
+            return df
+        # "_"-prefixed: Spark's scans hide _*/.* paths, so a
+        # root-level read of spill_dir never sees stage spills
+        return pin(df, spill_dir=_os.path.join(spill_dir, f"_stage_{tag}"))
 
-        def _spill_pin(tag: str):
-            def pin(df: DataFrame) -> DataFrame:
-                # "_"-prefixed: Spark's scans hide _*/.* paths, so a
-                # root-level read of spill_dir never sees stage spills
-                p = _os.path.join(spill_dir, f"_stage_{tag}")
-                df.write.mode("overwrite").parquet(p)
-                return docs.sparkSession.read.parquet(p)
-
-            return pin
-
-        sem_pin = _spill_pin("semantic_in")
-        clf_pin = _spill_pin("classifier_in")
-        lm_pin = _spill_pin("lm_in")
-    else:
-        sem_pin = clf_pin = lm_pin = _pin_local
     lm_score = _lm_scorer_or_none(
         lm_model, lm_max_ppl, lm_scorer, id_col, text_col,
         "corpus_curation_batch", discount=lm_discount,
@@ -929,21 +906,22 @@ def corpus_curation_batch(
         clean, fuzzy_eval_sets, fuzzy_n, fuzzy_min_overlap, id_col, text_col
     )
     clean = _decontaminate_semantic(
-        clean, docs, semantic_eval_emb, semantic_min_sim,
-        id_col, semantic_vec_col, pin=sem_pin,
+        stage(clean, "semantic_in", semantic_eval_emb is not None),
+        docs, semantic_eval_emb, semantic_min_sim, id_col, semantic_vec_col,
     )
     clean = _classifier_admit(
-        clean, classifier_weights, classifier_num_buckets,
+        stage(clean, "classifier_in", classifier_weights is not None),
+        classifier_weights, classifier_num_buckets,
         classifier_ns, classifier_min_prob, classifier_binary,
-        id_col, text_col, pin=clf_pin,
+        id_col, text_col,
     )
-    clean = _lm_admit(clean, lm_score, lm_max_ppl, id_col, pin=lm_pin)
-    if spill_dir is not None:
-        curated = _os.path.join(spill_dir, "curated")
-        clean.write.mode("overwrite").parquet(curated)
-        clean = docs.sparkSession.read.parquet(curated)
-    else:
-        clean = clean.persist()
+    clean = _lm_admit(
+        stage(clean, "lm_in", lm_score is not None), lm_score, lm_max_ppl, id_col
+    )
+    clean = pin(
+        clean,
+        spill_dir=None if spill_dir is None else _os.path.join(spill_dir, "curated"),
+    )
     cands = minhash_candidate_pairs(
         clean,
         num_hashes=num_hashes,

@@ -79,6 +79,7 @@ from ..functions.dedup import (
 )
 
 
+from ..pin import pin, pinned
 from .store import store_append, store_compact_every, store_prune, store_read
 
 _GEOMETRY = "_geometry.json"
@@ -189,12 +190,10 @@ def _drop_within_batch(
     # caller's score expression would evaluate three times per batch.
     # The election itself is dedup.best_member_drops — the ONE kernel
     # shared with batch keep_best, so the tie-break/NULL policy the
-    # congruity test pins is structural, not copy-maintained (r15
-    # review).
-    member = (
+    # congruity test pins is structural, not copy-maintained.
+    member = pin(
         clusters.join(scores, "id")
         .select("cluster_id", F.col("id").alias("__m_id"), "__s")
-        .localCheckpoint(eager=True)
     )
     return best_member_drops(member).select(F.col("__drop_id").alias("__drop"))
 
@@ -354,30 +353,27 @@ def _hamming_dedup_step(
         store_compact_every(spark, [(store_dir, None)], batch_id, compact_every)
         scores = _batch_scores(batch_df, id_col, score)
         sh = sig_builder(batch_df)
-        # EAGER pin (count populates the cache in one job): blocks
-        # embeds sig_builder's plan — for phash/audio that is the
-        # mapInPandas decode, the dominant per-row cost — and its
-        # first consumer below is a self-join whose two map stages
-        # (plus the cross probe) would otherwise race-compute the
-        # builder 2-4x before a lazy cache fills (r15 review; same
-        # reason dedup.hamming_block_pairs pins eagerly)
-        blocks = simhash_block_frame(sh, num_blocks).persist()
-        pinned = [blocks]
         # release on EVERY exit: an exception path that skipped the
         # unpersists would leak cache entries on each retry of a
-        # long-running stream (r15 review)
-        try:
+        # long-running stream
+        with pinned() as keep:
             hamming = F.bit_count(
                 F.col("simhash").bitwiseXOR(F.col("__st_simhash"))
             )
 
-            pruned = blocks
             cross_drop = None
-            # store_read's fail-loud guards run BEFORE the eager count:
+            # store_read's fail-loud guards run BEFORE the eager pin:
             # a guard-failing retry must not pay the decode cost just
-            # to raise (r15 fix-review)
+            # to raise
             store = store_read(spark, store_dir, before_batch=batch_id)
-            blocks.count()
+            # EAGER pin (count populates the cache in one job): blocks
+            # embeds sig_builder's plan — for phash/audio that is the
+            # mapInPandas decode, the dominant per-row cost — and its
+            # first consumer below is a self-join whose two map stages
+            # (plus the cross probe) would otherwise race-compute the
+            # builder 2-4x before a lazy cache fills (same reason
+            # dedup.hamming_block_pairs pins eagerly)
+            blocks = pruned = keep(simhash_block_frame(sh, num_blocks))
             if store is not None:
                 st_blocks = simhash_block_frame(
                     store.select(F.col("id"), F.col("simhash")), num_blocks
@@ -393,11 +389,11 @@ def _hamming_dedup_step(
                     .select(F.col("id").alias("__drop"))
                     .distinct()
                 )
-                pruned = blocks.join(
-                    cross_drop, blocks["id"] == F.col("__drop"), "left_anti"
-                ).persist()
-                pinned.append(pruned)
-                pruned.count()  # eager: feeds both sides of the self-join
+                pruned = keep(  # feeds both sides of the self-join
+                    blocks.join(
+                        cross_drop, blocks["id"] == F.col("__drop"), "left_anti"
+                    )
+                )
 
             l, r = pruned.alias("l"), pruned.alias("r")
             within_pairs = (
@@ -423,7 +419,7 @@ def _hamming_dedup_step(
             )
             # pin the (tiny, ids-only) drop set so every cached frame
             # can be released before returning
-            drops = drops.localCheckpoint(eager=True)
+            drops = pin(drops)
             # derive the admitted signatures from the PERSISTED blocks
             # frame (one (id, simhash) row per id after dedup), not
             # from `sh`: sh re-evaluates sig_builder, and for
@@ -436,9 +432,6 @@ def _hamming_dedup_step(
                 .join(drops, F.col("id") == F.col("__drop"), "left_anti")
             )
             store_append(admitted_sh, store_dir, batch_id)
-        finally:
-            for f in pinned:
-                f.unpersist()
         return batch_df.join(
             drops, batch_df[id_col] == F.col("__drop"), "left_anti"
         )
@@ -504,7 +497,7 @@ def minhash_dedup_step(
         return matches / F.lit(float(num_hashes))
 
     # the ONE derivation of the three halves' paths (step + body both
-    # use them; two copies could drift — r15 fix-review)
+    # use them; two copies could drift)
     sig_store_dir = os.path.join(store_dir, "sigs")
     band_store_dir = os.path.join(store_dir, "bands")
     sh_store_dir = os.path.join(store_dir, "shingles")
@@ -514,7 +507,7 @@ def minhash_dedup_step(
         # geometry is part of the store's identity: stored band hashes
         # are computed over (num_hashes/num_bands) component groups
         # and signatures over shingle_n-shingles — resuming with other
-        # values silently matches nothing (r15 review). The verify
+        # values silently matches nothing. The verify
         # MODE has its own structural guard below.
         _check_store_geometry(
             store_dir,
@@ -540,13 +533,12 @@ def minhash_dedup_step(
             id_col,
             num_hashes,
             shingle_n,
-        ).persist()
-        pinned = [sig]
+        )
         sh_frame = None
         if exact_verify:
             # the exact-verify operand: each doc's distinct shingle
             # 64-bit hashes (the signature builder's own base hash), a
-            # pure Column expr — no extra shuffle; persisted because it
+            # pure Column expr — no extra shuffle; pinned because it
             # feeds up to three plans (cross verify, within verify,
             # store append)
             sh_frame = batch_df.select(
@@ -557,22 +549,16 @@ def minhash_dedup_step(
                         lambda s: F.xxhash64(s),
                     )
                 ).alias("__sh"),
-            ).persist()
-            pinned.append(sh_frame)
-        try:
-            return _minhash_step_body(
-                spark, batch_df, batch_id, sig, sh_frame, scores, pinned
             )
-        finally:
-            # release on EVERY exit: the store-contract guards below
-            # raise AFTER the persists, and an exception path that
-            # skipped the unpersists would leak cache entries on each
-            # retry of a long-running stream (r15 review)
-            for f in pinned:
-                f.unpersist()
+        # every frame the body pins is released on EVERY exit, or each
+        # retry of a long-running stream would leak cache entries
+        with pinned() as keep:
+            return _minhash_step_body(
+                spark, batch_df, batch_id, sig, sh_frame, scores, keep
+            )
 
     def _minhash_step_body(
-        spark, batch_df, batch_id, sig, sh_frame, scores, pinned
+        spark, batch_df, batch_id, sig, sh_frame, scores, keep
     ):
         cross_drop = None
         st_bands = store_read(spark, band_store_dir, before_batch=batch_id)
@@ -618,14 +604,15 @@ def minhash_dedup_step(
                 f"but the other is missing — prune both halves together "
                 f"(minhash_store_prune)"
             )
-        # eager AFTER the cheap fail-loud guards above (a guard-failing
-        # retry must not pay the builder cost just to raise — r15
-        # fix-review): sig (and the shingle operand) feed multiple
-        # join arms below, so populate the cache in one job instead of
+        # pinned AFTER the cheap fail-loud guards above (a
+        # guard-failing retry must not pay the builder cost just to
+        # raise): sig (and the shingle operand) feed multiple join
+        # arms below, so populate the cache in one job instead of
         # letting concurrent map stages race-compute the builders
-        sig.count()
-        if sh_frame is not None:
-            sh_frame.count()
+        if sh_frame is None:
+            sig = keep(sig)
+        else:
+            sig, sh_frame = keep(sig, sh_frame)
         if st_bands is not None:
             bands = banded_signature_frame(sig, num_hashes, num_bands)
             st_sigs = st_sigs_raw.select(F.col("id").alias("__st_id"), *hcols)
@@ -650,7 +637,7 @@ def minhash_dedup_step(
                         # round(…, 6) like the batch verify
                         # (dedup.verified_near_dups): without it a pair
                         # within 5e-7 of the threshold could cross it
-                        # on one engine only (r15 review)
+                        # on one engine only
                         F.round(
                             ngram_jaccard(F.col("__sh"), F.col("__st_sh")), 6
                         )
@@ -667,11 +654,10 @@ def minhash_dedup_step(
                     .select(F.col("id").alias("__drop"))
                     .distinct()
                 )
-            sig_left = sig.join(
-                cross_drop, sig["id"] == F.col("__drop"), "left_anti"
-            ).persist()
-            pinned.append(sig_left)
-            sig_left.count()  # eager: feeds both sides of the self-join
+            # feeds both sides of the self-join
+            sig_left = keep(
+                sig.join(cross_drop, sig["id"] == F.col("__drop"), "left_anti")
+            )
         else:
             sig_left = sig
         bands_left = banded_signature_frame(sig_left, num_hashes, num_bands)
@@ -723,11 +709,10 @@ def minhash_dedup_step(
         # pin the (tiny, ids-only) drop set eagerly so the cached
         # signature frames can be released before returning — a
         # long-running stream must not accumulate cache entries
-        drops = drops.localCheckpoint(eager=True)
-        admitted_sigs = sig_left.join(
-            drops, sig_left["id"] == F.col("__drop"), "left_anti"
-        ).persist()
-        pinned.append(admitted_sigs)
+        drops = pin(drops)
+        admitted_sigs = keep(
+            sig_left.join(drops, sig_left["id"] == F.col("__drop"), "left_anti")
+        )
         store_append(admitted_sigs, sig_store_dir, batch_id)
         store_append(
             banded_signature_frame(admitted_sigs, num_hashes, num_bands),
@@ -918,20 +903,19 @@ def _containment_dedup_step(
             _check_store_geometry(store_dir, geometry)
         scores = _batch_scores(batch_df, id_col, score)
         store_compact_every(spark, [(store_dir, "fp")], batch_id, compact_every)
-        # EAGER pin: fpb embeds the builder's plan (for audio/video the
-        # mapInPandas decode — the dominant cost) and feeds the cross
-        # probe plus both sides of the pair-count self-join; a lazy
-        # cache would let those stages race-compute the builder (r15
-        # review)
-        fpb = fp_builder(batch_df).persist()
-        pinned = [fpb]
-        try:
-            pruned = fpb
+        # released on EVERY exit — exception paths must not leak cache
+        # entries across retries
+        with pinned() as keep:
             cross_drop = None
             # guards (store_read's pending-manifest check) before the
-            # eager count — failing retries stay builder-cost-free
+            # eager pin — failing retries stay builder-cost-free
             store = store_read(spark, store_dir, before_batch=batch_id)
-            fpb.count()
+            # EAGER pin: fpb embeds the builder's plan (for audio/video
+            # the mapInPandas decode — the dominant cost) and feeds the
+            # cross probe plus both sides of the pair-count self-join;
+            # a lazy cache would let those stages race-compute the
+            # builder
+            fpb = pruned = keep(fp_builder(batch_df))
             if store is not None:
                 cross_drop = (
                     fpb.join(
@@ -943,11 +927,9 @@ def _containment_dedup_step(
                     .select(F.col("id").alias("__drop"))
                     .distinct()
                 )
-                pruned = fpb.join(
-                    cross_drop, fpb["id"] == F.col("__drop"), "left_anti"
-                ).persist()
-                pinned.append(pruned)
-                pruned.count()  # eager: both self-join sides
+                pruned = keep(  # both self-join sides
+                    fpb.join(cross_drop, fpb["id"] == F.col("__drop"), "left_anti")
+                )
 
             within_pairs = (
                 winnow_pair_counts(pruned)
@@ -962,16 +944,11 @@ def _containment_dedup_step(
             # pin the ids-only drop set eagerly so cached fingerprint
             # frames release before returning (no per-batch cache
             # buildup)
-            drops = drops.localCheckpoint(eager=True)
+            drops = pin(drops)
             admitted_fp = pruned.join(
                 drops, pruned["id"] == F.col("__drop"), "left_anti"
             )
             store_append(admitted_fp, store_dir, batch_id, sort_by="fp")
-        finally:
-            # release on EVERY exit — exception paths must not leak
-            # cache entries across retries (r15 review)
-            for f in pinned:
-                f.unpersist()
         # drop-based return: fingerprint-less (short) docs pass through
         return batch_df.join(
             drops, batch_df[id_col] == F.col("__drop"), "left_anti"
@@ -1018,18 +995,20 @@ def dup_ngram_mask_step(
         spark = batch_df.sparkSession
         # the stored __h counts are xxhash64 over n-GRAMS: resuming
         # with a different n matches no stored hash and silently
-        # ignores every prior-batch count (r15 fix-review — the same
-        # failure class the dedup families' geometry guard closes)
+        # ignores every prior-batch count (the same failure class the
+        # dedup families' geometry guard closes)
         _check_store_geometry(store_dir, {"family": "dup_ngram", "n": n})
         store_compact_every(
             spark, [(store_dir, "__h")], batch_id, compact_every
         )
-        grams = gram_positions(batch_df, n, id_col, text_col).persist()
-        try:
+        # released on EVERY exit: exception paths must not leak one
+        # cached gram frame per retry
+        with pinned() as keep:
             # guards (store_read's pending-manifest check) before the
-            # eager count — failing retries stay builder-cost-free
+            # eager pin — failing retries stay builder-cost-free
             st = store_read(spark, store_dir, before_batch=batch_id)
-            grams.count()  # eager: feeds counts, hits, the store append
+            # feeds counts, hits, the store append
+            grams = keep(gram_positions(batch_df, n, id_col, text_col))
             batch_counts = grams.groupBy("__h").agg(
                 F.count(F.lit(1)).alias("__c")
             )
@@ -1055,12 +1034,8 @@ def dup_ngram_mask_step(
             # pin the (small) span set eagerly so the gram cache can be
             # released before returning — long streams must not
             # accumulate
-            spans = spans.localCheckpoint(eager=True)
+            spans = pin(spans)
             store_append(batch_counts, store_dir, batch_id, sort_by="__h")
-        finally:
-            # release on EVERY exit (r15 fix-review: exception paths
-            # leaked one cached gram frame per retry)
-            grams.unpersist()
         return mask_dup_spans(
             batch_df, spans, id_col=id_col, text_col=text_col
         )

@@ -44,6 +44,7 @@ from ..functions.selection import (
     _model_from_features,
     cross_entropy_score,
 )
+from ..pin import pin
 from .store import (
     store_append,
     store_compact_every,
@@ -98,9 +99,9 @@ def novelty_score_step(
                 "(dropDuplicates) or the doubled gram counts persist "
                 "in the prior model across replays"
             )
-        feats = _gram_features(
+        feats = pin(_gram_features(
             batch_df, num_buckets, ns, id_col, text_col
-        ).localCheckpoint(eager=True)
+        ))
         # cheap local job on the pinned frame — an all-empty batch
         # appends nothing, so "prior partitions exist" (checked via
         # the driver-side listing, no cluster work) means "the prior
@@ -121,7 +122,7 @@ def novelty_score_step(
             # the store's file listing, which a later batch's
             # compaction may rewrite — the returned frame must not
             # depend on store files staying put
-            scored = (
+            scored = pin(
                 cross_entropy_score(
                     batch_df,
                     model,
@@ -132,7 +133,6 @@ def novelty_score_step(
                     _feats=feats,
                 )
                 .withColumnRenamed("cross_entropy", "novelty_ce")
-                .localCheckpoint(eager=True)
             )
         if has_feats:
             store_append(

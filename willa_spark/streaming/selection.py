@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.selection import importance_log_weights
+from ..pin import pin
 
 
 def dsir_score_step(
@@ -60,14 +61,7 @@ def dsir_score_step(
     doubled-weight row attached to both copies — corrupted admission
     either way. Dedup upstream (``dropDuplicates([id_col])``) before
     scoring replayed streams."""
-    # the two pins are independent of each other — run them as
-    # concurrent jobs (the lm._frozen_plan / q_dsir_weights discipline)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _ex:
-        _tgt = _ex.submit(lambda: target_model.localCheckpoint(eager=True))
-        _raw = _ex.submit(lambda: raw_model.localCheckpoint(eager=True))
-        target_model, raw_model = _tgt.result(), _raw.result()
+    target_model, raw_model = pin(target_model, raw_model)
 
     def step(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # the NULL guard must ride the id PROJECTION, not a post-join
@@ -145,7 +139,7 @@ def domain_relevance_step(
 
     from ..functions.selection import score_against_centroid
 
-    centroid = centroid.localCheckpoint(eager=True)
+    centroid = pin(centroid)
 
     def step(batch_df: DataFrame, batch_id: int) -> DataFrame:
         out = score_against_centroid(
@@ -228,13 +222,12 @@ def kl_drift_step(
         # ONE checkpoint, on the (feature, cnt) frame both consumers
         # read — feats itself has a single consumer, so checkpointing
         # it too would run an extra per-batch materialization job for
-        # no reuse (r10 review; contrast novelty_score_step, where
-        # feats feeds scoring AND append)
-        bc = (
+        # no reuse (contrast novelty_score_step, where feats feeds
+        # scoring AND append)
+        bc = pin(
             _gram_features(batch_df, None, ns, id_col, text_col)
             .groupBy("feature")
             .agg(F.sum("cnt").alias("cnt"))
-            .localCheckpoint(eager=True)
         )
         has_feats = bool(bc.limit(1).count())
         has_prior = any(b < batch_id for b in store_partitions(counts_dir))
@@ -269,14 +262,13 @@ def kl_drift_step(
             )
             # pinned BEFORE the count append (the novelty rule: the
             # returned frame must not depend on store files moving)
-            out = (
+            out = pin(
                 j.agg(
                     F.sum(F.coalesce(F.col("__cg"), F.lit(0)))
                     .cast("bigint")
                     .alias("n_grams"),
                     F.round(F.sum(p * F.log(p / q)), 6).alias("kl_to_prior"),
                 )
-                .localCheckpoint(eager=True)
             )
         if has_feats:
             store_append(bc, counts_dir, batch_id, sort_by="feature")
@@ -596,9 +588,9 @@ def _mixture_monitor_step(
             )
         # ONE pin on the batch's additive stats — both consumers
         # (the cumulative union and the store append) read it
-        stats = _group_lp_stats(
+        stats = pin(_group_lp_stats(
             batch_df, plan, group_col, id_col, text_col, do_broadcast
-        ).localCheckpoint(eager=True)
+        ))
         has_rows = bool(stats.limit(1).count())
         prior = store_read(spark, stats_dir, before_batch=batch_id)
         if prior is None and not has_rows:
