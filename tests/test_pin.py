@@ -57,6 +57,13 @@ def test_repin_starts_no_job(spark):
     assert _jobs_started(spark, lambda: pin(pinned_a.filter("id > 3"))) >= 1
 
 
+def test_concurrent_pins_carry_the_callers_job_group(spark):
+    """The jobs several frames pin on worker threads belong to the
+    caller's job group, like the caller's own jobs."""
+    a, b = _frames(spark)
+    assert _jobs_started(spark, lambda: pin(a, b)) >= 2
+
+
 def test_spill_dir_scans_parquet_at_that_path(spark, tmp_path):
     a, _ = _frames(spark)
     path = str(tmp_path / "spill")

@@ -116,3 +116,15 @@ def test_fast_gate_skip_matches_from_any_rootdir():
     for nodeid in (listed, f"{path.removeprefix('tests/')}::{name}"):
         item = SimpleNamespace(path=REPO_ROOT / path, nodeid=nodeid)
         assert repo_nodeid(item) == listed
+
+
+def test_default_shard_count_fits_the_host():
+    """tools/run_tests.sh's default: one 8 GB local[4] shard per 4 cores
+    and per ~10 GB available, 1 to 4 shards."""
+    from tools.shard_plan import shard_count
+
+    gb = 1 << 30
+    assert shard_count(4, 15 * gb) == 1  # 4 cores, ~15 GB available
+    assert shard_count(32, 256 * gb) == 4
+    assert shard_count(32, 25 * gb) == 2
+    assert shard_count(2, 64 * gb) == 1

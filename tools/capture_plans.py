@@ -10,8 +10,8 @@ object hashes (``@7a50b5f7``) and the ``localCheckpoint at <call site>``
 text of a pinned frame. Two captures of the same plan are then
 byte-identical and ``diff -r <out_a> <out_b>`` is the plan check between
 two checkouts.
-Uses the same session configuration as bench.py (tools/bench_session.py)
-so the captured plans are the benched plans.
+Uses bench.py's session configuration (``spark_session``) so the
+captured plans are the benched plans.
 """
 
 from __future__ import annotations
@@ -48,9 +48,9 @@ def main() -> int:
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
     os.makedirs(out_dir, exist_ok=True)
-    from tools.bench_session import make_bench_session
+    from bench import spark_session
 
-    spark, _ = make_bench_session("willa_spark-capture-plans")
+    spark, _ = spark_session("willa_spark-capture-plans")
     from willa_spark.queries import QUERIES
 
     if not names:

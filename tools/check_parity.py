@@ -1,12 +1,7 @@
 """Local pre-flight for the driver's t2 gate: run every queries() entry
 and compare against oracle_sql() via DuckDB on the same parquet tables.
 
-Usage: python tools/check_parity.py [--candidates] [sf_dir] [query ...]
-
-``--candidates`` checks the UNREGISTERED registration candidates
-(queries.py's parked q_*/`*_ORACLE` pairs awaiting rotation slots)
-instead of the driver gate — run it before registering one in a
-future round.
+Usage: python tools/check_parity.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -85,33 +80,8 @@ def norm_rows(cols, types, rows):
     return [cols[i] for i in idx], [norm_type(types[i]) for i in idx], out
 
 
-# The parked registration candidates: (name, query fn attr, oracle
-# constant attr) in willa_spark.queries — kept HERE in one place so the
-# pre-flight and the policy block cannot drift silently (the list is
-# asserted against queries.py at run time: a missing attr fails loud).
-CANDIDATES: list[tuple[str, str, str]] = [
-    # (the r14 queue — domain_mixture_trajectory / ccnet_curation —
-    # REGISTERED r15 and pre-flighted through the main gate now)
-    # the r16 queue (parked r15, the one-candidate / ≤2 s discipline,
-    # r14 verdict #5): the learned-quality-filter admission — the
-    # GPT-3-style classifier twin of ccnet_curation (gopher → exact
-    # dedup → train on the labeled seed third → score the crawl
-    # complement → admit p ≥ 0.5, planted-set oracle + in-plan
-    # ambiguity guard)
-    (
-        "classifier_curation",
-        "q_classifier_curation",
-        "CLASSIFIER_CURATION_ORACLE",
-    ),
-]
-
-
 def main():
     args = sys.argv[1:]
-    use_candidates = False
-    if args and args[0] == "--candidates":
-        use_candidates = True
-        args = args[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
     spark = (
@@ -128,14 +98,8 @@ def main():
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
-    if use_candidates:
-        from willa_spark import queries as qmod
-
-        qs = {n: getattr(qmod, f) for n, f, _ in CANDIDATES}
-        oracles = {n: getattr(qmod, o) for n, _, o in CANDIDATES}
-    else:
-        qs = entrymod.queries()
-        oracles = entrymod.oracle_sql()
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
     n_pass = n_fail = n_rows_only = 0
     for name, fn in qs.items():
         if only and name not in only:

@@ -4,8 +4,10 @@
 #
 # pytest-xdist is not installable in this environment, so this shards
 # test FILES across N independent pytest processes, each with its own
-# local[4] Spark session (the conftest fixture is session-scoped per
-# process; 32 host cores comfortably fit 4 such sessions).
+# local[4] Spark session and 8 GB heap (the conftest fixture is
+# session-scoped per process). The default N comes from the host
+# (tools/shard_plan.py::shard_count): one shard per 4 cores and per
+# ~10 GB available, 1 to 4, so a small host does not OOM-kill a JVM.
 #
 # Sharding is DURATION-AWARE: tools/shard_plan.py greedy-bin-packs the
 # files (longest first into the lightest shard) using the wall times in
@@ -15,10 +17,10 @@
 # tracks the suite as it grows. (The previous round-robin-by-filename
 # plan left shard walls 2x apart: 337 s vs 171 s.)
 #
-# Usage: tools/run_tests.sh [N]        (default 4 shards)
+# Usage: tools/run_tests.sh [N]        (default: derived from the host)
 # Logs:  /tmp/willa_test_logs/shard<i>.log
 set -u
-N=${1:-4}
+N=${1:-0}
 cd "$(dirname "$0")/.."
 # the sharded runner IS the full suite (the builder's close); a bare
 # `pytest tests/` runs the FAST GATE (tests/conftest.py skips the

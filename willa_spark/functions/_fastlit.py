@@ -8,8 +8,8 @@ Measured at steady state on this host: **1.57 s per 1025-double
 literal** — and the training loops (logreg epochs, Lloyd rounds, ADC
 lookup tables) rebuild these literals every iteration, so literal
 construction dominated those queries' wall time (guide §7.3's
-"gigantic expression trees built in loops" class; profiled r15:
-70-80 % of the PQ/classifier rows was driver gaps, not tasks).
+"gigantic expression trees built in loops" class; profiled: 70-80 %
+of the PQ/classifier rows was driver gaps, not tasks).
 
 Here the same values are rendered once into ONE ``F.expr`` string —
 a single py4j call; the JVM parser builds the identical

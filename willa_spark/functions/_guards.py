@@ -1,5 +1,5 @@
 """Shared argument guards for the functions package — one kernel per
-guard so call sites cannot drift (r15 review discipline)."""
+guard so call sites cannot drift."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ def check_cols_tuple(name: str, value) -> None:
     """Reject a bare string for a columns-sequence parameter: it would
     silently iterate character-by-character (``keep_cols="lang"`` →
     ``F.col('l'), F.col('a'), ...``) — the near-certain call-site typo
-    for ``("lang",)`` (r15 review). Shared by pii_redact's
+    for ``("lang",)``. Shared by pii_redact's
     ``keep_cols`` and the classifier/lm ``carry_cols`` hooks."""
     if isinstance(value, str):
         raise TypeError(

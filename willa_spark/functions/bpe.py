@@ -112,7 +112,7 @@ def _merge_batches(
     """CONTIGUOUS batches of pairwise symbol-disjoint merges — the
     unit ``segment_words`` applies per checkpointed pass, so encoding
     a production-size merge list costs O(|batches|) Spark jobs instead
-    of O(|merges|) (r9 advice: ~32k sequential jobs per micro-batch).
+    of O(|merges|) (~32k sequential jobs per micro-batch).
 
     Batching is provably semantics-preserving for DISJOINT merges
     (no symbol of one — a, b, OR the output a+b — appears in
@@ -211,7 +211,7 @@ def bpe_train(
     words = word_counts(docs, text_col).select(
         _initial_symbols(F.col("word")).alias("sym"), "count"
     )
-    # LAZY checkpoints throughout the round loop (r15): each round's
+    # LAZY checkpoints throughout the round loop: each round's
     # argmax collect materializes the pending checkpoint as part of
     # its own job, so a round costs ONE Spark job instead of two
     # (collect + eager-checkpoint). Identical computation and blocks —
@@ -256,7 +256,7 @@ def segment_words(words: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     production-size merge list's long disjoint tail folds ~32 merges
     per pass. This is the vocabulary-sized half of encoding — corpus
     volume never enters here."""
-    # lazy checkpoints, as in bpe_train's round loop (r15): the
+    # lazy checkpoints, as in bpe_train's round loop: the
     # caller's first action (usually _vocab_hint's count probe)
     # materializes the whole batch chain in one job instead of one
     # job per batch, with the same blocks cached afterwards
@@ -278,7 +278,7 @@ def segment_words(words: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
 # runtime if actual sizes allow). Web-scale corpora DO blow past this
 # (URLs, typos, code identifiers push distinct words to 1e8+), and a
 # forced broadcast there would OOM every executor — that is exactly
-# when the shuffle-join fallback is the right call (r9 verdict #3).
+# when the shuffle-join fallback is the right call.
 BROADCAST_VOCAB_MAX_WORDS = 1_000_000
 
 
@@ -288,7 +288,7 @@ def _vocab_hint(seg: DataFrame, broadcast_vocab: bool | None) -> DataFrame:
     localCheckpointed) word table — one cheap job over cached blocks —
     and broadcast iff it is under ``BROADCAST_VOCAB_MAX_WORDS``.
 
-    DELIBERATE EAGERNESS (r10 advice): auto mode runs that count
+    DELIBERATE EAGERNESS: auto mode runs that count
     DURING plan construction — one extra Spark job per
     ``bpe_encode_docs``/``bpe_token_counts`` call, re-paid on each
     invocation because every call re-segments its own vocab frame

@@ -416,7 +416,7 @@ def strip_boilerplate(text: Column) -> Column:
     screens upstream/downstream own dropping it — this operator only
     edits; an edit silently deleting the doc row would break
     id-keyed joins). NULL text fails LOUD in-plan (the
-    transition_pairs / roc_auc convention, r12 advice: split(NULL)
+    transition_pairs / roc_auc convention: split(NULL)
     is NULL, so the struct would come back NULL and the doc would
     silently fall out at the downstream doc screens — exactly the
     silent delete this operator's contract forbids)."""

@@ -125,7 +125,7 @@ def _checked_gram_width(eval_frame: DataFrame, n: int, what: str) -> DataFrame:
     explodes corpus-side can NEVER join (a 3-gram string never equals
     a 4-gram string), so the screen silently reports zero
     contamination — the exact silent-coverage-gap class this module
-    raises loudly for elsewhere (r15 review). Grams are
+    raises loudly for elsewhere. Grams are
     single-space-joined token runs (``shingles``), so token count is
     structural; the guard rides the broadcast build's scan of the
     (tiny) eval frame and fires even when the join has no matches."""
@@ -220,11 +220,11 @@ def _plant_id_guard(docs: DataFrame, id_col: str, id_offset: int, what: str) -> 
     plan (raise_error on violation — a corpus whose ids reach the
     offset would silently merge contamination stats for unrelated
     docs; a NEGATIVE id can do the same from below, e.g.
-    -999_876 + 1_000_000 collides with real doc 124 — r15 review)."""
+    -999_876 + 1_000_000 collides with real doc 124)."""
     return F.when(
         # isNull FIRST: without it a NULL id makes the whole predicate
         # NULL and when() falls through to otherwise — the NULL-id row
-        # silently bypassing the guard (r15 fix-review), against the
+        # silently bypassing the guard, against the
         # module's NULL-id-fails-loud discipline
         F.col(id_col).isNull()
         | (F.col(id_col) >= id_offset)
@@ -294,7 +294,7 @@ def eval_ngram_sets(
     NULL/blank text) yields ZERO n-grams — no row, no join hit, so it
     would silently receive NO fuzzy-decontamination protection while
     the caller believes the whole benchmark is screened. That is a
-    silent coverage gap (r9 advice), so it fails LOUD in-plan; screen
+    silent coverage gap, so it fails LOUD in-plan; screen
     sub-``n`` items separately with a smaller ``n`` or the exact
     whole-item screen (``eval_ngrams``/``contamination_report``). A
     whole-text fallback gram would NOT protect them — the corpus side
@@ -318,12 +318,11 @@ def eval_ngram_sets(
         F.explode(guarded).alias("gram"),
     ).distinct()
     # distinct() ABOVE the explode output, not per-row: an eval_id
-    # appearing in two rows previously double-counted its grams in
+    # appearing in two rows would otherwise double-count its grams in
     # n_grams while collect_set capped the numerator — every overlap
     # fraction halved and genuinely contaminated docs slipped the
-    # threshold silently (r15 review). The window count replaces the
-    # former g⋈groupBy(g) self-join, which exploded every eval item
-    # twice (same rows, one pass).
+    # threshold silently. The window count needs no g⋈groupBy(g)
+    # self-join, which would explode every eval item twice.
     return g.withColumn(
         "n_grams", F.count(F.lit(1)).over(Window.partitionBy("eval_id"))
     )
@@ -423,7 +422,7 @@ def line_dedup_stats(
     (birthday) and would only mis-drop one line.
     """
     t = F.col(text_col)
-    # NULL-id guard like the mixing ops (r15 review): a NULL-id row's
+    # NULL-id guard like the mixing ops: a NULL-id row's
     # struct(NULL, pos) would WIN the min() owner election below, the
     # keep test would evaluate NULL for every occurrence of that line,
     # and the line would count as kept NOWHERE — silently dropped
@@ -508,8 +507,7 @@ def hash_uniform(id_col: Column, salt: int = 0) -> Column:
 
     COMPATIBILITY: the salted values are part of any MATERIALIZED
     artifact's contract (a persisted train/val/test split, a repeated
-    corpus). The salt mechanism was finalized in r7 (xxhash64); an
-    artifact derived under a different salted-hash definition is not
+    corpus). The salt mechanism is xxhash64; an artifact derived under a different salted-hash definition is not
     comparable row-by-row and must be re-derived, exactly like an IVF
     store after retraining. salt=0 values have never changed."""
     if salt == 0:
@@ -526,7 +524,7 @@ def _knuth_mod32(id_col: Column) -> Column:
     ~3.47e9 — real doc ids at the advertised scale — where it throws
     under Spark 4's default ANSI mode, or wraps NEGATIVE without it,
     making every sampling gate admit the doc at any rate and
-    ``shard_of`` emit negative shard ids (r15 review). Split the
+    ``shard_of`` emit negative shard ids. Split the
     2³²-reduced id into 16-bit halves so every intermediate stays
     under 2⁴⁸: (x·K) mod 2³² = ((x_hi·K mod 2³²)·2¹⁶ + x_lo·K) mod
     2³². Values are IDENTICAL to the direct expression wherever it
@@ -558,8 +556,8 @@ def stratified_sample(
     Plan: the rates map is a literal broadcast join (or CASE) on top of
     a single scan — map-only, zero shuffle.
 
-    NULL ids fail loud in-plan (r7, aligning with the other two mixing
-    gates): under the salt-0 multiplicative hash a NULL id propagates
+    NULL ids fail loud in-plan (like the other two mixing gates):
+    under the salt-0 multiplicative hash a NULL id propagates
     to a NULL comparison and the filter would silently drop the doc.
     """
     bad = {s: r for s, r in rates.items() if not 0.0 <= r <= 1.0}
@@ -583,7 +581,7 @@ def shard_of(id_col: Column, n_shards: int) -> Column:
     and input partitioning (unlike round-robin repartition). The
     overflow-safe kernel keeps the contract for negative and >2³¹ ids
     (the naive product went negative — shard=-K directories downstream
-    readers never enumerate; r15 review)."""
+    readers never enumerate)."""
     return (_knuth_mod32(id_col) % F.lit(n_shards)).cast("int")
 
 
@@ -679,16 +677,15 @@ def packed_slice_rows(
     extra pass): NULL ids (an id-less doc can't be joined to its
     slices; silently dropping it would leave holes in written
     sequences) and DUPLICATE ids (the slice join would fan out,
-    duplicating slice rows and corrupting shard token streams — the
-    asymmetric silent half of the NULL check until r6).
+    duplicating slice rows and corrupting shard token streams).
 
     Tokenization is ONCE PER DOC: ``packed`` joins back to the text
     on the id (text crosses the wire once per doc), the token array
     is computed in a projection BEFORE the slice explode, and each
     slice row reads its span out of that array — a doc straddling k
     sequences costs O(doc_tokens + slice tokens), not k
-    re-tokenizations (the r5 writer evaluated ``_tokens(text)`` per
-    manifest row: O(doc_tokens × k) CPU on long docs). The dup-id
+    re-tokenizations (evaluating ``_tokens(text)`` per manifest row
+    would cost O(doc_tokens × k) CPU on long docs). The dup-id
     window runs on the id-hashed side the join needs anyway, so the
     exchange is reused."""
     if seqs_per_shard <= 0:
@@ -712,7 +709,7 @@ def packed_slice_rows(
     # first evaluates its own raise.
     def checked_id(frame: DataFrame) -> F.Column:
         # the module-wide guard with this op's remedy text (one
-        # kernel, not a drifting copy — r15 review)
+        # kernel, not a drifting copy)
         return _checked_not_null_id(
             frame,
             id_col,
@@ -925,8 +922,8 @@ def token_budget_cap(
 def _dup_tie_guard(
     order, tie_cols: list[Column], id_col: str, op: str, value: Column
 ) -> Column:
-    """Determinism guard for the greedy window forms (r15 review, all
-    FOUR budget/packing twins): two rows equal on every ``tie_cols``
+    """Determinism guard for the greedy window forms (all FOUR
+    budget/packing twins): two rows equal on every ``tie_cols``
     under ``order`` are interchangeable in the sort, so the running
     sum would admit a DIFFERENT physical row run-to-run at the cut
     boundary. Such rows are ADJACENT in ``order`` by construction
@@ -1100,8 +1097,8 @@ def token_budget_cap_scaled(
         quality_score(t).alias("__q"),
         F.floor(F.col(id_col) / substratum_width).cast("bigint").alias("__sub"),
     )
-    # the plain twin's determinism guard, scaled form (r15 fix-review
-    # — the 'identical output' contract includes the raise): equal
+    # the plain twin's determinism guard, scaled form (the 'identical
+    # output' contract includes the raise): equal
     # (stratum, __q, id) rows share a piece, so the within-piece id
     # order makes them adjacent there
     dup_order = Window.partitionBy(strata_col, "__q", "__sub").orderBy(
@@ -1176,7 +1173,6 @@ def pack_sequences(
     w = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     # id alone is the packing order, so ANY duplicate id in a stratum
     # is a nondeterministic concat order — guard like the budget twin
-    # (r15 fix-review)
     cum_before = _dup_tie_guard(
         order,
         [F.col(id_col)],
@@ -1273,7 +1269,7 @@ def pack_sequences_scaled(
         F.size(_tokens(t)).cast("bigint").alias("n_tokens"),
         F.floor(F.col(id_col) / substratum_width).cast("bigint").alias("__sub"),
     )
-    # the plain twin's determinism guard, scaled form (r15 fix-review):
+    # the plain twin's determinism guard, scaled form:
     # duplicate ids share an id-range piece, so the within-piece id
     # order makes them adjacent there
     dup_order = Window.partitionBy(strata_col, "__sub").orderBy(F.asc(id_col))
@@ -1428,8 +1424,8 @@ def epoch_shuffle(
     the corpus in a reproducible pseudo-random permutation that is
     INDEPENDENT across epochs.
 
-    What "no global sort" buys, precisely (measured, BASELINE.md r10
-    addendum): a global ``orderBy`` runs the range partitioner's
+    What "no global sort" buys, precisely (measured, BASELINE.md): a
+    global ``orderBy`` runs the range partitioner's
     SAMPLING pass over the input first — a second execution of the
     entire uncached input lineage (measured 1.89× total wall on a
     quality-scored sf1 corpus; a tie on a small page-cached scan,
@@ -1513,7 +1509,7 @@ def semantic_contamination_report(
     (``exclude_same_id=False``): in the general composition the eval
     frame is a SEPARATE id space, and exempting id collisions would
     silently un-screen any corpus doc whose id happens to equal an
-    eval id (r10 review) — and when the eval set IS drawn from the
+    eval id — and when the eval set IS drawn from the
     corpus, flagging the eval item's own corpus copy is the CORRECT
     verdict (eval items must not train). Pass
     ``exclude_same_id=True`` only when both frames share one id

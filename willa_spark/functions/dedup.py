@@ -884,8 +884,8 @@ def dup_clusters(
     # convergence check: labels are monotonically non-increasing (every
     # update takes a min), so the label sum strictly decreases until
     # fixpoint. The sum rides the round's own checkpoint action as an
-    # observe() metric — zero extra jobs per round (previously one
-    # full aggregate pass). decimal(38,0) keeps the sum exact at any
+    # observe() metric — zero extra jobs per round instead of one
+    # full aggregate pass. decimal(38,0) keeps the sum exact at any
     # node count.
     prev_sum = None
     for _ in range(max_iters):
@@ -1007,7 +1007,7 @@ def best_member_drops(member: DataFrame) -> DataFrame:
     the streaming within-batch election
     (``streaming.near_dedup._drop_within_batch``) both call it, so the
     tie-break/NULL policy the congruity tests pin cannot drift between
-    the engines (r15 review: it existed as two line-for-line copies).
+    the engines.
     The caller pins ``member`` because it feeds three downstream plans
     (best / winners / drop) and Spark does not reuse subtrees."""
     best = member.groupBy("cluster_id").agg(F.max("__s").alias("__smax"))

@@ -133,9 +133,9 @@ def _model_totals(model: DataFrame) -> DataFrame:
     """1-row (T, V) derived from the model frame — T = total
     transitions, V = distinct target-vocabulary size (includes EOS;
     BOS is context-only by construction). An EMPTY model fails LOUD
-    in-plan (r12 review, verified live: unguarded, a 0-row model made
-    KN score every doc ppl = 1.0 — admit-all — while JM's NULL totals
-    made every ppl NULL — drop-all; both silent). The guard evaluates
+    in-plan (unguarded, a 0-row model makes KN score every doc
+    ppl = 1.0 — admit-all — while JM's NULL totals make every ppl
+    NULL — drop-all; both silent). The guard evaluates
     at ``make_bigram_scorer`` construction (eager pin) or on the
     one-shot scorers' first action."""
     return model.agg(
@@ -187,8 +187,7 @@ def _scored_lp(
     scorer: one transition explode + the plan's left joins (broadcast
     under the gate) + the scalars crossJoin + the lp coalesce. One
     definition so a future change to the gating or join shape cannot
-    drift between the per-doc scorers and the group-scoring twin
-    (r13 review)."""
+    drift between the per-doc scorers and the group-scoring twin."""
     j = _transitions(docs, id_col, text_col, extra_cols)
     for tab, keys in plan["joins"]:
         j = j.join(F.broadcast(tab) if do_broadcast else tab, keys, "left")
@@ -207,7 +206,7 @@ def _jm_plan(model: DataFrame, lam: float, alpha: float) -> dict:
     the same subtraction (``(1 - 0.8)``, never the literal ``0.2``):
     1.0 - 0.8 and 0.2 differ by 1 ulp in IEEE doubles, so a literal
     on one side would leave the cross-engine 6dp parity hanging on
-    that ulp never landing on a rounding boundary (r12 advice)."""
+    that ulp never landing on a rounding boundary."""
     lam_, a_ = float(lam), float(alpha)
     back_ = 1.0 - lam_
     totals = _model_totals(model)
@@ -246,7 +245,7 @@ def _kn_plan(model: DataFrame, alpha: float, discount: float | None) -> dict:
     log(0), which Spark's log returns as NULL and sum would silently
     SKIP while count still counts the row — deflating ppl for exactly
     the zero-probability documents an admission screen most needs to
-    reject (r12 review, verified live). A degenerate model fails loud
+    reject. A degenerate model fails loud
     instead; pass an explicit 0 < discount < 1 to override the
     estimate."""
     if discount is not None and not (0.0 < float(discount) < 1.0):
@@ -275,7 +274,7 @@ def _kn_plan(model: DataFrame, alpha: float, discount: float | None) -> dict:
     ).select(
         # empty-model guard — same failure class as _model_totals
         # (0-row model: every join misses, λ→1, P_cont→1, ppl=1.0
-        # admit-all — r12 review, verified live)
+        # admit-all)
         F.when(F.col("__NT") > 0, F.col("__NT"))
         .otherwise(
             F.raise_error(
@@ -586,8 +585,8 @@ def _group_lp_stats(
 
 
 def _check_scorer_knobs(scorer: str, lam: float, discount: float | None):
-    """The shared cross-knob validation (r12 review: a knob with
-    nothing to act on is a config error, never a silent no-op) —
+    """The shared cross-knob validation (a knob with nothing to act
+    on is a config error, never a silent no-op) —
     used by ``make_bigram_scorer`` and the group scorer."""
     if scorer not in ("jm", "kn"):
         raise ValueError(
@@ -671,8 +670,8 @@ def make_bigram_scorer(
     corpus-side work (explode + joins + agg). This is the per-batch
     deployment shape: the one-shot functions above rebuild the
     tables per call, which is fine for a single batch pass but waste
-    on every micro-batch of a stream (r12 review — the streaming
-    step and the composed pipeline's LM screen both use this).
+    on every micro-batch of a stream (the streaming step and the
+    composed pipeline's LM screen both use this).
     ``scorer``: "jm" (Jelinek-Mercer) or "kn" (Kneser-Ney);
     cross-scorer knobs fail LOUD via the shared
     ``_check_scorer_knobs``."""

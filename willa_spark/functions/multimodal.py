@@ -140,10 +140,10 @@ def with_phash(
     pre-project the mean.
 
     STORE CONTRACT: this hash definition (slice-first, mean over the
-    leading ``n_bits`` only — changed in r7 from whole-array mean) is
-    part of every persisted phash-store's identity: under a decoder
-    emitting MORE than ``n_bits`` coefficients, hashes computed by the
-    pre-r7 definition are not hamming-comparable with these, so
+    leading ``n_bits`` only, not the whole-array mean) is part of
+    every persisted phash-store's identity: under a decoder emitting
+    MORE than ``n_bits`` coefficients, hashes computed by a
+    whole-array-mean definition are not hamming-comparable with these, so
     changing this function (or swapping in such a decoder across the
     change) means REBUILDING streaming phash/audio-fp stores — the
     same generation rule as ``audio_frame_energies`` and IVF
@@ -213,7 +213,7 @@ def phash_bits(features, n_bits: int = 64):
     return _bound(F.slice(features, 1, n_bits), hash_of)
 
 
-# ------------------------------------------------------------- r16:
+# ------------------------------------------------------------------
 # numpy TWINS of the Column-expression hash kernels, run INSIDE the
 # decode mapInPandas pass (guide §4.2: heavy per-row math belongs in
 # vectorized native code next to the decode, not in interpreted
@@ -564,8 +564,7 @@ def audio_frame_energies(
 
     STORE CONTRACT: this envelope definition is part of every
     persisted audio-fingerprint store's identity — fingerprints
-    computed under a different framing (e.g. the pre-r7 floor
-    division) are not hamming-comparable, so changing this function
+    computed under a different framing (e.g. floor division) are not hamming-comparable, so changing this function
     means REBUILDING streaming fp stores, the same generation rule as
     IVF retraining (streaming/ann.py)."""
     return df.withColumn(out_col, frame_energies(F.col(samples_col), n_frames))

@@ -61,9 +61,7 @@ def _geometry(codebooks) -> tuple[int, int]:
     guarantees k >= 1, but pq_encode/pq_assign_code/pq_topk/
     ivfpq_topk are public API taking caller-supplied codebooks — a
     degenerate set must fail with the contract, not a bare IndexError
-    at codebooks[0][0] (r15 advice: the unrolled _l2_dists form had an
-    explicit empty-distances route; this is its fused-form
-    replacement)."""
+    at codebooks[0][0]."""
     if not codebooks or not codebooks[0] or not codebooks[0][0]:
         raise ValueError(
             "empty codebooks (need >= 1 subspace with >= 1 centroid "
@@ -81,8 +79,8 @@ def _subspace_map(vec: Column, codebooks, inner=None) -> Column:
     codebook order preserved), but built as ONE Python expression tree
     over ONE 3-level literal instead of m trees: the unrolled form's
     ~m×40 ms of py4j lambda/HOF construction per call site dominated
-    the PQ rows' driver time (r15 profile: 10k py4j round trips per
-    ivfpq build). ``inner`` (e.g. the argmin) is lambda-BOUND over the
+    the PQ rows' driver time (10k py4j round trips per ivfpq build).
+    ``inner`` (e.g. the argmin) is lambda-BOUND over the
     distance array exactly as the unrolled form bound it."""
     m, sub = _geometry(codebooks)
     cb3 = lit_double_cube(codebooks)
@@ -187,8 +185,8 @@ def pq_train(
     # means, empty cells keep their previous centroid) and collapses
     # m assignment/means jobs per round into ONE corpus pass + ONE
     # m*k*sub-row collect — at 100 TB that is 1 scan per round instead
-    # of m, and at test scale it removes the job-dispatch wall the
-    # r10 PRICE NOTE measured (the per-subspace loop was ~m× this).
+    # of m, and at test scale it removes the job-dispatch wall (a
+    # per-subspace loop costs ~m× this).
     codebooks: list[list[list[float]]] = [
         [list(r["v"])[j * sub : (j + 1) * sub] for r in init_rows]
         for j in range(m)
@@ -222,9 +220,8 @@ def pq_train(
         new = [[list(codebooks[j][i]) for i in range(k)] for j in range(m)]
         for r in means:
             # NULL cid = a vector with a NULL element in this subspace
-            # (NULL distances → NULL argmin); the per-subspace loop
-            # discarded those via its dict's None key — same here
-            # (r11 review: the fused rebuild crashed on the None index)
+            # (NULL distances → NULL argmin): skipped, or the rebuild
+            # would index the codebook with None
             if r["cid"] is None:
                 continue
             new[r["j"]][r["cid"]][r["pos"]] = r["mean"]
@@ -290,9 +287,9 @@ def _shortlist_and_refine(
     ``normalize=False`` the index lives in raw L2 space where cosine
     and L2 rank DIFFERENTLY off the unit sphere, so the refinement is
     exact squared L2, ascending, as ``l2_dist`` — one metric end to
-    end, never a silent mid-pipeline switch (r9 advice). One copy of
-    the tie-break / rounding / broadcast discipline — a fix here fixes
-    both callers (self-review: the tail had been duplicated verbatim).
+    end, never a silent mid-pipeline switch. One copy of the
+    tie-break / rounding / broadcast discipline — a fix here fixes
+    both callers.
     ``qvecs`` carries (__qid, __qv); in the cosine regime scale
     invariance makes normalized or raw query vectors equivalent, in
     the L2 regime callers pass RAW vectors on both sides."""
@@ -434,8 +431,7 @@ def pq_topk(
 def _cents_lit(centroids: list[list[float]]) -> Column:
     # one nested-array literal, not cells × dim unrolled F.lit nodes —
     # the _l2_dists rationale applied to the residual path's centroid
-    # table (r11 review: this was the one literal left unrolled);
-    # r15: built via ONE expr parse, not per-element py4j (_fastlit)
+    # table, built via ONE expr parse, not per-element py4j (_fastlit)
     return lit_double_rows(centroids)
 
 

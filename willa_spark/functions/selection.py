@@ -562,10 +562,9 @@ def kl_divergence_profile(
             )
         ).cast(docs.schema[group_col].dataType),
     ).otherwise(F.col(group_col))
-    # DIRECT (group, gram) aggregation — no per-doc detour (r10
-    # review: the earlier per-(id, feature) agg + id join + distinct
-    # paid two corpus-scale exchanges whose granularity nothing
-    # consumed). The guard rides the projection feeding the explode:
+    # DIRECT (group, gram) aggregation — no per-doc detour (a
+    # per-(id, feature) agg + id join + distinct pays two corpus-scale
+    # exchanges whose granularity nothing consumes). The guard rides the projection feeding the explode:
     # any NULL-group document WITH grams raises in-plan; an entirely
     # gram-less document has NO distribution to profile and emits
     # nothing (the family's feature-less contract), so an all-blank
@@ -646,7 +645,7 @@ def kl_divergence_profile(
     if groups is None:
         return prof
     # truncation that empties the vocabulary empties `full`, which
-    # would silently drop EVERY stratum (r11 review) — the exact
+    # would silently drop EVERY stratum — the exact
     # empty-frame trap the loud NULL-group guard exists to prevent.
     # Re-anchor the output on the pre-truncation group list (lazy —
     # groups is vocabulary-sized lineage, no extra corpus pass) and
@@ -889,9 +888,9 @@ def mixture_trajectory_from_stats(
     gtype = per.schema[group_col].dataType.simpleString()
     rows = per.limit(max_groups + 1).collect()
     if len(rows) > max_groups:
-        # named by the CALLER (r14 review: the streaming step's
-        # micro-batch failure must point at the step's knob, not the
-        # batch function the operator never called)
+        # named by the CALLER: the streaming step's micro-batch
+        # failure must point at the step's knob, not the batch
+        # function the operator never called
         raise ValueError(
             f"{caller}: more than {max_groups} "
             f"distinct {group_col} values — this is a DOMAIN mixture "
@@ -913,8 +912,7 @@ def mixture_trajectory_from_stats(
         # sides round to 6dp before the cross-engine hash, so only
         # an ulp landing EXACTLY on a 6dp boundary could flip the
         # hash — the same accepted risk class as the per-group ce
-        # reductions, compounded by the K unrolled steps (r15
-        # ADVICE). Remedy if a boundary flip ever surfaces in
+        # reductions, compounded by the K unrolled steps. Remedy if a boundary flip ever surfaces in
         # pre-flight: force the oracle's fold order too (list
         # aggregation in sorted group order), the lm-family ulp
         # discipline for operand order.

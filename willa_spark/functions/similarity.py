@@ -347,9 +347,9 @@ def _centroid_sims(vec: Column, centroids: list[list[float]]) -> Column:
         # array_max NULL → NULL cell (ivf_assign's documented
         # exclusion route for a corrupt/empty centroid store) — the
         # transform form would otherwise build sequence(0, -1) and an
-        # invalid element_at(…, 0) runtime error (r11 review)
+        # invalid element_at(…, 0) runtime error
         return F.array().cast("array<double>")
-    # r15: both literals built via ONE expr parse each instead of
+    # both literals built via ONE expr parse each instead of
     # per-element py4j round trips (bit-identical values — _fastlit)
     cl = lit_double_rows(centroids)
     nl = lit_doubles(

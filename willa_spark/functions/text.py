@@ -221,7 +221,7 @@ def check_chunk_geometry(chunk_size: int, overlap: int, op: str) -> None:
     """The ONE chunk-geometry validator — the batch kernel and the
     streaming step must reject identical configs (a duplicated
     predicate would drift and let a stream construct a step the batch
-    kernel later rejects mid-stream; r10 review)."""
+    kernel later rejects mid-stream)."""
     if chunk_size <= 0 or not (0 <= overlap < chunk_size):
         raise ValueError(
             f"{op}: need chunk_size > 0 and 0 <= overlap < "
@@ -258,8 +258,8 @@ def chunk_documents(
     # oracle reproduced the same phantom, so parity could never see
     # it). The blank document then tokenizes to ZERO tokens — Spark's
     # split('') keeps the phantom '' element, which would report
-    # chunk_tokens = 1 and overstate token budgets for blank docs (r9
-    # advice) — yielding ONE chunk with chunk_tokens = 0 and empty
+    # chunk_tokens = 1 and overstate token budgets for blank docs —
+    # yielding ONE chunk with chunk_tokens = 0 and empty
     # text (the one-row-per-doc cardinality contract holds).
     trimmed = F.trim(F.coalesce(F.col(text_col), F.lit("")))
     toks = F.when(
@@ -312,7 +312,7 @@ UNICODE_FORMS = ("NFC", "NFD", "NFKC", "NFKD")
 def check_unicode_form(form: str, op: str) -> None:
     """The ONE valid-forms check — the batch kernel and the streaming
     step must accept identical configs (the check_chunk_geometry
-    rule: a duplicated tuple drifts; r10 review)."""
+    rule: a duplicated tuple drifts)."""
     if form not in UNICODE_FORMS:
         raise ValueError(f"{op}: unknown form {form!r}")
 

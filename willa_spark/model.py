@@ -89,8 +89,7 @@ def entity_type(entity: dict) -> str:
 def joinable_type(entities: dict, eid: str) -> str:
     """Topic legs join as streams (experiment.clj:134-138). The ONE
     copy of the coercion — batch, streaming, and validate all call
-    this, so their join-shape verdicts can never drift (r15 review:
-    there were three hand-maintained copies)."""
+    this, so their join-shape verdicts can never drift."""
     t = entities[eid]["type"]
     return KSTREAM if t == TOPIC else t
 

@@ -50,7 +50,7 @@ def _band_cond(
     """The ONE windowed-join predicate (key equality + inclusive time
     band t_r ∈ [t_l − before, t_l + after], streams.clj:60-76): shared
     by the full join and the semi/anti variants so a band-semantics
-    fix can never apply to one and not the other (r15 review)."""
+    fix can never apply to one and not the other."""
     return (
         (F.col(KEY) == right_key)
         & (right_ts >= left_ts - F.lit(int(before_ms)))
@@ -165,15 +165,13 @@ def windowed_stream_join(
     ):
         # inner join over PROVABLY non-null values: the dedup pass
         # below is a no-op (no tuple can contain NULL), so skip its
-        # window exchange — material at scale (r15 review)
+        # window exchange — material at scale
         return out
     # oracle dedup rule (experiment.clj:30-34) — applied to EVERY join
     # type, including inner: the reference's group-by/mapcat pass is
     # unconditional (`true (group-by ...)`), so an inner join whose
     # source values are legitimately NULL must also drop the
     # NULL-containing members of a >1-record (timestamp, key) group
-    # (r15 review: the previous inner-join early return skipped this
-    # even for nullable values)
     grp = W.partitionBy(F.col(TIMESTAMP), F.col(KEY))
     if tuple_mode == "array":
         has_null = F.exists(F.col(VALUE), lambda x: x.isNull())

@@ -18,10 +18,12 @@ frame in the package is materialized here, in one of three kinds:
 
 Several frames given to one call are materialized at the same time
 (independent jobs overlap instead of queueing). When one fails, the
-first error in argument order is raised once all have finished. A
-frame ``pin`` returned is marked on the object itself, so pinning it
-again returns it unchanged and starts no job; concurrent pins share no
-state.
+first error in argument order is raised once all have finished. The
+jobs each thread starts carry the caller's local properties and tags
+(job group, description, a harness's query tag), as the caller's own
+jobs do. A frame ``pin`` returned is marked on the object itself, so
+pinning it again returns it unchanged and starts no job; concurrent
+pins share no state.
 """
 
 from __future__ import annotations
@@ -31,6 +33,7 @@ from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
+from pyspark.util import inheritable_thread_target
 
 _MARK = "_willa_pinned"
 
@@ -40,8 +43,9 @@ def _each(fn: Callable[[DataFrame], DataFrame], frames: tuple[DataFrame, ...]):
     frame in gives one frame out, several give a tuple."""
     if len(frames) == 1:
         return fn(frames[0])
+    target = inheritable_thread_target(frames[0].sparkSession)(fn)
     with ThreadPoolExecutor(max_workers=len(frames)) as ex:
-        futures = [ex.submit(fn, df) for df in frames]
+        futures = [ex.submit(target, df) for df in frames]
     return tuple(f.result() for f in futures)
 
 

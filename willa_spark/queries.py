@@ -5642,8 +5642,7 @@ def q_selection_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # from perplexity_bands' bag-of-grams cross-entropy: this conditions
 # every token on its predecessor, so word ORDER matters). Fully
 # SQL-expressible (counts, joins, one log-sum per doc) — hash-grade
-# at 6dp, the dsir_weights rounding discipline. Pre-flight before
-# registering: tools/check_parity.py --candidates.
+# at 6dp, the dsir_weights rounding discipline.
 LM_PERPLEXITY_ORACLE = r"""
 WITH t AS (
   SELECT doc_id,
@@ -5917,7 +5916,7 @@ def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-micro-batch deployment shape the one-shot rows never exercise
 # in a driver row). Kneser-Ney smoothing, i.e. what KenLM ships and
 # CCNet's wiki LM actually uses. Fully SQL-expressible — hash-grade
-# at 6dp. Pre-flight: tools/check_parity.py --candidates.
+# at 6dp.
 #
 # 100 TB shape: in production the target is a SEPARATE small corpus,
 # so "train" never touches the crawl; in this self-contained row the
@@ -6031,7 +6030,7 @@ def q_ccnet_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ce_corpus)), Σ = 1, η = 1. The per-domain agg keys on ~5 langs, so
 # everything after the one corpus transition explode is
 # domain-cardinality-sized. Fully SQL-expressible — hash-grade at
-# 6dp. Pre-flight: tools/check_parity.py --candidates.
+# 6dp.
 DOMAIN_MIXTURE_ORACLE = r"""
 WITH t AS (
   SELECT doc_id, lang,
@@ -6133,8 +6132,7 @@ def q_domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spark jobs per step would buy scheduler overhead, nothing else, at
 # any corpus scale). Fully SQL-expressible — the oracle unrolls the
 # K steps as CTEs generated by _traj_oracle (ONE spelling of the
-# IEEE arithmetic, never K hand-copies). Pre-flight:
-# tools/check_parity.py --candidates.
+# IEEE arithmetic, never K hand-copies).
 def _traj_oracle(steps: int, eta: float = 1.0) -> str:
     """Unroll the trajectory's K steps as DuckDB CTEs on top of the
     DOMAIN_MIXTURE_ORACLE's per-domain frame. The tilt spells
@@ -6622,7 +6620,7 @@ def q_classifier_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # GENERATED MATERIALIZED-CTE unroll — parity-pinned by
 # test_selection.py::test_domain_mixture_trajectory_oracle_parity /
 # tests/test_lm.py::test_ccnet_curation_oracle_parity,
-# pre-flighted green via `check_parity.py --candidates` at sf0.01,
+# pre-flighted green against their oracles at sf0.01,
 # 10x rows pre-measured r14 at 1.27-1.53x / 1.96x, combined sf0.1
 # price ≈6.7 s — the r14 verdict's #1 with every precondition
 # pre-met).
@@ -6731,14 +6729,9 @@ def q_classifier_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # twin-proved rows-only, 0 fail. r12 registered 116; the first
 # all-hash-grade gate. r11 activated period-3 at registry 114. Full
 # mappings: git history of this block.
-# CANDIDATE PRE-FLIGHT: `python tools/check_parity.py --candidates
-# <sf_dir>` runs every parked q_*/`*_ORACLE` pair through the
-# driver-grade comparison — run it before registering one. The
-# parked-candidate queue lives ONLY in tools/check_parity.py::
-# CANDIDATES (runtime-asserted against this module; a missing attr
-# fails loud) — read the list there; this comment deliberately
-# never restates it (the r12 "queue is empty" staleness, verdict
-# wart #1).
+# A parked (unregistered) q_*/`*_ORACLE` pair keeps its parity
+# pinned by its own oracle test (classifier_curation:
+# tests/test_classifier.py::test_classifier_curation_oracle_parity).
 # Every rows-only registered name (no DuckDB oracle — xxhash64/LSH
 # internals a SQL twin cannot reproduce) and the oracle-bearing
 # FAMILY TWINS that prove it (recall_* and/or precision_* rows over

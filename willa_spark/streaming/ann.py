@@ -408,8 +408,8 @@ def ivf_drift_index_step(
     compact_every: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch index maintenance with AUTOMATIC drift-triggered
-    retraining — the policy half the r5 ``ivf_retrain`` mechanism was
-    missing. Each micro-batch:
+    retraining — the policy half to the ``ivf_retrain`` mechanism.
+    Each micro-batch:
 
     1. appends to the current generation exactly like
        ``ivf_gen_index_step`` (same generation guard), with the batch's

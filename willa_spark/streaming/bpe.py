@@ -41,8 +41,8 @@ def bpe_count_step(
     kernels' auto mode): a micro-batch's distinct-word table is
     batch-sized by construction, so the auto mode's per-batch
     seg.count() job would spend a dispatch round trip per micro-batch
-    answering a question the streaming context already answers (r10
-    review); pass None/False only for genuinely huge batches.
+    answering a question the streaming context already answers; pass
+    None/False only for genuinely huge batches.
 
     JOB-COUNT BOUND per micro-batch: one Spark job per symbol-disjoint
     merge BATCH (``functions.bpe._merge_batches``), not per merge — a

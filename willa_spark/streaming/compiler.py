@@ -75,7 +75,7 @@ def _resolve_session_tz(spark):
     deserializing every timestamp batch into a Pandas-stateful
     operator), so the only honest behavior is a clear error at
     COMPILE naming the remedy instead of a 20 KB executor stack at
-    the first micro-batch (r14 review, batch 5 follow-up)."""
+    the first micro-batch."""
     tz_name = spark.conf.get("spark.sql.session.timeZone")
     import pandas as pd
 
@@ -98,12 +98,12 @@ def _epoch_ms(ts, tz) -> int:
     TimestampType group keys to Python as NAIVE wall-clock values in
     the SESSION timezone; a naive ``.timestamp()`` re-interprets that
     wall clock in the SYSTEM timezone — hours off whenever the two
-    differ, firing event-time timeouts early or late (r14 review).
+    differ, firing event-time timeouts early or late.
     Localize to the session timezone first. A DST-ambiguous wall time
     resolves deterministically (``ambiguous=True`` — the first
     occurrence) and a spring-forward gap shifts forward: both skew a
     settle timeout by at most an hour, strictly safer than crashing
-    the query on legitimate data (r14 review batch 5)."""
+    the query on legitimate data."""
     import pandas as pd
 
     t = pd.Timestamp(ts)
@@ -118,7 +118,7 @@ def _session_wallclock(ms: int, tz):
     back from a Pandas worker. A bare ``pd.Timestamp(ms, unit='ms')``
     is the UTC wall clock, which Spark re-reads as session-local —
     shifting every emitted event time by the tz offset whenever the
-    session timezone is not UTC (r14 review)."""
+    session timezone is not UTC."""
     import pandas as pd
 
     return (
@@ -134,8 +134,8 @@ def _scalar_caster(type_str: str):
     the declared Spark type before re-entering Arrow/pickle (numpy
     scalars crash the unpickler, floats pickled into bigint fields
     decode as NULL JVM-side). THE one caster for every stateful
-    operator in this module (r14 review: three near-identical copies
-    had already drifted on their NaN checks); NaT/NA sentinels null
+    operator in this module (separate copies drift on their NaN
+    checks); NaT/NA sentinels null
     out like NaN does."""
     import math
 
@@ -198,8 +198,8 @@ def _try_duration_ms(s: str) -> int | None:
     ('90 seconds', '100 milliseconds', '1 minute 30 seconds'), the
     'interval ' prefix, DECIMAL magnitudes ('1.5 seconds'), and the
     short unit forms Spark's interval parser accepts ('5 ms', '2 h')
-    — r14 review: the strict form-of-record parser rejected strings
-    Spark itself runs. Returns None — distinguishable from every real
+    — a strict form-of-record parser would reject strings Spark
+    itself runs. Returns None — distinguishable from every real
     duration — when the string is not understood, so callers can
     separate "unparseable" from "parsed to a conflicting value"."""
     import re
@@ -228,7 +228,7 @@ def _try_duration_ms(s: str) -> int | None:
     # '0.5 ms' must not silently parse to a ZERO delay where the
     # caller asked for a small positive one: round to the nearest
     # ms, and surface a positive-but-sub-ms total as unparseable so
-    # the compile-time loud guard fires instead (r15 ADVICE).
+    # the compile-time loud guard fires instead.
     if 0 < total < 1:
         return None
     return int(round(total))
@@ -315,7 +315,7 @@ class StreamingTopologyRunner(TopologyWalk):
                 # variable-length 'month'/'year') either overflow
                 # Spark's interval parse at query start or silently
                 # freeze the watermark so suppressed windows and
-                # nil-dedup timeouts never fire (r14 review)
+                # nil-dedup timeouts never fire
                 raise ValueError(
                     f"{where}: unparseable watermark duration {wm!r}; "
                     "use '<n> <unit>' parts with unit in "
@@ -866,9 +866,9 @@ class StreamingTopologyRunner(TopologyWalk):
                 # an unwindowed fold has no window close to suppress
                 # until; the column tier handles unwindowed suppression
                 # via complete mode, which applyInPandasWithState
-                # cannot express (r14 review: this case previously
-                # compiled to update mode SILENTLY, emitting the full
-                # changelog a suppressed topology asked to withhold)
+                # cannot express; compiling it to update mode would
+                # SILENTLY emit the full changelog a suppressed
+                # topology asked to withhold
                 raise ValueError(
                     f"entity {node!r}: 'suppress' on an UNWINDOWED "
                     "Python fold is not expressible in streaming "
@@ -925,8 +925,8 @@ class StreamingTopologyRunner(TopologyWalk):
     @staticmethod
     def _emit_windowed(aggregated: DataFrame, ent: dict) -> DataFrame:
         """THE windowed-emission tail shared by the plain and the
-        retracting column aggregates (r14 review: two verbatim copies
-        could silently desynchronize the epoch-clamp / struct shape):
+        retracting column aggregates (two verbatim copies could
+        silently desynchronize the epoch-clamp / struct shape):
         drop pre-epoch windows (F.window emits starts < 0 for early
         timestamps; batch clamps at >= 0 — Kafka TimeWindows.
         windowsFor), optionally carry the window start in the value,

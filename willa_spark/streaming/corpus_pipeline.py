@@ -81,7 +81,7 @@ def _screen_and_redact(
     passes THROUGH the strip here to keep the two configs' NULL
     behavior identical; without the bypass, flipping line_strip on
     would turn a tolerated input into a micro-batch-killing
-    raise_error (r13 review)."""
+    raise_error."""
     if line_strip:
         from ..functions.corpus import strip_boilerplate
 
@@ -264,10 +264,9 @@ def _lm_scorer_or_none(
 ):
     """ONE construction-time validator + builder for the LM screen —
     lives here so every caller (both composers AND any direct
-    ``_lm_admit`` user) goes through the same checks (r12 review: the
-    first draft duplicated the guards in the two composers, leaving
-    ``_lm_admit`` itself able to silently drop EVERY doc on a NULL
-    threshold comparison). Fails loud at construction on: threshold
+    ``_lm_admit`` user) goes through the same checks (guards copied
+    into the two composers would leave ``_lm_admit`` itself able to
+    silently drop EVERY doc on a NULL threshold comparison). Fails loud at construction on: threshold
     or non-default scorer without a model (a screen config with
     nothing to run is a config error, never a silent pass-through),
     model without a threshold, unknown scorer. Returns None (screen

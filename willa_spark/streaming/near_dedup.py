@@ -89,7 +89,7 @@ def _check_store_geometry(
     store_dir: str, geometry: dict, data_dirs: list[str] | None = None
 ) -> None:
     """Fail loud when a store is resumed with different SIGNATURE
-    GEOMETRY than it was built with (r15 review): a minhash store's
+    GEOMETRY than it was built with: a minhash store's
     band rows are hashes over ``num_hashes/num_bands`` component
     groups and its signatures over ``shingle_n`` shingles; a winnow
     store's fingerprints over (k, window); the segment/frame stores
@@ -119,7 +119,7 @@ def _check_store_geometry(
             # "sources deleted" and "tmp renamed" shows zero
             # partitions while the merged rows still exist — treating
             # that as fresh would re-record a new geometry over data
-            # the roll-forward then restores (r15 fix-review)
+            # the roll-forward then restores
             return bool(
                 store_partitions(d)
                 or os.path.exists(os.path.join(d, _MANIFEST))
@@ -143,7 +143,7 @@ def _check_store_geometry(
         json.dump(geometry, f)
         # durability like the compaction manifest: an os.replace whose
         # staged CONTENT never hit disk leaves a zero-length record
-        # that bricks every later step in json.load (r15 fix-review)
+        # that bricks every later step in json.load
         f.flush()
         os.fsync(f.fileno())
     os.replace(staged, gpath)
@@ -160,7 +160,7 @@ def _drop_within_batch(
     falling back to min id — the exact ``dedup.keep_best`` election
     over the batch's own clusters.
 
-    SURVIVOR-POLICY CONTRACT (VERDICT r06 #5): the score applies
+    SURVIVOR-POLICY CONTRACT: the score applies
     WITHIN a micro-batch only. Cross-batch, first-seen-wins is the
     only policy consistent with the steps' append-mode emission: an
     earlier batch's admitted survivor has already been EMITTED to the
@@ -278,7 +278,7 @@ def phash_dedup_step(
     from ..functions.multimodal import decode_image_phash_frame
 
     def sig_builder(batch_df: DataFrame) -> DataFrame:
-        # fused decode→hash pass (r16) — bit-identical to the decode +
+        # fused decode→hash pass — bit-identical to the decode +
         # with_phash chain (store contract unchanged), minus the
         # per-row interpreted threshold-hash expression
         return decode_image_phash_frame(
@@ -315,7 +315,7 @@ def audio_fp_dedup_step(
     from ..functions.multimodal import decode_audio_fp_frame
 
     def sig_builder(batch_df: DataFrame) -> DataFrame:
-        # fused decode→envelope→hash pass (r16) — bit-identical to the
+        # fused decode→envelope→hash pass — bit-identical to the
         # decode + audio_frame_energies + with_phash chain (store
         # contract unchanged)
         return decode_audio_fp_frame(
@@ -819,7 +819,7 @@ def audio_segment_dedup_step(
     from ..functions.multimodal import decode_audio_segment_fp_frame
 
     def fp_builder(batch_df: DataFrame) -> DataFrame:
-        # fused decode→segment-fp pass (r16) — bit-identical tiling
+        # fused decode→segment-fp pass — bit-identical tiling
         # (store contract unchanged)
         return decode_audio_segment_fp_frame(
             batch_df,
@@ -862,7 +862,7 @@ def video_fp_dedup_step(
     from ..functions.multimodal import decode_video_fp_frame
 
     def fp_builder(batch_df: DataFrame) -> DataFrame:
-        # fused decode→frame-hash pass (r16) — bit-identical hashes
+        # fused decode→frame-hash pass — bit-identical hashes
         # (store contract unchanged)
         return decode_video_fp_frame(
             batch_df,

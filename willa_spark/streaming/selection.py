@@ -198,7 +198,7 @@ def kl_drift_step(
             spark, [(counts_dir, "feature")], batch_id, compact_every
         )
         # id hygiene fails LOUD before anything persists (the novelty
-        # guard verbatim — r10 review): a doc redelivered twice in
+        # guard verbatim): a doc redelivered twice in
         # one micro-batch would double its gram mass in the emitted
         # KL row AND in the store, and a replay rewrites the same
         # corrupted partition (unrepairable). NULL ids are harmless
@@ -300,10 +300,10 @@ def classifier_score_step(
     construction. ``min_prob`` turns scoring into admission (the
     quality-filter deployment). (num_buckets, ns, ``binary``,
     weights) are ONE identity — score with the EXACT geometry you
-    trained (store contract; r11 review: this step originally lacked
-    the ``binary`` flag, so a binary-trained model deployed here
-    silently scored TF-fraction features — the length check cannot
-    catch that class of mismatch, only the caller can)."""
+    trained (store contract: a binary-trained model scored without
+    the ``binary`` flag would silently score TF-fraction features —
+    the length check cannot catch that class of mismatch, only the
+    caller can)."""
     from ..functions.classifier import doc_feature_vectors, score_logreg
 
     if len(weights) != int(num_buckets) + 1:
@@ -343,10 +343,9 @@ def lm_perplexity_step(
     mid-stream would admit early and late batches under different
     distributions). The WHOLE frozen derivation — model pin,
     vocabulary-sized logp tables, broadcast-gate count — happens
-    ONCE at step construction via ``lm.make_bigram_scorer`` (r12
-    review: the first draft re-ran the count job and the vocab-sized
-    table derivations every micro-batch for state that never
-    changes); per-batch work is only the corpus side (explode +
+    ONCE at step construction via ``lm.make_bigram_scorer`` (re-running
+    the count job and the vocab-sized table derivations every
+    micro-batch would rebuild state that never changes); per-batch work is only the corpus side (explode +
     joins + agg) — nothing keyed by anything outside the batch,
     replay-idempotent by construction. ``max_ppl`` turns scoring
     into admission — the CCNet deployment (keep the head/middle of
@@ -471,8 +470,8 @@ def domain_mixture_trajectory_step(
     directory ONLY when driven from the SAME foreachBatch callback,
     i.e. one stream, one batch sequence: the store partitions by
     ingest_batch alone, so two separate queries writing one
-    store_dir silently overwrite each other's same-numbered batches
-    — r14 review), same frozen-model construction, same replay
+    store_dir silently overwrite each other's same-numbered batches),
+    same frozen-model construction, same replay
     discipline;
     only the tail differs (the SHARED
     ``selection.mixture_trajectory_from_stats``), so congruity with
@@ -530,7 +529,7 @@ def _mixture_monitor_step(
     tail: Callable[[DataFrame], DataFrame],
     empty_ddl: Callable[[str], str],
 ) -> Callable[[DataFrame, int], DataFrame]:
-    """The SHARED DoReMi-monitor store machinery (r14: the trajectory
+    """The SHARED DoReMi-monitor store machinery (the trajectory
     twin would otherwise have copied the one-step monitor's body —
     the drift class ``lm._frozen_plan`` closed on the construction
     side, closed here on the step side): frozen-model construction,
@@ -541,7 +540,7 @@ def _mixture_monitor_step(
     emission's lineage is store-free BEFORE the append lands (the
     novelty rule; both shared tails do). ``empty_ddl(gtype)`` names
     the batch-0-and-empty emission's schema with the BATCH group
-    column's type (the r13 review class)."""
+    column's type."""
     import os
 
     from .store import store_append, store_compact_every, store_read
@@ -595,9 +594,9 @@ def _mixture_monitor_step(
         prior = store_read(spark, stats_dir, before_batch=batch_id)
         if prior is None and not has_rows:
             # the empty frame's group column keeps the BATCH schema's
-            # type (r13 review: hardcoding `string` here made a
-            # batch-0 emission disagree with every later batch for a
-            # non-string group column, breaking sinks that union)
+            # type: a hardcoded `string` would make a batch-0
+            # emission disagree with every later batch for a
+            # non-string group column, breaking sinks that union
             gtype = batch_df.schema[group_col].dataType.simpleString()
             return spark.createDataFrame([], empty_ddl(gtype))
         frames = ([stats] if has_rows else []) + (

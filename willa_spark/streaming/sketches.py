@@ -96,8 +96,8 @@ def vocab_estimate_from_store(
     ``group_type`` names the group column's DDL type for that case
     (the sketch store keeps the BATCH group column's type under the
     ``group`` name, so a bigint domain id read before any ingest must
-    not come back as string — the r14 review's batch-0 schema class,
-    fixed here alongside domain_mixture_step's instance)."""
+    not come back as string — the batch-0 schema class, handled the
+    same way in domain_mixture_step)."""
     sk = store_read(spark, os.path.join(store_dir, "vocab_sketches"))
     if sk is None:
         return spark.createDataFrame(

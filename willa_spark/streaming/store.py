@@ -64,8 +64,8 @@ _TMP = "_compact_tmp"
 
 def _fsync_dir(path: str) -> None:
     """fsync a DIRECTORY so a just-completed rename/replace of one of
-    its entries is durable before dependent deletes run (r15 review:
-    fsyncing the manifest's CONTENT alone does not order its directory
+    its entries is durable before dependent deletes run (fsyncing the
+    manifest's CONTENT alone does not order its directory
     entry ahead of the source-partition deletes on power loss — a
     filesystem may persist the deletes but not the manifest, leaving
     the merged history as an unreferenced tmp dir the next compaction
@@ -112,8 +112,8 @@ def store_read(
             # Any non-metadata entry (a flattened/corrupt layout, a
             # stray file) falls through to the read and FAILS LOUD:
             # returning None for it would serve a silently-empty store
-            # (r15 fix-review — the broader no-partitions guard broke
-            # the corrupt-store propagation test)
+            # (a broader no-partitions guard breaks the corrupt-store
+            # propagation test)
             return None
     try:
         reader = spark.read
@@ -318,8 +318,7 @@ def _finish_pending_compaction(path: str) -> None:
     # removed, on BOTH branches: if the manifest removal persisted but
     # a source delete did not, the store would reboot with the merged
     # dest AND resurrected source copies of the same rows and no
-    # manifest left to reconcile — double-counted probes (r15
-    # fix-review: the resume branch skipped this)
+    # manifest left to reconcile — double-counted probes
     _fsync_dir(path)
     os.remove(mpath)
 

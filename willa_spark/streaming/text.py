@@ -46,7 +46,7 @@ def chunk_step(
     packing consumers (``bm25_index_step`` over chunk rows, the
     pack steps) unchanged — chunk rows are just smaller documents."""
     # validate once, eagerly, via the batch kernel's OWN validator —
-    # one predicate, zero drift (r10 review)
+    # one predicate, zero drift
     check_chunk_geometry(chunk_size, overlap, "chunk_step")
 
     def step(batch_df: DataFrame, batch_id: int) -> DataFrame:

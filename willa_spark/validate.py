@@ -74,7 +74,7 @@ def validate(topology: dict) -> list[str]:
             # aggregation key present requires the aggregate itself —
             # including group_by and retract, which the batch engine
             # would otherwise silently IGNORE (records keeping their
-            # original keys with no warning; r15 review).
+            # original keys with no warning).
             # truthiness, not presence: both engines treat
             # group_by=None / retract=False / suppress=False as
             # absent (batch.py's `is not None` / bool() reads), so an
