@@ -335,9 +335,10 @@ def test_steps_survive_all_dropped_and_empty_batches(spark, tmp_path):
 
 
 def test_curation_to_shards_null_id_fails_loud(spark, tmp_path):
-    """A NULL-id doc must reach the packer's fail-loud guard through
-    the composed step — matching the batch twin — not vanish in the
-    strata re-join (a plain equi-join would silently drop it)."""
+    """A NULL-id doc must fail the composed step loudly — matching the
+    batch twin — not vanish in the strata re-join (a plain equi-join
+    would silently drop it). The dedup stage's NULL-id guard raises
+    before the packer's."""
     import os as _os
 
     import pytest

@@ -583,7 +583,7 @@ def test_streaming_bm25_index_probe_congruity_and_replay(spark, tmp_path):
 
 def test_streaming_semantic_dedup_congruity(spark, tmp_path):
     """Streaming SemDeDup (cluster-blocked vector dedup through the
-    shared _vector_dedup_step kernel): exact copies planted across and
+    shared _vectors + _cosine_pairs kernel): exact copies planted across and
     within micro-batches match the batch semantic_dedup_pairs +
     min-id canonical over the full corpus; replay is idempotent; the
     store lands sorted by cell."""

@@ -596,10 +596,10 @@ def capped_fingerprints(fp: DataFrame, df_cap: int | None) -> DataFrame:
 
 
 def winnow_pair_counts(fp: DataFrame) -> DataFrame:
-    """The fingerprint self-join kernel shared by the batch report
-    operator and the streaming containment step: (id_a < id_b,
-    n_shared) over an (id, fp) frame — an equi-join on the 8-byte
-    fingerprint value, volume ∝ collisions."""
+    """The fingerprint self-join kernel of the batch report operator
+    and the multimodal queries: (id_a < id_b, n_shared) over an (id,
+    fp) frame — an equi-join on the 8-byte fingerprint value, volume
+    ∝ collisions."""
     l, r = fp.alias("l"), fp.alias("r")
     return (
         l.join(
@@ -1005,7 +1005,7 @@ def best_member_drops(member: DataFrame) -> DataFrame:
     ties and all-NULL clusters falling back to min id. This is THE
     election kernel — ``keep_best`` (batch, whole-corpus clusters) and
     the streaming within-batch election
-    (``streaming.near_dedup._drop_within_batch``) both call it, so the
+    (``streaming.store_step._drop_within_batch``) both call it, so the
     tie-break/NULL policy the congruity tests pin cannot drift between
     the engines.
     The caller pins ``member`` because it feeds three downstream plans

@@ -562,7 +562,7 @@ def _vector_near_dup_pairs(
 ) -> DataFrame:
     """The shared batch vector near-dup kernel (LSH-bucket and
     k-means-cell blocking differ ONLY in ``key_builder`` — the batch
-    twin of ``streaming.ann._vector_dedup_step``): keyed self-join
+    twin of ``streaming.ann._cosine_pairs``): keyed self-join
     candidates, exact cosine verify with the ROUND-then-compare
     predicate both engines share, materialize-once contract
     (persist, or ``spill_dir`` for the storage-backed path)."""
@@ -751,7 +751,7 @@ def semantic_dedup_pairs(
     Same materialization contract as ``embedding_near_dups`` — both
     run through the shared ``_vector_near_dup_pairs`` kernel with
     only the blocking key swapped (the batch mirror of the streaming
-    ``_vector_dedup_step`` factoring)."""
+    ``_vectors`` + ``_cosine_pairs`` factoring)."""
     return _vector_near_dup_pairs(
         df,
         lambda v: ivf_assign(v, centroids),

@@ -63,8 +63,8 @@ from ..functions.similarity import (
     _as_double,
     _centroid_sims,
 )
-from ..pin import pin, pinned
 from .store import store_append, store_compact_every, store_read
+from .store_step import Half, dedup_step, write_json
 
 
 @dataclass(frozen=True)
@@ -278,16 +278,10 @@ def _write_ivf_meta(
     centroids: list[list[float]],
     ref_dist: float | None = None,
 ) -> None:
-    os.makedirs(root, exist_ok=True)
     meta: dict = {"generation": gen, "centroids": centroids}
     if ref_dist is not None:
         meta["ref_dist"] = ref_dist
-    staged = _ivf_meta_path(root) + ".staging"
-    with open(staged, "w") as f:
-        json.dump(meta, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(staged, _ivf_meta_path(root))  # atomic swap
+    write_json(_ivf_meta_path(root), meta)  # atomic swap
 
 
 def ivf_store_meta(root: str) -> dict:
@@ -690,17 +684,19 @@ def embedding_dedup_step(
     quality-aware WITHIN-BATCH survivor election (the
     ``dedup.keep_best`` policy over co-arriving dups) — cross-batch
     necessarily stays first-seen-wins; see
-    ``near_dedup._drop_within_batch`` for the append-mode argument."""
+    ``store_step._drop_within_batch`` for the append-mode argument.
+    STORE CONTRACT: (dim, n_planes, seed) define the buckets and are
+    recorded as the store's geometry — resuming with others fails
+    loud."""
     planes = hyperplanes(dim, n_planes, seed)
-    return _vector_dedup_step(
-        store_dir,
-        lambda vec: lsh_signature(vec, planes),
-        "bucket",
-        threshold,
-        id_col,
-        vec_col,
-        compact_every,
-        score,
+    return dedup_step(
+        "embedding_dedup_step", store_dir, [Half(sort_key="bucket")],
+        _vectors(id_col, vec_col, "bucket", lambda vec: lsh_signature(vec, planes)),
+        _cosine_pairs("bucket", threshold),
+        id_col=id_col, score=score, compact_every=compact_every,
+        geometry={
+            "family": "embedding", "dim": dim, "n_planes": n_planes, "seed": seed
+        },
     )
 
 
@@ -715,8 +711,8 @@ def semantic_dedup_step(
 ) -> Callable[[DataFrame, int], DataFrame]:
     """Streaming SemDeDup (Abbas et al. 2023) — the cluster-scoped
     twin of ``embedding_dedup_step`` through the same store kernel
-    (``_vector_dedup_step``) with the blocking key swapped: vectors
-    block on their nearest-centroid CELL (``ivf_assign``) instead of
+    (``_vectors`` + ``_cosine_pairs``) with the blocking key swapped:
+    vectors block on their nearest-centroid CELL (``ivf_assign``) instead of
     an LSH bucket, so comparisons concentrate where the data is dense
     and a cell-boundary near-dup pair is invisible BY DESIGN (the
     batch ``semantic_dedup_pairs`` tradeoff — exact duplicates never
@@ -724,116 +720,55 @@ def semantic_dedup_step(
     (admitted, like the batch operator's exclusion). STORE CONTRACT:
     ``centroids`` are part of the store's identity — re-clustering
     means a new store (the IVF generation rule); drift-retraining a
-    dedup store would silently re-block history."""
-    return _vector_dedup_step(
-        store_dir,
-        lambda vec: ivf_assign(vec, centroids),
-        "cell",
-        threshold,
-        id_col,
-        vec_col,
-        compact_every,
-        score,
+    dedup store would silently re-block history. They are recorded as
+    the store's geometry, so resuming with others fails loud."""
+    return dedup_step(
+        "semantic_dedup_step", store_dir, [Half(sort_key="cell")],
+        _vectors(id_col, vec_col, "cell", lambda vec: ivf_assign(vec, centroids)),
+        _cosine_pairs("cell", threshold),
+        id_col=id_col, score=score, compact_every=compact_every,
+        geometry={
+            "family": "semantic",
+            "centroids": [[float(x) for x in c] for c in centroids],
+        },
     )
 
 
-def _vector_dedup_step(
-    store_dir: str,
-    key_builder,
-    key_name: str,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    compact_every: int | None,
-    score,
-) -> Callable[[DataFrame, int], DataFrame]:
-    """The shared vector-dedup store kernel (LSH-bucket and
-    k-means-cell blocking differ ONLY in ``key_builder``): cross-batch
-    probe (key equi-join + exact cosine >= threshold against strictly
-    prior batches) then within-batch election, admitted rows landing
-    in the batch's own idempotent partition."""
-    from .near_dedup import _batch_scores, _drop_within_batch
+def _vectors(id_col: str, vec_col: str, key_name: str, key_builder):
+    """The vector family's signature builder: (id, vec, key) rows, the
+    blocking key (LSH bucket or k-means cell) from ``key_builder``."""
+    return lambda batch_df: batch_df.select(
+        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("vec")
+    ).withColumn(key_name, key_builder(F.col("vec")))
 
-    def step(batch_df: DataFrame, batch_id: int) -> DataFrame:
-        spark = batch_df.sparkSession
-        scores = _batch_scores(batch_df, id_col, score)
-        store_compact_every(
-            spark, [(store_dir, key_name)], batch_id, compact_every
-        )
-        v = batch_df.select(
-            F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("vec")
-        ).withColumn(key_name, key_builder(F.col("vec")))
 
-        # strictly-prior batches only: a replayed batch must not probe
-        # its own failed attempt's partition (same rule as near_dedup)
-        store = store_read(spark, store_dir, before_batch=batch_id)
-        cross_drop = None
-        pruned = v
-        if store is not None:
-            cross_drop = (
-                v.join(
-                    store.withColumnsRenamed(
-                        {"id": "__st_id", "vec": "__st_vec"}
-                    ),
-                    key_name,
-                )
-                .filter(
-                    # ROUND-then-compare, exactly the batch verify's
-                    # predicate (_vector_near_dup_pairs) — a raw-cosine
-                    # comparison would admit boundary pairs the batch
-                    # operator reports as duplicates (true cosine
-                    # 0.9499997 at threshold 0.95 rounds to 0.95 batch-
-                    # side), silently diverging the two corpora
-                    F.round(cosine(F.col("vec"), F.col("__st_vec")), 6)
-                    >= threshold
-                )
-                .select(F.col("id").alias("__drop"))
-                .distinct()
+def _cosine_pairs(key_name: str, threshold: float):
+    """The vector family's candidate join plus verify over two (id,
+    vec, key) sides: key equi-join, then exact cosine >= threshold."""
+
+    def pairs(a, b):
+        def side(frames, tag):
+            return frames[0].select(
+                F.col("id").alias(f"id_{tag}"), F.col("vec").alias(f"__v{tag}"),
+                key_name,
             )
-            pruned = v.join(cross_drop, v["id"] == F.col("__drop"), "left_anti")
-        # released on EVERY exit — an exception path must not leak a
-        # cache entry per retry
-        with pinned() as keep:
-            # eager: feeds both sides of the self-join (and the
-            # admitted anti-join below) — a lazy cache would let the
-            # self-join's concurrent map stages race-compute the
-            # bucket projection (same rule as the near_dedup steps)
-            pruned = keep(pruned)
-            l, r = pruned.alias("l"), pruned.alias("r")
-            within_pairs = (
-                l.join(
-                    r,
-                    (F.col(f"l.{key_name}") == F.col(f"r.{key_name}"))
-                    & (F.col("l.id") < F.col("r.id")),
-                )
-                .filter(
-                    # same round-then-compare rule as the cross probe
-                    F.round(cosine(F.col("l.vec"), F.col("r.vec")), 6)
-                    >= threshold
-                )
-                .select(
-                    F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b")
-                )
-                .distinct()
+
+        return (
+            side(a, "a")
+            .join(side(b, "b"), key_name)
+            .filter(
+                # ROUND-then-compare, exactly the batch verify's
+                # predicate (_vector_near_dup_pairs) — a raw-cosine
+                # comparison would admit boundary pairs the batch
+                # operator reports as duplicates (true cosine 0.9499997
+                # at threshold 0.95 rounds to 0.95 batch-side)
+                F.round(cosine(F.col("__va"), F.col("__vb")), 6) >= threshold
             )
-            within_drop = _drop_within_batch(within_pairs, scores)
-            drops = (
-                within_drop if cross_drop is None
-                else cross_drop.unionByName(within_drop).distinct()
-            )
-            # pin the ids-only drop set so the cached bucket frame can
-            # be released before returning (no per-micro-batch cache
-            # buildup)
-            drops = pin(drops)
-            admitted = pruned.join(
-                drops, pruned["id"] == F.col("__drop"), "left_anti"
-            )
-            store_append(admitted, store_dir, batch_id, sort_by=key_name)
-        return batch_df.join(
-            drops, batch_df[id_col] == F.col("__drop"), "left_anti"
+            .select("id_a", "id_b")
+            .distinct()
         )
 
-    return step
+    return pairs
 
 
 def pq_index_step(

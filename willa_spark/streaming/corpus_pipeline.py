@@ -425,7 +425,7 @@ def corpus_curation_step(
     ``dedup_score``: a Column over (id, REDACTED text) enabling the
     quality-aware within-batch survivor election in the dedup stage
     (e.g. ``text.quality_score(F.col("text"))``); cross-batch stays
-    first-seen-wins — see ``near_dedup._drop_within_batch`` for the
+    first-seen-wins — see ``store_step._drop_within_batch`` for the
     contract.
 
     VERIFY-MODE DECISION (``dedup_exact_verify``, default False): the

@@ -27,12 +27,12 @@ feature_log_probs(union of batches < i))`` exactly (pinned by test).
 The FIRST batch has no prior model and yields an empty scored frame
 (schema intact) — every-probe-before-ingest semantics; its counts
 still fold in. STORE CONTRACT: (num_buckets, ns, tokenizer) are the
-store identity.
+store identity; (num_buckets, ns) are recorded as its geometry, so
+resuming with others fails loud.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -45,12 +45,7 @@ from ..functions.selection import (
     cross_entropy_score,
 )
 from ..pin import pin
-from .store import (
-    store_append,
-    store_compact_every,
-    store_partitions,
-    store_read,
-)
+from .store_step import Half, store_step
 
 
 def novelty_score_step(
@@ -66,58 +61,21 @@ def novelty_score_step(
     novelty_ce)`` under the strictly-prior corpus model, folding the
     batch's own counts into the store afterwards. The batch's gram
     explode runs ONCE (the features feed both the scoring join and
-    the count append — eagerly pinned, the dsir frozen-frame
-    discipline applied per batch)."""
-    counts_dir = os.path.join(store_dir, "feature_counts")
+    the count append). Ids must be unique and non-NULL per batch
+    (``_check_batch_ids``): here a bad batch would fold corrupted counts
+    into cross-batch state that a replay rewrites identically."""
 
-    def step(batch_df: DataFrame, batch_id: int) -> DataFrame:
-        spark = batch_df.sparkSession
-        store_compact_every(
-            spark, [(counts_dir, "feature")], batch_id, compact_every
-        )
-        # id hygiene fails LOUD before anything persists — here a bad
-        # batch would not just mis-score itself (the dsir hazard), it
-        # would fold corrupted counts into CROSS-BATCH state that a
-        # replay rewrites identically (unrepairable): a NULL id merges
-        # every id-less doc into one phantom row, a duplicated id
-        # (at-least-once redelivery) doubles its grams in the prior
-        # model forever. One batch-sized validation agg, driver-side.
-        bad = batch_df.agg(
-            F.sum(F.when(F.col(id_col).isNull(), 1).otherwise(0)).alias("n_null"),
-            (F.count(F.lit(1)) - F.count_distinct(F.col(id_col))).alias("n_dup"),
-        ).collect()[0]
-        if bad["n_null"]:
-            raise ValueError(
-                f"novelty_score_step: {bad['n_null']} NULL {id_col} row(s) "
-                "— assign ids upstream (they would merge into one "
-                "phantom count row persisted across batches)"
-            )
-        if bad["n_dup"]:
-            raise ValueError(
-                f"novelty_score_step: {bad['n_dup']} duplicate {id_col} "
-                "row(s) within one micro-batch — dedup upstream "
-                "(dropDuplicates) or the doubled gram counts persist "
-                "in the prior model across replays"
-            )
-        feats = pin(_gram_features(
-            batch_df, num_buckets, ns, id_col, text_col
-        ))
-        # cheap local job on the pinned frame — an all-empty batch
-        # appends nothing, so "prior partitions exist" (checked via
-        # the driver-side listing, no cluster work) means "the prior
-        # model has features"
-        has_feats = bool(feats.limit(1).count())
-        has_prior = any(b < batch_id for b in store_partitions(counts_dir))
-        if not has_prior:
-            scored = spark.createDataFrame(
+    def emit(batch_df, sigs, prior):
+        feats = sigs[0]
+        if prior is None:
+            scored = batch_df.sparkSession.createDataFrame(
                 [],
                 f"{id_col} "
                 f"{batch_df.schema[id_col].dataType.simpleString()}, "
                 "n_grams bigint, novelty_ce double",
             )
         else:
-            prior = store_read(spark, counts_dir, before_batch=batch_id)
-            model = _model_from_features(prior, num_buckets, smooth)
+            model = _model_from_features(prior[0], num_buckets, smooth)
             # pinned BEFORE the count append: the scoring plan reads
             # the store's file listing, which a later batch's
             # compaction may rewrite — the returned frame must not
@@ -134,13 +92,25 @@ def novelty_score_step(
                 )
                 .withColumnRenamed("cross_entropy", "novelty_ce")
             )
-        if has_feats:
-            store_append(
-                feats.groupBy("feature").agg(F.sum("cnt").alias("cnt")),
-                counts_dir,
-                batch_id,
-                sort_by="feature",
-            )
-        return scored
+        # an all-empty batch appends nothing: an empty partition would
+        # read back as a prior model with no features
+        has_feats = bool(feats.limit(1).count())
+        counts = feats.groupBy("feature").agg(F.sum("cnt").alias("cnt"))
+        return scored, [counts if has_feats else None]
 
-    return step
+    return store_step(
+        "novelty_score_step",
+        store_dir,
+        [Half("feature_counts", "feature")],
+        # a checkpoint, which the lifecycle's scoped pin passes through:
+        # the scores then sum in the batch operator's order, so they
+        # equal cross_entropy_score's exactly (prefix congruity)
+        lambda batch_df: pin(
+            _gram_features(batch_df, num_buckets, ns, id_col, text_col)
+        ),
+        emit,
+        id_col=id_col,
+        geometry={"family": "novelty", "num_buckets": num_buckets, "ns": list(ns)},
+        unique_ids=True,
+        compact_every=compact_every,
+    )

@@ -22,12 +22,14 @@ cross-batch state, congruity with the batch pipeline structural (the
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.selection import importance_log_weights
 from ..pin import pin
+from .store_step import Half, store_step
 
 
 def dsir_score_step(
@@ -179,70 +181,21 @@ def kl_drift_step(
     divergence. KL runs over the UNION vocabulary, both sides
     smoothed (absent grams take floor mass on either side — the
     kl_divergence_profile rule)."""
-    import os
-
-    from .store import (
-        store_append,
-        store_compact_every,
-        store_partitions,
-        store_read,
-    )
     from ..functions.selection import DEFAULT_SMOOTH, _gram_features
 
     s_ = float(DEFAULT_SMOOTH if smooth is None else smooth)
-    counts_dir = os.path.join(store_dir, "feature_counts")
 
-    def step(batch_df: DataFrame, batch_id: int) -> DataFrame:
-        spark = batch_df.sparkSession
-        store_compact_every(
-            spark, [(counts_dir, "feature")], batch_id, compact_every
-        )
-        # id hygiene fails LOUD before anything persists (the novelty
-        # guard verbatim): a doc redelivered twice in
-        # one micro-batch would double its gram mass in the emitted
-        # KL row AND in the store, and a replay rewrites the same
-        # corrupted partition (unrepairable). NULL ids are harmless
-        # to the per-feature sums but fail the same check for
-        # consistency with the family's contract.
-        bad = batch_df.agg(
-            F.sum(F.when(F.col(id_col).isNull(), 1).otherwise(0)).alias(
-                "n_null"
-            ),
-            (F.count(F.lit(1)) - F.count_distinct(F.col(id_col))).alias(
-                "n_dup"
-            ),
-        ).collect()[0]
-        if bad["n_null"] or bad["n_dup"]:
-            raise ValueError(
-                f"kl_drift_step: {bad['n_null']} NULL / {bad['n_dup']} "
-                f"duplicate {id_col} row(s) in one micro-batch — dedup "
-                "and label upstream (doubled gram counts would persist "
-                "in the prior store across replays)"
-            )
-        # ONE checkpoint, on the (feature, cnt) frame both consumers
-        # read — feats itself has a single consumer, so checkpointing
-        # it too would run an extra per-batch materialization job for
-        # no reuse (contrast novelty_score_step, where feats feeds
-        # scoring AND append)
-        bc = pin(
-            _gram_features(batch_df, None, ns, id_col, text_col)
-            .groupBy("feature")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
+    def emit(batch_df, sigs, prior):
+        bc = sigs[0]
         has_feats = bool(bc.limit(1).count())
-        has_prior = any(b < batch_id for b in store_partitions(counts_dir))
-        if not (has_prior and has_feats):
-            out = spark.createDataFrame(
+        if prior is None or not has_feats:
+            out = batch_df.sparkSession.createDataFrame(
                 [], "n_grams bigint, kl_to_prior double"
             )
         else:
-            prior = (
-                store_read(spark, counts_dir, before_batch=batch_id)
-                .groupBy("feature")
-                .agg(F.sum("cnt").alias("__c"))
-            )
+            prior_c = prior[0].groupBy("feature").agg(F.sum("cnt").alias("__c"))
             full = bc.withColumnRenamed("cnt", "__cg").join(
-                prior, "feature", "full"
+                prior_c, "feature", "full"
             )
             totals = full.agg(
                 F.sum(F.coalesce(F.col("__cg"), F.lit(0)))
@@ -270,11 +223,24 @@ def kl_drift_step(
                     F.round(F.sum(p * F.log(p / q)), 6).alias("kl_to_prior"),
                 )
             )
-        if has_feats:
-            store_append(bc, counts_dir, batch_id, sort_by="feature")
-        return out
+        return out, [bc if has_feats else None]
 
-    return step
+    return store_step(
+        "kl_drift_step",
+        store_dir,
+        [Half("feature_counts", "feature")],
+        # ONE checkpoint, on the (feature, cnt) frame both consumers
+        # read (feats itself has a single consumer)
+        lambda batch_df: pin(
+            _gram_features(batch_df, None, ns, id_col, text_col)
+            .groupBy("feature")
+            .agg(F.sum("cnt").alias("cnt"))
+        ),
+        emit,
+        id_col=id_col,
+        unique_ids=True,
+        compact_every=compact_every,
+    )
 
 
 def classifier_score_step(
@@ -541,9 +507,6 @@ def _mixture_monitor_step(
     novelty rule; both shared tails do). ``empty_ddl(gtype)`` names
     the batch-0-and-empty emission's schema with the BATCH group
     column's type."""
-    import os
-
-    from .store import store_append, store_compact_every, store_read
     from ..functions.lm import (
         DEFAULT_ALPHA,
         DEFAULT_LAMBDA,
@@ -557,56 +520,21 @@ def _mixture_monitor_step(
     # validation, model pin, vocab-sized table pins, broadcast gate —
     # all HERE, once, identical to make_bigram_scorer's by sharing
     plan, do_broadcast = _frozen_plan(model, scorer, lam_, alpha_, discount)
-    stats_dir = os.path.join(store_dir, "group_lp_stats")
 
-    def step(batch_df: DataFrame, batch_id: int) -> DataFrame:
-        spark = batch_df.sparkSession
-        store_compact_every(
-            spark, [(stats_dir, group_col)], batch_id, compact_every
-        )
-        # id hygiene fails LOUD before anything persists (the
-        # kl_drift / novelty guard verbatim): a doc redelivered twice
-        # in one micro-batch doubles its transition mass in the
-        # emitted weights AND in the store, and a replay rewrites the
-        # same corrupted partition (unrepairable)
-        bad = batch_df.agg(
-            F.sum(F.when(F.col(id_col).isNull(), 1).otherwise(0)).alias(
-                "n_null"
-            ),
-            (F.count(F.lit(1)) - F.count_distinct(F.col(id_col))).alias(
-                "n_dup"
-            ),
-        ).collect()[0]
-        if bad["n_null"] or bad["n_dup"]:
-            raise ValueError(
-                f"{step_name}: {bad['n_null']} NULL / "
-                f"{bad['n_dup']} duplicate {id_col} row(s) in one "
-                "micro-batch — dedup and label upstream (doubled "
-                "transition mass would persist in the store across "
-                "replays)"
-            )
-        # ONE pin on the batch's additive stats — both consumers
-        # (the cumulative union and the store append) read it
-        stats = pin(_group_lp_stats(
-            batch_df, plan, group_col, id_col, text_col, do_broadcast
-        ))
+    def emit(batch_df, sigs, prior):
+        stats = sigs[0]
         has_rows = bool(stats.limit(1).count())
-        prior = store_read(spark, stats_dir, before_batch=batch_id)
         if prior is None and not has_rows:
             # the empty frame's group column keeps the BATCH schema's
             # type: a hardcoded `string` would make a batch-0
             # emission disagree with every later batch for a
             # non-string group column, breaking sinks that union
             gtype = batch_df.schema[group_col].dataType.simpleString()
-            return spark.createDataFrame([], empty_ddl(gtype))
-        frames = ([stats] if has_rows else []) + (
-            [prior] if prior is not None else []
-        )
-        acc = frames[0]
-        for f in frames[1:]:
-            acc = acc.unionByName(f)
+            return batch_df.sparkSession.createDataFrame([], empty_ddl(gtype)), [None]
+        frames = ([stats] if has_rows else []) + list(prior or ())
         per = (
-            acc.groupBy(group_col)
+            reduce(DataFrame.unionByName, frames)
+            .groupBy(group_col)
             .agg(
                 F.sum("n_docs").cast("bigint").alias("n_docs"),
                 F.sum("n_transitions").cast("bigint").alias("n_transitions"),
@@ -622,9 +550,19 @@ def _mixture_monitor_step(
         # the tail pins/materializes `per`, so the returned frame's
         # lineage is free of the store files BEFORE the append lands
         # (the novelty rule)
-        out = tail(per)
-        if has_rows:
-            store_append(stats, stats_dir, batch_id, sort_by=group_col)
-        return out
+        return tail(per), [stats if has_rows else None]
 
-    return step
+    return store_step(
+        step_name,
+        store_dir,
+        [Half("group_lp_stats", group_col)],
+        # ONE pin on the batch's additive stats — both consumers (the
+        # cumulative union and the store append) read it
+        lambda batch_df: pin(_group_lp_stats(
+            batch_df, plan, group_col, id_col, text_col, do_broadcast
+        )),
+        emit,
+        id_col=id_col,
+        unique_ids=True,
+        compact_every=compact_every,
+    )

@@ -10,6 +10,10 @@ curation pipeline's shard output):
   replay cannot match against its failed attempt's own rows; index
   probes read the whole current store.
 
+The probe-and-admit steps use these functions through one micro-batch
+lifecycle, ``store_step`` (its module docstring gives the order of work
+and the write boundaries).
+
 Only a genuinely-missing store reads as None (the first batch). Every
 other read failure — permissions, corrupt footers, transient storage
 faults — propagates and fails the micro-batch, because swallowing it
