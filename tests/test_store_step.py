@@ -4,6 +4,7 @@ records its geometry, NULL ids fail loud, and a guard-failing batch
 starts no Spark job."""
 
 import os
+import shutil
 
 import pytest
 
@@ -157,17 +158,30 @@ def test_store_geometry_guard_every_family(spark, tmp_path, family):
     assert os.path.exists(os.path.join(store, "_geometry.json"))
 
 
-def test_guard_failing_batch_starts_no_job(spark, tmp_path):
-    """The lifecycle runs every guard before the first Spark action: a
-    geometry mismatch fails the batch without starting a job (the
-    signatures are pinned only after the guards)."""
+@pytest.mark.parametrize("guard", ["geometry", "coupled_halves", "absent_half"])
+def test_guard_failing_batch_starts_no_job(spark, tmp_path, guard):
+    """The lifecycle decides each store guard from the geometry record
+    and the partition listings, before the first Spark action: a batch
+    failing the geometry, the coupled-halves or the absent-half guard
+    starts no job. No store half is read, and the signatures are pinned
+    only after the guards."""
     store = os.path.join(str(tmp_path), "st")
-    minhash_dedup_step(store, num_bands=16)(_docs(spark, BATCH0), 0).collect()
-    resumed = minhash_dedup_step(store, num_bands=8)
+    exact = guard == "absent_half"
+    built = minhash_dedup_step(store, num_bands=16, exact_verify=exact)
+    built(_docs(spark, BATCH0), 0).collect()
+    if guard == "geometry":
+        resumed, match = minhash_dedup_step(store, num_bands=8), "geometry"
+    elif guard == "coupled_halves":
+        # the bands half pruned alone: sigs holds data, bands none
+        shutil.rmtree(os.path.join(store, "bands"))
+        resumed, match = minhash_dedup_step(store, num_bands=16), "inconsistent"
+    else:
+        # an exact-verify store resumed with the default estimator
+        resumed, match = minhash_dedup_step(store, num_bands=16), "shingles/ half"
     batch = _docs(spark, BATCH1)
 
     def run():
-        with pytest.raises(RuntimeError, match="geometry"):
+        with pytest.raises(RuntimeError, match=match):
             resumed(batch, 1)
 
     assert jobs_started(spark, run) == 0

@@ -566,7 +566,7 @@ def dup_ngram_mask_step(
         total = batch_counts
         if prior is not None:
             prior_counts = (
-                prior[0].join(batch_counts.select("__h"), "__h", "left_semi")
+                prior()[0].join(batch_counts.select("__h"), "__h", "left_semi")
                 .groupBy("__h")
                 .agg(F.sum("__c").alias("__pc"))
             )

@@ -75,7 +75,7 @@ def novelty_score_step(
                 "n_grams bigint, novelty_ce double",
             )
         else:
-            model = _model_from_features(prior[0], num_buckets, smooth)
+            model = _model_from_features(prior()[0], num_buckets, smooth)
             # pinned BEFORE the count append: the scoring plan reads
             # the store's file listing, which a later batch's
             # compaction may rewrite — the returned frame must not

@@ -180,7 +180,8 @@ def kl_drift_step(
     Batch 0 (no prior) emits ZERO rows rather than a fabricated
     divergence. KL runs over the UNION vocabulary, both sides
     smoothed (absent grams take floor mass on either side — the
-    kl_divergence_profile rule)."""
+    kl_divergence_profile rule). ``ns`` is recorded as the store's
+    geometry, so resuming with other gram orders fails loud."""
     from ..functions.selection import DEFAULT_SMOOTH, _gram_features
 
     s_ = float(DEFAULT_SMOOTH if smooth is None else smooth)
@@ -193,7 +194,7 @@ def kl_drift_step(
                 [], "n_grams bigint, kl_to_prior double"
             )
         else:
-            prior_c = prior[0].groupBy("feature").agg(F.sum("cnt").alias("__c"))
+            prior_c = prior()[0].groupBy("feature").agg(F.sum("cnt").alias("__c"))
             full = bc.withColumnRenamed("cnt", "__cg").join(
                 prior_c, "feature", "full"
             )
@@ -238,6 +239,8 @@ def kl_drift_step(
         ),
         emit,
         id_col=id_col,
+        # the stored features are the grams of these orders
+        geometry={"family": "kl_drift", "ns": list(ns)},
         unique_ids=True,
         compact_every=compact_every,
     )
@@ -531,7 +534,7 @@ def _mixture_monitor_step(
             # non-string group column, breaking sinks that union
             gtype = batch_df.schema[group_col].dataType.simpleString()
             return batch_df.sparkSession.createDataFrame([], empty_ddl(gtype)), [None]
-        frames = ([stats] if has_rows else []) + list(prior or ())
+        frames = ([stats] if has_rows else []) + list(prior() if prior else ())
         per = (
             reduce(DataFrame.unionByName, frames)
             .groupBy(group_col)

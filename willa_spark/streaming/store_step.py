@@ -21,23 +21,27 @@ Per micro-batch ``b``, in this order:
    in-plan on the signature builders' input while the signatures are
    pinned (step 6), at no extra job — a NULL id equals no stored or
    batch id, so it would skip dedup;
-4. the strictly-prior reads (``before_batch=b``) of every half. A half
-   with no partition below ``b`` reads as absent, so a replay of a
+4. the coupled-halves check, on each half's partition listing: a half
+   with no partition below ``b`` counts as absent, so a replay of a
    batch whose first attempt crashed between two half writes finds the
    halves coupled again. Halves must be all present or all absent, and
    ``absent`` halves (written only by another mode of the same family)
-   must hold no prior data;
+   must hold no prior data. Steps 1, 2 and 4 read listings and small
+   files only, so a batch failing the geometry or a halves check starts
+   no Spark job beyond step 3's id aggregate (``unique_ids`` steps);
 5. one ``pinned()`` scope, released on every exit, so a failing retry
    leaks no cache entry;
-6. the signatures, eagerly pinned only now, after every guard: a batch
-   that fails a guard starts no Spark job and never pays the builder
-   (for the binary families, a decode);
-7. the family's emit. For the dedup families (``dedup_step``) that is
-   the drop set: one candidate-join-plus-verify ``pairs(a, b)`` probes
-   the batch against the prior halves, then runs the within-batch
-   self-join over the batch minus those drops (``id_a < id_b``); the
-   survivor election is min id, or ``score``'s best; the union is
-   pinned;
+6. the signatures, eagerly pinned only now, after every guard, so a
+   failing batch never pays the builder (for the binary families, a
+   decode);
+7. the family's emit, which reads the strictly-prior halves
+   (``before_batch=b``) when it needs them (the KL drift monitor skips
+   the read for a batch without features). For the dedup families
+   (``dedup_step``) that is the drop set: one candidate-join-plus-verify
+   ``pairs(a, b)`` probes the batch against the prior halves, then runs
+   the within-batch self-join over the batch minus those drops
+   (``id_a < id_b``); the survivor election is min id, or ``score``'s
+   best; the union (disjoint by construction) is pinned;
 8. each half's admitted rows appended to its ``ingest_batch=b``
    partition, in ``halves`` order — the write boundaries. A replay
    overwrites each of them and step 4 ignores them;
@@ -59,6 +63,7 @@ from ..pin import pin, pinned
 from .store import (
     _MANIFEST,
     _TMP,
+    _check_no_pending_compaction,
     store_append,
     store_compact_every,
     store_partitions,
@@ -150,13 +155,11 @@ def _check_batch_ids(batch_df: DataFrame, id_col: str, step_name: str) -> None:
         )
 
 
-def _read_prior(spark, path: str, batch_id: int) -> DataFrame | None:
-    """A half's rows below ``batch_id``; None when it has no such
-    partition (the replayed batch's own partition does not count)."""
-    df = store_read(spark, path, before_batch=batch_id)
-    if df is None or not any(b < batch_id for b in store_partitions(path)):
-        return None
-    return df
+def _has_prior(path: str, batch_id: int) -> bool:
+    """Whether a half holds a partition below ``batch_id`` (the replayed
+    batch's own partition does not count), from the listing alone."""
+    _check_no_pending_compaction(path)
+    return any(b < batch_id for b in store_partitions(path))
 
 
 def store_step(
@@ -176,9 +179,10 @@ def store_step(
     frame`` foreachBatch step. ``signatures(batch_df)`` gives the
     frame(s) to pin; ``emit(batch_df, sigs, prior)`` gives ``(out,
     rows)`` — the returned frame and one frame (or None) to append per
-    half — where ``prior`` is the tuple of strictly-prior halves, or
-    None on a store with no data below this batch. ``absent`` maps
-    sibling half names to why they must hold no data."""
+    half — where ``prior()`` reads the tuple of strictly-prior halves,
+    and ``prior`` is None on a store with no data below this batch.
+    ``absent`` maps sibling half names to why they must hold no
+    data."""
     paths = [_path(store_dir, h.name) for h in halves]
     targets = [(p, h.sort_key) for p, h in zip(paths, halves)]
     others = {name: _path(store_dir, name) for name in absent or {}}
@@ -190,10 +194,10 @@ def store_step(
             _check_geometry(store_dir, geometry, paths + list(others.values()))
         if unique_ids:
             _check_batch_ids(batch_df, id_col, step_name)
-        prior = [_read_prior(spark, p, batch_id) for p in paths]
-        held = [h.name or "root" for h, df in zip(halves, prior) if df is not None]
+        present = [_has_prior(p, batch_id) for p in paths]
+        held = [h.name or "root" for h, has in zip(halves, present) if has]
         if held and len(held) < len(halves):
-            missing = [h.name for h, df in zip(halves, prior) if df is None]
+            missing = [h.name for h, has in zip(halves, present) if not has]
             raise RuntimeError(
                 f"{step_name}: store at {store_dir} is inconsistent: the "
                 f"{', '.join(missing)} half is missing but "
@@ -203,11 +207,15 @@ def store_step(
                 "together"
             )
         for name, path in others.items():
-            if _read_prior(spark, path, batch_id) is not None:
+            if _has_prior(path, batch_id):
                 raise RuntimeError(
                     f"{step_name}: store at {store_dir} carries a {name}/ "
                     f"half: {absent[name]}"
                 )
+
+        def read_prior() -> tuple[DataFrame, ...]:
+            return tuple(store_read(spark, p, before_batch=batch_id) for p in paths)
+
         with pinned() as keep:
             checked = batch_df
             if not unique_ids:
@@ -225,7 +233,7 @@ def store_step(
             sigs = signatures(checked)
             sigs = keep(*(sigs if isinstance(sigs, tuple) else (sigs,)))
             sigs = sigs if isinstance(sigs, tuple) else (sigs,)
-            out, rows = emit(batch_df, sigs, None if not held else tuple(prior))
+            out, rows = emit(batch_df, sigs, read_prior if held else None)
             for p, h, r in zip(paths, halves, rows):
                 if r is not None:  # None: the batch adds nothing to this half
                     store_append(r, p, batch_id, sort_by=h.sort_key)
@@ -281,9 +289,7 @@ def _drop_within_batch(
 
 
 def _minus(df: DataFrame, drops: DataFrame, id_col: str = "id") -> DataFrame:
-    # a drop set holds ids of one micro-batch: broadcast it rather than
-    # shuffle both sides of every anti-join that reads it
-    return df.join(F.broadcast(drops), df[id_col] == F.col("__drop"), "left_anti")
+    return df.join(drops, df[id_col] == F.col("__drop"), "left_anti")
 
 
 def dedup_step(
@@ -317,7 +323,7 @@ def dedup_step(
             # pinned: the self-join's sides, the survivor election and
             # the drop union all read it
             cross_drop = pin(
-                pairs(side(sigs), prior)
+                pairs(side(sigs), prior())
                 .select(F.col("id_a").alias("__drop"))
                 .distinct()
             )
@@ -328,7 +334,8 @@ def dedup_step(
         )
         drops = _drop_within_batch(within, scores)
         if cross_drop is not None:
-            drops = cross_drop.unionByName(drops).distinct()
+            # disjoint: the within-batch side never sees a cross drop
+            drops = cross_drop.unionByName(drops)
         # ids only: pinned so the scope's signature caches can go
         drops = pin(drops)
         admitted = side(tuple(_minus(s, drops) for s in sigs))
