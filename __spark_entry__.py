@@ -29,11 +29,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Curated ≤50-entry set: the driver records oracle rows for at
-    most 50 queries, so this returns the subset where every DISTINCT
-    operator proof is visible (see willa_spark.queries.DRIVER_OMIT for
-    the omitted redundant entries — all still implemented, registered,
-    and benchmarked via willa_spark.queries.QUERIES)."""
+    """The fixed ≤50-entry gate willa_spark.queries.DRIVER_GATE: the
+    driver records oracle rows for at most 50 queries, so this returns
+    the 19 ``run_topology`` rows plus one oracle-bearing row per
+    operator family. The rest (willa_spark.queries.DRIVER_OMIT) are
+    still implemented, registered and benchmarked via
+    willa_spark.queries.QUERIES."""
     from willa_spark.queries import driver_queries
 
     return driver_queries()

@@ -128,6 +128,16 @@ def repo_nodeid(item) -> str:
     return path + item.nodeid[item.nodeid.index("::"):]
 
 
+def topology_rows() -> set[str]:
+    """The registry queries that run through ``run_topology``: the
+    paper's engine, which the driver gate always holds."""
+    import inspect
+
+    from willa_spark.queries import QUERIES
+
+    return {n for n, f in QUERIES.items() if "run_topology(" in inspect.getsource(f)}
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("WILLA_FULL_SUITE"):
         return

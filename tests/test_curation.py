@@ -2,9 +2,9 @@
 hand-computed expectations on tiny literal corpora, plan-shape
 assertions, Hypothesis invariants (partitioning invariance — the
 distributed-correctness property — plus conservation and a pure-Python
-differential oracle), and a DuckDB parity pin for the relational
-queries whose driver slots the curation ops took over (see
-queries.DRIVER_OMIT)."""
+differential oracle), and a DuckDB parity pin for every
+oracle-bearing query outside the fixed driver gate
+(queries.DRIVER_GATE) and for the gate's ``run_topology`` rows."""
 
 import duckdb
 import pytest
@@ -838,13 +838,17 @@ def test_full_curation_pipeline_chain(spark, tmp_path):
 
 
 # --------------------------------------------- omitted-query parity
-# EVERY oracle-bearing query omitted from the 50-entry driver set is
-# parity-pinned here, computed from DRIVER_OMIT so a future omission
-# can never silently lose its verification (an earlier revision pinned
-# a hand-written subset and left anti_join_customers unverified).
+# EVERY oracle-bearing query outside the 50-entry DRIVER_GATE is
+# parity-pinned here, computed from DRIVER_OMIT (the registry minus
+# the gate) so a row leaving the gate can never silently lose its
+# verification (an earlier revision pinned a hand-written subset and
+# left anti_join_customers unverified). The gate's run_topology rows
+# are pinned here too: they are the engine every change moves, and
+# tools/check_parity.py runs the gate outside the test suite.
+from conftest import topology_rows
 from willa_spark.queries import DRIVER_OMIT
 
-OMITTED = sorted(DRIVER_OMIT & set(ORACLE_SQL))
+OMITTED = sorted((DRIVER_OMIT & set(ORACLE_SQL)) | topology_rows())
 
 
 def test_corpus_profile_sketch_paths(spark):

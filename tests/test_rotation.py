@@ -1,13 +1,16 @@
-"""Structural invariants of the driver-gate rotation (queries.py's
-policy block made machine-checked): the partition arithmetic, the
-50-row driver cap, and the rows-only twin constraint hold for
-WHATEVER the current DRIVER_OMIT says — so the per-round gate edit
-can never silently strand a query or a proof (the checks each round
-ran by hand, r12 verdict #2, now permanent)."""
+"""Structural invariants of the driver gate (queries.DRIVER_GATE, the
+fixed set ``__spark_entry__.queries()`` returns): it names registered
+queries, fits the driver's 50-row cap, holds every ``run_topology``
+row, and keeps the rows-only twin constraint; DRIVER_OMIT is exactly
+the rest of the registry. Also: no round tag in the package source,
+and the test-runner helpers."""
 
+import re
+
+from conftest import REPO_ROOT, topology_rows
 from willa_spark.queries import (
+    DRIVER_GATE,
     DRIVER_OMIT,
-    EXHIBITION,
     ORACLE_SQL,
     QUERIES,
     ROWS_ONLY_TWINS,
@@ -17,18 +20,24 @@ from willa_spark.queries import (
 
 
 def test_omit_set_names_registered_queries():
-    """Every omitted name is a registered query — a typo'd or removed
-    name in DRIVER_OMIT silently widens the gate past the cap."""
-    assert DRIVER_OMIT <= set(QUERIES), DRIVER_OMIT - set(QUERIES)
+    """The gate names registered queries only — a typo'd or removed
+    name would silently shrink it — and DRIVER_OMIT is the rest of the
+    registry."""
+    assert DRIVER_GATE <= set(QUERIES), DRIVER_GATE - set(QUERIES)
+    assert DRIVER_OMIT == set(QUERIES) - DRIVER_GATE
 
 
 def test_gate_fits_the_driver_cap():
     """The driver records at most 50 oracle rows (in registration
     order); a gate past 50 silently drops the newest registrations
-    from the correctness record."""
+    from the correctness record. The gate holds every row that runs
+    through ``run_topology``: those rows are the paper's engine."""
     gate = driver_queries()
+    assert set(gate) == DRIVER_GATE
     assert len(gate) <= 50, len(gate)
     assert set(driver_oracles()) <= set(gate)
+    topology = topology_rows()
+    assert len(topology) == 19 and topology <= DRIVER_GATE, topology - DRIVER_GATE
 
 
 def test_every_oracle_names_a_registered_query():
@@ -54,30 +63,30 @@ def test_rows_only_twin_map_is_exact():
 def test_rows_only_gate_names_carry_their_twin_in_gate():
     """THE twin constraint: a rows-only name may be driver-visible
     only alongside at least one oracle-bearing family twin — a gate
-    where every twin rests records a weaker rows-only row with no
-    same-round hash-grade proof of the family."""
+    without any twin records a weaker rows-only row with no hash-grade
+    proof of the family."""
     gate = set(driver_queries())
     for name, twins in ROWS_ONLY_TWINS.items():
         if name in gate:
             assert any(t in gate for t in twins), (
                 f"rows-only gate name {name} with NO family twin of "
-                f"{twins} in the same gate — the FORWARD SCHEDULE's "
-                "twin keeps were not honored"
+                f"{twins} in the same gate"
             )
 
 
-def test_exhibition_rows_keep_their_proof():
-    """The exhibition retirement (capacity policy (a)) trades driver
-    gate rows, never correctness coverage: every exhibition name is a
-    registered query WITH a DuckDB oracle (so the automatic
-    omitted-parity pytest pins it every round) and rests in
-    DRIVER_OMIT."""
-    assert EXHIBITION <= set(QUERIES), EXHIBITION - set(QUERIES)
-    assert EXHIBITION <= set(ORACLE_SQL), EXHIBITION - set(ORACLE_SQL)
-    assert EXHIBITION <= DRIVER_OMIT, EXHIBITION - DRIVER_OMIT
-    # no rows-only name may ever be exhibited: its twin proof cadence
-    # is the rotation's, not the exhibition's
-    assert not (EXHIBITION & set(ROWS_ONLY_TWINS))
+def test_package_source_carries_no_round_tags():
+    """Comments, docstrings and literals in the package say why, not
+    when: a round tag (``r10``) names a review the reader cannot see,
+    and in a plan literal it changes the plan text."""
+    root = REPO_ROOT / "willa_spark"
+    tag = re.compile(r"\br[0-9]{2}\b")
+    hits = [
+        f"{p.relative_to(root)}:{n}"
+        for p in sorted(root.rglob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if tag.search(line)
+    ]
+    assert not hits, hits
 
 
 def test_fast_gate_skip_list_names_real_tests():

@@ -9,13 +9,21 @@ import shutil
 import pytest
 
 from test_parquet_source import jobs_started
-from willa_spark.streaming.ann import embedding_dedup_step, semantic_dedup_step
+from willa_spark.streaming.ann import (
+    LshAnnConfig,
+    embedding_dedup_step,
+    ivf_index_step,
+    lsh_index_step,
+    pq_index_step,
+    semantic_dedup_step,
+)
 from willa_spark.streaming.near_dedup import (
     minhash_dedup_step,
     simhash_dedup_step,
     winnow_dedup_step,
 )
 from willa_spark.streaming.novelty import novelty_score_step
+from willa_spark.streaming.sketches import cms_step, vocab_sketch_step
 
 T1 = "alpha bravo charlie delta echo foxtrot"
 T2 = "golf hotel india juliett kilo lima"
@@ -119,43 +127,66 @@ VEC1 = [(i + 10, v) for i, v in VEC0]  # exact copies of batch 0
 
 
 def _geometry_case(family, store, variant):
-    """(step, batch 0 frame maker, batch 1 frame maker) for one family
-    under one of two geometries."""
+    """(step, batch 0 frame maker, batch 1 frame maker, the directory
+    holding the geometry record) for one family under one of two
+    geometries."""
+    a = variant == "a"
+    vecs = lambda s: _vecs(s, VEC0), lambda s: _vecs(s, VEC1)
+    docs = lambda s: _docs(s, BATCH0), lambda s: _docs(s, BATCH1)
     if family == "embedding":
         step = embedding_dedup_step(
-            store, dim=4, n_planes=4, seed=3 if variant == "a" else 99,
-            id_col="doc_id",
+            store, dim=4, n_planes=4, seed=3 if a else 99, id_col="doc_id",
         )
-        return step, lambda s: _vecs(s, VEC0), lambda s: _vecs(s, VEC1)
-    if family == "semantic":
+        return step, *vecs, store
+    if family in ("semantic", "ivf"):
         cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
-        if variant == "b":
+        if not a:
             cents = [[0.0, 0.0, 1.0, 0.0], [0.0, 0.0, 0.0, 1.0]]
-        step = semantic_dedup_step(store, cents, id_col="doc_id")
-        return step, lambda s: _vecs(s, VEC0), lambda s: _vecs(s, VEC1)
-    step = novelty_score_step(store, num_buckets=1000 if variant == "a" else 7)
-    return step, lambda s: _docs(s, BATCH0), lambda s: _docs(s, BATCH1)
+        if family == "ivf":
+            return ivf_index_step(store, cents, id_col="doc_id"), *vecs, store
+        return semantic_dedup_step(store, cents, id_col="doc_id"), *vecs, store
+    if family == "lsh":
+        cfg = LshAnnConfig(dim=4, n_planes=4, seed=1 if a else 2, id_col="doc_id")
+        return lsh_index_step(store, cfg), *vecs, store
+    if family == "pq":
+        books = [[[1.0, 0.0], [0.0, 1.0]]] * 2
+        return pq_index_step(store, books, "doc_id", normalize=a), *vecs, store
+    if family == "cms":
+        step = cms_step(store, depth=2 if a else 3, width=16)
+        return step, *docs, os.path.join(store, "cms")
+    if family == "hll":
+        step = vocab_sketch_step(store, group_col="doc_id", lg_k=12 if a else 10)
+        return step, *docs, os.path.join(store, "vocab_sketches")
+    step = novelty_score_step(store, num_buckets=1000 if a else 7)
+    return step, *docs, store
 
 
-@pytest.mark.parametrize("family", ["embedding", "semantic", "novelty"])
+def _collect(out):
+    return None if out is None else out.collect()
+
+
+@pytest.mark.parametrize(
+    "family", ["embedding", "semantic", "novelty", "lsh", "ivf", "pq", "cms", "hll"]
+)
 def test_store_geometry_guard_every_family(spark, tmp_path, family):
-    """The vector and novelty stores record their geometry like the
-    minhash/winnow ones: resuming with other hyperplanes, centroids or
-    buckets fails loud instead of re-admitting copies or mis-scoring.
-    A store without a record starts one, so older stores resume."""
+    """Every store records its geometry like the minhash/winnow ones:
+    resuming with other hyperplanes, centroids, codebooks, buckets or
+    sketch sizes fails loud instead of re-admitting copies, mis-scoring
+    or serving keys no probe reaches. A store without a record starts
+    one, so older stores resume."""
     store = os.path.join(str(tmp_path), "st")
-    step, first, second = _geometry_case(family, store, "a")
-    step(first(spark), 0).collect()
-    assert os.path.exists(os.path.join(store, "_geometry.json"))
-    other, _, _ = _geometry_case(family, store, "b")
+    step, first, second, rec = _geometry_case(family, store, "a")
+    _collect(step(first(spark), 0))
+    assert os.path.exists(os.path.join(rec, "_geometry.json"))
+    other = _geometry_case(family, store, "b")[0]
     with pytest.raises(RuntimeError, match="geometry"):
         other(second(spark), 1)
-    os.remove(os.path.join(store, "_geometry.json"))
-    same, _, _ = _geometry_case(family, store, "a")
-    out = same(second(spark), 1).collect()
-    if family != "novelty":
+    os.remove(os.path.join(rec, "_geometry.json"))
+    same = _geometry_case(family, store, "a")[0]
+    out = _collect(same(second(spark), 1))
+    if family in ("embedding", "semantic"):
         assert out == []  # every row is an exact copy of batch 0
-    assert os.path.exists(os.path.join(store, "_geometry.json"))
+    assert os.path.exists(os.path.join(rec, "_geometry.json"))
 
 
 @pytest.mark.parametrize("guard", ["geometry", "coupled_halves", "absent_half"])

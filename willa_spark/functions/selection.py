@@ -433,7 +433,7 @@ def source_centroid(
                 f"source_centroid: target source {target_source!r} "
                 "has ragged vector lengths or NULL elements — a "
                 "mixed-dimension centroid would silently NULL every "
-                "document's score (r10 review)"
+                "document's score"
             )
         ).cast("array<double>"),
     ).otherwise(

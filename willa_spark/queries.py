@@ -1161,13 +1161,10 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Per-family planted-recall proofs (VERDICT r06 #3). Round 4's composite
-# hash_family_recall ran every hash family inside ONE driver row — ~9.5 s
-# of opaque timing conflating six proofs, growing ~1.6 s per family. It
-# is RETIRED in favor of one oracle-checked row PER family (strictly
-# stronger: the gate hashes each family's recall separately, and each
-# family prices its own cost in bench.py). The plant constructions are
-# unchanged from the composite; each docstring states the per-family
+# Per-family planted-recall proofs: one oracle-checked row PER family,
+# not one composite row running every hash family (strictly stronger:
+# the gate hashes each family's recall separately, and each family
+# prices its own cost in bench.py). Each docstring states the per-family
 # MATHEMATICAL recall guarantee — recall 100% by construction, not
 # probabilistically, so n_found = n_planted is what the oracle asserts.
 
@@ -1181,8 +1178,8 @@ def _plant_guarded_id(off: int) -> F.Column:
     real docs and silently corrupt every plant-derived answer (voided
     recall guarantees, false duplicate pairs in user-visible dup
     queries). Shared by _recall_docs AND every standalone planted
-    corpus (ADVICE r07: the guard must ride everywhere the plant is
-    used, not just the recall rows). Same discipline as
+    corpus (the guard must ride everywhere the plant is used, not
+    just the recall rows). Same discipline as
     curation.plant_eval_leaks."""
     return F.when(
         F.col("doc_id") >= off,
@@ -1400,8 +1397,8 @@ def q_recall_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     "recall_image_phash",
     # own CTE even though it matches recall_simhash textually today:
     # the modulus below is _phash_planted_corpus's plant modulus (20),
-    # NOT the simhash plant's — sharing a CTE coupled them silently
-    # (ADVICE r06); changing either plant now desynchronizes exactly
+    # NOT the simhash plant's — sharing a CTE coupled them silently;
+    # changing either plant now desynchronizes exactly
     # one oracle, loudly.
     oracle="""
     WITH ph AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents
@@ -1437,7 +1434,7 @@ def q_recall_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "recall_audio_fp",
     # modulus 25 = _audio_planted_corpus's plant modulus, deliberately
     # different from the image/simhash plants' 20 so no two families'
-    # oracles can silently couple (ADVICE r06).
+    # oracles can silently couple.
     oracle="""
     WITH au AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents
                 WHERE doc_id % 25 = 0)
@@ -1445,8 +1442,8 @@ def q_recall_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_recall_audio_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Acoustic-fingerprint recall proof (NEW r7 — the audio member of
-    the hamming family): every 25th doc's binary payload (fake PCM via
+    """Acoustic-fingerprint recall proof (the audio member of the
+    hamming family): every 25th doc's binary payload (fake PCM via
     the injected byte-sensitive codec) is planted again under
     doc_id + 1e6. Identical bytes ⇒ identical samples ⇒ identical
     64-frame energy envelope ⇒ identical threshold fingerprint ⇒
@@ -1961,11 +1958,10 @@ def q_late_shipment_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =====================================================================
-# round-2 driver coverage for the previously pytest-only operators
-# (VERDICT r1: J2/J3, J8, A1, A5, A6, A8, P2, P3, P5, C1 had no
-# queries() entry — all SQL-expressible; here each runs through the
-# topology DSL so the driver oracle exercises the ENGINE path, not a
-# hand-built DataFrame shortcut)
+# driver coverage for the J2/J3, J8, A1, A5, A6, A8, P2, P3, P5 and C1
+# operators (all SQL-expressible): each runs through the topology DSL
+# so the driver oracle exercises the ENGINE path, not a hand-built
+# DataFrame shortcut
 # =====================================================================
 
 _H12_MS = 12 * HOUR_MS
@@ -2829,7 +2825,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FUZZY eval-set decontamination (r8 VERDICT ask #5): flag every
+    """FUZZY eval-set decontamination: flag every
     (training doc, eval item) pair whose distinct-3-gram overlap
     FRACTION reaches 0.1 — the PaLM-style fraction screen that
     catches PARAPHRASED leakage the exact any-hit 8-gram screen
@@ -2846,10 +2842,10 @@ def q_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, hit volume bounded by the eval set. Streaming twin:
     ``corpus_pipeline.corpus_curation_step(fuzzy_eval_sets=...)``.
 
-    The eval selection pre-filters to items with ≥1 3-gram (r10
-    advice): eval_ngram_sets fails LOUD on sub-n items by contract,
-    and without the filter a future SF whose 97-stride contains a
-    sub-3-token doc would hard-fail this REGISTERED row instead of
+    The eval selection pre-filters to items with ≥1 3-gram:
+    eval_ngram_sets fails LOUD on sub-n items by contract, and
+    without the filter a future SF whose 97-stride contains a
+    sub-3-token doc would hard-fail this registered row instead of
     screening; the oracle needs no twin change — its ev CTE forms
     3-grams directly, so sub-3-token items never had rows there
     (the filter aligns the engines, it doesn't diverge them)."""
@@ -2964,9 +2960,7 @@ def q_dup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence filter → position semi-join → per-doc gaps-and-islands
     window — three short-key shuffles, no all-pairs; the oracle groups
     on raw n-gram strings (value-identical to the xxhash64 grouping
-    absent 64-bit collisions). Parked mid-r8 under the rotation policy
-    (gate already at exactly 50) with the automatic DuckDB-parity
-    pytest pin — MUST rotate into the r9 gate."""
+    absent 64-bit collisions)."""
     docs = read_docs_spread(spark, sf_dir)
     spans = D.dup_ngram_spans(docs, n=5)
     return spans.select(
@@ -3026,8 +3020,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the 1-row (N, avgdl) stats ride broadcast joins, and ranking
     rounds to 6 decimals BEFORE row_number with a doc_id tie-break so
     both engines order identically (cross-engine double summation
-    differs in the last ulps only). Parked mid-r8 under the rotation
-    policy with the automatic parity pin — MUST rotate into r9."""
+    differs in the last ulps only)."""
     from willa_spark.functions import retrieval as R
 
     docs = read_docs_spread(spark, sf_dir).select("doc_id", "text")
@@ -3337,9 +3330,9 @@ def _planted_binary_corpus(docs: DataFrame, off: int, modulus: int):
     ``modulus``-th doc under doc_id + off. Each family passes its OWN
     modulus at the call site (image 20, audio 25, video 30 —
     deliberately distinct so no two families' plants or oracles can
-    silently couple, ADVICE r06; the modulus is visible next to each
-    family's oracle). Base ids ride the ``_plant_guarded_id`` check
-    (ADVICE r07: a corpus whose ids reach ``off`` would alias planted
+    silently couple; the modulus is visible next to each family's
+    oracle). Base ids ride the ``_plant_guarded_id`` check (a corpus
+    whose ids reach ``off`` would alias planted
     twins onto real docs and emit false duplicate pairs in the
     standalone dup queries — fail loud HERE, not only in the recall
     rows). Returns (corpus, planted_originals, members)."""
@@ -3504,8 +3497,7 @@ def q_video_fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint equi-join kernel (``winnow_pair_counts``) → pairs
     sharing >= 2 distinct frame hashes — the shot-fingerprint
     containment design, completing the image/audio/video trio. Recall
-    is proven by ``recall_video_fp`` (oracle-bearing; both parked
-    mid-r7 under the rotation policy — see DRIVER_OMIT); streaming
+    is proven by ``recall_video_fp`` (oracle-bearing); streaming
     twin: ``streaming.near_dedup.video_fp_dedup_step``."""
     from .functions.multimodal import fake_video_decoder, video_fingerprint_pairs
 
@@ -3527,7 +3519,7 @@ def _video_planted_corpus(docs: DataFrame, off: int):
 @query(
     "recall_video_fp",
     # modulus 30 = _video_planted_corpus's plant modulus (distinct from
-    # image's 20 / audio's 25 — no silent oracle coupling, ADVICE r06).
+    # image's 20 / audio's 25 — no silent oracle coupling).
     oracle="""
     WITH vd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents
                 WHERE doc_id % 30 = 0)
@@ -3565,7 +3557,7 @@ def q_recall_video_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------- r8:
+# --------------------------------------------------------------------
 # precision rows — the DUAL of the recall family. The 8 recall rows
 # prove planted dups are FOUND; these prove just-over-threshold
 # near-misses are NOT found. Each row carries BOTH arms so it is
@@ -3609,7 +3601,7 @@ def _precision_sig_rows(
     The true/false counts share ONE conditional aggregate for the same
     reason (the pigeonhole self-join ran twice as separate aggs).
 
-    DUAL-PROGRAM STATUS (complete as of r9): every hash/containment/
+    DUAL-PROGRAM STATUS (complete): every hash/containment/
     ANN family carries a recall row AND a precision row (this harness
     for the hamming families; fp-frame surgery for video/winnow/
     audio-segment; three verify arms for ANN) — EXCEPT minhash, BY
@@ -3784,7 +3776,7 @@ def q_precision_video_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_precision_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing precision proof (dual of ``recall_winnow``, closing
-    the r8 dual program) — the containment analogue at TEXT
+    the dual program) — the containment analogue at TEXT
     granularity, the exact ``precision_video_fp`` pattern: per planted
     original (every 20th doc with >= k = 5 tokens, so >= 1 winnowing
     fingerprint exists), the exact twin owns EVERY fingerprint and
@@ -3852,8 +3844,8 @@ def q_precision_audio_seg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``min_shared_segments = 2`` (``audio_segment_pairs`` /
     ``audio_segment_dedup_step`` default). Corpus-wide fp frame like
     the video dual (segment fps are byte-derived — no organic hot
-    keys at test scale; the r8 driver ran the uncapped corpus-wide
-    join green in ``recall_audio_seg``); the pinned frame is (id,
+    keys at test scale; the driver ran the uncapped corpus-wide join
+    green in ``recall_audio_seg``); the pinned frame is (id,
     8-byte fp) rows, PCM never leaves the scan stage."""
     from .functions.multimodal import (
         decode_audio_segment_fp_frame,
@@ -3909,7 +3901,7 @@ def q_precision_audio_seg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_precision_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN precision proof (dual of ``recall_ann_lsh``, closing the r8
+    """ANN precision proof (dual of ``recall_ann_lsh``, closing the
     dual program for the ANN families): three oracle-pinned arms over
     the LSH top-10 of the planted self-queries (every 50th vector
     querying itself — ``_ann_recall_parts``):
@@ -3929,9 +3921,9 @@ def q_precision_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
       be the planted self; a bucket-key mismatch between index and
       probe sides, a dropDuplicates bug, or a tie-break inversion
       flips it.
-    - ``n_bound_violations`` = 0 — QUALITY BAND vs the exact baseline
-      (the VERDICT-r8 form): every returned neighbor's cosine must be
-      within 0.05 of the brute-force 10th-best for its query
+    - ``n_bound_violations`` = 0 — QUALITY BAND vs the exact baseline:
+      every returned neighbor's cosine must be within 0.05 of the
+      brute-force 10th-best for its query
       (measured max gap on the deterministic corpus: 0.0 / 0.0042 /
       0.0060 at sf0.001/0.01/0.1 — the band holds with ~8× margin,
       the mixing rows' measured-band discipline). The brute-force
@@ -3998,7 +3990,7 @@ def q_precision_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------- r8: audio containment
+# ----------------------------------------------------- audio containment
 _ASEG_PAD = bytes([0x5A]) * 32  # hop-aligned flank for embedded plants
 
 
@@ -4091,9 +4083,9 @@ def q_recall_audio_seg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------------ r8: mixing rows
-# The mixing trio (sample salt-0 / repeat salt-1 / split salt-2) was
-# pytest-proven in r7; these rows make repeat_dataset and
+# ---------------------------------------------------------- mixing rows
+# The mixing trio (sample salt-0 / repeat salt-1 / split salt-2) is
+# pytest-proven; these rows make repeat_dataset and
 # train_val_test_split driver-visible. DuckDB cannot compute Spark's
 # xxhash64, so the oracles check the SALT-FREE projections exactly
 # (floor-copy counts, exhaustive+disjoint partition) while the
@@ -4230,12 +4222,8 @@ def q_mixing_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# REGISTERED r10 (the 100th name — parked through r9 per the capacity
-# plan, entered in r10's one free slot, displacing the
-# session_windows keep; see the Round 10 rotation note below). The
-# oracle was pre-written in r9 and parity-pinned by
-# tests/test_selection.py::test_dsir_weights_oracle_parity before the
-# first driver row — the same de-risking the r8 parked entries had.
+# DSIR importance weights. The oracle is also parity-pinned by
+# tests/test_selection.py::test_dsir_weights_oracle_parity.
 DSIR_WEIGHTS_ORACLE = r"""
 WITH t AS (
   SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
@@ -4326,11 +4314,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# SECOND REGISTRATION CANDIDATE (r10/r11 — same parked-with-oracle
-# de-risking as dsir_weights above; the CAPACITY NOTE below prices the
-# slots): hybrid lexical+semantic retrieval via reciprocal-rank
-# fusion. Registering it requires either the period-3 widening or a
-# retirement (see CAPACITY DECISION).
+# Hybrid lexical+semantic retrieval via reciprocal-rank fusion.
 HYBRID_RRF_ORACLE = rf"""
 WITH t AS (
   SELECT doc_id, {_RAW_TOKS_SQL} AS toks FROM documents
@@ -4348,7 +4332,7 @@ WITH t AS (
   -- in self-review). The id < 2500 cap BOUNDS the query set at 50
   -- regardless of corpus scale: the exact-cosine arm is the
   -- brute-force baseline, and its cost must stay corpus x CONSTANT,
-  -- never corpus x corpus-proportional-queries (r9 verdict #5 — the
+  -- never corpus x corpus-proportional-queries (the
   -- precision_ann_lsh bounded-query-set pattern)
   SELECT doc_id AS query_id FROM documents
   WHERE doc_id % 50 = 0 AND doc_id < 2500
@@ -4428,10 +4412,10 @@ def q_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOUNDED (doc_id % 50 == 0 AND doc_id < 2500 — at most 50 queries
     at ANY corpus scale, the precision_ann_lsh pattern) so the
     brute-force arm costs corpus x constant, never corpus x
-    corpus-proportional queries (r9 verdict #5: the unbounded form
-    measured 25x at 10x corpus x 10x queries); the at-scale twin
-    fuses lsh_topk under the bucket-count rule instead, measured FLAT
-    per-query at 10x/10x (BASELINE.md r9 addendum)."""
+    corpus-proportional queries (the unbounded form measured 25x at
+    10x corpus x 10x queries); the at-scale twin fuses lsh_topk under
+    the bucket-count rule instead, measured FLAT per-query at 10x/10x
+    (BASELINE.md)."""
     from willa_spark.functions import retrieval as R
 
     docs = read_docs_spread(spark, sf_dir).select("doc_id", "text")
@@ -4469,13 +4453,11 @@ def q_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# THIRD REGISTRATION CANDIDATE (r10/r11 — the parked-with-oracle
-# discipline; slots priced by the CAPACITY DECISION): the sketch
-# profile's band proof. Exact columns hash-checked cross-engine; the
-# sketch columns are verified IN-PLAN against the exact aggregates and
-# exported as band booleans the oracle asserts TRUE (the mixing
-# fracs_in_band pattern — an approx value itself can never hash-match
-# a different engine's sketch).
+# The sketch profile's band proof. Exact columns hash-checked
+# cross-engine; the sketch columns are verified IN-PLAN against the
+# exact aggregates and exported as band booleans the oracle asserts TRUE
+# (the mixing fracs_in_band pattern — an approx value itself can never
+# hash-match a different engine's sketch).
 SKETCH_PROFILE_ORACLE = rf"""
 WITH t AS (
   SELECT lang, {_RAW_TOKS_SQL} AS toks FROM documents
@@ -4551,9 +4533,8 @@ def q_sketch_profile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# FOURTH REGISTRATION CANDIDATE (r10/r11 — parked-with-oracle
-# discipline, CAPACITY DECISION prices the slots): token-window
-# document chunking, the retrieval-indexing / packing primitive.
+# Token-window document chunking, the retrieval-indexing / packing
+# primitive.
 CHUNK_DOCS_ORACLE = r"""
 WITH t AS (
   -- mirrors the Spark side's blank-document rule: NULL/blank text is
@@ -4596,13 +4577,11 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# FIFTH REGISTRATION CANDIDATE (queued r10 for the r11 period-3 gate's
-# free slots; the parked-with-oracle discipline): CCNet-style
-# perplexity-proxy quality banding — the one r9 selection-family
-# operator with no driver-row path yet (DSIR covers the likelihood
-# RATIO; this is the single-model absolute signal). Fully
-# SQL-expressible (the DSIR oracle's gram arithmetic with one model),
-# so the row is hash-grade end to end.
+# CCNet-style perplexity-proxy quality banding — the selection family's
+# single-model signal (DSIR covers the likelihood RATIO; this is the
+# single-model absolute signal). Fully SQL-expressible (the DSIR
+# oracle's gram arithmetic with one model), so the row is hash-grade end
+# to end.
 PERPLEXITY_BANDS_ORACLE = r"""
 WITH t AS (
   SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
@@ -4677,16 +4656,14 @@ def q_perplexity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# SIXTH + SEVENTH REGISTRATION CANDIDATES (queued r10): the PQ / IVF-PQ
-# ANN families' driver rows — the band-proof form (the
-# sketch_profile_bands pattern: an approximate index's output can
-# never hash-match another engine, so the row carries EXACT columns
-# the oracle reproduces plus in-plan-verified invariant booleans the
-# oracle asserts TRUE; a violated band raise_errors, never silently
-# hash-mismatches). Thresholds are measured floors with margin
-# (tools: per-query recall ≥ 0.6 and means 0.75–0.98 across all three
-# SFs at refine=200) — the exact integer differential lives in
-# tests/test_pq.py.
+# The PQ / IVF-PQ ANN families' driver rows — the band-proof form (the
+# sketch_profile_bands pattern: an approximate index's output can never
+# hash-match another engine, so the row carries EXACT columns the oracle
+# reproduces plus in-plan-verified invariant booleans the oracle asserts
+# TRUE; a violated band raise_errors, never silently hash-mismatches).
+# Thresholds are measured floors with margin (tools: per-query recall ≥
+# 0.6 and means 0.75–0.98 across all three SFs at refine=200) — the
+# exact integer differential lives in tests/test_pq.py.
 PQ_RECALL_ORACLE = r"""
 SELECT vec_id AS query_id, CAST(10 AS BIGINT) AS n_results,
        TRUE AS self_top1, TRUE AS recall_ok, TRUE AS mean_recall_ok
@@ -4787,12 +4764,11 @@ def q_pq_recall_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-10 with refine=300 exact rescoring, verified in-plan against
     the bounded-query brute-force baseline — rank-1 self, per-query
     recall@10 ≥ 0.5, mean ≥ 0.7 (measured floors 0.6 / 0.84 at sf0.1
-    with margin). PRICE, settled at registration (r11, the r10
-    verdict's precondition): the r10 ~15 s note was job-dispatch +
+    with margin). PRICE: an earlier ~15 s was job-dispatch +
     Column-tree construction, not data — fusing the m per-subspace
     Lloyd jobs into one corpus pass per round and collapsing the
     codebook literals to one transform-over-nested-literal brought it
-    to ~5 s steady-state at sf0.1 (BASELINE.md r11), in line with the
+    to ~5 s steady-state at sf0.1 (BASELINE.md), in line with the
     other heavy proof rows (recall_minhash 4.4 s); the bounded query
     set is the flat-ADC serving contract's own precondition (pq_topk
     docstring)."""
@@ -4818,13 +4794,11 @@ def q_ivfpq_recall_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     round, refine=300 exact rescoring — same in-plan verification
     arms as q_pq_recall_bands (measured floors 0.6 / 0.78 at sf0.1
     with margin). Probe volume is the probed cells' codes, never the
-    corpus (the bulk-serving path's own plan). PRICE, settled at
-    registration (r11): ~10 s steady-state at sf0.1 after the r11
-    training fusion + tree shrink (down from the r10 note's 17.2 s;
-    BASELINE.md r11) — the remaining cost is two quantizer trainings
-    + encode + the brute-force proof arm, accepted as the family's
-    one driver row. SCALE HONESTY (the r10 verdict's condition):
-    cells is FIXED at 8 here for cross-SF determinism, and the
+    corpus (the bulk-serving path's own plan). PRICE: ~10 s
+    steady-state at sf0.1 after the training fusion + tree shrink
+    (down from 17.2 s; BASELINE.md) — the remaining cost is two
+    quantizer trainings + encode + the brute-force proof arm. SCALE
+    HONESTY: cells is FIXED at 8 here for cross-SF determinism, and the
     BASELINE.md 10× row measured 2.4× at that fixed shape — the cost
     of NOT scaling the quantizer, kept as a contract-by-
     counterexample; production sizes cells ~∛N–√N with corpus growth
@@ -4854,10 +4828,10 @@ def q_ivfpq_recall_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# EIGHTH + NINTH REGISTRATION CANDIDATES (queued r10): the count-min
-# sketch and epoch-shuffle families' driver rows — band-proof form
-# (exact columns the oracle reproduces + in-plan-verified invariants;
-# thresholds are measured values with margin, see each docstring).
+# The count-min sketch and epoch-shuffle families' driver rows —
+# band-proof form (exact columns the oracle reproduces +
+# in-plan-verified invariants; thresholds are measured values with
+# margin, see each docstring).
 CMS_HEAVY_HITTERS_ORACLE = rf"""
 WITH t AS (
   SELECT unnest({_TOKS_SQL}) AS term FROM documents
@@ -4884,7 +4858,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from; the sketch side is depth×width rows through the shuffle
     regardless of vocabulary.
 
-    TRIAGE NOTE (r10 advice): the Markov-bound arm here and
+    TRIAGE NOTE: the Markov-bound arm here and
     epoch_shuffle_bands' epochs_decorrelated band are the ONLY
     PROBABILISTIC arms in the whole band-proof set (every other band
     is a structural invariant). A future corpus/SF failing one of
@@ -4946,7 +4920,7 @@ def q_epoch_shuffle_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     Everything is one hash projection + small aggs; nothing scales
     past the corpus scan.
 
-    TRIAGE NOTE (r10 advice): epochs_decorrelated ([1/64, 3/64]
+    TRIAGE NOTE: epochs_decorrelated ([1/64, 3/64]
     around the independent-draw 1/32; measured 0.026–0.036) is one of
     the TWO probabilistic arms in the band-proof set (the other:
     cms_heavy_hitters' Markov bound) — a future legitimate-but-
@@ -4967,7 +4941,7 @@ def q_epoch_shuffle_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         # BOTH epochs' bijections — a salt regression hitting only
         # epoch 2 (e.g. the epoch literal dropped from one call) must
-        # not hide behind an epoch-1-only check (r10 review)
+        # not hide behind an epoch-1-only check
         F.count_distinct(F.col("p1")).alias("__np1"),
         F.count_distinct(F.col("p2")).alias("__np2"),
         F.sum(F.when(F.col("s1") == F.col("s2"), 1).otherwise(0)).alias("__same_s"),
@@ -5000,13 +4974,12 @@ def q_epoch_shuffle_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# TENTH REGISTRATION CANDIDATE (queued r10): Unicode text
-# normalization — the pre-dedup cleanup every real pipeline runs
-# (decomposed vs composed spellings of one glyph otherwise hash to
-# different exact-dup fingerprints and different shingles). The
-# corpus is ASCII, so every 50th document gets a PLANTED copy with a
-# decomposed accent + a control byte + doubled spaces — both engines
-# build the same bytes, so the normalized text itself is hash-grade.
+# Unicode text normalization — the pre-dedup cleanup every real pipeline
+# runs (decomposed vs composed spellings of one glyph otherwise hash to
+# different exact-dup fingerprints and different shingles). The corpus
+# is ASCII, so every 50th document gets a PLANTED copy with a decomposed
+# accent + a control byte + doubled spaces — both engines build the same
+# bytes, so the normalized text itself is hash-grade.
 NORMALIZE_DOCS_ORACLE = r"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents
@@ -5067,10 +5040,10 @@ def q_normalize_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# ELEVENTH REGISTRATION CANDIDATE (queued r10): the BPE family's
-# driver row — band-proof form over the trained tokenizer (merge
-# arithmetic itself is not SQL-expressible; the exact overlap-count /
-# non-overlap-merge differential lives in tests/test_bpe.py).
+# The BPE family's driver row — band-proof form over the trained
+# tokenizer (merge arithmetic itself is not SQL-expressible; the exact
+# overlap-count / non-overlap-merge differential lives in
+# tests/test_bpe.py).
 BPE_CONSISTENCY_ORACLE = rf"""
 WITH w AS (
   SELECT DISTINCT unnest({_TOKS_SQL}) AS word FROM documents
@@ -5135,11 +5108,11 @@ def q_bpe_consistency_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# TWELFTH REGISTRATION CANDIDATE (queued r10): embedding-space domain
-# relevance — the semantic counterpart of DSIR's lexical target model
-# (score every document's cosine to a target source's mean embedding;
-# the mixture-weighting / target-domain-selection signal). Fully
-# SQL-expressible, hash-grade end to end.
+# Embedding-space domain relevance — the semantic counterpart of DSIR's
+# lexical target model (score every document's cosine to a target
+# source's mean embedding; the mixture-weighting /
+# target-domain-selection signal). Fully SQL-expressible, hash-grade end
+# to end.
 DOMAIN_RELEVANCE_ORACLE = r"""
 WITH ed AS (
   SELECT d.doc_id, d.source, e.embedding::DOUBLE[] AS v
@@ -5180,16 +5153,14 @@ def q_domain_relevance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# THIRTEENTH REGISTRATION CANDIDATE (queued r10): SEMANTIC
-# decontamination — the third screen in the family (exact 8-gram,
-# fuzzy overlap-fraction, and embedding-cosine), catching
-# translations/heavy-rewrites that share no n-grams with the eval
-# item. The corpus has no organic ≥0.9 cross-doc cosines (measured 0
-# at sf0.01/0.1), so every eval vector gets a PLANTED directional
-# perturbation (first element += 0.2·‖v‖ — cosine lands in
-# [√0.96 ≈ 0.9798, 1.0] for ANY vector, proven in the planting note
-# below);
-# both engines construct identical doubles, so the row hashes.
+# SEMANTIC decontamination — the third screen in the family (exact
+# 8-gram, fuzzy overlap-fraction, and embedding-cosine), catching
+# translations/heavy-rewrites that share no n-grams with the eval item.
+# The corpus has no organic ≥0.9 cross-doc cosines (measured 0 at
+# sf0.01/0.1), so every eval vector gets a PLANTED directional
+# perturbation (first element += 0.2·‖v‖ — cosine lands in [√0.96 ≈
+# 0.9798, 1.0] for ANY vector, proven in the planting note below); both
+# engines construct identical doubles, so the row hashes.
 DECONTAMINATE_SEMANTIC_ORACLE = r"""
 WITH e AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
@@ -5208,7 +5179,7 @@ WITH e AS (
   SELECT c.vec_id, ev.vec_id AS eval_id,
          -- NULLIF mirrors Spark's try_divide: a zero-norm vector
          -- yields NULL (filtered), never NaN (which DuckDB would
-         -- compare >= threshold — r10 review)
+         -- compare >= threshold)
          round(list_dot_product(c.v, ev.v)
                / NULLIF(sqrt(list_dot_product(c.v, c.v))
                         * sqrt(list_dot_product(ev.v, ev.v)), 0),
@@ -5231,8 +5202,8 @@ def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     by 0.2·‖v‖. Why that perturbation is threshold-safe for ANY
     vector: with a = v₁/‖v‖ ∈ [−1, 1], cos(v, v′) =
     (1 + 0.2a)/√(1.04 + 0.4a); f′ ∝ (0.04 + 0.2a), so the minimum is
-    at a = −0.2 with value √0.96 ≈ 0.9798 (r10 review corrected the
-    earlier a≈0/0.9806 claim), reaching 1.0 at a = ±1 — always
+    at a = −0.2 with value √0.96 ≈ 0.9798 (not the a≈0 value
+    0.9806), reaching 1.0 at a = ±1 — always
     inside the 0.9 screen, never dependent on the corpus. Threshold applies to the 6dp-ROUNDED
     cosine in both engines (the banding rule). Plan: broadcast the
     bounded eval side, map-only cosine filter over the corpus — the
@@ -5246,7 +5217,7 @@ def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread the corpus scan (the read_docs_spread discipline): the
     # sf-dir parquet is one file, so the map-only cosine screen would
     # otherwise run on 1-2 input partitions regardless of cores —
-    # no-op on a properly-partitioned corpus, and the r11 sf1→sf10
+    # no-op on a properly-partitioned corpus, and the sf1→sf10
     # scale row (BASELINE.md) is measured with it
     emb = _spread(
         read_table(spark, sf_dir, "embeddings"), "vec_id"
@@ -5275,15 +5246,13 @@ def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# FOURTEENTH REGISTRATION CANDIDATE (queued r10, registered r11; r12
-# revision — the r11 verdict's #6): per-stratum KL divergence from
-# the corpus distribution — the distribution-shift monitor (which
-# languages/sources diverge from the mix; the drift alarm between
-# snapshots). Fully SQL-expressible; hash-grade. The r12 form runs
-# the VOCAB-BOUND path (top_v=600, min_count=2 over BIGRAMS — the
-# n>1 space the knobs exist for; the synthetic corpus has only 31
-# distinct unigrams, so no unigram knob setting could bind): the
-# kept grams become THE feature space, every total / |V| / floor
+# Per-stratum KL divergence from the corpus distribution — the
+# distribution-shift monitor (which languages/sources diverge from the
+# mix; the drift alarm between snapshots). Fully SQL-expressible;
+# hash-grade. The row runs the VOCAB-BOUND path (top_v=600, min_count=2
+# over BIGRAMS — the n>1 space the knobs exist for; the synthetic corpus
+# has only 31 distinct unigrams, so no unigram knob setting could bind):
+# the kept grams become THE feature space, every total / |V| / floor
 # mass re-derives from the truncated set, and the top_v cut is
 # deterministic (count desc, gram asc). The untruncated default path
 # stays pinned by tests/test_selection.py's Python differential.
@@ -5338,7 +5307,7 @@ def q_kl_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language KL divergence from the corpus BIGRAM
     distribution over the BOUNDED vocabulary (functions/
     selection.py::kl_divergence_profile with top_v=600, min_count=2
-    — the r11 verdict's #6: the vocab-bound knobs, oracle-proven):
+    — the vocab-bound knobs, oracle-proven):
     the kept grams are the feature space (totals, |V|, and floor
     mass re-derive from the truncated set — the exact profile over
     the truncated vocabulary, not an approximation of the full one),
@@ -5360,11 +5329,8 @@ def q_kl_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# REGISTERED r11 (the 114th name, entered by displacing the
-# late_shipment_priorities keep — the dsir_weights displacement move;
-# legal because that keep is green in CORRECTNESS_r10): the trainable
-# quality classifier's band row. Training is iterative (not
-# SQL-expressible); the exact distributed-vs-pure-Python gradient
+# The trainable quality classifier's band row. Training is iterative
+# (not SQL-expressible); the exact distributed-vs-pure-Python gradient
 # differential lives in tests/test_classifier.py, so the driver row is
 # band-proof (the bpe_consistency_bands form).
 QUALITY_CLASSIFIER_ORACLE = r"""
@@ -5438,7 +5404,7 @@ def q_quality_classifier_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coalesce(…, False): an empty class makes its mean NULL, and a
     # NULL band predicate would slide through _band_checked's when()
     # as TRUE — the degenerate corpus must fail loud, not silently
-    # skip the separation check (r11 review)
+    # skip the separation check
     return agg.select(
         "n_docs",
         "n_pos",
@@ -5457,15 +5423,12 @@ def q_quality_classifier_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# REGISTERED r12 (parked r11 under the parked-with-oracle discipline
-# — the dsir_weights de-risking; 3-SF pre-flight, parity pin, and
-# the 10x scale row all pre-dated registration): selection-signal
-# quality measured by ROC AUC. Composes two oracle-proven pieces —
-# the dsir_weights importance arithmetic and the mid-rank AUC
-# formula (ties get the analytic ½ credit, so no id tie-break is
-# needed and the value is engine-independent) — into one hash-grade
-# row: "how well does the DSIR signal retrieve its own quality
-# seed".
+# Selection-signal quality measured by ROC AUC. Composes two
+# oracle-proven pieces — the dsir_weights importance arithmetic and the
+# mid-rank AUC formula (ties get the analytic ½ credit, so no id
+# tie-break is needed and the value is engine-independent) — into one
+# hash-grade row: "how well does the DSIR signal retrieve its own
+# quality seed".
 SELECTION_AUC_ORACLE = r"""
 WITH t AS (
   SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
@@ -5524,13 +5487,12 @@ FROM cum
 
 
 # --------------------------------------------------------------------
-# REGISTERED r12 (parked r11 under the parked-with-oracle discipline):
-# the reliability diagram of the squashed DSIR signal — exercises
-# classifier.calibration_bins in a hash-grade driver row. The bin key
-# is computed on the 6dp-ROUNDED probability (the banding rule: a
-# last-ulp cross-engine difference at a bin boundary must not flip a
-# bin), and the sigmoid argument is the 6dp dsir_weights value the
-# oracle already reproduces bit-for-bit.
+# The reliability diagram of the squashed DSIR signal — exercises
+# classifier.calibration_bins in a hash-grade driver row. The bin key is
+# computed on the 6dp-ROUNDED probability (the banding rule: a last-ulp
+# cross-engine difference at a bin boundary must not flip a bin), and
+# the sigmoid argument is the 6dp dsir_weights value the oracle already
+# reproduces bit-for-bit.
 DSIR_CALIBRATION_ORACLE = r"""
 WITH t AS (
   SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
@@ -5635,14 +5597,12 @@ def q_selection_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# FIRST r13 REGISTRATION (parked r12 under the parked-with-oracle
-# discipline, REGISTERED r13 — r12 verdict #1): per-document conditional perplexity
-# under a corpus-trained sequential bigram LM (functions/lm.py — the
-# CCNet / KenLM quality signal, Wenzek et al. 2020 §3.3; distinct
-# from perplexity_bands' bag-of-grams cross-entropy: this conditions
-# every token on its predecessor, so word ORDER matters). Fully
-# SQL-expressible (counts, joins, one log-sum per doc) — hash-grade
-# at 6dp, the dsir_weights rounding discipline.
+# Per-document conditional perplexity under a corpus-trained sequential
+# bigram LM (functions/lm.py — the CCNet / KenLM quality signal, Wenzek
+# et al. 2020 §3.3; distinct from perplexity_bands' bag-of-grams
+# cross-entropy: this conditions every token on its predecessor, so word
+# ORDER matters). Fully SQL-expressible (counts, joins, one log-sum per
+# doc) — hash-grade at 6dp, the dsir_weights rounding discipline.
 LM_PERPLEXITY_ORACLE = r"""
 WITH t AS (
   SELECT doc_id,
@@ -5711,13 +5671,12 @@ def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# SECOND r13 REGISTRATION (parked r12, registered r13): interpolated
-# Kneser-Ney perplexity over the same bigram model frame — the
-# smoothing KenLM actually ships (Chen & Goodman 1999), so with this
-# row the LM family covers both the teaching form (Jelinek-Mercer)
-# and the production form. Type-count continuation probabilities +
-# the counts-of-counts discount estimate, all SQL-expressible —
-# hash-grade at 6dp.
+# Interpolated Kneser-Ney perplexity over the same bigram model frame —
+# the smoothing KenLM actually ships (Chen & Goodman 1999), so with this
+# row the LM family covers both the teaching form (Jelinek-Mercer) and
+# the production form. Type-count continuation probabilities + the
+# counts-of-counts discount estimate, all SQL-expressible — hash-grade
+# at 6dp.
 KN_PERPLEXITY_ORACLE = r"""
 WITH t AS (
   SELECT doc_id,
@@ -5808,14 +5767,13 @@ def q_kn_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# THIRD r13 REGISTRATION (parked r12, registered r13): line-level
-# boilerplate stripping (RefinedWeb §3.1.3 / C4 line rules — the
-# navigation/menu/counter screen). The synthetic corpus has no
-# newlines, so the row uses the planted-construction convention:
-# 5-doc "pages" assembled in-query (deterministic doc_id order) with
-# four planted boilerplate lines — caps-nav, bullet, digit counter,
-# short — which the operator must strip while keeping every real
-# line. Full-text hash-grade (the normalize_docs precedent).
+# Line-level boilerplate stripping (RefinedWeb §3.1.3 / C4 line rules —
+# the navigation/menu/counter screen). The synthetic corpus has no
+# newlines, so the row uses the planted-construction convention: 5-doc
+# "pages" assembled in-query (deterministic doc_id order) with four
+# planted boilerplate lines — caps-nav, bullet, digit counter, short —
+# which the operator must strip while keeping every real line. Full-text
+# hash-grade (the normalize_docs precedent).
 BOILERPLATE_STRIP_ORACLE = r"""
 WITH pages AS (
   SELECT CAST(floor(doc_id / 5) AS BIGINT) AS page_id,
@@ -5903,20 +5861,18 @@ def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# REGISTERED r14 (parked r13 under the parked-with-oracle discipline —
-# the r12 verdict's #5): the TRUE CCNet deployment shape.
-# lm_perplexity / kn_perplexity self-score (train on the corpus,
-# score the corpus — the dsir_weights convention); CCNet's production
-# signal trains the LM on a TARGET domain (Wikipedia) and scores the
-# raw crawl against it (Wenzek et al. 2020 §3.3). Here the target is
-# the repo's standing quality-seed convention — every 13th doc, the
-# selection_auc / dsir label — and the scored side is everything
-# else, pushed through ``make_bigram_scorer`` (the FROZEN-model path:
-# model + vocab-sized logp tables pinned ONCE at construction — the
-# per-micro-batch deployment shape the one-shot rows never exercise
-# in a driver row). Kneser-Ney smoothing, i.e. what KenLM ships and
-# CCNet's wiki LM actually uses. Fully SQL-expressible — hash-grade
-# at 6dp.
+# The TRUE CCNet deployment shape. lm_perplexity / kn_perplexity
+# self-score (train on the corpus, score the corpus — the dsir_weights
+# convention); CCNet's production signal trains the LM on a TARGET
+# domain (Wikipedia) and scores the raw crawl against it (Wenzek et al.
+# 2020 §3.3). Here the target is the repo's standing quality-seed
+# convention — every 13th doc, the selection_auc / dsir label — and the
+# scored side is everything else, pushed through ``make_bigram_scorer``
+# (the FROZEN-model path: model + vocab-sized logp tables pinned ONCE at
+# construction — the per-micro-batch deployment shape the one-shot rows
+# never exercise in a driver row). Kneser-Ney smoothing, i.e. what KenLM
+# ships and CCNet's wiki LM actually uses. Fully SQL-expressible —
+# hash-grade at 6dp.
 #
 # 100 TB shape: in production the target is a SEPARATE small corpus,
 # so "train" never touches the crawl; in this self-contained row the
@@ -6022,15 +5978,13 @@ def q_ccnet_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# REGISTERED r14 (parked r13, the second queue entry): one DoReMi
-# Group-DRO mixture-reweighting step (Xie et al. 2023) over the
-# per-domain (lang) token-weighted cross-entropy under the corpus's
+# One DoReMi Group-DRO mixture-reweighting step (Xie et al. 2023) over
+# the per-domain (lang) token-weighted cross-entropy under the corpus's
 # own bigram LM — the LOSS-side mixture signal beside kl_profile's
 # distribution-side monitor. weight_g ∝ share_g · exp(η·(ce_g −
 # ce_corpus)), Σ = 1, η = 1. The per-domain agg keys on ~5 langs, so
 # everything after the one corpus transition explode is
-# domain-cardinality-sized. Fully SQL-expressible — hash-grade at
-# 6dp.
+# domain-cardinality-sized. Fully SQL-expressible — hash-grade at 6dp.
 DOMAIN_MIXTURE_ORACLE = r"""
 WITH t AS (
   SELECT doc_id, lang,
@@ -6114,25 +6068,22 @@ def q_domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# r15 REGISTRATION CANDIDATE (parked r14 under the parked-with-oracle
-# discipline): the BOUNDED DoReMi fixed-point trajectory — the r13
-# verdict's #4 shape (a). domain_mixture_weights samples ONE
-# Group-DRO update; the published loop ITERATES it, and with the
-# reference model + per-domain losses frozen the iteration is the
+# The BOUNDED DoReMi fixed-point trajectory. domain_mixture_weights
+# samples ONE Group-DRO update; the published loop ITERATES it, and with
+# the reference model + per-domain losses frozen the iteration is the
 # exponentiated-gradient dynamics on the mixture simplex, whose
-# convergence arithmetic (mass drifting monotonically toward the
-# hardest domain, the mixture loss ce_mix re-derived from the TILTED
-# weights each step) this row pins under an oracle, 6 unrolled steps.
-# ce_mix is emitted per step so the oracle checks the inner scalar,
-# not just the normalized weights. The corpus pays exactly the
-# one-step row's audited plan (one transition explode +
-# broadcast-gated vocab joins + one salted per-group agg); the
-# iteration is domain-cardinality driver arithmetic over a bounded
-# collect (the quality-classifier epoch-loop discipline — K tiny
-# Spark jobs per step would buy scheduler overhead, nothing else, at
-# any corpus scale). Fully SQL-expressible — the oracle unrolls the
-# K steps as CTEs generated by _traj_oracle (ONE spelling of the
-# IEEE arithmetic, never K hand-copies).
+# convergence arithmetic (mass drifting monotonically toward the hardest
+# domain, the mixture loss ce_mix re-derived from the TILTED weights
+# each step) this row pins under an oracle, 6 unrolled steps. ce_mix is
+# emitted per step so the oracle checks the inner scalar, not just the
+# normalized weights. The corpus pays exactly the one-step row's audited
+# plan (one transition explode + broadcast-gated vocab joins + one
+# salted per-group agg); the iteration is domain-cardinality driver
+# arithmetic over a bounded collect (the quality-classifier epoch-loop
+# discipline — K tiny Spark jobs per step would buy scheduler overhead,
+# nothing else, at any corpus scale). Fully SQL-expressible — the oracle
+# unrolls the K steps as CTEs generated by _traj_oracle (ONE spelling of
+# the IEEE arithmetic, never K hand-copies).
 def _traj_oracle(steps: int, eta: float = 1.0) -> str:
     """Unroll the trajectory's K steps as DuckDB CTEs on top of the
     DOMAIN_MIXTURE_ORACLE's per-domain frame. The tilt spells
@@ -6234,22 +6185,21 @@ def q_domain_mixture_trajectory(
 
 
 # --------------------------------------------------------------------
-# SECOND r15 REGISTRATION CANDIDATE (parked r14): the ORACLE-CHECKED
-# CCNet-style admission composition — the r13 verdict's #4 shape (b)
-# as a registered row (its corpus_curation_batch face, which composes
-# the NON-SQL-expressible minhash dedup, is pytest-pinned end-to-end
-# by test_ccnet_end_to_end_composition; this row chains the
-# SQL-expressible production stages so the whole admission is
-# hash-grade): Gopher quality screen → PII redaction → exact dedup
-# (min-id survivor per md5 fingerprint of the CLEAN text) → frozen
-# target-trained KN scoring of the clean text → admit ppl ≤ the cut.
-# Every stage is the SAME expression its standalone row verifies
-# (gopher_quality_filter / pii_redaction / training_data_prep's dedup
-# / ccnet_perplexity's model+scoring), so a drift in any stage breaks
-# this query's hash — the training_data_prep composition discipline
-# applied to the CCNet production path. The admission compares the
-# 6dp-ROUNDED ppl on BOTH engines (raw doubles at the threshold
-# boundary could differ in ulps — the training_data_prep lesson).
+# The ORACLE-CHECKED CCNet-style admission composition (its
+# corpus_curation_batch face, which composes the NON-SQL-expressible
+# minhash dedup, is pytest-pinned end-to-end by
+# test_ccnet_end_to_end_composition; this row chains the SQL-expressible
+# production stages so the whole admission is hash-grade): Gopher
+# quality screen → PII redaction → exact dedup (min-id survivor per md5
+# fingerprint of the CLEAN text) → frozen target-trained KN scoring of
+# the clean text → admit ppl ≤ the cut. Every stage is the SAME
+# expression its standalone row verifies (gopher_quality_filter /
+# pii_redaction / training_data_prep's dedup / ccnet_perplexity's
+# model+scoring), so a drift in any stage breaks this query's hash — the
+# training_data_prep composition discipline applied to the CCNet
+# production path. The admission compares the 6dp-ROUNDED ppl on BOTH
+# engines (raw doubles at the threshold boundary could differ in ulps —
+# the training_data_prep lesson).
 #
 # Plan/scale shape: one crawl scan through the map-only screens +
 # redaction chain, ONE fingerprint exchange (the min-id window), then
@@ -6425,15 +6375,15 @@ def q_ccnet_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# r16 REGISTRATION CANDIDATE (parked r15 — the r14 verdict's #5: at
-# most ONE candidate, priced ≤2 s): the LEARNED-FILTER admission
-# composition — the GPT-3-style trained-quality-classifier twin of
-# ccnet_curation's LM-perplexity admission, and the gap that verdict
-# named worthiest. Production shape: gopher screen → exact min-id
-# dedup on the raw-text fingerprint → train the logistic-regression
-# quality filter on the LABELED SEED third of the survivors → score
-# the CRAWL complement under the frozen weights → admit
-# quality_prob ≥ 0.5. Every stage is an audited standalone
+# Not registered: the LEARNED-FILTER admission composition, parity-
+# pinned by its own oracle test
+# (tests/test_classifier.py::test_classifier_curation_oracle_parity) —
+# the GPT-3-style trained-quality-classifier twin of ccnet_curation's
+# LM-perplexity admission. Production shape: gopher screen → exact
+# min-id dedup on the raw-text fingerprint → train the
+# logistic-regression quality filter on the LABELED SEED third of the
+# survivors → score the CRAWL complement under the frozen weights →
+# admit quality_prob ≥ 0.5. Every stage is an audited standalone
 # expression (gopher_quality_filter / training_data_prep's dedup /
 # quality_classifier_bands' feature-build + preconditioned-train +
 # map-only score); doc_feature_vectors' carry_cols= (the
@@ -6602,145 +6552,14 @@ def q_classifier_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Queries OMITTED from the driver-visible correctness set: the driver
-# records oracle rows for at most 50 queries (in registration order),
-# so every DISTINCT operator proof must land inside that window.
-#
-# ROTATION POLICY (VERDICT r03 #2): the omit set rotates each round so
-# every registered query regains a green driver row on its period-3
-# due date. Every oracle-bearing omitted name below stays DuckDB-
-# parity-pinned by
-# tests/test_curation.py::test_omitted_relational_parity (computed
-# FROM this set, so the pin rotates automatically).
-#
-# Round 15 rotation (period-3: a name last green in round k is due
-# k+3, resting TWO rounds). Registered queries: 123 = the 121 r14
-# names + the two r15 registrations domain_mixture_trajectory,
-# ccnet_curation (parked r14 with full oracles — the trajectory's a
-# GENERATED MATERIALIZED-CTE unroll — parity-pinned by
-# test_selection.py::test_domain_mixture_trajectory_oracle_parity /
-# tests/test_lm.py::test_ccnet_curation_oracle_parity,
-# pre-flighted green against their oracles at sf0.01,
-# 10x rows pre-measured r14 at 1.27-1.53x / 1.96x, combined sf0.1
-# price ≈6.7 s — the r14 verdict's #1 with every precondition
-# pre-met).
-#
-# r15 gate (50) = the 32 r12-green COHORT returns (due r15) + the 2
-# registrations + 16 keeps from the r14 gate: the 16 cheapest
-# r14-gate rows by the BENCH_LAST per-query record (rekey_transform
-# 0.19 s ... multimodal_decode 0.58 s, 5.92 s combined at
-# driver-record prices — the budget-policy keep rule). Keeping the
-# 16 re-greens their clocks to r18 (the exhibition round, whose gate
-# they share with the 10 retirees — 26 due names, within cap).
-#
-# Twin audit in-gate: NO rows-only name is gate-visible this round —
-# the r12-rest cohort contains none and no keep is rows-only
-# (audio_fingerprint_dups rests due r17 WITH its green oracle twin
-# recall_audio_fp in that same r17 cohort). Machine-checked by
-# test_rotation.py as always.
-#
-# Rests 73 = the 14 EXHIBITION retirees (10 r12-green from the r14
-# tranche + 4 r14-green from tranche-2, FIRED mid-r15 — see the
-# EXHIBITION block below; every-4th-round cadence from r18) + the 29
-# r13-gate names not kept in r14 (due r16, unchanged below; every
-# one green hash-grade or twin-proved rows-only in CORRECTNESS_r13;
-# all 8 rows-only names rest there WITH an oracle twin in the same
-# cohort) + the 30 r14-gate names not kept here (due r17; every one
-# green hash-grade in CORRECTNESS_r14 except the by-design rows-only
-# audio_fingerprint_dups, twin-proved in-gate r14 and resting WITH
-# recall_audio_fp in this same r17 cohort).
-#
-# FORWARD SCHEDULE (registry 123 = 109 on period-3 + 14 exhibition):
-#   r16 gate = the 29 r13-green rests + up to 21 keeps/new. All 8
-#   rows-only names return here WITH their twins in-cohort
-#   (minhash->recall_minhash, simhash->precision_simhash,
-#   winnow->recall_winnow, phash->precision_image_phash,
-#   video->both, audio_seg->recall_audio_seg, ann_lsh->recall_ann_lsh,
-#   ann_ivf->recall_ann_ivf).
-#   r17 gate = the 30 r14-green rests (audio_fingerprint_dups with
-#   recall_audio_fp in-cohort) + up to 20 keeps/new.
-#   r18 = the first EXHIBITION round: the 14 retirees (both tranches)
-#   AND the 16 r15-keeps are due (30 names, within cap).
-#
-# CAPACITY POLICY (the r12 verdict's #6, decided BEFORE the wall;
-# option (a) EXECUTED r14 — see EXHIBITION below): period-3 at gate
-# 50 covers at most 150 rotating names; the rotating population is
-# 109 -> 41 free slots, i.e. ~4-5 more rounds of growth at the
-# r11-r15 cadence (1-3 registrations/round). When a further
-# registration would push past 150, the registering round executes,
-# in order of preference: (a) RETIRE redundant relational rows into
-# the rotating EXHIBITION set (tranches 1+2 both fired — the next
-# tranche must be NAMED with arithmetic before it is needed, see the
-# lever record below); then (b) widen the gate only if the driver's 50-row
-# recording cap rises (it is the driver's limit, not ours); else (c)
-# cap registration. The trigger round runs (a) in the SAME round as
-# its registration commit, with the arithmetic recorded here.
-#
-# BENCH BUDGET POLICY (the r11 verdict's #4): the working ceiling for
-# bench.py's full-registry pass at sf0.1 / local[32] is 150 s against
-# the QUIET-HOST close (BASELINE.md records the arithmetic each
-# round; driver records under neighbor load are recorded alongside,
-# loadavg-bracketed). Every registration arrives with a PRE-MEASURED
-# sf0.1 price in BASELINE.md BEFORE the registration commit. If the
-# projected close exceeds the ceiling: (a) trim proof overhead, (b)
-# retire redundant sub-second rows, (c) raise the ceiling explicitly
-# with the arithmetic, in that order.
-#
-# r15 BUDGET ARITHMETIC: projection = 141.5 (the r14 quiet close,
-# loadavg 0.4) + 2.7 + 4.0 (the two registration prices, pre-measured
-# r14, BASELINE.md addenda) ≈ 148.2 s < 150 — no trim/retire forced
-# at registration time, ~1.8 s headroom in a ±18 s same-tree noise
-# band.
-#
-# LEVER RECORD r15: the pre-committed TRANCHE-2 lever FIRED — two
-# close-window runs read 186.2 / 181.6 s (quiet 1-min starts 0.55 /
-# 0.97; the trigger precedent, never serial-re-run fishing). The four
-# named rows ({distinct_parts_per_supplier, late_shipment_priorities,
-# regional_supplier_volume, top_parts_per_supplier}, ≈4.8 s at this
-# day's prices) moved to EXHIBITION; all were r14-green resting due
-# r17, so no live gate was touched, and 12 period-3 slots freed. The
-# pricing_summary ESCALATION was deliberately NOT fired: −0.67 s
-# cannot change a ~180 s reading, and it would cost a live driver
-# row. The residual excess is weather-class by per-query
-# decomposition (BASELINE.md r15 addenda: shared-111 uniform 1.27×
-# vs the r14 quiet close incl. plan-untouched rows; an ISOLATED
-# quiet re-measure of the biggest mover read 1.1-1.25×).
-# PRE-COMMITTED NEXT LEVER (r16+, decide-before-need): a THIRD
-# tranche is NOT pre-approved — the relational superset's remaining
-# sub-second rows (pricing_summary 0.67, order_priority_counts-kin)
-# sum under ~2 s and cannot close a weather-band gap; if two r16
-# quiet closes exceed 150 on a NON-weather decomposition (movers
-# concentrated in touched plans), trim proof overhead on the named
-# movers first (budget policy (a)), then raise the ceiling explicitly
-# with arithmetic (policy (c)) — weather-band readings are
-# adjudicated by decomposition + isolated re-measure, not levers.
-# NOT eligible ever: anti_join_customers (the set-op exemplar
-# deliberately left rotating), skew_salted_agg/join (skew-discipline
-# exemplars, not redundant).
-#
-# Previous rounds for the record: r14 registered 121 (119 + ccnet_
-# perplexity / domain_mixture_weights); gate = 27 r11-cohort returns
-# + 2 registrations + 21 keeps with the ONE deliberate recall_winnow
-# swap (rested so it returns r16 in-cohort with rows-only twin
-# winnow_overlap_pairs); 49 hash + 1 twin-proved rows-only, 0 fail;
-# the retire-to-exhibition lever EXECUTED after two >150 s close
-# windows (arithmetic in BASELINE.md). r13 registered 119; gate =
-# 39 r10-cohort returns + 3 registrations + 8 keeps; 42 hash + 8
-# twin-proved rows-only, 0 fail. r12 registered 116; the first
-# all-hash-grade gate. r11 activated period-3 at registry 114. Full
-# mappings: git history of this block.
-# A parked (unregistered) q_*/`*_ORACLE` pair keeps its parity
-# pinned by its own oracle test (classifier_curation:
-# tests/test_classifier.py::test_classifier_curation_oracle_parity).
 # Every rows-only registered name (no DuckDB oracle — xxhash64/LSH
-# internals a SQL twin cannot reproduce) and the oracle-bearing
-# FAMILY TWINS that prove it (recall_* and/or precision_* rows over
-# the same planted corpus): the rotation's TWIN CONSTRAINT (a
-# rows-only name may sit in the driver gate only when at least ONE
-# of its twins is in the SAME gate) is asserted structurally by
-# tests/test_rotation.py from this map, so a future DRIVER_OMIT edit
-# can never strand a rows-only row without its proof — the check
-# every round used to run by hand (r12 verdict #2).
+# internals a SQL twin cannot reproduce) and the oracle-bearing FAMILY
+# TWINS that prove it (recall_* and/or precision_* rows over the same
+# planted corpus). The TWIN CONSTRAINT — a rows-only name may sit in
+# the driver gate only when at least ONE of its twins is in the same
+# gate — is asserted by tests/test_rotation.py from this map, so an
+# edit of DRIVER_GATE can never strand a rows-only row without its
+# proof.
 ROWS_ONLY_TWINS: dict[str, tuple[str, ...]] = {
     "minhash_near_dups": ("recall_minhash",),
     "simhash_near_dups": ("recall_simhash", "precision_simhash"),
@@ -6753,139 +6572,85 @@ ROWS_ONLY_TWINS: dict[str, tuple[str, ...]] = {
     "ann_ivf_topk": ("recall_ann_ivf",),
 }
 
-# THE EXHIBITION SET: redundant sub-second single-operator relational
-# rows retired from the driver-gate rotation (capacity policy (a)
-# above). ZERO oracle loss: every name keeps its DuckDB oracle and
-# stays in DRIVER_OMIT, so
-# tests/test_curation.py::test_omitted_relational_parity pins it
-# every round; operator coverage stays: all are §2.6 superset rows
-# whose operators the composed rows also exercise
-# (anti_join_customers, the set-op sibling, remains in the normal
-# rotation). bench.py benches them with the rest of the registry.
-EXHIBITION = frozenset(
+# The driver records oracle rows for at most 50 queries, so
+# ``__spark_entry__.queries()`` returns this fixed gate. The 19
+# ``run_topology`` rows come first: they are the paper's engine. The
+# other 31 are one oracle-bearing row per operator family. Where a
+# family has a recall and a precision row, the gate keeps the recall
+# row, which proves the detector finds every planted copy. The
+# precision rows and the nine rows-only detectors stay outside, so
+# every gate row gets a hash-grade oracle check and the twin
+# constraint holds trivially. kn_perplexity stays out because
+# ccnet_curation scores with Kneser-Ney smoothing too;
+# pq_recall_bands because ivfpq_recall_bands trains, encodes and
+# probes PQ codes as well (on IVF residuals); dsir_calibration
+# because selection_auc evaluates the same DSIR signal.
+# tests/test_curation.py::test_omitted_relational_parity pins every
+# oracle-bearing row outside the gate, and the engine rows, at sf0.001.
+DRIVER_GATE = frozenset(
     {
-        "above_avg_orders",  # 0.50 s — correlated-subquery decorrelation
-        "except_customers",  # 0.29 s — EXCEPT
-        "forecast_revenue",  # 0.24 s — linear trend projection
-        "intersect_customers",  # 0.29 s — INTERSECT
-        "monthly_revenue_growth",  # 0.36 s — window lag/growth
-        "pivot_order_status",  # 0.27 s — PIVOT
-        "rollup_revenue",  # 0.69 s — ROLLUP
-        "semi_join_customers",  # 0.25 s — LEFT SEMI
-        "shipping_priority",  # 0.66 s — TPC-H Q3 shape
-        "top_customers",  # 0.42 s — top-n per group
-        # -- TRANCHE 2 (r15, the PRE-COMMITTED lever above, fired on
-        # -- two >150 s close windows: 186.2 / 181.6 from quiet
-        # -- starts; BASELINE.md r15 addenda carry the arithmetic and
-        # -- the weather adjudication). All four r14-green hash-grade,
-        # -- resting due r17 at firing time — no live gate touched;
-        # -- their operators stay covered by the composed rows + the
-        # -- omitted-parity pytest. 12 period-3 slots freed.
-        "distinct_parts_per_supplier",  # 1.09 s — count-distinct rollup
-        "late_shipment_priorities",  # 1.09 s — date-window filter joins
-        "regional_supplier_volume",  # 1.00 s — multi-join agg (TPC-H Q5 kin)
-        "top_parts_per_supplier",  # 1.63 s — top-n per group (wide)
-    }
-)
-
-# The r16 gate edit (r15 verdict #1/#9): EVERY optimizer-touched row
-# is driver-oracle-certified the same round its code changed. The 29
-# r13-cohort names came due r16 on the normal period-3 schedule (they
-# include most of the r16 multimodal family and dsir_weights); TEN
-# r14-cohort names were pulled forward a round because r15/r16 touched
-# them (pq/ivfpq/bpe/quality_classifier/perplexity_bands from the r15
-# _fastlit+fusion window; audio_fingerprint_dups + recall_audio_fp /
-# recall_image_phash / recall_simhash for the r16 fused media kernels
-# — this also re-surfaces audio_fingerprint_dups to the driver with
-# its oracle twin IN gate, closing the r14 `no_oracle` gap; and
-# hybrid_rrf_topk for the r16 postings-repartition check). Eleven r15
-# keeps certify the r15-pinned model builders and the two r16-touched
-# gate residents (multimodal_decode, precision_audio_seg).
-DRIVER_OMIT = EXHIBITION | frozenset(
-    {
-        # -- r14-gate names not kept in r15 (the 20 of 30 still
-        # -- resting after the ten optimizer-touched pulls above):
-        # -- due r17; every one green hash-grade in CORRECTNESS_r14.
+        # -- the engine: every row that runs through run_topology
+        "filter_map",
+        "fanout_flatmap",
+        "merge_streams",
+        "running_sum_changelog",
+        "interval_join",
+        "asof_enrich",
         "broadcast_enrich",
-        "ccnet_perplexity",
-        "cms_heavy_hitters",
-        "decontaminate",
-        "decontaminate_fuzzy",
-        "domain_mixture_weights",
-        "dup_line_filter",
-        "dup_ngram_spans",
-        "epoch_shuffle_bands",
-        "line_dedup",
-        "normalize_docs",
-        "packed_sequences_loaded",
-        "precision_ann_lsh",
-        "precision_winnow",
-        "regrouped_retraction",
-        "repetition_ngram_filter",
-        "sketch_profile_bands",
-        "suppressed_window_final",
         "table_table_asof",
         "windowed_left_join",
-        # -- r15-gate names not kept in r16 (39): due r18; every one
-        # -- green in CORRECTNESS_r15 (hash-grade). No rows-only name
-        # -- rests in this cohort (all nine sit in the r16 gate with
-        # -- their twins — see ROWS_ONLY_TWINS).
-        "anti_join_customers",
-        "asof_enrich",
-        "changelog_filter",
-        "chunk_documents",
-        "doc_fingerprints",
-        "doc_length_histogram",
-        "domain_relevance",
-        "exact_dup_groups",
-        "fanout_flatmap",
-        "filter_map",
-        "gopher_quality_filter",
-        "group_by_fn_agg",
-        "hopping_window_count",
-        "kl_profile",
-        "lang_id",
-        "latest_per_key",
-        "merge_streams",
-        "mixing_train_val_test",
+        "windowed_outer_join",
         "nary_join_fold",
-        "near_dup_keep_best",
-        "ngram_jaccard_pairs",
-        "pack_sequences",
-        "pii_redaction",
-        "pricing_summary",
-        "quality_score",
-        "rekey_fanout",
-        "rekey_transform",
-        "running_sum_changelog",
-        "sequence_manifest",
-        "session_windows",
-        "skew_salted_agg",
-        "skew_salted_join",
-        "stratified_sample",
-        "token_budget_cap",
-        "token_stats",
-        "top_bigrams",
-        "tumbling_window_sum",
-        "value_only_rekey",
+        "group_by_fn_agg",
+        "suppressed_window_final",
+        "regrouped_retraction",
         "with_dedupe_first",
+        "rekey_fanout",
+        "value_only_rekey",
+        "rekey_transform",
+        "changelog_filter",
+        # -- one oracle-bearing row per operator family
+        "training_data_prep",
+        "near_dup_clusters",
+        "embedding_topk",
+        "embedding_near_dups",
+        "recall_minhash",
+        "recall_simhash",
+        "recall_winnow",
+        "recall_ann_lsh",
+        "recall_ann_ivf",
+        "recall_image_phash",
+        "recall_audio_fp",
+        "recall_video_fp",
+        "recall_audio_seg",
+        "multimodal_decode",
+        "corpus_profile",
+        "corpus_keep_by_source",
+        "bm25_topk",
+        "hybrid_rrf_topk",
+        "packed_shard_roundtrip",
+        "mixing_repeat_epochs",
+        "dsir_weights",
+        "selection_auc",
+        "perplexity_bands",
+        "lm_perplexity",
+        "ivfpq_recall_bands",
+        "bpe_consistency_bands",
+        "decontaminate_semantic",
+        "quality_classifier_bands",
+        "boilerplate_strip",
+        "domain_mixture_trajectory",
+        "ccnet_curation",
     }
 )
-
+DRIVER_OMIT = frozenset(QUERIES) - DRIVER_GATE
 
 
 def driver_queries():
-    """The ≤50-entry curated set the driver's oracle gate sees."""
-    return {k: v for k, v in QUERIES.items() if k not in DRIVER_OMIT}
+    """The ≤50-entry gate the driver's oracle check sees, in
+    registration order."""
+    return {k: v for k, v in QUERIES.items() if k in DRIVER_GATE}
 
 
 def driver_oracles():
-    return {k: v for k, v in ORACLE_SQL.items() if k not in DRIVER_OMIT}
-
-
-def all_queries():
-    return dict(QUERIES)
-
-
-def all_oracles():
-    return dict(ORACLE_SQL)
+    return {k: v for k, v in ORACLE_SQL.items() if k in DRIVER_GATE}

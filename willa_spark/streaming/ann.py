@@ -64,7 +64,7 @@ from ..functions.similarity import (
     _centroid_sims,
 )
 from .store import store_append, store_compact_every, store_read
-from .store_step import Half, dedup_step, write_json
+from .store_step import Half, check_geometry, dedup_step, write_json
 
 
 @dataclass(frozen=True)
@@ -102,17 +102,26 @@ def lsh_index_step(
     (``store_compact_every``, bucket-clustered so row-group pruning
     survives the merge) — without it a long-running index stream
     accumulates one partition directory per micro-batch forever,
-    the same unbounded-metadata path the dedup stores bound. Probe
+    the same unbounded-metadata path the dedup stores bound.
+    (dim, n_planes, n_tables, seed) define the hyperplanes and are
+    recorded as the store's geometry: resuming with others fails loud
+    instead of serving buckets no probe can reach. Probe
     results are unchanged by compaction: probes read the whole store,
     and merged rows are relabeled to the HIGHEST merged id — still
     strictly below the compaction watermark, so every live
     ``before_batch`` window sees exactly the same rows (the
     store.py contract)."""
 
+    geometry = {
+        "family": "lsh", "dim": cfg.dim, "n_planes": cfg.n_planes,
+        "n_tables": cfg.n_tables, "seed": cfg.seed,
+    }
+
     def step(batch_df: DataFrame, batch_id: int) -> None:
         store_compact_every(
             batch_df.sparkSession, [(store_dir, "bucket")], batch_id, compact_every
         )
+        check_geometry(store_dir, geometry, [store_dir])
         idx = lsh_index_frame(
             batch_df,
             n_planes=cfg.n_planes,
@@ -180,14 +189,20 @@ def ivf_index_step(
     ``centroids`` must be FROZEN across the stream's lifetime (train
     on a bootstrap sample with ``train_centroids``): cell ids are only
     comparable across batches under one quantizer — retraining means
-    rebuilding the store. ``compact_every``: the standard partition-
-    directory retention cadence (see ``lsh_index_step``),
-    cell-clustered."""
+    rebuilding the store, so they are recorded as the store's geometry
+    and resuming with others fails loud. ``compact_every``: the
+    standard partition-directory retention cadence (see
+    ``lsh_index_step``), cell-clustered."""
+
+    geometry = {
+        "family": "ivf", "centroids": [[float(x) for x in c] for c in centroids]
+    }
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         store_compact_every(
             batch_df.sparkSession, [(store_dir, "cell")], batch_id, compact_every
         )
+        check_geometry(store_dir, geometry, [store_dir])
         idx = ivf_index_frame(batch_df, centroids, id_col=id_col, vec_col=vec_col)
         store_append(idx, store_dir, batch_id, sort_by="cell")
 
@@ -330,7 +345,8 @@ def ivf_gen_index_step(
         meta = ivf_store_meta(root)
         # delegate to the frozen-centroid step against the current
         # generation's directory — one implementation of the index
-        # append for both lifecycles
+        # append for both lifecycles; each generation records its own
+        # centroids as its geometry
         ivf_index_step(
             _ivf_gen_dir(root, meta["generation"]),
             meta["centroids"],
@@ -785,13 +801,21 @@ def pq_index_step(
     win) in its own ``ingest_batch`` partition. STORE CONTRACT:
     ``codebooks`` AND ``normalize`` are the store identity (the IVF
     generation rule — retraining or flipping normalization means
-    re-encoding the store, never mixing)."""
+    re-encoding the store, never mixing). They are recorded as the
+    store's geometry, so resuming with others fails loud."""
     from ..functions.pq import pq_encode
+
+    geometry = {
+        "family": "pq",
+        "codebooks": [[[float(x) for x in v] for v in sub] for sub in codebooks],
+        "normalize": normalize,
+    }
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         store_compact_every(
             batch_df.sparkSession, [(store_dir, None)], batch_id, compact_every
         )
+        check_geometry(store_dir, geometry, [store_dir])
         store_append(
             pq_encode(batch_df, codebooks, id_col, vec_col, normalize),
             store_dir,

@@ -23,8 +23,11 @@ read-side union absorbs duplicates of any granularity).
 STORE CONTRACT (the IVF generation rule): ``lg_k`` and the tokenizer
 are part of the store identity — ``hll_union_agg`` silently downgrades
 mixed-lg_k unions to the smallest lg_k present, so changing either
-means a new store. Sketch BYTES are not canonical across build orders;
-only estimates are comparable (pinned in tests).
+means a new store. Each step records its geometry (``lg_k``, or the
+count-min ``(depth, width)``) in its sketch directory and fails loud
+when resumed with another; the tokenizer is code and is not recorded.
+Sketch BYTES are not canonical across build orders; only estimates are
+comparable (pinned in tests).
 """
 
 from __future__ import annotations
@@ -46,6 +49,7 @@ from ..functions.sketches import (
     vocab_estimate,
 )
 from .store import store_append, store_compact_every, store_read
+from .store_step import check_geometry
 
 
 def vocab_sketch_step(
@@ -67,6 +71,7 @@ def vocab_sketch_step(
     def step(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         store_compact_every(spark, [(sk_dir, None)], batch_id, compact_every)
+        check_geometry(sk_dir, {"family": "hll", "lg_k": lg_k}, [sk_dir])
         store_append(
             token_vocab_sketch(batch_df, group_col, text_col, lg_k),
             sk_dir,
@@ -121,12 +126,16 @@ def cms_step(
     bit-for-bit (stronger than the HLL half — no HIP caveat); replay
     overwrites its own partition (addition is not idempotent, the
     store lifecycle is the replay guarantee). STORE CONTRACT:
-    (depth, width, tokenizer) are the store identity."""
+    (depth, width, tokenizer) are the store identity; (depth, width)
+    are recorded as its geometry, so resuming with others fails
+    loud."""
     cms_dir = os.path.join(store_dir, "cms")
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         store_compact_every(spark, [(cms_dir, None)], batch_id, compact_every)
+        geometry = {"family": "cms", "depth": depth, "width": width}
+        check_geometry(cms_dir, geometry, [cms_dir])
         store_append(
             token_cms(batch_df, depth, width, text_col),
             cms_dir,

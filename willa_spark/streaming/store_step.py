@@ -100,7 +100,7 @@ def _holds_data(d: str) -> bool:
     )
 
 
-def _check_geometry(store_dir: str, geometry: dict, data_dirs: list[str]) -> None:
+def check_geometry(store_dir: str, geometry: dict, data_dirs: list[str]) -> None:
     """Record ``geometry`` on first use; fail loud when a store holding
     data was built with another one. A store whose data partitions have
     all been pruned away is fresh again and re-records."""
@@ -115,8 +115,8 @@ def _check_geometry(store_dir: str, geometry: dict, data_dirs: list[str]) -> Non
             raise RuntimeError(
                 f"store at {store_dir} was built with geometry {found} "
                 f"but this step uses {geometry} — probing across a "
-                "geometry change silently disables or corrupts "
-                "cross-batch dedup (stored keys never match); rebuild "
+                "geometry change silently disables or corrupts every "
+                "cross-batch match (stored keys never match); rebuild "
                 "the store (or finish pruning it) rather than changing "
                 "parameters mid-store"
             )
@@ -191,7 +191,7 @@ def store_step(
         spark = batch_df.sparkSession
         store_compact_every(spark, targets, batch_id, compact_every)
         if geometry is not None:
-            _check_geometry(store_dir, geometry, paths + list(others.values()))
+            check_geometry(store_dir, geometry, paths + list(others.values()))
         if unique_ids:
             _check_batch_ids(batch_df, id_col, step_name)
         present = [_has_prior(p, batch_id) for p in paths]
