@@ -33,17 +33,27 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 QUERY_PROP = "willa.bench.query"
 
 
-def spark_session(app: str, event_log_dir: str | None = None):
+def spark_session(
+    app: str,
+    event_log_dir: str | None = None,
+    cpus: int | None = None,
+    driver_memory: str | None = None,
+    conf: dict[str, str] | None = None,
+):
     """(spark, cpus) under the benchmark configuration: local[$cpus],
     AQE on, Arrow on, UTC, UI off, and NO console stage-progress \\r
     spam on stdout (a bench line pushed out of a reader's tail window
     by progress-bar output is unparseable). With ``event_log_dir``,
     Spark writes its uncompressed event log there. Every measurement
     that must compare with the bench (tools/capture_plans.py) builds
-    its session here."""
+    its session here, and so do the test suite and the parity check,
+    each with its own ``cpus`` and ``driver_memory`` (defaults:
+    $SPARK_GRAFT_CPUS or 32, $SPARK_GRAFT_DRIVER_MEM or 48g) and any
+    extra ``conf``."""
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
@@ -52,12 +62,12 @@ def spark_session(app: str, event_log_dir: str | None = None):
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-        )
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
+    for key, value in (conf or {}).items():
+        b = b.config(key, value)
     if event_log_dir:
         b = (
             b.config("spark.eventLog.enabled", "true")

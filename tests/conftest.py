@@ -1,26 +1,28 @@
 import os
+import sys
 import tempfile
 from pathlib import Path
 
 import pytest
-from pyspark.sql import SparkSession
+
+REPO_ROOT = Path(__file__).resolve().parent.parent
+# the package, bench.py and tools/ import from the repository root
+# whichever directory pytest runs from (from inside tests/ only tests/
+# is on the path)
+if str(REPO_ROOT) not in sys.path:
+    sys.path.insert(0, str(REPO_ROOT))
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="willa-warehouse-"))
-        .appName("willa_spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
+    from bench import spark_session
+
+    s, _ = spark_session(
+        "willa_spark-tests",
+        cpus=4,
+        driver_memory="8g",
+        conf={"spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="willa-warehouse-")},
     )
-    s.sparkContext.setLogLevel("ERROR")
     yield s
 
 
@@ -115,9 +117,6 @@ SLOW_FULL_SUITE_ONLY = frozenset(
         "tests/test_lm.py::test_kn_bigram_python_differential",
     }
 )
-
-
-REPO_ROOT = Path(__file__).resolve().parent.parent
 
 
 def repo_nodeid(item) -> str:

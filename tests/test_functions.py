@@ -17,6 +17,7 @@ from willa_spark.functions.multimodal import (
     resize_features,
     sample_frames,
 )
+from willa_spark.operators.skew import write_bucketed
 from willa_spark.plans import pushed_filters, uses_broadcast_join
 
 
@@ -1011,14 +1012,16 @@ def test_ivf_bucketed_index_zero_shuffle_serving(spark, tmp_path):
     )
     centroids = S.train_centroids(emb, n_centroids=8, n_iters=1)
     spark.sql("DROP TABLE IF EXISTS ivf_bucketed_test")
-    S.save_ivf_index_bucketed(emb, centroids, "ivf_bucketed_test", num_buckets=4)
+    write_bucketed(
+        S.ivf_index_frame(emb, centroids), "ivf_bucketed_test", "cell", num_buckets=4
+    )
     try:
         want = sorted(
             tuple(r)
             for r in S.ivf_topk(emb, queries, centroids, k=10, n_probe=2).collect()
         )
-        got_df = S.ivf_topk_bucketed(
-            spark, "ivf_bucketed_test", queries, centroids, k=10, n_probe=2,
+        got_df = S.ivf_probe_topk(
+            spark.table("ivf_bucketed_test"), queries, centroids, k=10, n_probe=2,
             broadcast_queries=False,
         )
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -1058,8 +1061,11 @@ def test_lsh_bucketed_index_zero_shuffle_serving(spark, tmp_path):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     spark.sql("DROP TABLE IF EXISTS lsh_bucketed_test")
-    S.save_lsh_index_bucketed(
-        emb, "lsh_bucketed_test", num_buckets=4, n_planes=4, n_tables=4
+    write_bucketed(
+        S.lsh_index_frame(emb, n_planes=4, n_tables=4),
+        "lsh_bucketed_test",
+        "bucket",
+        num_buckets=4,
     )
     try:
         want = sorted(
@@ -1068,8 +1074,8 @@ def test_lsh_bucketed_index_zero_shuffle_serving(spark, tmp_path):
                 emb, queries, k=10, n_planes=4, n_tables=4, n_probes=1
             ).collect()
         )
-        got_df = S.lsh_topk_bucketed(
-            spark, "lsh_bucketed_test", queries, k=10, n_planes=4,
+        got_df = S.lsh_probe_topk(
+            spark.table("lsh_bucketed_test"), queries, k=10, n_planes=4,
             n_tables=4, n_probes=1, broadcast_queries=False,
         )
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

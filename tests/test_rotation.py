@@ -115,7 +115,10 @@ def test_fast_gate_skip_list_names_real_tests():
 def test_fast_gate_skip_matches_from_any_rootdir():
     """The skip list spells ids from the repository root; run from inside
     tests/, pytest's nodeids lack the ``tests/`` prefix, and the gate must
-    still match them."""
+    still match them. Collection from inside tests/ works too: the
+    package imports from the repository root there as well."""
+    import subprocess
+    import sys
     from types import SimpleNamespace
 
     from tests.conftest import REPO_ROOT, SLOW_FULL_SUITE_ONLY, repo_nodeid
@@ -125,6 +128,13 @@ def test_fast_gate_skip_matches_from_any_rootdir():
     for nodeid in (listed, f"{path.removeprefix('tests/')}::{name}"):
         item = SimpleNamespace(path=REPO_ROOT / path, nodeid=nodeid)
         assert repo_nodeid(item) == listed
+
+    run = subprocess.run(
+        [sys.executable, "-m", "pytest", "--collect-only", "-q",
+         "-p", "no:cacheprovider", "test_rotation.py"],
+        cwd=REPO_ROOT / "tests", capture_output=True, text=True, timeout=300,
+    )
+    assert run.returncode == 0, run.stdout + run.stderr
 
 
 def test_default_shard_count_fits_the_host():

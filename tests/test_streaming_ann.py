@@ -400,6 +400,7 @@ def test_ivf_retrain_migrates_concurrent_commits_and_guards_swap(spark, tmp_path
     import pytest
 
     from willa_spark.streaming import ann as ann_mod
+    from willa_spark.streaming import store_step as store_step_mod
     from willa_spark.streaming.ann import (
         ivf_gen_index_step,
         ivf_retrain,
@@ -434,7 +435,7 @@ def test_ivf_retrain_migrates_concurrent_commits_and_guards_swap(spark, tmp_path
 
     # generation guard: a swap landing between a batch's meta read and
     # its append must fail the batch for replay
-    real_append = ann_mod.store_append
+    real_append = store_step_mod.store_append
 
     def swap_mid_batch(df, path, batch_id, **kw):
         real_append(df, path, batch_id, **kw)
@@ -442,11 +443,11 @@ def test_ivf_retrain_migrates_concurrent_commits_and_guards_swap(spark, tmp_path
         ann_mod._write_ivf_meta(root, meta["generation"] + 1, meta["centroids"])
 
     try:
-        ann_mod.store_append = swap_mid_batch
+        store_step_mod.store_append = swap_mid_batch
         with pytest.raises(RuntimeError, match="generation changed"):
             index(mk([(100, vs[0])]), 3)
     finally:
-        ann_mod.store_append = real_append
+        store_step_mod.store_append = real_append
 
 
 def test_streaming_embedding_dedup_congruity(spark, tmp_path):

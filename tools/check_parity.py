@@ -13,9 +13,9 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
-from pyspark.sql import SparkSession
 
 import __spark_entry__ as entrymod
+from bench import spark_session
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -84,15 +84,7 @@ def main():
     args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("parity-check")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, _ = spark_session("parity-check", cpus=8, driver_memory="4g")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

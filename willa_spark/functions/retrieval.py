@@ -207,7 +207,7 @@ def save_postings_bucketed(
     text_col: str = "text",
 ) -> None:
     """Persist the inverted index hash-BUCKETED by term — the 100 TB
-    serving layout, the retrieval twin of ``save_ivf_index_bucketed``
+    serving layout, the retrieval twin of a bucketed ``ivf_index_frame``
     (similarity.py): a term-keyed probe reads the bucketed table with
     NO exchange on the index side, and the per-term df aggregation is
     satisfied from storage too (bucketing + per-bucket sort on the

@@ -230,8 +230,9 @@ def lsh_probe_topk(
     the same seeded hyperplane family. ``broadcast_queries=False``
     drops the broadcast hint for query batches too large to ship,
     turning the join into a shuffle join on ``bucket`` — which is
-    exactly when a BUCKETED index (``save_lsh_index_bucketed``) pays
-    off: the index side then needs no exchange at all."""
+    exactly when a BUCKETED index pays off: ``lsh_index_frame`` written
+    with ``operators.skew.write_bucketed`` on ``bucket`` and probed as
+    ``spark.table(...)``, the index side needs no exchange at all."""
     from pyspark.sql import Window as W
 
     _, query_keys = _lsh_key_udfs(dim, n_planes, seed, n_tables, n_probes)
@@ -449,8 +450,9 @@ def ivf_probe_topk(
     ``broadcast_queries=False`` drops the broadcast hint for query
     sets too large to ship to every executor: the join becomes a
     shuffle join on ``cell`` — which is exactly when a BUCKETED index
-    (``save_ivf_index_bucketed``) pays off, since the index side then
-    needs no exchange at all."""
+    pays off: ``ivf_index_frame`` written with
+    ``operators.skew.write_bucketed`` on ``cell`` and probed as
+    ``spark.table(...)``, the index side needs no exchange at all."""
     from pyspark.sql import Window as W
 
     c = index.withColumnsRenamed({"id": "__cid_id", "vec": "__cv", "cell": "__cell"})
@@ -590,134 +592,6 @@ def _vector_near_dup_pairs(
             F.round(cosine(F.col("l.v"), F.col("r.v")), 6).alias("cosine_sim"),
         )
         .filter(F.col("cosine_sim") >= threshold)
-    )
-
-
-def save_ivf_index_bucketed(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    table: str,
-    num_buckets: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist the IVF inverted file hash-BUCKETED by cell — the
-    100 TB serving layout (SCALING.md): a probe join keyed on ``cell``
-    reads the bucketed table with NO exchange on the index side (only
-    the query side shuffles to match the bucket count), and a
-    same-bucketed second index co-locates for merge/compare jobs.
-    Centroids stay frozen for the table's lifetime (cell ids are only
-    comparable under the centroids that assigned them — retrain means
-    rewrite, exactly the streaming store's generation rule)."""
-    from ..operators.skew import write_bucketed
-
-    write_bucketed(
-        ivf_index_frame(corpus, centroids, id_col=id_col, vec_col=vec_col),
-        table,
-        "cell",
-        num_buckets=num_buckets,
-    )
-
-
-def ivf_topk_bucketed(
-    spark,
-    table: str,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    k: int = 10,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    broadcast_queries: bool = True,
-) -> DataFrame:
-    """IVF top-k served from a ``save_ivf_index_bucketed`` table.
-    Identical results to ``ivf_topk`` over the same corpus/centroids
-    (pytest-pinned); the difference is purely physical — the inverted
-    lists come off storage pre-partitioned by cell, so with
-    ``broadcast_queries=False`` (big query batches) the index side
-    joins with zero shuffle (pinned by a plan-shape test: ONE exchange
-    on the join key, the query side's, instead of two)."""
-    return ivf_probe_topk(
-        spark.table(table),
-        queries,
-        centroids,
-        k=k,
-        n_probe=n_probe,
-        id_col=id_col,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-        broadcast_queries=broadcast_queries,
-    )
-
-
-def save_lsh_index_bucketed(
-    corpus: DataFrame,
-    table: str,
-    num_buckets: int = 32,
-    n_planes: int = 12,
-    dim: int = 64,
-    seed: int = 42,
-    n_tables: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist the LSH index hash-bucketed by the packed
-    (table, signature) ``bucket`` key — the serving layout twin of
-    ``save_ivf_index_bucketed``. The hyperplane family is fully
-    determined by (dim, n_planes, seed, n_tables); a probe MUST use
-    the same parameters or its keys address a different family."""
-    from ..operators.skew import write_bucketed
-
-    write_bucketed(
-        lsh_index_frame(
-            corpus,
-            n_planes=n_planes,
-            dim=dim,
-            seed=seed,
-            n_tables=n_tables,
-            id_col=id_col,
-            vec_col=vec_col,
-        ),
-        table,
-        "bucket",
-        num_buckets=num_buckets,
-    )
-
-
-def lsh_topk_bucketed(
-    spark,
-    table: str,
-    queries: DataFrame,
-    k: int = 10,
-    n_planes: int = 12,
-    dim: int = 64,
-    seed: int = 42,
-    n_probes: int = 0,
-    n_tables: int = 1,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    broadcast_queries: bool = True,
-) -> DataFrame:
-    """LSH top-k served from a ``save_lsh_index_bucketed`` table —
-    identical results to ``lsh_topk`` built with the same parameters
-    (pytest-pinned); with ``broadcast_queries=False`` the index side
-    joins with zero shuffle, same plan-shape argument as
-    ``ivf_topk_bucketed``."""
-    return lsh_probe_topk(
-        spark.table(table),
-        queries,
-        k=k,
-        n_planes=n_planes,
-        dim=dim,
-        seed=seed,
-        n_probes=n_probes,
-        n_tables=n_tables,
-        id_col=id_col,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-        broadcast_queries=broadcast_queries,
     )
 
 

@@ -11,7 +11,8 @@ the stream itself maintains):
   as a stream; each micro-batch's ``lsh_index_frame`` rows
   (id, vec, bucket — the exact frame the batch ``lsh_topk`` joins
   against, built by the SAME seeded builders) land in an
-  ``ingest_batch=<id>`` partition directory. A replayed micro-batch
+  ``ingest_batch=<id>`` partition directory through the store
+  lifecycle (``store_step.py``). A replayed micro-batch
   overwrites exactly its own partition, so retries are idempotent and
   never duplicate index rows.
 - **Query serving** (``lsh_probe_step``): query embeddings arrive as a
@@ -63,8 +64,8 @@ from ..functions.similarity import (
     _as_double,
     _centroid_sims,
 )
-from .store import store_append, store_compact_every, store_read
-from .store_step import Half, check_geometry, dedup_step, write_json
+from .store import store_append, store_read
+from .store_step import Half, dedup_step, store_step, write_json
 
 
 @dataclass(frozen=True)
@@ -110,19 +111,12 @@ def lsh_index_step(
     and merged rows are relabeled to the HIGHEST merged id — still
     strictly below the compaction watermark, so every live
     ``before_batch`` window sees exactly the same rows (the
-    store.py contract)."""
-
-    geometry = {
-        "family": "lsh", "dim": cfg.dim, "n_planes": cfg.n_planes,
-        "n_tables": cfg.n_tables, "seed": cfg.seed,
-    }
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        store_compact_every(
-            batch_df.sparkSession, [(store_dir, "bucket")], batch_id, compact_every
-        )
-        check_geometry(store_dir, geometry, [store_dir])
-        idx = lsh_index_frame(
+    store.py contract). The step runs through the store lifecycle
+    (``store_step``), so a NULL id fails the batch in-plan instead of
+    being served back as a NULL neighbour."""
+    return store_step(
+        "lsh_index_step", store_dir, [Half(sort_key="bucket")],
+        lambda batch_df: lsh_index_frame(
             batch_df,
             n_planes=cfg.n_planes,
             dim=cfg.dim,
@@ -130,10 +124,13 @@ def lsh_index_step(
             n_tables=cfg.n_tables,
             id_col=cfg.id_col,
             vec_col=cfg.vec_col,
-        )
-        store_append(idx, store_dir, batch_id, sort_by="bucket")
-
-    return step
+        ),
+        id_col=cfg.id_col, compact_every=compact_every,
+        geometry={
+            "family": "lsh", "dim": cfg.dim, "n_planes": cfg.n_planes,
+            "n_tables": cfg.n_tables, "seed": cfg.seed,
+        },
+    )
 
 
 def read_index(spark, store_dir: str) -> DataFrame | None:
@@ -192,21 +189,29 @@ def ivf_index_step(
     rebuilding the store, so they are recorded as the store's geometry
     and resuming with others fails loud. ``compact_every``: the
     standard partition-directory retention cadence (see
-    ``lsh_index_step``), cell-clustered."""
+    ``lsh_index_step``), cell-clustered; NULL ids fail loud likewise."""
+    return _ivf_store_step(
+        store_dir,
+        centroids,
+        lambda batch_df: ivf_index_frame(
+            batch_df, centroids, id_col=id_col, vec_col=vec_col
+        ),
+        id_col,
+        compact_every,
+    )
 
-    geometry = {
-        "family": "ivf", "centroids": [[float(x) for x in c] for c in centroids]
-    }
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        store_compact_every(
-            batch_df.sparkSession, [(store_dir, "cell")], batch_id, compact_every
-        )
-        check_geometry(store_dir, geometry, [store_dir])
-        idx = ivf_index_frame(batch_df, centroids, id_col=id_col, vec_col=vec_col)
-        store_append(idx, store_dir, batch_id, sort_by="cell")
-
-    return step
+def _ivf_store_step(store_dir, centroids, index_frame, id_col, compact_every):
+    """The IVF index family's lifecycle step over one store directory:
+    ``index_frame(batch_df)`` rows, cell-clustered, under the geometry
+    ``centroids`` define."""
+    return store_step(
+        "ivf_index_step", store_dir, [Half(sort_key="cell")], index_frame,
+        id_col=id_col, compact_every=compact_every,
+        geometry={
+            "family": "ivf", "centroids": [[float(x) for x in c] for c in centroids]
+        },
+    )
 
 
 def ivf_probe_step(
@@ -342,34 +347,56 @@ def ivf_gen_index_step(
     into one partition, so this bounds the no-drift steady state)."""
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
-        meta = ivf_store_meta(root)
-        # delegate to the frozen-centroid step against the current
-        # generation's directory — one implementation of the index
-        # append for both lifecycles; each generation records its own
-        # centroids as its geometry
-        ivf_index_step(
-            _ivf_gen_dir(root, meta["generation"]),
-            meta["centroids"],
-            id_col=id_col,
-            vec_col=vec_col,
-            compact_every=compact_every,
-        )(batch_df, batch_id)
-        # generation guard: if a retrain swapped the meta between this
-        # batch's read and its append, the rows just written carry the
-        # OLD centroids' cell ids in an obsolete generation — fail the
-        # micro-batch so Structured Streaming replays it against the
-        # new generation (the orphan partition in the old generation is
-        # harmless; replays are idempotent per generation). This turns
-        # the index-during-retrain race into a clean retry instead of
-        # silently lost vectors.
-        if ivf_store_meta(root)["generation"] != meta["generation"]:
-            raise RuntimeError(
-                f"IVF generation changed during batch {batch_id} "
-                f"(retrain swap mid-batch) — failing for replay against "
-                f"the new generation"
-            )
+        _ivf_gen_append(
+            root,
+            batch_df,
+            batch_id,
+            lambda df, centroids: ivf_index_frame(
+                df, centroids, id_col=id_col, vec_col=vec_col
+            ),
+            id_col,
+            compact_every,
+        )
 
     return step
+
+
+def _ivf_gen_append(
+    root: str,
+    batch_df: DataFrame,
+    batch_id: int,
+    index_frame: Callable[[DataFrame, list[list[float]]], DataFrame],
+    id_col: str,
+    compact_every: int | None,
+) -> dict:
+    """The one generation-append path of ``ivf_gen_index_step`` and
+    ``ivf_drift_index_step``: one meta read, the IVF lifecycle step
+    against the current generation's directory (each generation records
+    its own centroids as its geometry), then the generation guard.
+    Returns the meta the batch was written under."""
+    meta = ivf_store_meta(root)
+    _ivf_store_step(
+        _ivf_gen_dir(root, meta["generation"]),
+        meta["centroids"],
+        lambda df: index_frame(df, meta["centroids"]),
+        id_col,
+        compact_every,
+    )(batch_df, batch_id)
+    # generation guard: if a retrain swapped the meta between this
+    # batch's read and its append, the rows just written carry the
+    # OLD centroids' cell ids in an obsolete generation — fail the
+    # micro-batch so Structured Streaming replays it against the
+    # new generation (the orphan partition in the old generation is
+    # harmless; replays are idempotent per generation). This turns
+    # the index-during-retrain race into a clean retry instead of
+    # silently lost vectors.
+    if ivf_store_meta(root)["generation"] != meta["generation"]:
+        raise RuntimeError(
+            f"IVF generation changed during batch {batch_id} "
+            f"(retrain swap mid-batch) — failing for replay against "
+            f"the new generation"
+        )
+    return meta
 
 
 def ivf_gen_probe_step(
@@ -421,8 +448,9 @@ def ivf_drift_index_step(
     retraining — the policy half to the ``ivf_retrain`` mechanism.
     Each micro-batch:
 
-    1. appends to the current generation exactly like
-       ``ivf_gen_index_step`` (same generation guard), with the batch's
+    1. appends to the current generation through
+       ``ivf_gen_index_step``'s path (one meta read, the generation's
+       geometry record, the generation guard), with the batch's
        mean distance-to-assigned-centroid ``1 - max_c cos(vec, c)``
        riding the SAME write action as an ``Observation`` — the drift
        metric costs zero extra passes and zero new collects;
@@ -453,39 +481,26 @@ def ivf_drift_index_step(
 
         from pyspark.sql import Observation
 
-        spark = batch_df.sparkSession
-        meta = ivf_store_meta(root)
-        centroids = meta["centroids"]
-        store_compact_every(
-            spark,
-            [(_ivf_gen_dir(root, meta["generation"]), "cell")],
-            batch_id,
-            compact_every,
-        )
-        idx = _indexed_with_dist(batch_df, centroids, id_col, vec_col)
         obs = Observation(f"ivf-drift-{batch_id}")
-        # NaN-safe: a zero-norm vector's cosine is NaN and array_max
-        # propagates it as the maximum — one such row would otherwise
-        # poison the batch mean (and, on the baseline batch, persist a
-        # NaN ref_dist that disables drift detection FOREVER, since
-        # every NaN comparison is False). Exclude NaN rows from the
-        # average; they carry no drift signal.
-        clean_dist = F.when(
-            F.isnan(F.col("__dist")), F.lit(None).cast("double")
-        ).otherwise(F.col("__dist"))
-        idx = idx.observe(obs, F.avg(clean_dist).alias("mean_dist"))
-        store_append(
-            idx.drop("__dist"),
-            _ivf_gen_dir(root, meta["generation"]),
-            batch_id,
-            sort_by="cell",
-        )
-        if ivf_store_meta(root)["generation"] != meta["generation"]:
-            raise RuntimeError(
-                f"IVF generation changed during batch {batch_id} "
-                f"(retrain swap mid-batch) — failing for replay against "
-                f"the new generation"
+
+        def observed(df: DataFrame, centroids: list[list[float]]) -> DataFrame:
+            idx = _indexed_with_dist(df, centroids, id_col, vec_col)
+            # NaN-safe: a zero-norm vector's cosine is NaN and array_max
+            # propagates it as the maximum — one such row would otherwise
+            # poison the batch mean (and, on the baseline batch, persist a
+            # NaN ref_dist that disables drift detection FOREVER, since
+            # every NaN comparison is False). Exclude NaN rows from the
+            # average; they carry no drift signal.
+            clean_dist = F.when(
+                F.isnan(F.col("__dist")), F.lit(None).cast("double")
+            ).otherwise(F.col("__dist"))
+            return idx.observe(obs, F.avg(clean_dist).alias("mean_dist")).drop(
+                "__dist"
             )
+
+        meta = _ivf_gen_append(
+            root, batch_df, batch_id, observed, id_col, compact_every
+        )
         mean_dist = obs.get.get("mean_dist")
         if mean_dist is None or math.isnan(mean_dist):
             return  # empty or all-degenerate batch: no drift evidence
@@ -503,11 +518,12 @@ def ivf_drift_index_step(
                 )
         elif not math.isnan(ref) and mean_dist > drift_ratio * max(ref, min_drift):
             ivf_retrain(
-                spark,
+                batch_df.sparkSession,
                 root,
                 up_to_batch=batch_id,
                 n_centroids=(
-                    n_centroids if n_centroids is not None else len(centroids)
+                    n_centroids if n_centroids is not None
+                    else len(meta["centroids"])
                 ),
                 n_iters=n_iters,
                 sample_cap=sample_cap,
@@ -802,27 +818,20 @@ def pq_index_step(
     ``codebooks`` AND ``normalize`` are the store identity (the IVF
     generation rule — retraining or flipping normalization means
     re-encoding the store, never mixing). They are recorded as the
-    store's geometry, so resuming with others fails loud."""
+    store's geometry, so resuming with others fails loud; NULL ids fail
+    loud as in ``lsh_index_step``."""
     from ..functions.pq import pq_encode
 
-    geometry = {
-        "family": "pq",
-        "codebooks": [[[float(x) for x in v] for v in sub] for sub in codebooks],
-        "normalize": normalize,
-    }
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        store_compact_every(
-            batch_df.sparkSession, [(store_dir, None)], batch_id, compact_every
-        )
-        check_geometry(store_dir, geometry, [store_dir])
-        store_append(
-            pq_encode(batch_df, codebooks, id_col, vec_col, normalize),
-            store_dir,
-            batch_id,
-        )
-
-    return step
+    return store_step(
+        "pq_index_step", store_dir, [Half()],
+        lambda batch_df: pq_encode(batch_df, codebooks, id_col, vec_col, normalize),
+        id_col=id_col, compact_every=compact_every,
+        geometry={
+            "family": "pq",
+            "codebooks": [[[float(x) for x in v] for v in sub] for sub in codebooks],
+            "normalize": normalize,
+        },
+    )
 
 
 def pq_probe_step(

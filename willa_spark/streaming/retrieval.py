@@ -15,13 +15,15 @@ Store layout (two coupled halves under ``store_dir``):
   how ingestion was batched — no drift between streaming and batch
   statistics, unlike an approximated running average.
 
-Serving reads the whole store (current-index semantics, exactly
-``lsh_probe_step``); scoring and ranking are the SAME kernels the
-batch operators use (``functions.retrieval._score_postings`` /
-``_rank_topk``), so streaming results are congruent with
-``bm25_topk`` over the ingested corpus by construction — pinned by
-test. Replay-idempotent like every store here: an index retry
-overwrites its own partition.
+Index maintenance runs through the store lifecycle
+(``store_step.py``), so the halves are compacted, NULL-id guarded and
+appended in one order. Serving reads every batch both halves hold
+(current-index semantics, exactly ``lsh_probe_step``); scoring and
+ranking are the SAME kernels the batch operators use
+(``functions.retrieval._score_postings`` / ``_rank_topk``), so
+streaming results are congruent with ``bm25_topk`` over the ingested
+corpus by construction — pinned by test. Replay-idempotent like every
+store here: an index retry overwrites its own partition.
 """
 
 from __future__ import annotations
@@ -38,7 +40,8 @@ from ..functions.retrieval import (
     _toks,
     postings_frame,
 )
-from .store import store_append, store_compact_every, store_read
+from .store import store_partitions, store_read
+from .store_step import Half, store_step
 
 
 def postings_index_step(
@@ -55,30 +58,35 @@ def postings_index_step(
 
     ``compact_every=N`` applies the store retention cadence to both
     halves (term-clustered postings merges keep row-group pruning
-    alive; the stats half merges its 1-row partitions)."""
-    post_dir = os.path.join(store_dir, "postings")
-    stats_dir = os.path.join(store_dir, "stats")
+    alive; the stats half merges its 1-row partitions). The halves are
+    coupled: a store holding postings but no stats below the batch
+    fails loud (stats without postings is a run of token-less
+    batches)."""
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        store_compact_every(
-            spark, [(post_dir, "term"), (stats_dir, None)], batch_id, compact_every
-        )
-        store_append(
-            postings_frame(batch_df, id_col, text_col),
-            post_dir,
-            batch_id,
-            sort_by="term",
-        )
+    def frames(batch_df: DataFrame) -> tuple[DataFrame, DataFrame]:
         stats = batch_df.select(
             F.size(_toks(F.col(text_col))).alias("__dl")
         ).agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.coalesce(F.sum("__dl"), F.lit(0)).cast("bigint").alias("sum_dl"),
         )
-        store_append(stats, stats_dir, batch_id, max_files=1)
+        return postings_frame(batch_df, id_col, text_col), stats
 
-    return step
+    return store_step(
+        "postings_index_step",
+        store_dir,
+        [
+            # a batch with no tokens (empty, or all-NULL text) may leave
+            # no postings partition; stats, appended last, gets a row
+            # every batch, so it may hold data postings lacks, never the
+            # reverse
+            Half("postings", "term", optional=True),
+            Half("stats", rows=lambda _post, stats: stats, max_files=1),
+        ],
+        frames,
+        id_col=id_col,
+        compact_every=compact_every,
+    )
 
 
 def bm25_probe_step(
@@ -127,9 +135,19 @@ def bm25_topk_from_store(
     hybrid probe: top-k over the whole current postings store, or None
     iff nothing was ingested yet (callers pick their empty-frame
     semantics — the solo probe synthesizes a typed empty frame, the
-    hybrid probe degrades to the systems that have state)."""
-    post = store_read(spark, os.path.join(store_dir, "postings"))
-    st = store_read(spark, os.path.join(store_dir, "stats"))
+    hybrid probe degrades to the systems that have state).
+
+    Both halves are read at one batch set: up to the newest ``stats``
+    partition. The stats half is appended last and gets a row every
+    batch, so a postings partition above it is a batch
+    whose index step crashed between the two appends — scoring its
+    postings against the older statistics would serve a ranking that
+    matches no ingested prefix."""
+    stats_dir = os.path.join(store_dir, "stats")
+    committed = store_partitions(stats_dir)
+    upto = committed[-1] + 1 if committed else 0
+    post = store_read(spark, os.path.join(store_dir, "postings"), before_batch=upto)
+    st = store_read(spark, stats_dir, before_batch=upto)
     if post is None or st is None:
         return None
     # the EXACT corpus statistics from the per-batch sums — BM25's

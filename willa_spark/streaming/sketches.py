@@ -15,8 +15,9 @@ tests.)
 
 Store layout: ``ingest_batch=<id>`` partitions of (group,
 vocab_sketch binary) rows, one per micro-batch — the standard store
-lifecycle (idempotent replay by partition overwrite, compaction by
-merging partitions, which for sketches means HLL-unioning them:
+lifecycle (``store_step.py``: idempotent replay by partition
+overwrite, compaction by merging partitions, which for sketches means
+HLL-unioning them:
 ``store_compact`` would concatenate rows, equally correct since the
 read-side union absorbs duplicates of any granularity).
 
@@ -48,8 +49,8 @@ from ..functions.sketches import (
     token_vocab_sketch,
     vocab_estimate,
 )
-from .store import store_append, store_compact_every, store_read
-from .store_step import check_geometry
+from .store import store_read
+from .store_step import Half, store_step
 
 
 def vocab_sketch_step(
@@ -66,28 +67,28 @@ def vocab_sketch_step(
     store, so a replay simply overwrites its partition. When ``sink``
     is given it receives the CUMULATIVE (group, vocab_estimate) frame
     after each append — a running vocabulary-size stream."""
-    sk_dir = os.path.join(store_dir, "vocab_sketches")
+    append = store_step(
+        "vocab_sketch_step",
+        os.path.join(store_dir, "vocab_sketches"),
+        [Half(max_files=1)],
+        lambda batch_df: token_vocab_sketch(batch_df, group_col, text_col, lg_k),
+        id_col=None,
+        geometry={"family": "hll", "lg_k": lg_k},
+        compact_every=compact_every,
+    )
+    if sink is None:
+        return append
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        store_compact_every(spark, [(sk_dir, None)], batch_id, compact_every)
-        check_geometry(sk_dir, {"family": "hll", "lg_k": lg_k}, [sk_dir])
-        store_append(
-            token_vocab_sketch(batch_df, group_col, text_col, lg_k),
-            sk_dir,
+        append(batch_df, batch_id)
+        sink(
+            vocab_estimate_from_store(
+                batch_df.sparkSession,
+                store_dir,
+                group_type=batch_df.schema[group_col].dataType.simpleString(),
+            ),
             batch_id,
-            max_files=1,
         )
-        if sink is not None:
-            sink(
-                vocab_estimate_from_store(
-                    spark,
-                    store_dir,
-                    group_type=batch_df.schema[group_col]
-                    .dataType.simpleString(),
-                ),
-                batch_id,
-            )
 
     return step
 
@@ -129,21 +130,15 @@ def cms_step(
     (depth, width, tokenizer) are the store identity; (depth, width)
     are recorded as its geometry, so resuming with others fails
     loud."""
-    cms_dir = os.path.join(store_dir, "cms")
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        store_compact_every(spark, [(cms_dir, None)], batch_id, compact_every)
-        geometry = {"family": "cms", "depth": depth, "width": width}
-        check_geometry(cms_dir, geometry, [cms_dir])
-        store_append(
-            token_cms(batch_df, depth, width, text_col),
-            cms_dir,
-            batch_id,
-            max_files=1,
-        )
-
-    return step
+    return store_step(
+        "cms_step",
+        os.path.join(store_dir, "cms"),
+        [Half(max_files=1)],
+        lambda batch_df: token_cms(batch_df, depth, width, text_col),
+        id_col=None,
+        geometry={"family": "cms", "depth": depth, "width": width},
+        compact_every=compact_every,
+    )
 
 
 def cms_estimate_from_store(

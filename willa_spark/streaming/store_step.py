@@ -1,40 +1,54 @@
-"""The one micro-batch lifecycle of every probe-and-admit store step:
-a stream checked against an index it maintains (the shape of the
-reference's dedupe workflow splice, workflow.clj:6-24). The dedup
-families (hamming, minhash, containment, vector), the exact-substring
-mask, novelty scoring, the KL drift monitor and the DoReMi mixture
-monitors all run through ``store_step``; each supplies only its pure
-parts — a geometry record, a signature builder, its store halves with
-their sort keys, and what it emits.
+"""The one micro-batch lifecycle of every store step: a stream written
+into, and often checked against, state that it maintains itself (the
+shape of the reference's dedupe workflow splice, workflow.clj:6-24).
+The dedup families (hamming, minhash, containment, vector), the
+exact-substring mask, novelty scoring, the KL drift monitor and the
+DoReMi mixture monitors probe and admit through ``store_step``; the
+LSH, IVF (frozen, generation and drift) and PQ indexes, the BM25
+postings store and the HLL and count-min sketch stores only append
+through it. Each supplies only its pure parts — a geometry record, a
+frame builder, its store halves with their sort keys and shard
+counts, and, when it probes, what it emits.
+
+The exceptions: ``corpus_pipeline.py``'s ``pack_sequences_step``,
+``pack_shards_step`` and ``corpus_curation_step``'s output store still
+write by hand (the marks store's read needs ``merge_schema`` for
+stores written before its ``max_id`` guard), and ``ivf_retrain``'s
+rebuild and migration appends (``ann.py``) write a new generation
+outside any micro-batch.
 
 Per micro-batch ``b``, in this order:
 
 1. ``store_compact_every`` on every half (at the start of ``b`` every
    batch below it is committed, so ``b`` is a safe watermark);
 2. the geometry record (``_geometry.json`` at the store root): the
-   parameters that define the stored signatures' identity. A store
-   without a record starts one; a changed geometry fails loud while any
-   half holds data, because probing across it silently matches nothing
-   or verifies on the wrong operands;
+   parameters that define the stored rows' identity. A store without a
+   record starts one; a changed geometry fails loud while any half
+   holds data, because probing across it silently matches nothing or
+   verifies on the wrong operands;
 3. the ids: with ``unique_ids`` one batch-sized aggregate rejects NULL
-   and duplicate ids (``_check_batch_ids``); otherwise a NULL id fails
-   in-plan on the signature builders' input while the signatures are
-   pinned (step 6), at no extra job — a NULL id equals no stored or
-   batch id, so it would skip dedup;
+   and duplicate ids (``_check_batch_ids``); otherwise, for a step with
+   an ``id_col``, a NULL id fails in-plan on the frame builder's input,
+   at no extra job — a NULL id equals no stored or batch id, so it
+   would skip dedup, or be served back as a NULL neighbour;
 4. the coupled-halves check, on each half's partition listing: a half
    with no partition below ``b`` counts as absent, so a replay of a
    batch whose first attempt crashed between two half writes finds the
-   halves coupled again. Halves must be all present or all absent, and
+   halves coupled again. Halves must be all present or all absent (an
+   ``optional`` half may be absent while the others hold data), and
    ``absent`` halves (written only by another mode of the same family)
    must hold no prior data. Steps 1, 2 and 4 read listings and small
    files only, so a batch failing the geometry or a halves check starts
    no Spark job beyond step 3's id aggregate (``unique_ids`` steps);
-5. one ``pinned()`` scope, released on every exit, so a failing retry
+5. a step with no ``emit`` appends each half's rows of the built
+   frames unchanged, in ``halves`` order, and returns None: each frame
+   is written once, so nothing is pinned and no prior half is read;
+6. one ``pinned()`` scope, released on every exit, so a failing retry
    leaks no cache entry;
-6. the signatures, eagerly pinned only now, after every guard, so a
+7. the signatures, eagerly pinned only now, after every guard, so a
    failing batch never pays the builder (for the binary families, a
    decode);
-7. the family's emit, which reads the strictly-prior halves
+8. the family's emit, which reads the strictly-prior halves
    (``before_batch=b``) when it needs them (the KL drift monitor skips
    the read for a batch without features). For the dedup families
    (``dedup_step``) that is the drop set: one candidate-join-plus-verify
@@ -42,10 +56,10 @@ Per micro-batch ``b``, in this order:
    the within-batch self-join over the batch minus those drops
    (``id_a < id_b``); the survivor election is min id, or ``score``'s
    best; the union (disjoint by construction) is pinned;
-8. each half's admitted rows appended to its ``ingest_batch=b``
-   partition, in ``halves`` order — the write boundaries. A replay
-   overwrites each of them and step 4 ignores them;
-9. the emitted frame (for dedup: the batch minus the drops).
+9. each half's admitted rows appended to its ``ingest_batch=b``
+   partition, in ``halves`` order — the write boundaries, as in step 5.
+   A replay overwrites each of them and step 4 ignores them;
+10. the emitted frame (for dedup: the batch minus the drops).
 """
 
 from __future__ import annotations
@@ -77,12 +91,18 @@ _GEOMETRY = "_geometry.json"
 class Half:
     """One directory of a family's store: ``name`` under the store root
     (``""`` is the root itself), the ``sort_key`` its partitions are
-    clustered on, and ``rows`` — the half's rows from the batch's
-    signature frames (default: the first frame)."""
+    clustered on, ``rows`` — the half's rows from the batch's
+    signature frames (default: the first frame) — the ``max_files``
+    each batch's partition is clamped to (``store_append``), and
+    whether it is ``optional``: a batch that adds no rows to it leaves
+    no partition, so it may lack data the other halves hold, but never
+    hold data they lack."""
 
     name: str = ""
     sort_key: str | None = None
     rows: Callable[..., DataFrame] = lambda sig, *_: sig
+    max_files: int = 4
+    optional: bool = False
 
 
 def _path(store_dir: str, name: str) -> str:
@@ -162,32 +182,41 @@ def _has_prior(path: str, batch_id: int) -> bool:
     return any(b < batch_id for b in store_partitions(path))
 
 
+def _rows(halves: Sequence[Half], sigs: tuple[DataFrame, ...]) -> tuple:
+    """Each half's rows from one side's signature frames."""
+    return tuple(h.rows(*sigs) for h in halves)
+
+
 def store_step(
     step_name: str,
     store_dir: str,
     halves: Sequence[Half],
     signatures: Callable[[DataFrame], DataFrame | tuple[DataFrame, ...]],
-    emit: Callable[..., tuple[DataFrame, Sequence[DataFrame]]],
+    emit: Callable[..., tuple[DataFrame, Sequence[DataFrame]]] | None = None,
     *,
-    id_col: str,
+    id_col: str | None,
     geometry: dict | None = None,
     absent: dict[str, str] | None = None,
     unique_ids: bool = False,
     compact_every: int | None = None,
-) -> Callable[[DataFrame, int], DataFrame]:
+) -> Callable[[DataFrame, int], DataFrame | None]:
     """The lifecycle (module docstring) as a ``(batch_df, batch_id) ->
     frame`` foreachBatch step. ``signatures(batch_df)`` gives the
-    frame(s) to pin; ``emit(batch_df, sigs, prior)`` gives ``(out,
-    rows)`` — the returned frame and one frame (or None) to append per
-    half — where ``prior()`` reads the tuple of strictly-prior halves,
-    and ``prior`` is None on a store with no data below this batch.
+    frame(s) each half's ``rows`` take. Without ``emit`` those rows are
+    appended as built and the step returns None. With it they are
+    pinned, and ``emit(batch_df, sigs, prior)`` gives ``(out, rows)`` —
+    the returned frame and one frame (or None) to append per half —
+    where ``prior()`` reads the tuple of strictly-prior halves, and
+    ``prior`` is None on a store with no data below this batch.
+    ``id_col`` names the id column the NULL guard checks; None (the
+    rows carry no id) skips the guard and must be passed explicitly.
     ``absent`` maps sibling half names to why they must hold no
     data."""
     paths = [_path(store_dir, h.name) for h in halves]
     targets = [(p, h.sort_key) for p, h in zip(paths, halves)]
     others = {name: _path(store_dir, name) for name in absent or {}}
 
-    def step(batch_df: DataFrame, batch_id: int) -> DataFrame:
+    def step(batch_df: DataFrame, batch_id: int) -> DataFrame | None:
         spark = batch_df.sparkSession
         store_compact_every(spark, targets, batch_id, compact_every)
         if geometry is not None:
@@ -196,8 +225,10 @@ def store_step(
             _check_batch_ids(batch_df, id_col, step_name)
         present = [_has_prior(p, batch_id) for p in paths]
         held = [h.name or "root" for h, has in zip(halves, present) if has]
-        if held and len(held) < len(halves):
-            missing = [h.name for h, has in zip(halves, present) if not has]
+        missing = [
+            h.name for h, has in zip(halves, present) if not (has or h.optional)
+        ]
+        if held and missing:
             raise RuntimeError(
                 f"{step_name}: store at {store_dir} is inconsistent: the "
                 f"{', '.join(missing)} half is missing but "
@@ -216,27 +247,36 @@ def store_step(
         def read_prior() -> tuple[DataFrame, ...]:
             return tuple(store_read(spark, p, before_batch=batch_id) for p in paths)
 
-        with pinned() as keep:
-            checked = batch_df
-            if not unique_ids:
-                # on the builders' input, so rows that yield no signature
-                # (too short to shingle) are checked too
-                null_id = F.raise_error(F.lit(
-                    f"{step_name}: NULL {id_col} in a micro-batch — a NULL "
-                    "id equals no stored or batch id, so its row would "
-                    "pass the step unchecked; assign ids upstream"
-                ))
-                checked = batch_df.withColumn(
-                    id_col,
-                    F.when(F.col(id_col).isNull(), null_id).otherwise(F.col(id_col)),
-                )
-            sigs = signatures(checked)
-            sigs = keep(*(sigs if isinstance(sigs, tuple) else (sigs,)))
-            sigs = sigs if isinstance(sigs, tuple) else (sigs,)
-            out, rows = emit(batch_df, sigs, read_prior if held else None)
+        def append(rows: Sequence[DataFrame | None]) -> None:
             for p, h, r in zip(paths, halves, rows):
                 if r is not None:  # None: the batch adds nothing to this half
-                    store_append(r, p, batch_id, sort_by=h.sort_key)
+                    store_append(
+                        r, p, batch_id, max_files=h.max_files, sort_by=h.sort_key
+                    )
+
+        checked = batch_df
+        if id_col is not None and not unique_ids:
+            # on the builders' input, so rows that yield no signature
+            # (too short to shingle) are checked too
+            null_id = F.raise_error(F.lit(
+                f"{step_name}: NULL {id_col} in a micro-batch — a NULL "
+                "id equals no stored or batch id, so its row would "
+                "pass the step unchecked; assign ids upstream"
+            ))
+            checked = batch_df.withColumn(
+                id_col,
+                F.when(F.col(id_col).isNull(), null_id).otherwise(F.col(id_col)),
+            )
+        with pinned() as keep:
+            sigs = signatures(checked)
+            sigs = sigs if isinstance(sigs, tuple) else (sigs,)
+            if emit is None:  # written once: nothing to pin or probe
+                append(_rows(halves, sigs))
+                return None
+            sigs = keep(*sigs)
+            sigs = sigs if isinstance(sigs, tuple) else (sigs,)
+            out, rows = emit(batch_df, sigs, read_prior if held else None)
+            append(rows)
         return out
 
     return step
@@ -315,7 +355,7 @@ def dedup_step(
     drops."""
 
     def side(sigs: tuple[DataFrame, ...]) -> tuple[DataFrame, ...]:
-        return tuple(h.rows(*sigs) for h in halves)
+        return _rows(halves, sigs)
 
     def emit(batch_df, sigs, prior):
         cross_drop, rest = None, sigs
